@@ -136,47 +136,6 @@ def classify(rules: tuple[AlertRule, ...] = SENSOR_RULES) -> Column:
     return F.expr(classification_sql(rules))
 
 
-def rules_table(spark, rules: tuple[AlertRule, ...] = SENSOR_RULES):
-    """The rule ATTRIBUTES as a dimension DataFrame (alert_type,
-    severity, threshold_value, message) — the join-based alternative to
-    the generated CASE chains (SURVEY.md §2.2 P7 'cleaner in new
-    engine'). At tens of rules the inline CASE wins (constant-folded,
-    zero exchange); the dim table wins when rules are externally
-    managed/updated or number in the thousands — then broadcast it.
-    """
-    return spark.createDataFrame(
-        [
-            (r.alert_type, r.severity, float(r.threshold_value), r.message)
-            for r in rules
-        ],
-        "alert_type string, severity string, threshold_value double, message string",
-    )
-
-
-def detect_alerts_via_join(
-    df: DataFrame,
-    spark,
-    rules: tuple[AlertRule, ...] = SENSOR_RULES,
-    value_col: str = "value",
-    context_cols: tuple[str, ...] = ("sensor_id",),
-) -> DataFrame:
-    """detect_alerts with attributes from a broadcast rules dim join
-    instead of CASE chains; classification itself stays an expression
-    (conditions are arbitrary predicates, not join keys)."""
-    classified = df.withColumn("alert_type", F.expr(classification_sql(rules))).where(
-        F.col("alert_type").isNotNull()
-    )
-    dim = F.broadcast(rules_table(spark, rules))
-    return classified.join(dim, "alert_type").select(
-        *context_cols,
-        "alert_type",
-        "severity",
-        "threshold_value",
-        F.col(value_col).alias("actual_value"),
-        "message",
-    )
-
-
 def detect_alerts(
     df: DataFrame,
     rules: tuple[AlertRule, ...] = SENSOR_RULES,

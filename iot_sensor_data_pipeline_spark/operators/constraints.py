@@ -38,7 +38,6 @@ __all__ = [
     "not_null",
     "in_range",
     "in_set",
-    "matches_regex",
     "satisfies",
     "unique",
     "ref_integrity",
@@ -92,12 +91,6 @@ def in_set(col: str, values, name: str | None = None) -> Check:
         raise ValueError("in_set needs at least one value")
     expr = f"{_q(col)} NOT IN ({vals}) AND {_q(col)} IS NOT NULL"
     return Check(name or f"in_set({col})", "row", col, expr)
-
-
-def matches_regex(col: str, pattern: str, name: str | None = None) -> Check:
-    pat = pattern.replace("'", "''")
-    expr = f"NOT ({_q(col)} RLIKE '{pat}') AND {_q(col)} IS NOT NULL"
-    return Check(name or f"matches_regex({col})", "row", col, expr)
 
 
 def satisfies(predicate_sql: str, name: str, column: str = "*") -> Check:

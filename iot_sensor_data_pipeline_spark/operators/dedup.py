@@ -108,8 +108,8 @@ def hashed_shingles(
     """:func:`shingles` reduced to 64-bit hashes: (id, shingle long).
 
     This is THE module convention for everything minhash-shaped:
-    :func:`minhash_dedup_pairs` and :func:`neardup_incremental` both
-    sketch over these longs, and any persisted signature / band index
+    :func:`minhash_dedup_pairs` sketches over these longs, and any
+    persisted signature / band index
     must be built from them too — signatures over raw string shingles
     use a different hash input and silently never collide with
     hashed-shingle probes. Jaccard over the hashes equals Jaccard over
@@ -254,12 +254,9 @@ def minhash_signatures(
 
 def minhash_band_index(signatures: DataFrame, rows_per_band: int = 2) -> DataFrame:
     """Exploded band table (id, band_idx, band_hash) from a signature
-    relation — the join-key side of banded LSH. Persist this (bucketed
-    by (band_idx, band_hash)) as the corpus near-dup INDEX: incremental
-    batches then probe it without re-sketching the corpus. The
-    signatures must follow the :func:`hashed_shingles` input
-    convention — :func:`neardup_incremental` probes with hashed
-    shingles and a raw-string-built index would never collide."""
+    relation — the join-key side of banded LSH. The signatures must
+    follow the :func:`hashed_shingles` input convention: a
+    raw-string-built band table never collides with hashed probes."""
     sig_cols = [c for c in signatures.columns if c.startswith("mh")]
     n_bands = len(sig_cols) // rows_per_band
     bands = F.array(
@@ -338,149 +335,6 @@ def minhash_dedup_pairs(
         eager=False
     )
     return ngram_jaccard_pairs(sh, threshold, candidates=cands, candidates_distinct=True)
-
-
-def estimated_jaccard_pairs(
-    cand: DataFrame, sigs_i: DataFrame, sigs_j: DataFrame, threshold: float
-) -> DataFrame:
-    """Signature-estimated Jaccard for candidate (i, j) pairs: the
-    fraction of agreeing minhash components is an unbiased estimator of
-    the true Jaccard (the classic Broder '97 property), so no shingle
-    sets — and therefore no document text — are needed at verify time.
-    ``sigs_i``/``sigs_j`` are (id, mh*) relations covering the i and j
-    sides. Output (i, j, est_jaccard >= threshold).
-    """
-    sig_cols = [c for c in sigs_i.columns if c.startswith("mh")]
-    k = len(sig_cols)
-    a = sigs_i.select(
-        F.col("id").alias("i"), *[F.col(c).alias(f"a_{c}") for c in sig_cols]
-    )
-    b = sigs_j.select(
-        F.col("id").alias("j"), *[F.col(c).alias(f"b_{c}") for c in sig_cols]
-    )
-    agree = sum(
-        F.when(F.col(f"a_{c}") == F.col(f"b_{c}"), 1).otherwise(0) for c in sig_cols
-    )
-    return (
-        cand.select("i", "j")
-        .distinct()
-        .join(a, "i")
-        .join(b, "j")
-        .withColumn("est_jaccard", F.round(agree / F.lit(k), 6))
-        .where(F.col("est_jaccard") >= threshold)
-        .select("i", "j", "est_jaccard")
-    )
-
-
-def neardup_incremental(
-    new_docs: DataFrame,
-    band_index: DataFrame,
-    signatures: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    rows_per_band: int = 2,
-    corpus_shingles: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Incremental MinHash near-dup: a new batch against an already-
-    indexed corpus — the production flow where the corpus is too big to
-    re-sketch per increment (the near-dup sibling of
-    :func:`dedup_incremental`).
-
-    ``band_index``: (id, band_idx, band_hash) from
-    :func:`minhash_band_index`; ``signatures``: (id, mh*) from
-    :func:`minhash_signatures` OVER :func:`hashed_shingles` output —
-    both maintained by appending the returned deltas after each batch.
-    The batch is sketched with the same hashed-shingle convention, so
-    an index built from raw string shingles will not match.
-
-    Returns ``(pairs, sig_delta, band_delta)``:
-
-    - ``pairs``  — (i=new id, j=indexed-or-earlier-new id, est_jaccard)
-      with signature-estimated Jaccard >= threshold, covering BOTH
-      new-vs-corpus and new-vs-new duplicates. Estimation (not exact
-      re-verification) is the default deliberately: it needs only
-      signatures, so document text never reshuffles — corpus-side I/O
-      is limited to the probed band buckets and the candidate ids'
-      signature rows.
-    - ``sig_delta`` / ``band_delta`` — the new batch's rows to append
-      to the two index tables.
-
-    ``corpus_shingles`` switches candidate verification to EXACT
-    Jaccard for pipelines that also persist the (id, shingle long)
-    relation (:func:`hashed_shingles` output — append the batch's own
-    ``hashed_shingles(new_docs, ...)`` rows after each increment, the
-    shingle sibling of the sig/band deltas). ``pairs`` then carries
-    exact ``jaccard`` instead of ``est_jaccard``; the estimate's
-    +-1/sqrt(num_hashes) Broder noise disappears at the cost of
-    shipping the TOUCHED documents' shingle sets (semi-join restricted
-    to candidate ids — still never the corpus text). Replay-safe like
-    the band probe: corpus-side shingle rows for ids present in the
-    batch are excluded, so an already-appended shingle delta cannot
-    double-count any document's set.
-
-    Scale shape: the new batch is small relative to the corpus, so its
-    exploded bands broadcast against the bucketed ``band_index`` (no
-    corpus shuffle); the signature fetch is an equi-join on candidate
-    ids only. Batch-internal pairs reuse the standard band self-join on
-    the (small) delta alone.
-
-    Replay-safe: the corpus probe excludes ids present in the batch
-    itself, so re-running a batch whose deltas were already appended
-    (at-least-once foreachBatch) yields exactly the original pairs —
-    no self-pairs, no reversed within-batch duplicates.
-    """
-    # SAME shingle convention as minhash_dedup_pairs / the persisted
-    # index (hashed_shingles): signatures over raw strings would never
-    # collide with an index built over the 64-bit hashes.
-    sh = hashed_shingles(new_docs, id_col, text_col, n=shingle_n)
-    if corpus_shingles is not None:
-        # two consumers (signature agg + exact verification): checkpoint
-        # so the parse+explode lineage executes once, as in
-        # minhash_dedup_pairs
-        sh = sh.localCheckpoint(eager=False)
-    sig_delta = minhash_signatures(sh, num_hashes=num_hashes)
-    band_delta = minhash_band_index(sig_delta, rows_per_band=rows_per_band)
-
-    new_bands = band_delta.select(
-        F.col("id").alias("i"), "band_idx", "band_hash"
-    )
-    # Corpus side EXCLUDES ids present in this batch (broadcast
-    # anti-join on the small id set — the index never shuffles):
-    # if the batch's own deltas were already appended to the index (a
-    # replayed foreachBatch epoch that crashed between append and
-    # checkpoint commit), probing without the exclusion would emit
-    # (i, i, 1.0) self-pairs and reversed duplicates of every
-    # within-batch pair. With it, a replay emits exactly the original
-    # pairs.
-    new_ids = new_docs.select(F.col(id_col).alias("id")).distinct()
-    corpus_index = band_index.join(F.broadcast(new_ids), "id", "left_anti")
-    # new vs corpus: probe the stored index on the band key. The delta
-    # side is the small one, so AQE broadcasts it and the corpus index
-    # never shuffles (or, bucketed by the band key, joins in place).
-    vs_corpus = new_bands.join(
-        corpus_index.select(F.col("id").alias("j"), "band_idx", "band_hash"),
-        ["band_idx", "band_hash"],
-    ).select("i", "j")
-    # new vs new: band self-join within the delta, i < j orders the pair
-    within = lsh_candidate_pairs(sig_delta, rows_per_band=rows_per_band)
-
-    if corpus_shingles is not None:
-        # exact verification: the SAME replayed-delta exclusion as the
-        # band probe (disjoint-by-id union, so a crash-replayed shingle
-        # append can never double a document's set or its n_sh count)
-        corpus_sh = corpus_shingles.join(F.broadcast(new_ids), "id", "left_anti")
-        cand = vs_corpus.unionByName(within.select("i", "j"))
-        pairs = ngram_jaccard_pairs(
-            sh.unionByName(corpus_sh), threshold, candidates=cand
-        )
-        return pairs, sig_delta, band_delta
-
-    pairs_corpus = estimated_jaccard_pairs(vs_corpus, sig_delta, signatures, threshold)
-    pairs_within = estimated_jaccard_pairs(within, sig_delta, sig_delta, threshold)
-    return pairs_corpus.unionByName(pairs_within), sig_delta, band_delta
 
 
 def dedup_incremental(

@@ -106,7 +106,7 @@ def pq_encode(
     vectorized mapInPandas scan (a GEMM per subspace per Arrow batch);
     persist the output — it IS the search index, m ints per vector.
     New vectors encode against the same codebooks (append-only index,
-    no retrain — the :func:`~iot_sensor_data_pipeline_spark.operators.similarity.ivf_assign` pattern)."""
+    no retrain)."""
     import numpy as np
 
     C = np.asarray(codebooks, dtype=np.float64)  # (m, kk, dsub)
@@ -293,110 +293,6 @@ def _exact_rerank(
     return _rerank_core(adc, qvec, refine, refine_id, refine_vec, k, round_dist)
 
 
-def pq_topk_blocked(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int,
-    query_id: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dist: int = 6,
-    refine: DataFrame | None = None,
-    refine_id: str = "vec_id",
-    refine_vec: str = "embedding",
-    shortlist_factor: int = 5,
-    q_blocks: int = 8,
-    c_blocks: int = 8,
-) -> DataFrame:
-    """ADC top-k when the QUERY side is also large — corpus-vs-corpus
-    semantic search over PQ codes with NO driver collect anywhere.
-
-    :func:`pq_topk` collects the query set once (driver-small regime)
-    and broadcasts per-query LUTs in the task closure; that collapses
-    when queries are themselves a corpus (kNN-graph construction over
-    compressed vectors). This operator applies the
-    :func:`~iot_sensor_data_pipeline_spark.operators.similarity.cosine_topk_blocked`
-    block scheme to the ADC scan: hash-block both sides, replicate
-    queries to each of ``c_blocks`` and codes to each of ``q_blocks``
-    (shuffle volume |Q|*CB + |C|*QB rows — the standard block
-    outer-product cost, and the code side ships m SMALL INTS per row,
-    not raw vectors), then per (q-block, c-block) tile compute the
-    tile's LUTs and fold m fancy-indexed adds per candidate inside
-    ``cogroup().applyInPandas``. Each tile emits at most
-    shortlist-k rows per query; the merge window ranks CB*k
-    candidates per query.
-
-    Distances, rounding, and (dist, nid) tie-breaks are IDENTICAL to
-    :func:`pq_topk` (agreement pinned in tests); ``refine`` adds the
-    exact re-rank, with the query vectors joined as a distributed
-    relation instead of a driver broadcast. Returns
-    ``(qid, nid, dist, rn)``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if k < 1:
-        raise ValueError("pq_topk_blocked: k must be >= 1")
-    if q_blocks < 1 or c_blocks < 1:
-        raise ValueError("pq_topk_blocked: block counts must be >= 1")
-    C = np.asarray(codebooks, dtype=np.float64)  # (m, kk, dsub)
-    m, _, dsub = C.shape
-    qid_type = dict(queries.dtypes)[query_id]
-    nid_type = dict(codes.dtypes)["nid"]
-    adc_k = k if refine is None else max(k, k * shortlist_factor)
-
-    qprep = queries.select(
-        F.col(query_id).alias("qid"), as_double_array(F.col(vec_col)).alias("qv")
-    )
-    # (qb, cb) int on BOTH sides (as cosine_topk_blocked): cogroup key
-    # matching never depends on cross-side implicit coercion
-    q = qprep.withColumn(
-        "qb", F.pmod(F.xxhash64("qid"), F.lit(q_blocks)).cast("int")
-    ).withColumn("cb", F.explode(F.array(*[F.lit(i) for i in range(c_blocks)])))
-    c = (
-        codes.select("nid", "codes")
-        .withColumn("cb", F.pmod(F.xxhash64("nid"), F.lit(c_blocks)).cast("int"))
-        .withColumn("qb", F.explode(F.array(*[F.lit(i) for i in range(q_blocks)])))
-    )
-
-    def tile(key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"qid": [], "nid": [], "dist": []})
-        Q = np.stack(qpdf["qv"].to_numpy()).reshape(len(qpdf), m, dsub)
-        # tile-local LUTs: (nq_tile, m, kk)
-        lut = ((Q[:, :, None, :] - C[None, :, :, :]) ** 2).sum(-1)
-        qids = qpdf["qid"].to_numpy()
-        nids = cpdf["nid"].to_numpy()
-        B = np.stack(cpdf["codes"].to_numpy())
-        dist = np.zeros((len(qids), len(nids)))
-        for j in range(m):
-            dist += lut[:, j, B[:, j]]
-        # round BEFORE selecting, ties by nid — identical trim contract
-        # to pq_topk's per-partition partials
-        dist = np.round(dist, round_dist)
-        top = min(adc_k, len(nids))
-        out_q, out_n, out_d = [], [], []
-        for i in range(len(qids)):
-            order = np.lexsort((nids, dist[i]))[:top]
-            out_q.extend([qids[i]] * top)
-            out_n.extend(nids[order])
-            out_d.extend(dist[i, order])
-        return pd.DataFrame({"qid": out_q, "nid": out_n, "dist": out_d})
-
-    partials = (
-        q.groupBy("qb", "cb")
-        .cogroup(c.groupBy("qb", "cb"))
-        .applyInPandas(tile, f"qid {qid_type}, nid {nid_type}, dist double")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid"))
-    adc = partials.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= adc_k)
-    if refine is None:
-        return adc
-    return _rerank_core(
-        adc, qprep, refine, refine_id, refine_vec, k, round_dist
-    )
-
-
 def ivfpq_topk_blocked(
     queries: DataFrame,
     codes_with_cid: DataFrame,
@@ -413,11 +309,10 @@ def ivfpq_topk_blocked(
     shortlist_factor: int = 5,
     q_blocks: int = 8,
 ) -> DataFrame:
-    """IVF-pruned ADC top-k with NO driver collect anywhere — the
-    corpus-vs-corpus composition of :func:`ivfpq_topk` (which collects
-    the query set) and :func:`pq_topk_blocked` (which prunes nothing,
-    so every query block scans the ENTIRE code table). At a 100 TB
-    code table only a pruned no-collect path survives; this is it.
+    """IVF-pruned ADC top-k with NO driver collect anywhere: the
+    query set is never collected and only probed cells are scanned.
+    At a 100 TB code table only a pruned no-collect path survives;
+    this is it.
 
     Plan shape: the query relation is assigned to its ``n_probe``
     nearest cells DISTRIBUTIVELY (the broadcast-centroid Arrow GEMM
@@ -426,21 +321,19 @@ def ivfpq_topk_blocked(
     into ``q_blocks`` slices per cell. The code side replicates each
     cell's posting list to the ``q_blocks`` slices, and each
     ``cogroup((cid, qb)).applyInPandas`` tile builds the tile-local
-    LUTs and folds m fancy-indexed adds per candidate — exactly
-    :func:`pq_topk_blocked`'s tile kernel, with the IVF cell id
-    replacing the hash-block id on the candidate axis.
+    LUTs and folds m fancy-indexed adds per candidate, the IVF cell id
+    being the candidate axis.
 
-    Cost vs ``pq_topk_blocked``: ADC pairs scored drop from |Q| x |C|
-    to ~(n_probe / n_cells) x |Q| x |C| (each query meets only its
+    Cost: ADC pairs scored drop from |Q| x |C| to
+    ~(n_probe / n_cells) x |Q| x |C| (each query meets only its
     probed cells' postings); shuffle is |Q| x n_probe raw query
     vectors + |C| x q_blocks PQ codes (m SMALL INTS per row). The
-    unpruned operator stays the right tool when the index has no cell
-    structure; the driver-collect :func:`ivfpq_topk` stays right when
-    queries are genuinely driver-small.
+    unpruned :func:`pq_topk` stays the right tool when the index has
+    no cell structure.
 
     Distances, rounding, per-tile shortlist trim (round BEFORE
     selecting, (dist, nid) ties), and the global merge window are
-    IDENTICAL to ``ivfpq_topk`` (agreement pinned in tests); every
+    IDENTICAL to :func:`pq_topk`'s; every
     cell a query probes contributes at most ``adc_k`` candidates and
     the window ranks n_probe x adc_k per query. ``refine`` re-ranks
     the shortlist with exact squared-L2, query vectors joined as a
@@ -497,7 +390,7 @@ def ivfpq_topk_blocked(
         for j in range(m):
             dist += lut[:, j, B[:, j]]
         # round BEFORE selecting, ties by nid — identical trim
-        # contract to pq_topk / pq_topk_blocked
+        # contract to pq_topk
         dist = np.round(dist, round_dist)
         top = min(adc_k, len(nids))
         out_q, out_n, out_d = [], [], []
@@ -519,117 +412,4 @@ def ivfpq_topk_blocked(
         return adc
     return _rerank_core(
         adc, qprep, refine, refine_id, refine_vec, k, round_dist
-    )
-
-
-def ivfpq_topk(
-    queries: DataFrame,
-    codes_with_cid: DataFrame,
-    codebooks: list[list[list[float]]],
-    centroids: list[list[float]],
-    k: int,
-    n_probe: int = 3,
-    query_id: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dist: int = 6,
-    refine: DataFrame | None = None,
-    refine_id: str = "vec_id",
-    refine_vec: str = "embedding",
-    shortlist_factor: int = 5,
-) -> DataFrame:
-    """IVF x PQ — the FAISS-style composition both halves were built
-    for: the IVF coarse quantizer restricts WHICH codes are scored
-    (each query ADC-scans only its ``n_probe`` nearest cells' posting
-    lists), PQ restricts what scoring a code COSTS (m LUT lookups).
-    Build once::
-
-        assignments, centroids = ivf_build(corpus)          # (cid, nid, cv)
-        books = pq_train(corpus, ...)
-        codes = pq_encode(corpus, books).join(
-            assignments.select("cid", "nid"), "nid")         # (cid, nid, codes)
-        codes.write.bucketBy(n, "cid").sortBy("cid").saveAsTable(...)
-
-    then probe any time with this function. The (qid, cid) probe
-    relation is driver-built (queries are the documented driver-small
-    regime; centroid assignment is a tiny numpy GEMM) and broadcast
-    into the join, so with the code table BUCKETED by cid the probe
-    is exchange-free on the index side — the same layout argument as
-    ivf_probe and the near-dup band index. Scoring joins each probed
-    cell's codes to the probing queries and folds m fancy-indexed LUT
-    adds per Arrow batch; per-partition per-query top-k partials cap
-    the shuffle. ``refine`` adds the exact re-rank of the shortlist
-    (see :func:`pq_topk`). Returns ``(qid, nid, dist, rn)``.
-    """
-    import numpy as np
-
-    if k < 1:
-        raise ValueError("ivfpq_topk: k must be >= 1")
-    if n_probe < 1:
-        raise ValueError("ivfpq_topk: n_probe must be >= 1")
-    C = np.asarray(codebooks, dtype=np.float64)
-    m, _, dsub = C.shape
-    qrows = queries.select(
-        F.col(query_id).alias("qid"), as_double_array(F.col(vec_col)).alias("qv")
-    ).collect()
-    if not qrows:
-        raise ValueError("ivfpq_topk: empty query set")
-    qids = [r.qid for r in qrows]
-    Qf = np.stack([r.qv for r in qrows])
-    Q = Qf.reshape(len(qids), m, dsub)
-    lut = ((Q[:, :, None, :] - C[None, :, :, :]) ** 2).sum(-1)
-    qindex = {qid: i for i, qid in enumerate(qids)}
-
-    # driver-side coarse assignment (centroids are driver-small by the
-    # ivf_build contract): n_probe nearest cells per query
-    CC = np.asarray(centroids, dtype=np.float64)
-    d2c = (
-        (Qf * Qf).sum(1)[:, None] - 2.0 * (Qf @ CC.T) + (CC * CC).sum(1)[None, :]
-    )
-    npb = min(n_probe, len(CC))
-    probe = np.argpartition(d2c, npb - 1, axis=1)[:, :npb]
-    qid_type = dict(queries.dtypes)[query_id]
-    spark = queries.sparkSession
-    q_cells = spark.createDataFrame(
-        [(qid, int(c)) for i, qid in enumerate(qids) for c in probe[i]],
-        f"qid {qid_type}, cid int",
-    )
-    cand = codes_with_cid.withColumn("cid", F.col("cid").cast("int")).join(
-        F.broadcast(q_cells), "cid"
-    )
-
-    adc_k = k if refine is None else max(k, k * shortlist_factor)
-
-    def scan(it):
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            qi = pdf["qid"].map(qindex).to_numpy()
-            nids = pdf["nid"].to_numpy()
-            B = np.stack(pdf["codes"].to_numpy())
-            dist = np.zeros(len(nids))
-            for j in range(m):
-                dist += lut[qi, j, B[:, j]]
-            out = pd.DataFrame(
-                {"qid": pdf["qid"], "nid": nids, "dist": np.round(dist, round_dist)}
-            )
-            # per-partition per-query shortlist cap, distance ties
-            # broken by nid so the trim agrees with the global window
-            yield (
-                out.sort_values(["qid", "dist", "nid"], kind="mergesort")
-                .groupby("qid", group_keys=False, sort=False)
-                .head(adc_k)
-            )
-
-    nid_type = dict(codes_with_cid.dtypes)["nid"]
-    partials = cand.select("qid", "nid", "codes").mapInPandas(
-        scan, f"qid {qid_type}, nid {nid_type}, dist double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid"))
-    adc = partials.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= adc_k)
-    if refine is None:
-        return adc
-    return _exact_rerank(
-        adc, qrows, qid_type, refine, refine_id, refine_vec, k, round_dist
     )

@@ -11,18 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def union_all(*dfs: DataFrame) -> DataFrame:
-    """UNION ALL by column NAME (order-independent, safer than union())."""
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    return union_all(*dfs).distinct()
-
-
 def intersect(a: DataFrame, b: DataFrame, keep_duplicates: bool = False) -> DataFrame:
     return a.intersectAll(b) if keep_duplicates else a.intersect(b)
 

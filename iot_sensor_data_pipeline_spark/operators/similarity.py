@@ -39,17 +39,14 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def _staged_cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
-    """``cosine`` with the per-side norms STAGED: every pair-scoring
+    """Cosine similarity with the per-side norms STAGED: every pair-scoring
     site in this module attaches ``l2_norm`` to each side's projection
     (one interpreted fold per input row) and scores pairs with a
     single dot fold plus one multiply/divide — instead of re-walking
-    both arrays three times per pair. Bit-identical to :func:`cosine`
-    (same folds in the same order, evaluated once and reused), so
+    both arrays three times per pair. Bit-identical to
+    ``dot(a, b) / (l2_norm(a) * l2_norm(b))`` (same folds in the same
+    order, evaluated once and reused), so
     every hash-checked consumer is unchanged; higher-order folds are
     interpreted, which is why per-pair re-evaluation is the dominant
     cost of the brute-force scorers (r15: 3 folds -> 1 per pair)."""
@@ -346,24 +343,6 @@ def ivf_build(
     return assignments, centroids
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: list[list[float]],
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign NEW vectors to an existing quantizer — the incremental
-    path for a growing corpus: append the returned (cid, nid, cv) rows
-    to the persisted posting table (same bucketed spec) without
-    retraining or touching indexed vectors. Retrain (a fresh
-    :func:`ivf_build`) only when the data distribution drifts enough
-    that posting-list sizes skew — standard IVF operating practice."""
-    assign_one, _ = _centroid_assigners(centroids, 1)
-    return vectors.select(
-        F.col(corpus_id).alias("nid"), as_double_array(F.col(vec_col)).alias("cv")
-    ).select(assign_one(F.col("cv")).cast("int").alias("cid"), "nid", "cv")
-
-
 def ivf_probe(
     queries: DataFrame,
     assignments: DataFrame,
@@ -465,8 +444,7 @@ def _local_topk_frame(qids, qm_norm, nids, cm_norm, k, round_score):
     lexsort (score desc, nid asc — IDENTICAL to the global rank
     window, so ties survive the local cut) and a k+1 take absorbing at
     most one self-match. ONE copy of the tie-break semantics keeps
-    cosine_topk_gemm and cosine_topk_blocked equality-pinned to
-    cosine_topk by construction."""
+    cosine_topk_gemm equality-pinned to cosine_topk by construction."""
     import numpy as np
     import pandas as pd
 
@@ -580,16 +558,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return out
 
 
-def recommended_n_planes(corpus_size: int, target_bucket_size: int = 64) -> int:
-    """The docstring sizing rule as code: n_planes ~ log2(corpus /
-    target_bucket_size), floored at 1. Too many planes splinters true
-    neighbors across buckets (recall collapses); too few degenerates
-    to brute force — mis-sizing by even a few planes moves bucket
-    occupancy by that power of two, which is the usual cause of
-    "LSH was slow" (measured in SCALE.md)."""
-    return max(1, math.ceil(math.log2(max(corpus_size, 2) / max(target_bucket_size, 1))))
-
-
 def rp_lsh_build(
     corpus: DataFrame,
     dim: int,
@@ -683,8 +651,8 @@ def rp_lsh_topk(
     bucketed by ``bucket``, and call rp_lsh_probe.
 
     Bucket id = n_planes sign bits of the projections (one long).
-    Sizing: 2^n_planes buckets — :func:`recommended_n_planes` encodes
-    the n_planes ~ log2(|corpus| / desired_bucket_size) rule. Recall
+    Sizing: 2^n_planes buckets, n_planes ~ log2(|corpus| /
+    desired_bucket_size). Recall
     improves with the data's cluster structure: isotropic random
     vectors are the worst case (tests assert the floor there).
     """
@@ -695,93 +663,6 @@ def rp_lsh_topk(
         queries, index, dim, k, n_planes=n_planes, multi_probe=multi_probe,
         query_id=query_id, vec_col=vec_col, round_score=round_score,
     )
-
-
-def cosine_topk_blocked(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    query_id: str = "vec_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    round_score: int = 6,
-    q_blocks: int = 8,
-    c_blocks: int = 8,
-) -> DataFrame:
-    """Exact top-k when BOTH sides are large: distributed block GEMM.
-
-    cosine_topk broadcasts the corpus rows against driver-small
-    queries; cosine_topk_gemm ships a driver-small query matrix to
-    every corpus partition. When neither side fits the driver (the
-    all-pairs kNN regime — e.g. kNN-graph construction over the whole
-    corpus), this operator hash-blocks both sides and computes one
-    BLAS GEMM per (query-block, corpus-block) tile via
-    ``cogroup().applyInPandas``:
-
-    - queries replicate to each of ``c_blocks``; corpus rows replicate
-      to each of ``q_blocks`` — shuffle volume |Q|*CB + |C|*QB rows,
-      the standard block outer-product cost, with NO driver collect
-      and no full |Q| x |C| materialization (each tile emits only
-      k rows per query).
-    - the merge window then ranks CB*k candidate rows per query.
-
-    Pick block counts so a tile's two matrices ((|Q|/QB + |C|/CB) x
-    dim doubles) fit comfortably in one task; hash blocking keeps
-    tiles balanced regardless of id distribution. Rounding and
-    tie-break match cosine_topk exactly (equality pinned in tests).
-    Ids must be integral, as in cosine_topk_gemm.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = _topk_partial_schema()
-
-    # (qb, cb) are int on BOTH sides — pmod results cast down to match
-    # the int explode literals, so cogroup key matching never depends on
-    # cross-side implicit coercion (version-fragile)
-    q = (
-        queries.select(
-            F.col(query_id).cast("long").alias("qid"),
-            as_double_array(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn("qb", F.pmod(F.xxhash64("qid"), F.lit(q_blocks)).cast("int"))
-        .withColumn(
-            "cb", F.explode(F.array(*[F.lit(i) for i in range(c_blocks)]))
-        )
-    )
-    c = (
-        corpus.select(
-            F.col(corpus_id).cast("long").alias("nid"),
-            as_double_array(F.col(vec_col)).alias("cv"),
-        )
-        .withColumn("cb", F.pmod(F.xxhash64("nid"), F.lit(c_blocks)).cast("int"))
-        .withColumn(
-            "qb", F.explode(F.array(*[F.lit(i) for i in range(q_blocks)]))
-        )
-    )
-
-    def tile(key, qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty or cpdf.empty:
-            return pd.DataFrame({"qid": [], "nid": [], "score": []}).astype(
-                {"qid": "int64", "nid": "int64", "score": "float64"}
-            )
-        qids = qpdf["qid"].to_numpy()
-        qm = np.array(list(qpdf["qv"]), dtype="float64")
-        qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-        nids = cpdf["nid"].to_numpy()
-        cm = np.array(list(cpdf["cv"]), dtype="float64")
-        cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-        return _local_topk_frame(qids, qm, nids, cm, k, round_score)
-
-    partial = (
-        q.groupBy("qb", "cb")
-        .cogroup(c.groupBy("qb", "cb"))
-        .applyInPandas(tile, out_schema)
-        .where(F.col("qid") != F.col("nid"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
-    return partial.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
 def semantic_dedup(
@@ -878,89 +759,6 @@ def semantic_dedup(
     )
 
 
-def semdedup_incremental(
-    batch: DataFrame,
-    postings: DataFrame,
-    centroids: list[list[float]],
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_score: int = 6,
-    materialize: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental SemDeDup step: compare a NEW batch of embeddings
-    against an already-indexed corpus (and against itself) without
-    ever re-scoring corpus-vs-corpus. Returns ``(pairs, delta)``:
-
-    - ``pairs`` — (i, j, score): i is always a batch id; j is an
-      indexed id (new-vs-corpus) or a larger batch id (new-vs-new,
-      i < j). Score is within-cluster cosine >= ``threshold``.
-    - ``delta`` — (cid, nid, cv): the batch's posting-list rows,
-      for the caller to append to the index (same layout as
-      :func:`ivf_build` / :func:`ivf_assign`).
-
-    The quantizer (``centroids``) is fixed: batches assign with
-    :func:`ivf_assign`, so the corpus is never re-clustered and the
-    per-batch cost is |batch| x (posting lists of the touched
-    clusters) — independent of total corpus size in all other
-    clusters. Replay-safe by construction: the corpus side drops the
-    batch's own ids first, so a micro-batch whose delta was already
-    appended (at-least-once foreachBatch) emits exactly its original
-    pairs instead of matching itself in the index; pairs are
-    ``distinct()`` (an output-sized relation), so duplicate posting
-    rows left by replayed appends of OTHER batches cannot multiply
-    output either — the index itself is never re-shuffled per batch
-    (fold its duplicates offline with the streaming module's
-    ``compact_semdedup_index``).
-
-    ``materialize=True`` eagerly localCheckpoints the assignment so
-    the returned ``pairs`` (which reference it three times:
-    batch-vs-corpus, both sides of batch-vs-batch) and the ``delta``
-    append all read ONE computed pass — without it, each consumer
-    re-runs the centroid assignment (4 passes per micro-batch; with
-    >32 centroids that is 4 Arrow GEMM scans of the batch).
-    """
-    delta = ivf_assign(batch, centroids, corpus_id=id_col, vec_col=vec_col)
-    if materialize:
-        delta = delta.localCheckpoint(eager=True)
-    batch_ids = delta.select(F.col("nid").alias("__bid"))
-    corpus = postings.join(
-        batch_ids, postings.nid == batch_ids.__bid, "left_anti"
-    )
-    delta_n = delta.withColumn("__n", l2_norm(F.col("cv")))
-    corpus_n = corpus.withColumn("__n", l2_norm(F.col("cv")))
-    b_i = delta_n.select(
-        "cid", F.col("nid").alias("i"), F.col("cv").alias("va"),
-        F.col("__n").alias("na"),
-    )
-    c_j = corpus_n.select(
-        "cid", F.col("nid").alias("j"), F.col("cv").alias("vb"),
-        F.col("__n").alias("nb"),
-    )
-    b_j = delta_n.select(
-        "cid", F.col("nid").alias("j"), F.col("cv").alias("vb"),
-        F.col("__n").alias("nb"),
-    )
-    vs_corpus = b_i.join(c_j, "cid")
-    vs_batch = b_i.join(b_j, "cid").where(F.col("i") < F.col("j"))
-    pairs = (
-        vs_corpus.unionByName(vs_batch)
-        .select(
-            "i",
-            "j",
-            F.round(
-                _staged_cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                round_score,
-            ).alias("score"),
-        )
-        .where(F.col("score") >= threshold)
-        .distinct()
-    )
-    return pairs, delta
-
-
 def ann_recall_report(
     truth: DataFrame,
     variants: dict[str, DataFrame],
@@ -1028,72 +826,3 @@ def ann_recall_report(
     for r in reports[1:]:
         out = out.unionByName(r)
     return out
-
-
-def choose_n_probe(
-    truth: DataFrame,
-    probe_fn,
-    candidate_probes,
-    recall_floor: float,
-    n_cells: int | None = None,
-    metric: str = "macro_recall",
-    query_col: str = "qid",
-    neighbor_col: str = "nid",
-) -> tuple[int | None, DataFrame]:
-    """Close the measure-don't-guess loop on IVF probe width: evaluate
-    ``probe_fn(n_probe)`` for each candidate against the exact
-    ``truth`` relation (a held-out query sample's :func:`cosine_topk`)
-    via :func:`ann_recall_report` and pick the SMALLEST ``n_probe``
-    whose measured ``metric`` meets ``recall_floor`` — n_probe is the
-    recall/cost dial of every IVF index (expected scan fraction ~
-    n_probe / n_cells), and guessing it is how ANN recall quietly
-    collapses in production.
-
-    Returns ``(chosen_n_probe, frontier)`` where ``frontier`` is one
-    row per candidate: ``n_probe``, the report's recall columns, and
-    ``scan_fraction`` (n_probe / n_cells when ``n_cells`` is given —
-    the measured-candidate-reduction companion, see SCALE.md's
-    ``ivfpq_topk_blocked`` row tracking it at 0.072 vs 0.062 expected).
-    ``chosen_n_probe`` is None when NO candidate meets the floor — the
-    caller's signal to fall back to exhaustive probing (which pins
-    recall 1.0 by construction: probing every cell IS brute force) or
-    re-cluster.
-
-    Evaluation cost: each candidate probes only the held-out sample
-    (report-grain joins, |Q| x k rows per variant), never the corpus at
-    production query volume. The frontier is computed in ONE
-    ann_recall_report pass over all candidates.
-    """
-    probes = sorted(set(int(p) for p in candidate_probes))
-    if not probes:
-        raise ValueError("choose_n_probe: candidate_probes must be non-empty")
-    if not (0.0 < recall_floor <= 1.0):
-        raise ValueError(
-            f"choose_n_probe: recall_floor must be in (0, 1], got {recall_floor}"
-        )
-    if metric not in ("macro_recall", "micro_recall"):
-        raise ValueError(
-            f"choose_n_probe: metric must be macro_recall or micro_recall, "
-            f"got {metric!r}"
-        )
-    variants = {f"n_probe={p}": probe_fn(p) for p in probes}
-    rep = ann_recall_report(
-        truth, variants, query_col=query_col, neighbor_col=neighbor_col
-    )
-    frontier = rep.withColumn(
-        "n_probe", F.split(F.col("variant"), "=").getItem(1).cast("int")
-    )
-    if n_cells is not None:
-        frontier = frontier.withColumn(
-            "scan_fraction",
-            F.round(F.col("n_probe") / F.lit(float(n_cells)), 6),
-        )
-    frontier = frontier.orderBy("n_probe")
-    rows = frontier.collect()  # one row per candidate: driver-trivial
-    chosen = next(
-        (r["n_probe"] for r in rows if r[metric] >= recall_floor), None
-    )
-    # return the MATERIALIZED frontier: handing back the lazy plan
-    # would re-run every candidate probe each time the caller looks at it
-    spark = truth.sparkSession
-    return chosen, spark.createDataFrame(rows, frontier.schema)

@@ -180,81 +180,3 @@ def _cut_documents(
         n.alias("n_tokens"),
         (n - F.size(kept)).alias("n_removed"),
     )
-
-
-def span_dedup_incremental(
-    new_docs: DataFrame,
-    corpus_spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_count: int = 2,
-) -> tuple[DataFrame, DataFrame]:
-    """Exact-substring dedup of a NEW batch against an already-ingested
-    corpus — the production flow where the corpus is too large to
-    re-window per increment (the span sibling of
-    ``dedup.neardup_incremental``).
-
-    ``corpus_spans``: the persisted (id, start, span_hash) relation —
-    exactly this function's returned delta, appended after each batch
-    (bucket it by ``span_hash`` so the probe below joins in place).
-
-    Returns ``(cleaned, span_delta)``:
-
-    - ``cleaned`` — (id, text_clean, n_tokens, n_removed) for the new
-      batch. A window is duplicated iff its corpus occurrences plus its
-      batch occurrences reach ``min_count``, so this EQUALS the batch
-      operator's output over (corpus ∪ batch) restricted to the batch's
-      ids (tested). Already-ingested documents are not revisited —
-      append-only history, the same contract as the other incremental
-      dedup operators.
-    - ``span_delta`` — the batch's (id, start, span_hash) rows to
-      append.
-
-    Scale shape: the corpus side is semi-join-restricted to the hashes
-    present in the batch BEFORE aggregating (never a corpus-wide
-    count), and only 8-byte hashes + ints move; the batch side is small
-    and broadcasts into the probe.
-
-    Replay-safe, two layers, both applied AFTER the hash restriction so
-    neither ever touches the full corpus index: corpus rows whose id
-    appears in the batch are excluded (broadcast anti-join), and
-    duplicate index ROWS (a crash-replayed append from a DIFFERENT
-    earlier batch) are folded by deduplicating on the full
-    (id, start, span_hash) identity — legitimate rows are unique on it,
-    and without the fold a replayed append would double a span's corpus
-    count and could push a once-seen window over ``min_count``.
-    """
-    spans = _doc_spans(new_docs, id_col, text_col, k).localCheckpoint(eager=False)
-
-    # frame-qualified join condition: works even when id_col == "id"
-    new_ids = new_docs.select(F.col(id_col).alias("__batch_id")).distinct()
-    corpus = corpus_spans.join(
-        F.broadcast(new_ids),
-        corpus_spans[id_col] == new_ids["__batch_id"],
-        "left_anti",
-    )
-    batch_hashes = spans.select("span_hash").distinct()
-    # restrict BEFORE counting or deduplicating: only hashes the batch
-    # can care about — a read-side dedup of the raw index would
-    # aggregate O(corpus tokens) rows per batch
-    corpus_counts = (
-        corpus.join(F.broadcast(batch_hashes), "span_hash", "left_semi")
-        .dropDuplicates([id_col, "start", "span_hash"])
-        .groupBy("span_hash")
-        .agg(F.count(F.lit(1)).alias("n_corpus"))
-    )
-    batch_counts = spans.groupBy("span_hash").agg(
-        F.count(F.lit(1)).alias("n_batch")
-    )
-    dup_hashes = (
-        batch_counts.join(corpus_counts, "span_hash", "left_outer")
-        .where(
-            F.col("n_batch") + F.coalesce(F.col("n_corpus"), F.lit(0))
-            >= min_count
-        )
-        .select("span_hash")
-    )
-    dup_positions = spans.join(dup_hashes, "span_hash", "left_semi")
-    cleaned = _cut_documents(new_docs, dup_positions, id_col, text_col, k)
-    return cleaned, spans

@@ -191,9 +191,9 @@ def time_weighted_avg(
     covers span/width bucket rows, so carry is never unbounded.
 
     ``max_carry`` DEFAULTS to ``"auto"``: the p99 inter-sample gap
-    from a hash-ordered capped sample of the segments (the
-    ``range_join`` auto-tune discipline — layout-independent,
-    TakeOrderedAndProject, never a full sort), floored at one
+    from a hash-ordered capped sample of the segments
+    (layout-independent, TakeOrderedAndProject, never a full sort),
+    floored at one
     ``bucket_width`` so dense series are never clipped. SCALE.md
     measured unbounded carry exploding 100k sparse events into 6.29M
     bucket rows (9.6x the bounded form) — at 100 TB the unbounded form
@@ -212,9 +212,8 @@ def time_weighted_avg(
 
     Scale shape: ONE shuffle on the series key for the lead() window,
     then the bucket explode (covered buckets per segment, bounded by
-    ``max_carry``) feeds a map-side-combinable sum aggregation — the
-    same bucketize-don't-BNLJ discipline as ``range_join``
-    (operators/joins.py). No UDF, no driver collect.
+    ``max_carry``) feeds a map-side-combinable sum aggregation —
+    bucketize, don't BNLJ. No UDF, no driver collect.
     """
     if bucket_width < 1:
         raise ValueError(
@@ -478,85 +477,4 @@ def time_bucket_gapfill(
         "bucket",
         val.alias("val"),
         (~has).cast("int").alias("gap"),
-    )
-
-
-def lttb_downsample(
-    df: DataFrame,
-    n_out: int,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Largest-Triangle-Three-Buckets downsampling per series — the
-    standard visually-faithful reduction (Steinarsson 2013, the
-    algorithm behind TimescaleDB's ``lttb`` and most dashboarding
-    engines): keep the first and last points, split the middle into
-    ``n_out - 2`` buckets, and from each bucket keep the point forming
-    the largest triangle with the previously kept point and the NEXT
-    bucket's centroid — preserving spikes and shape where uniform
-    striding flattens them.
-
-    Inherently sequential per series (each choice depends on the
-    previous kept point), so this is a legitimate Arrow/pandas path:
-    ``applyInPandas`` per key, numpy triangle areas per bucket, series
-    parallel across the cluster. Each TASK holds one series
-    (~16 bytes/point — pre-aggregate a series that can't fit, e.g.
-    with :func:`time_bucket_gapfill`, before plotting-grade
-    downsampling; that is the universal LTTB deployment shape).
-
-    Ties (equal areas) break to the EARLIEST point; output rows are
-    the ORIGINAL (key, ts, value) rows of the kept points. Series with
-    <= ``n_out`` points pass through unchanged.
-    """
-    if n_out < 3:
-        raise ValueError(f"lttb_downsample: n_out must be >= 3, got {n_out}")
-
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(
-        [
-            df.schema[key_col],
-            df.schema[ts_col],
-            df.schema[value_col],
-        ]
-    )
-    n = int(n_out)
-
-    def per_series(pdf):
-        import numpy as np
-
-        pdf = pdf.sort_values([ts_col]).reset_index(drop=True)
-        m = len(pdf)
-        if m <= n:
-            return pdf[[key_col, ts_col, value_col]]
-        t = pdf[ts_col].astype("float64").to_numpy()
-        v = pdf[value_col].astype("float64").to_numpy()
-        # bucket boundaries over the middle m-2 points, n-2 buckets
-        edges = (np.arange(n - 1) * (m - 2) / (n - 2)).astype(np.int64) + 1
-        edges = np.append(edges, m - 1)
-        keep = [0]
-        prev = 0
-        for b in range(n - 2):
-            lo, hi = edges[b], edges[b + 1]  # this bucket: [lo, hi)
-            # next bucket's centroid; after the last middle bucket the
-            # "next bucket" is the always-kept final point
-            if b == n - 3:
-                cx, cy = t[m - 1], v[m - 1]
-            else:
-                nlo, nhi = edges[b + 1], edges[b + 2]
-                cx, cy = t[nlo:nhi].mean(), v[nlo:nhi].mean()
-            ax, ay = t[prev], v[prev]
-            area = np.abs(
-                (ax - cx) * (v[lo:hi] - ay) - (ax - t[lo:hi]) * (cy - ay)
-            )
-            prev = lo + int(np.argmax(area))
-            keep.append(prev)
-        keep.append(m - 1)
-        return pdf.iloc[keep][[key_col, ts_col, value_col]]
-
-    return (
-        df.select(key_col, ts_col, value_col)
-        .groupBy(key_col)
-        .applyInPandas(per_series, out_schema)
     )

@@ -525,9 +525,8 @@ def embeddings_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rows-only: hash/quantizer families are engine-specific. Recall
     floors vs the exact baselines are asserted in
-    tests/test_similarity.py and tests/test_quantization.py (incl.
-    exact agreement of ivfpq_topk_blocked with the driver-collect
-    ivfpq_topk); the exact baselines themselves
+    tests/test_similarity.py and tests/test_quantization.py; the
+    exact baselines themselves
     (embeddings_knn_brute_force, embeddings_cosine_near_dup) keep
     hash-checked DuckDB oracles."""
     from iot_sensor_data_pipeline_spark.operators.quantization import (

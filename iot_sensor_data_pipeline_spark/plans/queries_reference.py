@@ -187,48 +187,6 @@ def events_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rules_values_sql(rules: tuple[AlertRule, ...]) -> str:
-    rows = ", ".join(
-        "('{}', '{}', {}, '{}')".format(
-            r.alert_type, r.severity, float(r.threshold_value), r.message.replace("'", "''")
-        )
-        for r in rules
-    )
-    return f"(VALUES {rows})"
-
-
-_ALERTS_JOIN_ORACLE = f"""
-WITH classified AS (
-  SELECT event_id, value, {classification_sql(EVENT_RULES)} AS alert_type
-  FROM events
-), dim(alert_type, severity, threshold_value, message) AS ({_rules_values_sql(EVENT_RULES)})
-SELECT
-  c.event_id, c.alert_type, d.severity, d.threshold_value,
-  c.value AS actual_value, d.message
-FROM classified c JOIN dim d USING (alert_type)
-"""
-
-
-def events_alert_rules_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The join-based rule-attribute variant (broadcast rules dim table
-    instead of generated CASE chains — SURVEY.md §2.2 P7). Same output
-    as the expression variant; the dim table is the right shape when
-    rules are externally managed or number in the thousands.
-
-    No longer its own registry entry (the driver checks at most 50
-    queries): its oracle parity is pinned by
-    tests/test_rules.py::test_dim_join_variant_oracle_parity (DuckDB
-    compare via _ALERTS_JOIN_ORACLE) and
-    tests/test_rules.py::test_dim_join_variant_matches_case_variant
-    (alert-set equivalence to the CASE variant)."""
-    from iot_sensor_data_pipeline_spark.functions.rules import detect_alerts_via_join
-
-    events = load_table(spark, sf_dir, "events")
-    return detect_alerts_via_join(
-        events, spark, EVENT_RULES, context_cols=("event_id",)
-    )
-
-
 # ---------------------------------------------------------------------------
 # F1-F5: filter/predicate surface (comparisons, boolean algebra, LIKE,
 # IN-set, null checks) in one query (reference alert_detector.py:107-157,
@@ -345,8 +303,7 @@ def events_alerts_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The reference never resolves alerts (alert_detector.py:205 writes
 # resolved_at = NULL forever); here recovery/changed transitions close
 # out active alerts. Transitions are derived with a deterministic
-# lag-over-(ts, event_id) window (the batch analogue of the debounce
-# state machine, which tests/test_stateful.py pins separately).
+# lag-over-(ts, event_id) window.
 # ---------------------------------------------------------------------------
 
 _RESOLVE_ORACLE = f"""

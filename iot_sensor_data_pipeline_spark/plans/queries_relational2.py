@@ -16,7 +16,6 @@ from iot_sensor_data_pipeline_spark.sources.tables import load_table, register_v
 # ---------------------------------------------------------------------------
 # Sessionization (batch): gap > 30 min starts a new session per user.
 # The lag + cumulative-sum idiom — one shuffle on user, one sort.
-# (Streaming uses F.session_window instead; tests/test_stateful.py.)
 # ---------------------------------------------------------------------------
 
 _SESSIONIZE_ORACLE = """
@@ -382,15 +381,6 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("promo_revenue_pct")
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# The built-in session_window operator (formerly its own registry entry,
-# events_session_window) is cross-validated against events_sessionize's
-# independent lag+cumsum algorithm in tests/test_stateful.py:98,114 —
-# one sessionization entry keeps the registry inside the driver's
-# 50-query gate; the streaming path is covered there too.
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------

@@ -12,7 +12,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def write_partitioned_parquet(
@@ -65,12 +64,6 @@ def write_partitioned_parquet(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
-
-
-def with_date_partitions(df: DataFrame, ts_col: str) -> DataFrame:
-    """Add dt/hour partition columns derived from event time — the
-    standard lake layout for time-series tables."""
-    return df.withColumn("dt", F.to_date(ts_col)).withColumn("hour", F.hour(ts_col))
 
 
 def _lineage_of(checkpoint: str) -> str:

@@ -16,6 +16,17 @@ Each job takes a source DataFrame (kafka/file/rate/memory — anything
 ``readStream`` produces) so the logic is testable without Kafka, and a
 list of batch sinks (callables DataFrame -> None) fanned out from one
 ``foreachBatch``.
+
+The jobs:
+
+- ``start_persistence``, ``start_alerts``, ``start_aggregator`` — the
+  reference's three jobs (``Pipeline.start_standard_jobs`` wires them);
+- ``start_cdc_apply_bucketed`` — a change stream maintained into a
+  bucketed snapshot, with its readers, ``validate_cdc_snapshot`` and
+  ``rebucket_cdc_snapshot``; ``start_cdc_apply`` is its unbucketed
+  reference;
+- ``start_drift_monitor`` and ``start_constraint_monitor`` — per-batch
+  distribution-drift scores and data-quality checks.
 """
 
 from __future__ import annotations
@@ -256,743 +267,6 @@ def start_aggregator(
         watermark=watermark,
     )
     return _start(agg, sinks, checkpoint, **kw)
-
-
-def _hadoop_path_exists(spark, path: str) -> bool:
-    """Existence check through Spark's Hadoop FS layer (any scheme).
-
-    The streaming index jobs must distinguish "index not created yet"
-    (legitimate first batch) from "index unreadable" (corruption,
-    permissions) — a broad AnalysisException catch would treat BOTH as
-    first-batch and silently rebuild an empty index, losing all dedup
-    memory with no error."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    return hp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hp)
-
-
-def start_incremental_dedup(
-    docs: DataFrame,
-    index_dir: str,
-    checkpoint: str,
-    sinks: Sequence[BatchSink],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    trigger: str | None = None,
-    available_now: bool = False,
-    query_name: str | None = None,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    auditor=None,
-) -> StreamingQuery:
-    """Streaming ingestion front of a training-data pipeline: each
-    micro-batch is exact-deduped within itself AND against every
-    previous batch via a persistent fingerprint index
-    (operators.dedup.dedup_incremental), fresh documents fan out to
-    ``sinks``, and the batch's fingerprint delta appends to the parquet
-    index at ``index_dir``.
-
-    Scale shape: the index holds ONE 32-char md5 column — the
-    anti-join ships fingerprints, never text; corpus text is touched
-    only inside the current batch. Replayed epochs (foreachBatch is
-    at-least-once) re-append their fingerprint delta: duplicate index
-    rows are harmless to anti-join semantics, so the job is
-    effectively idempotent without any transactional sink. Dedup
-    state survives restarts BY CONSTRUCTION (it lives in the index,
-    not in streaming state), so there is no state-store growth and no
-    watermark bound — unlike ``dedup_within_watermark``, which
-    forgets keys once the watermark passes.
-
-    ``transform`` runs once per batch on the raw documents BEFORE
-    dedup and indexing (stateless gates only — the
-    :func:`start_incremental_spandedup` composition point, e.g. a
-    ``decontaminate`` filter). ``auditor`` (a
-    ``plans.audit.StreamAuditor``) gates each batch's POST-TRANSFORM
-    plan with the engine's scale-killer rules, warn-once per rule —
-    the point where a caller-supplied transform can smuggle in a
-    cartesian/BNLJ; the operator's own inner plans are lazily
-    checkpointed (lineage not visible per-batch) and plan-pinned in
-    the batch test suite instead.
-    """
-    from iot_sensor_data_pipeline_spark.operators.dedup import dedup_incremental
-
-    epoch_aware = [(sink, _wants_epoch(sink)) for sink in sinks]
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if transform is not None:
-            batch_df = transform(batch_df)
-            if batch_df.isEmpty():
-                return
-        if auditor is not None:
-            auditor.check(batch_df)
-        spark = batch_df.sparkSession
-        if _hadoop_path_exists(spark, index_dir):
-            seen = spark.read.parquet(index_dir)  # unreadable -> FAIL loud
-        else:  # legitimate first batch: index not created yet
-            seen = spark.createDataFrame([], "fp string")
-        # materialize=True: both outputs derive from ONE checkpointed
-        # anti-join, so the sinks and the index append share a single
-        # computation (including the scan of the growing index);
-        # RDD-checkpoint blocks are GC-reclaimed after the batch
-        fresh, delta = dedup_incremental(
-            batch_df, seen, id_col, text_col, materialize=True
-        )
-        if not fresh.isEmpty():
-            for sink, wants_epoch in epoch_aware:
-                if wants_epoch:
-                    sink(fresh, epoch_id)
-                else:
-                    sink(fresh)
-            delta.write.mode("append").parquet(index_dir)
-
-    writer = (
-        docs.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
-
-
-def start_incremental_neardup(
-    docs: DataFrame,
-    index_dir: str | None,
-    checkpoint: str,
-    pairs_sink: BatchSink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    rows_per_band: int = 2,
-    trigger: str | None = None,
-    available_now: bool = False,
-    query_name: str | None = None,
-    index_tables: str | None = None,
-    index_buckets: int = 64,
-    verify_exact: bool = False,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    auditor=None,
-) -> StreamingQuery:
-    """Streaming NEAR-dup sibling of :func:`start_incremental_dedup`:
-    each micro-batch is MinHash-sketched once, probed against the
-    persistent band/signature index (new-vs-corpus AND new-vs-new via
-    operators.dedup.neardup_incremental), the detected (i, j,
-    est_jaccard) pairs go to ``pairs_sink``, and the batch's sketch
-    deltas append to the index — so the corpus is never re-sketched
-    and document text never leaves the current batch.
-
-    Index layout under ``index_dir``: ``bands/`` (id, band_idx,
-    band_hash) and ``sigs/`` (id, mh*), both parquet appends. Replay
-    safety is layered: the corpus probe excludes the batch's own ids
-    (neardup_incremental), so a replayed epoch whose deltas were
-    already appended emits exactly the original pairs; duplicate BAND
-    rows from such replays are harmless without any dedup shuffle
-    (candidates are ``distinct()``-ed before estimation); duplicate
-    SIGNATURE rows would multiply per-pair join rows, so the (narrow)
-    sig table alone is deduplicated on read. Run
-    :func:`compact_neardup_index` periodically to fold accumulated
-    small append files and replay duplicates into a clean snapshot.
-    ``pairs_sink`` may accept ``(df, epoch_id)`` — the epoch is
-    forwarded (``sources.jdbc``-style idempotent sinks can then dedup
-    replayed emissions on the reader side).
-
-    ``index_tables`` (mutually exclusive with ``index_dir``) stores
-    the index as catalog-registered BUCKETED tables instead of plain
-    parquet paths: ``{prefix}_bands`` bucketed by (band_idx,
-    band_hash) and ``{prefix}_sigs`` bucketed by id, ``index_buckets``
-    buckets each (must stay constant for the table's lifetime —
-    appends repeat the spec). This is the 100 TB layout: the batch's
-    band probe sort-merge-joins against pre-bucketed index scans with
-    NO exchange on the index side, so the growing corpus index never
-    reshuffles for a probe (plan-pinned in tests/test_bucketing.py).
-    Trade-offs: each epoch appends one file per written bucket (fold
-    with :func:`compact_neardup_index_bucketed`), and table metadata
-    lives in the session catalog — use a persistent metastore in
-    production so restarts keep the bucketing info.
-
-    ``verify_exact`` additionally persists the hashed-shingle relation
-    (``shingles/`` dir or ``{prefix}_shingles`` table) and emits EXACT
-    Jaccard pairs (column ``jaccard``) instead of signature estimates
-    (column ``est_jaccard``) — see
-    ``operators.dedup.neardup_incremental(corpus_shingles=...)``. The
-    index grows by one (id, shingle) row per distinct shingle per doc
-    (vs k longs per doc for signatures), and verification ships the
-    touched documents' shingle sets; the batch is sketched once more
-    for the shingle append (micro-batch-local, cheap next to index
-    I/O).
-
-    ``transform`` / ``auditor``: pre-dedup stateless gate and
-    post-transform plan audit, as :func:`start_incremental_dedup`.
-    """
-    from iot_sensor_data_pipeline_spark.operators.dedup import (
-        hashed_shingles,
-        minhash_band_index,
-        minhash_signatures,
-        neardup_incremental,
-    )
-
-    if (index_dir is None) == (index_tables is None):
-        raise ValueError(
-            "start_incremental_neardup: pass exactly one of index_dir "
-            "(parquet-path index) or index_tables (bucketed-table index)"
-        )
-    bands_dir = f"{index_dir}/bands" if index_dir else None
-    sigs_dir = f"{index_dir}/sigs" if index_dir else None
-    shingles_dir = f"{index_dir}/shingles" if index_dir else None
-    bands_tbl = f"{index_tables}_bands" if index_tables else None
-    sigs_tbl = f"{index_tables}_sigs" if index_tables else None
-    shingles_tbl = f"{index_tables}_shingles" if index_tables else None
-    sink_wants_epoch = _wants_epoch(pairs_sink)
-
-    def read_index(spark, batch_df):
-        """(band_index, signatures, corpus_shingles) or empty-with-
-        schema on the first batch (corpus_shingles is None unless
-        ``verify_exact``). Band duplicates (crash-replay appends) need
-        NO dedup shuffle: candidate pairs are distinct()'d inside
-        estimated_jaccard_pairs, so duplicate band rows cannot
-        multiply output pairs. Signature duplicates WOULD multiply the
-        per-pair join rows, and the sig table is the narrow one —
-        dedup only it. Shingle-row duplicates would inflate set sizes
-        in exact verification — deduped on read too. An unreadable
-        existing index FAILS the batch (never silently rebuilds
-        empty)."""
-        if index_tables is not None:
-            if spark.catalog.tableExists(bands_tbl):
-                corpus_sh = (
-                    spark.table(shingles_tbl).dropDuplicates(["id", "shingle"])
-                    if verify_exact
-                    else None
-                )
-                return (
-                    spark.table(bands_tbl),
-                    spark.table(sigs_tbl).dropDuplicates(["id"]),
-                    corpus_sh,
-                )
-            if spark.catalog.tableExists(f"{bands_tbl}_compacting"):
-                # a compaction crashed between DROP and RENAME: the
-                # live name is gone but the data isn't — treating this
-                # as "first batch" would silently forget the corpus
-                raise RuntimeError(
-                    f"near-dup index table {bands_tbl} is missing but "
-                    f"{bands_tbl}_compacting exists — a compaction "
-                    "crashed mid-swap; rename it back before resuming"
-                )
-        elif _hadoop_path_exists(spark, bands_dir):
-            corpus_sh = (
-                spark.read.parquet(shingles_dir).dropDuplicates(["id", "shingle"])
-                if verify_exact
-                else None
-            )
-            return (
-                spark.read.parquet(bands_dir),
-                spark.read.parquet(sigs_dir).dropDuplicates(["id"]),
-                corpus_sh,
-            )
-        # legitimate first batch: empty index with the right schema,
-        # derived from the batch itself
-        empty_sh = hashed_shingles(batch_df.limit(0), id_col, text_col, n=shingle_n)
-        empty_sigs = minhash_signatures(empty_sh, num_hashes=num_hashes)
-        return (
-            minhash_band_index(empty_sigs, rows_per_band=rows_per_band),
-            empty_sigs,
-            empty_sh if verify_exact else None,
-        )
-
-    def append_deltas(sig_delta, band_delta, shingle_delta):
-        if index_tables is not None:
-            # bucketed appends: the spec must repeat the table's
-            # (bucketBy requires saveAsTable; the catalog keeps the
-            # bucketing metadata that makes probe joins exchange-free)
-            (
-                sig_delta.write.format("parquet")
-                .bucketBy(index_buckets, "id")
-                .sortBy("id")
-                .mode("append")
-                .saveAsTable(sigs_tbl)
-            )
-            (
-                band_delta.write.format("parquet")
-                .bucketBy(index_buckets, "band_idx", "band_hash")
-                .sortBy("band_idx", "band_hash")
-                .mode("append")
-                .saveAsTable(bands_tbl)
-            )
-            if shingle_delta is not None:
-                (
-                    shingle_delta.write.format("parquet")
-                    .bucketBy(index_buckets, "id")
-                    .sortBy("id")
-                    .mode("append")
-                    .saveAsTable(shingles_tbl)
-                )
-        else:
-            sig_delta.write.mode("append").parquet(sigs_dir)
-            band_delta.write.mode("append").parquet(bands_dir)
-            if shingle_delta is not None:
-                shingle_delta.write.mode("append").parquet(shingles_dir)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if transform is not None:
-            batch_df = transform(batch_df)
-            if batch_df.isEmpty():
-                return
-        if auditor is not None:
-            auditor.check(batch_df)
-        spark = batch_df.sparkSession
-        band_index, signatures, corpus_sh = read_index(spark, batch_df)
-        pairs, sig_delta, band_delta = neardup_incremental(
-            batch_df,
-            band_index,
-            signatures,
-            id_col,
-            text_col,
-            threshold=threshold,
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
-            rows_per_band=rows_per_band,
-            corpus_shingles=corpus_sh,
-        )
-        # one sketch pass feeds pairs + both deltas
-        sig_delta.persist()
-        try:
-            if sink_wants_epoch:
-                pairs_sink(pairs, epoch_id)
-            else:
-                pairs_sink(pairs)
-            shingle_delta = (
-                hashed_shingles(batch_df, id_col, text_col, n=shingle_n)
-                if verify_exact
-                else None
-            )
-            append_deltas(sig_delta, band_delta, shingle_delta)
-        finally:
-            sig_delta.unpersist()
-
-    writer = (
-        docs.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
-
-
-def compact_neardup_index(spark, index_dir: str) -> tuple[int, int]:
-    """Rewrite the near-dup index as a deduplicated snapshot: folds
-    the per-epoch append files (small-file accumulation) and any
-    crash-replay duplicate rows into one clean copy per table.
-    Run it offline between streaming runs (don't race an active
-    query).
-
-    Crash-safe rename-aside through Spark's Hadoop filesystem layer
-    (works on any scheme the job itself can use — file:, hdfs:,
-    s3a:): write the compacted copy to a temp dir, move the live dir
-    aside, move the temp into place, then drop the old copy. A crash
-    at any point leaves either the old or the new table at the live
-    path (plus at most a stray ``.old``/``.compacting`` dir to sweep)
-    — never a missing index, which the streaming job would silently
-    treat as "first batch" and rebuild empty.
-
-    Returns (n_band_rows, n_sig_rows) after compaction. At 100 TB
-    scale this is where the band table would also be written bucketed
-    by (band_idx, band_hash) into a table catalog so probes join in
-    place; the path form here keeps the demo catalog-free.
-    """
-    out = []
-    tables = [
-        ("bands", ["id", "band_idx", "band_hash"]),
-        ("sigs", ["id"]),
-    ]
-    if _hadoop_path_exists(spark, f"{index_dir}/shingles"):
-        # verify_exact jobs also persist the hashed-shingle relation;
-        # folded the same way, not part of the (bands, sigs) return
-        tables.append(("shingles", ["id", "shingle"]))
-    for sub, keys in tables:
-        out.append(_compact_parquet_dir(spark, f"{index_dir}/{sub}", f"{index_dir}/.{sub}", keys))
-    return out[0], out[1]
-
-
-def _compact_parquet_dir(spark, path: str, hidden_prefix: str, keys) -> int:
-    """One table's crash-safe rename-aside compaction (see
-    :func:`compact_neardup_index` for the safety argument): dedup on
-    ``keys``, write to ``{hidden_prefix}_compacting``, swap into
-    place. Returns the compacted row count."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def hpath(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    tmp = f"{hidden_prefix}_compacting"
-    old = f"{hidden_prefix}_old"
-    fs = hpath(path).getFileSystem(hconf)
-    df = spark.read.parquet(path).dropDuplicates(list(keys))
-    fs.delete(hpath(tmp), True)  # stale temp from a prior crash
-    df.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    fs.delete(hpath(old), True)
-    if not fs.rename(hpath(path), hpath(old)):
-        raise IOError(f"compaction: cannot move {path} aside")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        # roll back so the live path is never left empty
-        fs.rename(hpath(old), hpath(path))
-        raise IOError(f"compaction: cannot move {tmp} into place")
-    fs.delete(hpath(old), True)
-    return n
-
-
-def compact_neardup_index_bucketed(
-    spark, index_tables: str, n_buckets: int = 64
-) -> tuple[int, int]:
-    """Bucketed-table sibling of :func:`compact_neardup_index`: fold
-    the per-epoch append files (one per written bucket per epoch) and
-    crash-replay duplicate rows of ``{prefix}_bands`` /
-    ``{prefix}_sigs`` into one clean bucketed copy each, preserving
-    the bucketing spec probe joins rely on. Also the migration path:
-    point it at tables created from a parquet-path index to re-bucket
-    an existing corpus.
-
-    Swap protocol: write ``{name}_compacting``, DROP the live table,
-    RENAME the staging table into place. A crash between DROP and
-    RENAME leaves ``{name}_compacting`` holding the data — the
-    streaming job detects exactly that state and fails loud instead
-    of treating the missing live table as a first batch (the same
-    never-silently-empty guarantee as the path version's
-    rename-aside).
-
-    Returns (n_band_rows, n_sig_rows) after compaction.
-    """
-    out = []
-    tables = [
-        ("bands", ["band_idx", "band_hash"]),
-        ("sigs", ["id"]),
-    ]
-    if spark.catalog.tableExists(f"{index_tables}_shingles"):
-        tables.append(("shingles", ["id"]))  # bucketed by id like sigs
-    for suffix, keys in tables:
-        name = f"{index_tables}_{suffix}"
-        staging = f"{name}_compacting"
-        # dedup keys are the full row identity, bucket keys the join
-        # key: bands dedup on (id, band), shingles on (id, shingle) —
-        # deduping either on its bucket key alone would DROP real rows
-        dedup_keys = {
-            "bands": ["id", *keys],
-            "sigs": keys,
-            "shingles": ["id", "shingle"],
-        }[suffix]
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        (
-            spark.table(name)
-            .dropDuplicates(dedup_keys)
-            .write.format("parquet")
-            .bucketBy(n_buckets, *keys)
-            .sortBy(*keys)
-            .saveAsTable(staging)
-        )
-        n = spark.table(staging).count()
-        spark.sql(f"DROP TABLE {name}")
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {name}")
-        out.append(n)
-    return out[0], out[1]
-
-
-def dedup_within_watermark(
-    df: DataFrame, keys: Sequence[str], ts_col: str, watermark: str
-) -> DataFrame:
-    """Streaming dedup bounded by the watermark — implements the email
-    dedup the reference declared but never built (``last_sensor_state``
-    at reference gestionnaire_mail.py:19). State is dropped once the
-    watermark passes, so memory is bounded at any scale."""
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(keys))
-
-
-def start_incremental_semdedup(
-    vectors: DataFrame,
-    index_dir: str,
-    checkpoint: str,
-    pairs_sink: BatchSink,
-    n_centroids: int = 16,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trigger: str | None = None,
-    available_now: bool = False,
-    query_name: str | None = None,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    auditor=None,
-) -> StreamingQuery:
-    """Streaming SEMANTIC-dedup sibling of :func:`start_incremental_dedup`
-    / :func:`start_incremental_neardup`, for embedding streams: each
-    micro-batch is assigned to a FIXED k-means quantizer and compared
-    (cosine) only against the posting lists of the clusters it
-    touches — new-vs-corpus and new-vs-new — the detected (i, j,
-    score) pairs go to ``pairs_sink``, and the batch's posting rows
-    append to the index. The corpus is never re-embedded, re-clustered
-    or re-scored; per-batch cost tracks batch size x touched-cluster
-    posting lists, not corpus size.
-
-    Index layout under ``index_dir``: ``postings/`` (cid, nid, cv)
-    parquet appends, plus ``centroids/`` — the driver-small quantizer
-    (cid, vec), written ONCE by the first batch (trained on that
-    batch via operators.similarity.ivf_build) and read back by every
-    later batch, so a restarted query keeps the exact assignment
-    geometry. ``postings/`` is written before ``centroids/``: a crash
-    between the two leaves postings without a quantizer, which the
-    next batch detects and FAILS loud on (treating it as a first
-    batch would re-train a different quantizer over a forgotten
-    corpus). Replay safety mirrors the near-dup job: the corpus probe
-    excludes the batch's own ids (semdedup_incremental), and replayed
-    appends' duplicate posting rows cannot multiply output
-    (semdedup_incremental distinct-s its pairs — the output-sized
-    relation — rather than re-shuffling the whole index per batch);
-    fold the accumulated duplicates and small append files offline
-    with :func:`compact_semdedup_index`.
-
-    Retraining policy is the caller's (standard IVF practice): when
-    drift skews posting-list sizes, rebuild offline with
-    :func:`~iot_sensor_data_pipeline_spark.operators.similarity.ivf_build`
-    and swap ``index_dir``.
-
-    ``transform`` / ``auditor``: pre-dedup stateless gate and
-    post-transform plan audit, as :func:`start_incremental_dedup`.
-    """
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        ivf_build,
-        semdedup_incremental,
-    )
-
-    postings_dir = f"{index_dir}/postings"
-    centroids_dir = f"{index_dir}/centroids"
-    sink_wants_epoch = _wants_epoch(pairs_sink)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if transform is not None:
-            batch_df = transform(batch_df)
-            if batch_df.isEmpty():
-                return
-        if auditor is not None:
-            auditor.check(batch_df)
-        spark = batch_df.sparkSession
-        if _hadoop_path_exists(spark, centroids_dir):
-            rows = spark.read.parquet(centroids_dir).collect()  # driver-small
-            centroids = [list(r.vec) for r in sorted(rows, key=lambda r: r.cid)]
-            postings = spark.read.parquet(postings_dir)
-            pairs, delta = semdedup_incremental(
-                batch_df, postings, centroids, threshold, id_col, vec_col,
-                materialize=True,
-            )
-            first_batch = False
-        elif _hadoop_path_exists(spark, postings_dir):
-            raise RuntimeError(
-                f"semantic-dedup index {index_dir} has postings but no "
-                "centroids — a first batch crashed between the two "
-                "writes; remove the orphaned postings before resuming"
-            )
-        else:
-            schema_only, centroid_list = ivf_build(
-                batch_df, n_centroids=n_centroids, corpus_id=id_col, vec_col=vec_col
-            )
-            pairs, delta = semdedup_incremental(
-                batch_df, schema_only.limit(0), centroid_list, threshold,
-                id_col, vec_col, materialize=True,
-            )
-            first_batch = True
-        if sink_wants_epoch:
-            pairs_sink(pairs, epoch_id)
-        else:
-            pairs_sink(pairs)
-        delta.write.mode("append").parquet(postings_dir)
-        if first_batch:
-            cent_rows = [(i, list(map(float, c))) for i, c in enumerate(centroid_list)]
-            spark.createDataFrame(
-                cent_rows, "cid int, vec array<double>"
-            ).coalesce(1).write.mode("overwrite").parquet(centroids_dir)
-
-    writer = (
-        vectors.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
-
-
-def compact_semdedup_index(spark, index_dir: str) -> int:
-    """Fold the semantic-dedup posting index's per-epoch append files
-    and crash-replay duplicate rows into one clean snapshot (one row
-    per nid) — run offline between streaming runs, same crash-safe
-    rename-aside swap as :func:`compact_neardup_index`. The centroids
-    dir is written once and never appended, so only postings compact.
-    Returns the compacted posting-row count."""
-    return _compact_parquet_dir(
-        spark, f"{index_dir}/postings", f"{index_dir}/.postings", ["nid"]
-    )
-
-
-def start_incremental_spandedup(
-    docs: DataFrame,
-    index_dir: str | None,
-    checkpoint: str,
-    cleaned_sink: BatchSink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_count: int = 2,
-    trigger: str | None = None,
-    available_now: bool = False,
-    query_name: str | None = None,
-    index_tables: str | None = None,
-    index_buckets: int = 64,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    auditor=None,
-) -> StreamingQuery:
-    """Streaming EXACT-SUBSTRING sibling of
-    :func:`start_incremental_neardup`: each micro-batch of documents is
-    cleaned against the persistent corpus span index (corpus-duplicated
-    AND within-batch-duplicated k-token windows are cut — see
-    ``operators.span_dedup.span_dedup_incremental``), the cleaned
-    (id, text_clean, n_tokens, n_removed) rows go to ``cleaned_sink``,
-    and the batch's (id, start, span_hash) rows append to the index.
-    The corpus is never re-windowed; per-batch cost tracks batch size
-    plus the corpus rows matching the BATCH's hashes only.
-
-    Index layout: ``{index_dir}/spans`` parquet appends, or — with
-    ``index_tables`` (mutually exclusive) — the catalog table
-    ``{prefix}_spans`` BUCKETED by span_hash (``index_buckets``
-    buckets), so the per-batch hash probe sort-merge-joins against the
-    pre-bucketed index with no exchange on the index side, exactly the
-    neardup band-table layout.
-
-    Replay safety lives entirely inside the operator (batch-id
-    exclusion + identity dedup of the hash-restricted corpus slice —
-    see ``span_dedup_incremental``), so the index is read RAW here: a
-    read-side dedup would aggregate the O(corpus tokens) index on
-    every micro-batch. ``compact_spandedup_index`` folds replay
-    duplicates and small append files offline.
-    ``cleaned_sink`` may accept ``(df, epoch_id)``.
-
-    ``transform`` runs ONCE per batch on the raw documents BEFORE
-    dedup and indexing — the streaming composition point for stateless
-    document gates: e.g. ``lambda df: decontaminate(df, eval_keys,
-    k=13)`` filters eval-set contamination out of the stream so
-    contaminated docs never reach the sink OR the span index
-    (operators/decontamination.py; eval_gram_keys output is static and
-    broadcasts per batch). Stateless transforms only, as in
-    :func:`start_persistence`. Docs the transform removes are simply
-    never ingested (a batch reduced to empty is skipped whole).
-    ``auditor`` gates the post-transform batch plan, as
-    :func:`start_incremental_dedup`.
-    """
-    from iot_sensor_data_pipeline_spark.operators.span_dedup import (
-        _doc_spans,
-        span_dedup_incremental,
-    )
-
-    if (index_dir is None) == (index_tables is None):
-        raise ValueError(
-            "start_incremental_spandedup: pass exactly one of index_dir "
-            "(parquet-path index) or index_tables (bucketed-table index)"
-        )
-    spans_dir = f"{index_dir}/spans" if index_dir else None
-    spans_tbl = f"{index_tables}_spans" if index_tables else None
-    sink_wants_epoch = _wants_epoch(cleaned_sink)
-
-    def read_index(spark, batch_df):
-        if index_tables is not None:
-            if spark.catalog.tableExists(spans_tbl):
-                return spark.table(spans_tbl)
-            if spark.catalog.tableExists(f"{spans_tbl}_compacting"):
-                raise RuntimeError(
-                    f"span index table {spans_tbl} is missing but "
-                    f"{spans_tbl}_compacting exists — a compaction "
-                    "crashed mid-swap; rename it back before resuming"
-                )
-        elif _hadoop_path_exists(spark, spans_dir):
-            return spark.read.parquet(spans_dir)
-        # legitimate first batch: empty index with the operator's schema
-        return _doc_spans(batch_df.limit(0), id_col, text_col, k)
-
-    def append_delta(span_delta):
-        if index_tables is not None:
-            (
-                span_delta.write.format("parquet")
-                .bucketBy(index_buckets, "span_hash")
-                .sortBy("span_hash")
-                .mode("append")
-                .saveAsTable(spans_tbl)
-            )
-        else:
-            span_delta.write.mode("append").parquet(spans_dir)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if transform is not None:
-            batch_df = transform(batch_df)
-            if batch_df.isEmpty():
-                return
-        if auditor is not None:
-            auditor.check(batch_df)
-        spark = batch_df.sparkSession
-        corpus_spans = read_index(spark, batch_df)
-        cleaned, span_delta = span_dedup_incremental(
-            batch_df, corpus_spans, id_col, text_col, k=k, min_count=min_count
-        )
-        # the delta feeds both the sink path (via the duplicated-hash
-        # probe) and the append; span_dedup_incremental already
-        # checkpoints the window pass lazily, so each side reuses it
-        if sink_wants_epoch:
-            cleaned_sink(cleaned, epoch_id)
-        else:
-            cleaned_sink(cleaned)
-        append_delta(span_delta)
-
-    writer = (
-        docs.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
-
-
-def compact_spandedup_index(spark, index_dir: str, id_col: str = "doc_id") -> int:
-    """Fold the span index's per-epoch append files and crash-replay
-    duplicate rows into one clean snapshot (the same crash-safe
-    rename-aside as :func:`compact_neardup_index`); returns the row
-    count after compaction."""
-    return _compact_parquet_dir(
-        spark,
-        f"{index_dir}/spans",
-        f"{index_dir}/.spans",
-        [id_col, "start", "span_hash"],
-    )
 
 
 def _list_snapshot_versions(spark, snapshot_dir: str) -> list[int]:
@@ -1285,8 +559,7 @@ def start_cdc_apply_bucketed(
     directories no kept manifest references are deleted after each
     commit. ``n_buckets`` is fixed at table creation (it is the
     physical key layout): size it so one bucket ~ one comfortable task
-    (bucket bytes ~ |base| / n_buckets), exactly the
-    ``operators/bucketing.py`` discipline.
+    (bucket bytes ~ |base| / n_buckets).
     """
     if keep_versions < 2:
         raise ValueError(
@@ -1981,233 +1254,3 @@ def start_constraint_monitor(
     if query_name:
         writer = writer.queryName(query_name)
     return writer.start()
-
-
-def start_constraint_gate(
-    stream_df: DataFrame,
-    checks,
-    primary_dir: str,
-    quarantine_dir: str,
-    checkpoint: str,
-    reports_dir: str | None = None,
-    partition_cols=(),
-    manifest_cols=(),
-    bloom_cols=(),
-    on_violation=None,
-    trigger: str | None = None,
-    available_now: bool = False,
-    query_name: str | None = None,
-):
-    """The GATING form of :func:`start_constraint_monitor` (VERDICT
-    r11 task 5): one job that both enforces and observes. The monitor
-    only watches — its docstring tells users to "pair it with a
-    filter", which leaves the actual clean-path wiring (and its replay
-    semantics) to every caller; this is that wiring, done once. The
-    reference's PERMISSIVE ingestion null-fills bad records straight
-    into its primary store (reference data_persistance.py:76) — the
-    silent-corruption path this gate closes: downstream consumers read
-    ``primary_dir`` and only ever see rows that passed every ROW-level
-    check, while nothing is dropped (failures land in
-    ``quarantine_dir`` tagged with ``__violated`` = the comma-joined
-    failed check names).
-
-    ONE scan per batch (the fan-out discipline of the standard jobs):
-    the batch persists once with the violation tag computed in the
-    same projection; the clean and quarantine splits both read that
-    cache, as does the optional check-suite report. All sinks are
-    epoch-idempotent under THIS checkpoint's lineage, so a replayed
-    batch converges on primary AND quarantine (no duplicates, no lost
-    rows) and ``input rows == primary + quarantine`` holds per epoch.
-    Set-level checks (unique, ref_integrity) report and alert but do
-    not gate — a uniqueness violation has no single guilty row;
-    deduplicate upstream (``dedup_within_watermark``) when uniqueness
-    must be enforced rather than observed.
-
-    ``partition_cols``/``manifest_cols``/``bloom_cols`` apply to the
-    PRIMARY sink only (the serving table); the quarantine is a
-    dead-letter audit log, deliberately unindexed. Empty splits write
-    nothing — a clean batch mints no quarantine file and an all-bad
-    batch mints no primary file."""
-    from iot_sensor_data_pipeline_spark.operators.constraints import check_suite
-    from iot_sensor_data_pipeline_spark.sources.sinks import parquet_batch_sink
-
-    checks = list(checks)
-    row_checks = [c for c in checks if c.kind == "row"]
-    if not row_checks:
-        raise ValueError(
-            "start_constraint_gate: needs at least one ROW-level check "
-            "to route on (set-level checks observe but cannot assign "
-            "blame to a row) — use start_constraint_monitor to only "
-            "observe"
-        )
-    if "__violated" in stream_df.columns:
-        raise ValueError(
-            "start_constraint_gate: the stream already has a "
-            "'__violated' column (the quarantine tag) — rename it"
-        )
-    primary_sink = parquet_batch_sink(
-        primary_dir,
-        partition_cols=partition_cols,
-        manifest_cols=manifest_cols,
-        bloom_cols=bloom_cols,
-        checkpoint=checkpoint,
-    )
-    quarantine_sink = parquet_batch_sink(quarantine_dir, checkpoint=checkpoint)
-    reports_sink = (
-        parquet_batch_sink(reports_dir, checkpoint=checkpoint)
-        if reports_dir
-        else None
-    )
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        violated = F.concat_ws(
-            ",",
-            *[
-                F.when(F.expr(c.violation_expr), F.lit(c.name))
-                for c in row_checks
-            ],
-        )
-        tagged = batch_df.withColumn("__violated", violated).persist()
-        try:
-            clean = tagged.where(F.col("__violated") == "").drop("__violated")
-            bad = tagged.where(F.col("__violated") != "")
-            if not clean.isEmpty():
-                primary_sink(clean, epoch_id)
-            if not bad.isEmpty():
-                quarantine_sink(bad, epoch_id)
-            if reports_sink is not None or on_violation is not None:
-                rep = check_suite(
-                    tagged.drop("__violated"), checks
-                ).withColumn("epoch", F.lit(epoch_id).cast("long")).persist()
-                try:
-                    if reports_sink is not None:
-                        reports_sink(rep.coalesce(1), epoch_id)
-                    if on_violation is not None:
-                        failing = rep.where(
-                            F.col("n_violations") > 0
-                        ).collect()
-                        if failing:
-                            on_violation(epoch_id, failing)
-                finally:
-                    rep.unpersist()
-        finally:
-            tagged.unpersist()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
-
-
-def start_ab_accumulator(
-    stream_df: DataFrame,
-    unit_col: str,
-    variant_col: str,
-    metric_col: str,
-    stats_dir: str,
-    checkpoint: str,
-    trigger: str | None = None,
-    available_now: bool = False,
-    query_name: str | None = None,
-):
-    """Streaming experiment accumulation at the randomization-unit
-    grain (r12): each micro-batch appends its (variant, unit) PARTIAL
-    metric sums to ``stats_dir`` through the epoch-idempotent sink,
-    and :func:`read_ab_report` folds the accumulated partials through
-    the standard ``operators.experiment`` analysis whenever a read-out
-    is wanted.
-
-    Why partials, not a running report: a unit's events spread across
-    many batches, so a per-batch analysis would be event-grain — the
-    exact correlated-samples mistake ``ab_test_report`` exists to
-    avoid — while keeping a RUNNING unit table would need a
-    corpus-scale keyed rewrite per batch. Partial rows are append-only
-    (one (variant, unit) row per batch it appears in, map-side
-    combined), and ``sum of partials == unit sum``, so the fold at
-    report time is exact. Batch cost: one (variant, unit) groupBy of
-    the BATCH (not the history); storage: one row per (unit, batch)
-    touched — compact them with ``optimize_table``/
-    ``Pipeline.maintain`` like any other append sink (the fold is
-    grouping-invariant, so compaction never changes the report).
-    Replays converge: the sink is epoch-idempotent under this
-    checkpoint's lineage. Rows with NULL unit or variant are excluded
-    HERE (same rule as the batch report) so the persisted relation is
-    analyzable as-is."""
-    from iot_sensor_data_pipeline_spark.sources.sinks import parquet_batch_sink
-
-    for reserved in ("__m_partial", "__epoch"):
-        if reserved in stream_df.columns:
-            raise ValueError(
-                f"start_ab_accumulator: the stream already has a "
-                f"{reserved!r} column — rename it"
-            )
-    sink = parquet_batch_sink(stats_dir, checkpoint=checkpoint)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.where(
-                F.col(unit_col).isNotNull() & F.col(variant_col).isNotNull()
-            )
-            .groupBy(variant_col, unit_col)
-            .agg(
-                F.coalesce(
-                    F.sum(F.col(metric_col).cast("double")), F.lit(0.0)
-                ).alias("__m_partial")
-            )
-            .withColumn("__epoch", F.lit(epoch_id).cast("long"))
-        )
-        if not partial.isEmpty():
-            sink(partial, epoch_id)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
-
-
-def read_ab_report(
-    spark,
-    stats_dir: str,
-    unit_col: str,
-    variant_col: str,
-    control: str,
-    round_out: int = 6,
-) -> DataFrame:
-    """The live experiment read-out over a :func:`start_ab_accumulator`
-    table: fold the partial rows back to unit grain happens INSIDE
-    ``ab_test_report`` itself (its first step is a (variant, unit)
-    sum, and sum of partials == unit sum), so this is one call with
-    the exact batch-mode semantics — Welch z, literal-injected control
-    stats, the same NULL/degenerate rules."""
-    from iot_sensor_data_pipeline_spark.operators.experiment import (
-        ab_test_report,
-    )
-
-    return ab_test_report(
-        spark.read.parquet(stats_dir),
-        unit_col, variant_col, "__m_partial", control, round_out,
-    )

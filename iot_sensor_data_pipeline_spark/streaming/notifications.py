@@ -6,11 +6,10 @@ connection at import time and sends one email per alert row
 just another foreachBatch sink on the alert stream: in-process,
 checkpointed with the query, restart-safe, and testable with a fake
 transport. Severity filtering (the reference's F5) and the message
-format are preserved; pair with streaming.stateful.debounce_alerts to
-notify on transitions instead of every occurrence.
+format are preserved.
 
 SMTP I/O happens on the DRIVER via collect() — notification batches
-are tiny (post-filter, post-debounce); a side-effecting sink must not
+are tiny (post-filter); a side-effecting sink must not
 run inside executors where retries would duplicate sends per partition
 attempt.
 """

@@ -1,93 +1,14 @@
-"""Custom stateful streaming operators.
+"""Alert lifecycle.
 
-Where built-in watermark aggregation isn't enough, Structured Streaming
-exposes arbitrary per-key state via ``applyInPandasWithState`` (Arrow
-batches in/out, state in the state store — RocksDB-backed per
-session.py, so keyspace size is disk-bound, not heap-bound).
-
-``debounce_alerts`` is the flagship: the reference emails EVERY alert
-occurrence (one SMTP send per reading, gestionnaire_mail.py:80-82) and
-left its intended dedup unimplemented (``last_sensor_state`` dict,
-:19). Here: a keyed state machine that emits only TRANSITIONS
-(None -> alert, alert A -> alert B, recovery), which is what a paging
-system actually wants.
-
-``session_window_agg`` covers gap-based session windows with the
-built-in session_window function (works batch + streaming).
+``resolve_alerts`` closes out the reference's never-resolved alerts
+(its ``resolved_at`` stays NULL forever) from a table of alert-state
+transitions; ``plans/queries_reference.py`` runs it in batch form.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-DEBOUNCE_OUTPUT = T.StructType(
-    [
-        T.StructField("sensor_id", T.StringType()),
-        T.StructField("alert_type", T.StringType()),  # null = recovered
-        T.StructField("prev_alert_type", T.StringType()),
-        T.StructField("timestamp", T.TimestampType()),
-        T.StructField("transition", T.StringType()),  # raised|changed|recovered
-    ]
-)
-
-DEBOUNCE_STATE = T.StructType([T.StructField("last_alert_type", T.StringType())])
-
-
-def _debounce_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (sensor_id,) = key
-    last: str | None = state.get[0] if state.exists else None
-    out: list[dict[str, Any]] = []
-    rows: list[tuple] = []
-    for pdf in pdfs:
-        rows.extend(pdf[["alert_type", "timestamp"]].itertuples(index=False))
-    rows.sort(key=lambda r: r.timestamp)
-    for r in rows:
-        cur = r.alert_type if isinstance(r.alert_type, str) else None
-        if cur == last:
-            continue
-        transition = (
-            "raised" if last is None else ("recovered" if cur is None else "changed")
-        )
-        out.append(
-            {
-                "sensor_id": sensor_id,
-                "alert_type": cur,
-                "prev_alert_type": last,
-                "timestamp": r.timestamp,
-                "transition": transition,
-            }
-        )
-        last = cur
-    state.update((last,))
-    if out:
-        yield pd.DataFrame(out)
-
-
-def debounce_alerts(classified: DataFrame) -> DataFrame:
-    """Emit one row per alert-state TRANSITION per sensor.
-
-    Input: a stream with (sensor_id, alert_type nullable, timestamp) —
-    i.e. classified readings BEFORE the isNotNull filter, so recoveries
-    are visible. Works on batch DataFrames too (state spans the whole
-    batch per key).
-    """
-    keyed = classified.select("sensor_id", "alert_type", "timestamp").groupBy("sensor_id")
-    return keyed.applyInPandasWithState(
-        _debounce_fn,
-        outputStructType=DEBOUNCE_OUTPUT,
-        stateStructType=DEBOUNCE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def resolve_alerts(alerts_table: DataFrame, transitions: DataFrame) -> DataFrame:
@@ -120,404 +41,3 @@ def resolve_alerts(alerts_table: DataFrame, transitions: DataFrame) -> DataFrame
     ).withColumn(
         "status", F.when(should_close, F.lit("resolved")).otherwise(F.col("status"))
     ).drop("__resolved_ts")
-
-
-def session_window_agg(
-    df: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    value_col: str,
-    gap: str = "30 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Gap-based session windows (built-in session_window): a session
-    closes after ``gap`` of silence per key. Batch + streaming."""
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(F.session_window(F.col(ts_col), gap).alias("w"), *keys)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(value_col), 4).alias("avg_value"),
-        )
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            *keys,
-            "n",
-            "avg_value",
-        )
-    )
-
-
-WATCHDOG_OUTPUT = T.StructType(
-    [
-        T.StructField("sensor_id", T.StringType()),
-        T.StructField("last_seen", T.TimestampType()),
-        T.StructField("stale_at", T.TimestampType()),
-    ]
-)
-
-WATCHDOG_STATE = T.StructType([T.StructField("last_ts_ms", T.LongType())])
-
-
-def stale_sensors(
-    readings: DataFrame,
-    timeout_ms: int,
-    id_col: str = "sensor_id",
-    ts_col: str = "timestamp",
-) -> DataFrame:
-    """Offline-sensor watchdog: emits (sensor_id, last_seen, stale_at)
-    when a sensor goes silent for ``timeout_ms`` of processing time —
-    the liveness alarm an IoT fleet needs and the reference cannot
-    express (it only reacts to rows that ARRIVE; silence is invisible
-    to a per-reading pipeline, reference alert_detector.py).
-
-    Timer-driven emission on ABSENCE of data: implemented with
-    ``applyInPandasWithState`` + ``ProcessingTimeTimeout`` — when a key
-    receives no input before its deadline, Spark invokes the function
-    with ``state.hasTimedOut`` and an empty row iterator, which is the
-    only way a row-free condition can produce output. State is one
-    long per sensor (RocksDB-backed per session.py), re-armed on every
-    batch containing the key; after flagging, state clears so a
-    returning sensor starts a fresh cycle. (Spark 4's
-    ``transformWithStateInPandas`` timer API is the designated
-    successor for this pattern; it needs the protobuf runtime, so this
-    engine standardizes on the GroupState form.)
-    """
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        (sensor_id,) = key
-        if state.hasTimedOut:
-            last_ms = state.get[0] if state.exists else None
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "sensor_id": [sensor_id],
-                    "last_seen": [
-                        pd.Timestamp(last_ms, unit="ms")
-                        if last_ms is not None
-                        else pd.NaT
-                    ],
-                    "stale_at": [pd.Timestamp.now("UTC").tz_localize(None)],
-                }
-            )
-            return
-        max_ms = None
-        for pdf in pdfs:
-            # null timestamps arrive as NaN (Arrow long -> float64);
-            # a batch of only-null rows must re-arm, not crash
-            ts = pdf["ts_ms"].dropna()
-            if len(ts):
-                m = int(ts.max())
-                max_ms = m if max_ms is None else max(max_ms, m)
-        if max_ms is not None:
-            prev = state.get[0] if state.exists else None
-            if prev is not None:
-                max_ms = max(max_ms, prev)
-            state.update((max_ms,))
-        state.setTimeoutDuration(timeout_ms)
-        return
-
-    prepared = readings.select(
-        F.col(id_col).alias("sensor_id"),
-        (F.col(ts_col).cast("double") * 1000).cast("long").alias("ts_ms"),
-    )
-    return prepared.groupBy("sensor_id").applyInPandasWithState(
-        fn,
-        outputStructType=WATCHDOG_OUTPUT,
-        stateStructType=WATCHDOG_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-EWMA_OUTPUT = T.StructType(
-    [
-        T.StructField("sensor_id", T.StringType()),
-        T.StructField("timestamp", T.TimestampType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("mu", T.DoubleType()),
-        T.StructField("sigma", T.DoubleType()),
-        T.StructField("is_anomaly", T.BooleanType()),
-    ]
-)
-
-EWMA_STATE = T.StructType(
-    [
-        T.StructField("mean", T.DoubleType()),
-        T.StructField("var", T.DoubleType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def ewma_anomalies(
-    readings: DataFrame,
-    alpha: float = 0.1,
-    k_sigma: float = 3.0,
-    min_periods: int = 10,
-    id_col: str = "sensor_id",
-    ts_col: str = "timestamp",
-    value_col: str = "value",
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Streaming adaptive anomaly detection — the live-stream
-    counterpart of ``operators.timeseries.rolling_zscore_anomalies``
-    (rolling-window functions don't exist over unbounded streams):
-    each sensor carries an exponentially-weighted mean/variance in
-    keyed state (two doubles + a long count per sensor, per
-    EWMA_STATE — RocksDB-backed, so fleet size is disk-bound) and every reading is judged against the
-    baseline BEFORE it is folded in, so a spike cannot vouch for
-    itself. Warm-up points (< ``min_periods``) and zero-variance
-    baselines emit ``is_anomaly = NULL`` — same no-judgment semantics
-    as the batch operator.
-
-    EWMA update (West 1979 incremental form): the baseline
-    initializes from each sensor's FIRST observation (a zero start
-    would bias early estimates toward 0), then per reading — judged
-    against (mean, sqrt(var)) first — ``d = x - mean``;
-    ``mean += alpha * d``; ``var = (1 - alpha) * (var + alpha * d^2)``.
-    ``alpha`` trades adaptation speed for stability (0.1 ~ the last
-    ~20 readings dominate). State never grows with history — unlike
-    the batch rolling window, which holds ``window_rows`` points, the
-    stream holds two moments. Streaming-only (applyInPandasWithState
-    rejects batch plans — use the batch rolling operator there); rows
-    within a batch are processed in (ts, value) order for determinism.
-
-    NULL hygiene: rows with a null reading or null timestamp are
-    dropped BEFORE the shuffle (Arrow hands a null double to pandas as
-    NaN, and one NaN folded into the EWMA poisons mean/var forever —
-    every later reading would get sigma=NaN and silently emit
-    is_anomaly=False). The PERMISSIVE/try_variant_get ingest paths
-    produce exactly such nulls on schema drift, so this is load-bearing,
-    not defensive. A NaN that still reaches the fold (literal NaN
-    double in the source) is skipped there, and NaN already persisted
-    in state by an older build is healed on read.
-
-    State TTL: with ``state_ttl_ms`` set, a sensor silent for that long
-    has its state evicted (processing-time timeout — the same machinery
-    as ``stale_sensors``), so the keyspace is bounded by ACTIVE sensors,
-    not sensors-ever-seen. An evicted sensor that returns re-enters
-    warm-up (first reading re-seeds the baseline; no judgment until
-    ``min_periods`` again) rather than being judged against a stale
-    baseline.
-    """
-
-    def fn(key, pdfs, state):
-        (sensor_id,) = key
-        if state.hasTimedOut:
-            # dormant sensor: evict; on return it re-enters warm-up
-            state.remove()
-            return
-        mean, var, n = state.get if state.exists else (0.0, 0.0, 0)
-        if mean != mean or var != var:  # heal NaN-poisoned legacy state
-            mean, var, n = 0.0, 0.0, 0
-        rows = []
-        for pdf in pdfs:
-            rows.extend(pdf[["timestamp", "value"]].itertuples(index=False))
-        rows.sort(key=lambda r: (r.timestamp, r.value))
-        out = []
-        for r in rows:
-            x = float(r.value)
-            if x != x:  # literal NaN double: unjudgeable, never folded
-                continue
-            if n == 0:
-                out.append(
-                    {
-                        "sensor_id": sensor_id,
-                        "timestamp": r.timestamp,
-                        "value": x,
-                        "mu": None,
-                        "sigma": None,
-                        "is_anomaly": None,
-                    }
-                )
-                mean, var, n = x, 0.0, 1
-                continue
-            sigma = var**0.5
-            if n < min_periods or sigma <= 0:
-                flag = None
-            else:
-                flag = bool(abs(x - mean) > k_sigma * sigma)
-            out.append(
-                {
-                    "sensor_id": sensor_id,
-                    "timestamp": r.timestamp,
-                    "value": x,
-                    "mu": round(mean, 6),
-                    "sigma": round(sigma, 6),
-                    "is_anomaly": flag,
-                }
-            )
-            d = x - mean
-            mean += alpha * d
-            var = (1 - alpha) * (var + alpha * d * d)
-            n += 1
-        state.update((mean, var, n))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out)
-
-    keyed = (
-        readings.where(F.col(value_col).isNotNull() & F.col(ts_col).isNotNull())
-        .select(
-            F.col(id_col).alias("sensor_id"),
-            F.col(ts_col).alias("timestamp"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-        .groupBy("sensor_id")
-    )
-    return keyed.applyInPandasWithState(
-        fn,
-        outputStructType=EWMA_OUTPUT,
-        stateStructType=EWMA_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-FUNNEL_OUTPUT = T.StructType(
-    [
-        T.StructField("user", T.StringType()),
-        T.StructField("stage_reached", T.IntegerType()),
-        T.StructField("ts", T.DoubleType()),
-    ]
-)
-
-FUNNEL_STATE = T.StructType([T.StructField("best", T.ArrayType(T.DoubleType()))])
-
-
-def streaming_funnel(
-    events: DataFrame,
-    steps: list,
-    within_seconds: float | None = None,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Streaming counterpart of ``operators.funnel.funnel_stages``:
-    each user's latest-anchor DP vector (k doubles — the latest time
-    every funnel prefix was completed) lives in keyed state, so a
-    funnel that spans micro-batches (step 1 today, step 2 tomorrow)
-    still completes. Emits one row per ADVANCEMENT — (user, new
-    stage_reached, ts of the advancing event) — so downstream sinks
-    see transitions, not per-event noise; identical events in a later
-    batch advance nothing and emit nothing.
-
-    Same DP as the batch operator (latest anchor dominates — see
-    operators/funnel.py docstring for why greedy first-match is wrong
-    under a budget), applied incrementally: state IS the DP vector, so
-    batch boundaries are invisible WITHIN the information the stream
-    has seen so far. Guarantees, precisely:
-
-    - **No false advancement, ever**: an event whose ts precedes the
-      matched previous stage can never advance (the delta check is
-      two-sided), and a late arrival never regresses a stored anchor
-      (anchors only move forward). Every emitted (user, stage) is one
-      a batch run over the same events would also report.
-    - **Lower bound under cross-batch out-of-order arrival**: the
-      stream folds each event once, against the state AT ARRIVAL. If
-      step-2@t=5 lands in batch 1 and step-1@t=3 arrives late in
-      batch 2, a batch run reports stage 2, but the stream examined
-      the step-2 event while best[0] was unset and does not revisit
-      it — it reports stage 1. Events are not buffered or replayed;
-      batch-equality holds exactly when each user's events arrive in
-      non-decreasing stage-completion order across batches (in-batch
-      disorder is handled by the sort). Feed the stream through a
-      watermark-delayed source if replay-exact parity is required.
-
-    Rows within a batch are processed in (ts, step) order for
-    determinism; k doubles per user of RocksDB-backed state, written
-    only for users with funnel-relevant events (the stream is
-    pre-filtered to the step types, so the heartbeat firehose neither
-    shuffles nor creates state).
-
-    NULL hygiene: rows with a null ts are dropped before the shuffle
-    (Arrow delivers them as NaN; a NaN anchor would make every later
-    delta check False and freeze the user's funnel), NaN ts that still
-    arrive are skipped in the fold, and NaN anchors persisted by an
-    older build are healed to None on state read.
-
-    State TTL: with ``state_ttl_ms`` set, users dormant for that long
-    have their DP vector evicted (processing-time timeout), bounding
-    state by active users; a returning user restarts from stage 0.
-    """
-    import math as _math
-
-    steps = list(steps)
-    if not steps:
-        raise ValueError("streaming_funnel: steps must be non-empty")
-    k = len(steps)
-    idx = {s: i for i, s in enumerate(steps)}
-    budget = _math.inf if within_seconds is None else float(within_seconds)
-
-    def fn(key, pdfs, state):
-        (user,) = key
-        if state.hasTimedOut:
-            # dormant user: evict; on return the funnel restarts at 0
-            state.remove()
-            return
-        best = list(state.get[0]) if state.exists else [None] * k
-        # heal NaN anchors persisted by a pre-NULL-hygiene build: NaN
-        # compares False against everything, freezing the funnel
-        best = [b if (b is not None and b == b) else None for b in best]
-        rows = []
-        for pdf in pdfs:
-            for r in pdf[["event_type", "ts"]].itertuples(index=False):
-                if r.event_type in idx:
-                    t = float(r.ts)
-                    if t == t:  # skip NaN ts: an unusable anchor
-                        rows.append((t, idx[r.event_type]))
-        rows.sort()
-        out = []
-        for t, s in rows:
-            # two-sided delta: a LATE event older than the matched
-            # previous stage must not count as "within budget" (a
-            # negative delta passes a one-sided check and would emit
-            # step-2-before-step-1 completions)
-            ok = s == 0 or (
-                best[s - 1] is not None and 0 <= t - best[s - 1] <= budget
-            )
-            if ok:
-                advanced = best[s] is None
-                # anchors only move FORWARD: a late arrival never
-                # regresses a stored anchor to an earlier time
-                best[s] = t if advanced else max(best[s], t)
-                if advanced:
-                    out.append({"user": user, "stage_reached": s + 1, "ts": t})
-        if rows:
-            state.update((best,))
-        if state_ttl_ms is not None and (rows or state.exists):
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out)
-
-    keyed = (
-        events.where(F.col(type_col).isin(steps) & F.col(ts_col).isNotNull())
-        .select(
-            F.col(user_col).cast("string").alias("user"),
-            F.col(type_col).alias("event_type"),
-            F.col(ts_col).cast("double").alias("ts"),
-        )
-        .groupBy("user")
-    )
-    return keyed.applyInPandasWithState(
-        fn,
-        outputStructType=FUNNEL_OUTPUT,
-        stateStructType=FUNNEL_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )

@@ -254,61 +254,3 @@ def test_stream_auditor_silent_on_clean_stream(spark, tmp_path):
         q.stop()
     assert len(got) == 1
     assert not blocking(auditor.findings), auditor.findings
-
-
-def test_stream_auditor_flags_transform_in_incremental_job(spark, tmp_path):
-    """VERDICT r7 item 6: the incremental index jobs build their own
-    foreachBatch writers — a scale-killer introduced by a caller
-    transform must be flagged there too, warn-once across batches."""
-    import json
-    import time
-
-    from iot_sensor_data_pipeline_spark.plans.audit import StreamAuditor
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        start_incremental_dedup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write_batch(name, rows):
-        tmp = src / f".{name}.tmp"
-        tmp.write_text(
-            "\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in rows) + "\n"
-        )
-        tmp.rename(src / name)
-        time.sleep(0.05)
-
-    dim = spark.createDataFrame([(0,), (5,)], "cutoff long")
-    # non-equi broadcast join with a non-scalar build side -> BNLJ block
-    transform = lambda df: (  # noqa: E731
-        df.join(F.broadcast(dim), F.col("doc_id") >= F.col("cutoff"))
-        .groupBy("doc_id", "text")
-        .agg(F.count(F.lit(1)).alias("__m"))
-        .select("doc_id", "text")
-    )
-    auditor = StreamAuditor(name="incremental-bnlj")
-    collected: list = []
-    docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-    q = start_incremental_dedup(
-        docs,
-        index_dir=str(tmp_path / "idx"),
-        checkpoint=str(tmp_path / "chk"),
-        sinks=[lambda df: collected.extend(df.collect())],
-        transform=transform,
-        auditor=auditor,
-    )
-    try:
-        write_batch("b1.json", [(1, "alpha beta"), (2, "gamma delta")])
-        q.processAllAvailable()
-        write_batch("b2.json", [(7, "epsilon zeta")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert {r["doc_id"] for r in collected} == {1, 2, 7}
-    rules = [f.rule for f in auditor.findings]
-    assert rules.count("broadcast-nested-loop") == 1  # warn-once
-    assert any(
-        f.rule == "broadcast-nested-loop" and f.severity == "block"
-        for f in auditor.findings
-    )

@@ -115,48 +115,6 @@ def test_matches_duckdb_oracle_by_name(spark):
         assert ok, (sf, msg)
 
 
-def test_streaming_ingest_with_decontamination_transform(spark, tmp_path):
-    """Streaming composition: a decontaminate() transform on the
-    incremental span-dedup job keeps contaminated docs out of BOTH the
-    sink and the persistent span index."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        start_incremental_spandedup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "out"
-    idx_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    ev = spark.createDataFrame([(0, EVAL)], "doc_id long, text string")
-    eval_keys = eval_gram_keys(ev, k=5).localCheckpoint()
-
-    rows = [(1, CLEAN), (2, LEAK), (3, PART)]
-    (src / "b1.json").write_text(
-        "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-    )
-
-    def sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-    q = start_incremental_spandedup(
-        docs, idx_dir, ckpt, sink, k=8, available_now=True,
-        transform=lambda df: decontaminate(df, eval_keys, k=5, mode="drop"),
-    )
-    q.awaitTermination(120)
-
-    got = {r.doc_id for r in spark.read.parquet(str(out_dir)).collect()}
-    assert got == {1, 3}  # LEAK never reached the sink
-    idx_ids = {
-        r.doc_id for r in spark.read.parquet(f"{idx_dir}/spans").collect()
-    }
-    assert 2 not in idx_ids  # ...nor the persistent index
-
-
 def test_scrub_random_differential_vs_python(spark):
     """Randomized scrub-mode differential: small-alphabet corpora make
     shared k-grams dense; the Spark interval-merge cut must equal a

@@ -168,186 +168,6 @@ def test_shingles_short_docs_empty_not_error(spark):
     assert {r.id for r in got} == {2}
 
 
-def _mk_docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_neardup_incremental_matches_full_rebuild(spark, sf_dir_mid):
-    """Index half the corpus, probe with the other half: every
-    incremental pair involving a new doc must also appear in a
-    full-corpus LSH run with the same signature estimate (same hash
-    family => identical signatures => identical band collisions)."""
-    from iot_sensor_data_pipeline_spark.operators.dedup import (
-        estimated_jaccard_pairs,
-        hashed_shingles,
-        lsh_candidate_pairs,
-        minhash_band_index,
-        minhash_signatures,
-        neardup_incremental,
-    )
-    from iot_sensor_data_pipeline_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir_mid, "documents")
-    old = docs.where(F.col("doc_id") % 2 == 0)
-    new = docs.where(F.col("doc_id") % 2 == 1)
-
-    # index built per the module convention: signatures over
-    # hashed_shingles — the same representation neardup_incremental
-    # probes with (raw-string signatures would never collide)
-    old_sigs = minhash_signatures(hashed_shingles(old, "doc_id", "text", n=3))
-    index = minhash_band_index(old_sigs)
-
-    pairs, sig_delta, band_delta = neardup_incremental(
-        new, index, old_sigs, "doc_id", "text", threshold=0.5
-    )
-    got = {(r.i, r.j): r.est_jaccard for r in pairs.collect()}
-
-    # full rebuild over the whole corpus with the same family
-    all_sigs = minhash_signatures(hashed_shingles(docs, "doc_id", "text", n=3))
-    full = estimated_jaccard_pairs(
-        lsh_candidate_pairs(all_sigs), all_sigs, all_sigs, threshold=0.5
-    )
-    want_all = {(r.i, r.j): r.est_jaccard for r in full.collect()}
-    # restrict to pairs involving at least one new (odd) doc, in the
-    # incremental orientation (i = new side for new-vs-old pairs)
-    want = {}
-    for (i, j), est in want_all.items():
-        if i % 2 == 1 and j % 2 == 1:
-            want[(i, j)] = est          # new-vs-new keeps i<j
-        elif i % 2 == 1:
-            want[(i, j)] = est          # i new, j old
-        elif j % 2 == 1:
-            want[(j, i)] = est          # flip: new doc is the prober
-    assert got == want
-    assert len(got) > 0  # the corpus's synthetic near-dups actually hit
-
-    # deltas have index shape: appending them makes the next batch see
-    # this batch's docs
-    assert set(sig_delta.columns) == set(old_sigs.columns)
-    assert set(band_delta.columns) == {"id", "band_idx", "band_hash"}
-
-
-def test_estimated_jaccard_identical_and_disjoint(spark):
-    from iot_sensor_data_pipeline_spark.operators.dedup import (
-        estimated_jaccard_pairs,
-        hashed_shingles,
-        minhash_signatures,
-    )
-
-    rows = [
-        (0, "alpha beta gamma delta epsilon zeta eta theta"),
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),  # identical
-        (2, "one two three four five six seven eight nine"),   # disjoint
-    ]
-    sigs = minhash_signatures(hashed_shingles(_mk_docs(spark, rows), "doc_id", "text", n=3))
-    cand = spark.createDataFrame([(0, 1), (0, 2)], "i long, j long")
-    got = {
-        (r.i, r.j): r.est_jaccard
-        for r in estimated_jaccard_pairs(cand, sigs, sigs, threshold=0.0).collect()
-    }
-    assert got[(0, 1)] == 1.0   # identical docs agree on every component
-    assert got[(0, 2)] < 0.2    # disjoint shingle sets barely agree
-
-
-def test_neardup_incremental_replayed_epoch_emits_same_pairs(spark, sf_dir_mid):
-    """Replay safety (review finding r4): if the batch's own deltas
-    were ALREADY appended to the index (foreachBatch crash between
-    append and checkpoint commit), re-running the batch must emit
-    exactly the original pairs — no (i, i) self-pairs, no reversed
-    within-batch duplicates."""
-    from iot_sensor_data_pipeline_spark.operators.dedup import (
-        hashed_shingles,
-        minhash_band_index,
-        minhash_signatures,
-        neardup_incremental,
-    )
-    from iot_sensor_data_pipeline_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir_mid, "documents")
-    old = docs.where(F.col("doc_id") % 2 == 0)
-    new = docs.where(F.col("doc_id") % 2 == 1)
-
-    old_sigs = minhash_signatures(hashed_shingles(old, "doc_id", "text", n=3))
-    index = minhash_band_index(old_sigs)
-
-    pairs1, sig_delta, band_delta = neardup_incremental(
-        new, index, old_sigs, "doc_id", "text", threshold=0.5
-    )
-    first = {(r.i, r.j): r.est_jaccard for r in pairs1.collect()}
-    assert first
-
-    # simulate the crashed-after-append replay: index now includes the
-    # batch's own sketches
-    index2 = index.unionByName(band_delta)
-    sigs2 = old_sigs.unionByName(sig_delta)
-    pairs2, _, _ = neardup_incremental(
-        new, index2, sigs2, "doc_id", "text", threshold=0.5
-    )
-    replay = {(r.i, r.j): r.est_jaccard for r in pairs2.collect()}
-    assert replay == first
-    assert all(i != j for i, j in replay)
-
-
-def test_neardup_incremental_exact_verification_broder_bound(spark, sf_dir_mid):
-    """VERDICT r04 #6: with persisted corpus shingles, verification is
-    EXACT Jaccard. At threshold 0 both modes keep every band candidate,
-    so the pair sets coincide and the signature estimate must sit
-    within the Broder bound of the exact value: |est - J| <= max(4 *
-    sqrt(J(1-J)/k), 6/k) at k=64. The 6/k floor covers low-J pairs,
-    where the binomial sigma vanishes but (a) candidacy selection bias
-    forces >= rows_per_band agreeing components (a band collision IS
-    2 agreements) and (b) the max over dozens of candidate pairs sits
-    in the binomial tail (observed worst on this fixture: 5/64
-    agreements at J=0.0104 — deviation 0.068 < 6/64). Also pins exact-
-    mode replay safety: a corpus shingle table that already contains
-    the batch's own rows yields identical pairs."""
-    from iot_sensor_data_pipeline_spark.operators.dedup import (
-        hashed_shingles,
-        minhash_band_index,
-        minhash_signatures,
-        neardup_incremental,
-    )
-    from iot_sensor_data_pipeline_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir_mid, "documents")
-    old = docs.where(F.col("doc_id") % 2 == 0)
-    new = docs.where(F.col("doc_id") % 2 == 1)
-
-    old_sh = hashed_shingles(old, "doc_id", "text", n=3)
-    old_sigs = minhash_signatures(old_sh)
-    index = minhash_band_index(old_sigs)
-
-    est_pairs, _, _ = neardup_incremental(
-        new, index, old_sigs, "doc_id", "text", threshold=0.0
-    )
-    exact_pairs, _, _ = neardup_incremental(
-        new, index, old_sigs, "doc_id", "text", threshold=0.0,
-        corpus_shingles=old_sh,
-    )
-    est = {(r.i, r.j): r.est_jaccard for r in est_pairs.collect()}
-    exact = {(r.i, r.j): r.jaccard for r in exact_pairs.collect()}
-    assert exact and set(est) == set(exact)
-
-    k = 64
-    for pair, j_exact in exact.items():
-        sigma = (j_exact * (1 - j_exact) / k) ** 0.5
-        assert abs(est[pair] - j_exact) <= max(4 * sigma, 6 / k), (
-            pair, est[pair], j_exact,
-        )
-
-    # replay safety of the exact path: already-appended batch shingles
-    # are excluded, so the pairs are unchanged
-    new_sh = hashed_shingles(new, "doc_id", "text", n=3)
-    replay_pairs, _, _ = neardup_incremental(
-        new, index, old_sigs, "doc_id", "text", threshold=0.0,
-        corpus_shingles=old_sh.unionByName(new_sh),
-    )
-    assert {(r.i, r.j): r.jaccard for r in replay_pairs.collect()} == exact
-
-
 def test_duplicate_clusters_star_matches_union_find(spark):
     """large-star/small-star CC vs an independent python union-find on
     pseudo-random graphs (multiple densities, isolated nodes, chains

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from iot_sensor_data_pipeline_spark.sources.sinks import (
     parquet_batch_sink,
-    with_date_partitions,
     write_partitioned_parquet,
 )
 from iot_sensor_data_pipeline_spark.streaming.orchestrator import Pipeline
@@ -49,7 +48,8 @@ def test_partitioned_parquet_roundtrip_and_pruning(spark, tmp_path):
         [(1, "2026-01-01 10:00:00", 1.0), (2, "2026-01-02 11:00:00", 2.0)],
         "id int, ts string, v double",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    write_partitioned_parquet(with_date_partitions(df, "ts"), out, ["dt", "hour"], mode="overwrite")
+    df = df.withColumn("dt", F.to_date("ts")).withColumn("hour", F.hour("ts"))
+    write_partitioned_parquet(df, out, ["dt", "hour"], mode="overwrite")
 
     back = spark.read.parquet(out)
     assert back.count() == 2

@@ -127,67 +127,6 @@ def test_pq_append_only_encode_matches_full(spark):
     assert inc == ful
 
 
-def test_pq_topk_blocked_agrees_with_pq_topk(spark):
-    """The no-collect blocked ADC (corpus-vs-corpus regime) returns the
-    IDENTICAL (qid, nid, dist, rn) relation as the driver-broadcast
-    path — pure ADC and with exact re-rank — across block counts that
-    do and don't divide the data."""
-    import random
-
-    from iot_sensor_data_pipeline_spark.operators.quantization import (
-        pq_topk_blocked,
-    )
-
-    rnd = random.Random(11)
-    d = 16
-    vecs = [(i, [rnd.uniform(-5, 5) for _ in range(d)]) for i in range(300)]
-    corpus = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    books = pq_train(corpus, m=4, k=32, sample_rows=300, iters=8)
-    codes = pq_encode(corpus, books).localCheckpoint()
-    queries = spark.createDataFrame(
-        [(1000 + i, [x + rnd.gauss(0, 0.4) for x in v]) for i, v in vecs[:40]],
-        "vec_id long, embedding array<double>",
-    )
-
-    def rel(df):
-        return sorted(
-            (r.qid, r.nid, r.dist, r.rn) for r in df.collect()
-        )
-
-    want_adc = rel(pq_topk(queries, codes, books, k=5))
-    want_ref = rel(
-        pq_topk(queries, codes, books, k=5, refine=corpus, shortlist_factor=4)
-    )
-    for qb, cb in [(1, 1), (4, 4), (3, 7)]:
-        got = rel(
-            pq_topk_blocked(queries, codes, books, k=5, q_blocks=qb, c_blocks=cb)
-        )
-        assert got == want_adc, (qb, cb)
-    got_ref = rel(
-        pq_topk_blocked(
-            queries, codes, books, k=5,
-            refine=corpus, shortlist_factor=4, q_blocks=4, c_blocks=4,
-        )
-    )
-    assert got_ref == want_ref
-
-
-def test_pq_topk_blocked_guards(spark):
-    from iot_sensor_data_pipeline_spark.operators.quantization import (
-        pq_topk_blocked,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
-    )
-    books = [[[0.0]], [[0.0]], [[0.0]]]
-    codes = pq_encode(df, books)
-    with pytest.raises(ValueError, match="k must be"):
-        pq_topk_blocked(df, codes, books, k=0)
-    with pytest.raises(ValueError, match="block counts"):
-        pq_topk_blocked(df, codes, books, k=1, q_blocks=0)
-
-
 def test_pq_guards(spark):
     df = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="not divisible"):
@@ -200,66 +139,6 @@ def test_pq_guards(spark):
         pq_topk(df, pq_encode(df, books), books, k=0)
     with pytest.raises(ValueError, match="empty query"):
         pq_topk(empty, pq_encode(df, books), books, k=1)
-
-
-def test_ivfpq_topk_recall_and_cell_restriction(spark):
-    """IVF x PQ composition: recall stays high with exact re-rank, and
-    the scan provably touches only probed cells (a query's results all
-    come from its n_probe nearest cells)."""
-    import random
-
-    from iot_sensor_data_pipeline_spark.operators.quantization import ivfpq_topk
-    from iot_sensor_data_pipeline_spark.operators.similarity import ivf_build
-
-    rnd = random.Random(9)
-    d, n_clusters = 16, 8
-    centers = [[rnd.uniform(-20, 20) for _ in range(d)] for _ in range(n_clusters)]
-    vectors = {i: [x + rnd.gauss(0, 0.5) for x in centers[i % n_clusters]]
-               for i in range(400)}
-    corpus = spark.createDataFrame(
-        [(i, v) for i, v in vectors.items()], "vec_id long, embedding array<double>"
-    )
-    assignments, centroids = ivf_build(corpus, n_centroids=n_clusters)
-    books = pq_train(corpus, m=4, k=32, sample_rows=400, iters=8)
-    codes = pq_encode(corpus, books).join(
-        assignments.select("cid", "nid"), "nid"
-    )
-    queries = {1000 + i: [x + rnd.gauss(0, 0.2) for x in vectors[i]] for i in range(15)}
-    qdf = spark.createDataFrame(
-        [(i, v) for i, v in queries.items()], "vec_id long, embedding array<double>"
-    )
-    got = ivfpq_topk(
-        qdf, codes, books, centroids, k=10, n_probe=2,
-        refine=corpus, shortlist_factor=5,
-    )
-    got_ids = {}
-    for r in got.collect():
-        got_ids.setdefault(r.qid, set()).add(r.nid)
-    # true neighbors live in the query's own cluster (clusters are far
-    # apart vs noise), so probe-restricted search still recalls them
-    want = _exact_topk(vectors, queries, 10)
-    hits = sum(len(got_ids[q] & set(w)) for q, w in want.items())
-    recall = hits / sum(len(w) for w in want.values())
-    assert recall >= 0.85, recall
-    # cell restriction: every returned nid shares the query's cluster
-    # residue (clusters are separated enough that IVF cells == clusters)
-    for qid, ids in got_ids.items():
-        seed_cluster = (qid - 1000) % n_clusters
-        assert all(nid % n_clusters == seed_cluster for nid in ids), (qid, ids)
-
-
-def test_ivfpq_guards(spark):
-    import pytest as _pytest
-
-    from iot_sensor_data_pipeline_spark.operators.quantization import ivfpq_topk
-
-    df = spark.createDataFrame([(1, [1.0, 2.0])], "vec_id long, embedding array<double>")
-    books = [[[0.0]], [[0.0]]]
-    codes = pq_encode(df, books).withColumn("cid", F.lit(0))
-    with _pytest.raises(ValueError, match="k must be"):
-        ivfpq_topk(df, codes, books, [[0.0, 0.0]], k=0)
-    with _pytest.raises(ValueError, match="empty query"):
-        ivfpq_topk(df.where(F.col("vec_id") < 0), codes, books, [[0.0, 0.0]], k=1)
 
 
 def test_pq_topk_tie_determinism_across_partitionings(spark):
@@ -291,31 +170,15 @@ def test_pq_topk_tie_determinism_across_partitionings(spark):
     assert [n for _, n, _ in a] == [0, 1, 2, 3, 4]
 
 
-def test_ivfpq_rejects_bad_n_probe(spark):
-    import pytest as _pytest
-
-    from iot_sensor_data_pipeline_spark.operators.quantization import ivfpq_topk
-
-    df = spark.createDataFrame(
-        [(i, [float(i), 0.0]) for i in range(8)], "vec_id long, embedding array<double>"
-    )
-    books = [[[0.0], [5.0]], [[0.0], [5.0]]]
-    codes = pq_encode(df, books).withColumn("cid", F.lit(0))
-    for bad in (0, -3):
-        with _pytest.raises(ValueError, match="n_probe"):
-            ivfpq_topk(df, codes, books, [[0.0, 0.0]], k=1, n_probe=bad)
-
-
-def test_ivfpq_topk_blocked_agrees_with_ivfpq_topk(spark):
+def test_ivfpq_topk_blocked_agrees_with_cell_restricted_pq_topk(spark):
     """The pruned no-collect path (distributed probe assignment +
     per-cell cogroup tiles) returns the IDENTICAL (qid, nid, dist, rn)
-    relation as the driver-collect ivfpq_topk — pure ADC and with
-    exact re-rank — across q_blocks counts that do and don't divide
-    the query set."""
+    relation as the unpruned pq_topk over exactly the cells each query
+    probes — pure ADC and with exact re-rank — across q_blocks counts
+    that do and don't divide the query set."""
     import random
 
     from iot_sensor_data_pipeline_spark.operators.quantization import (
-        ivfpq_topk,
         ivfpq_topk_blocked,
     )
     from iot_sensor_data_pipeline_spark.operators.similarity import ivf_build
@@ -335,21 +198,41 @@ def test_ivfpq_topk_blocked_agrees_with_ivfpq_topk(spark):
         .join(assignments.select("cid", "nid"), "nid")
         .localCheckpoint()
     )
-    queries = spark.createDataFrame(
-        [(1000 + i, [x + rnd.gauss(0, 0.3) for x in v]) for i, v in vecs[:40]],
-        "vec_id long, embedding array<double>",
-    )
+    qrows = [(1000 + i, [x + rnd.gauss(0, 0.3) for x in v]) for i, v in vecs[:40]]
+    queries = spark.createDataFrame(qrows, "vec_id long, embedding array<double>")
 
     def rel(df):
         return sorted((r.qid, r.nid, r.dist, r.rn) for r in df.collect())
 
-    want_adc = rel(ivfpq_topk(queries, codes, books, centroids, k=5, n_probe=2))
-    want_ref = rel(
-        ivfpq_topk(
-            queries, codes, books, centroids, k=5, n_probe=2,
-            refine=corpus, shortlist_factor=4,
+    # each query's n_probe=2 nearest cells, (distance, cid) ties
+    probed = {}
+    for qid, v in qrows:
+        d2 = sorted(
+            (sum((a - b) ** 2 for a, b in zip(v, c)), cid) for cid, c in enumerate(centroids)
         )
-    )
+        probed[qid] = {cid for _, cid in d2[:2]}
+    cell = {r.nid: r.cid for r in codes.select("nid", "cid").collect()}
+    # every (query, code) pair's ADC and exact re-ranked distance, from
+    # pq_topk over the whole code table
+    flat = codes.select("nid", "codes")
+    n = len(vecs)
+    adc = {(r.qid, r.nid): r.dist for r in pq_topk(queries, flat, books, k=n).collect()}
+    exact = {
+        (r.qid, r.nid): r.dist
+        for r in pq_topk(queries, flat, books, k=n, refine=corpus, shortlist_factor=1).collect()
+    }
+
+    def restricted(dist, shortlist):
+        """pq_topk's ranking over the query's probed cells only."""
+        out = []
+        for qid, cells in probed.items():
+            cands = sorted((adc[qid, nid], nid) for nid, cid in cell.items() if cid in cells)
+            top = sorted((dist[qid, nid], nid) for _, nid in cands[:shortlist])[:5]
+            out += [(qid, nid, d, rn) for rn, (d, nid) in enumerate(top, 1)]
+        return sorted(out)
+
+    want_adc = restricted(adc, 5)
+    want_ref = restricted(exact, 5 * 4)
     for qb in (1, 3, 4):
         got = rel(
             ivfpq_topk_blocked(

@@ -88,35 +88,6 @@ def test_every_rule_reachable(spark):
     assert got == [r.alert_type for r in SENSOR_RULES]
 
 
-def test_dim_join_variant_matches_case_variant(spark, golden):
-    """P7 broadcast-dim-join variant (detect_alerts_via_join) must emit
-    the same alert set as the generated-CASE variant (detect_alerts)."""
-    from iot_sensor_data_pipeline_spark.functions.rules import detect_alerts_via_join
-
-    cols = ["sensor_id", "alert_type", "severity", "threshold_value", "actual_value", "message"]
-    case_rows = sorted(
-        tuple(r) for r in detect_alerts(golden, with_audit_cols=False).select(*cols).collect()
-    )
-    join_rows = sorted(
-        tuple(r) for r in detect_alerts_via_join(golden, spark).select(*cols).collect()
-    )
-    assert case_rows == join_rows  # multiset equality (r3/r5 are identical tuples)
-    assert len(join_rows) == 4  # the golden fixture's four alerts
-
-
-def test_dim_join_variant_oracle_parity(spark, sf_dir):
-    """Deregistered from the driver's 50-query gate, so pin the dim-join
-    variant's DuckDB-oracle parity here instead (same harness contract)."""
-    from iot_sensor_data_pipeline_spark.plans.queries_reference import (
-        _ALERTS_JOIN_ORACLE,
-        events_alert_rules_dim_join,
-    )
-    from tests.oracle_harness import compare_query
-
-    ok, msg = compare_query(spark, sf_dir, events_alert_rules_dim_join, _ALERTS_JOIN_ORACLE)
-    assert ok, msg
-
-
 def test_boundary_values_no_alert(spark):
     # thresholds are strict inequalities (reference alert_detector.py:107-153)
     rows = [

@@ -5,21 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from iot_sensor_data_pipeline_spark.operators.similarity import (
-    cosine,
-    cosine_topk,
-    rp_lsh_topk,
-)
+from iot_sensor_data_pipeline_spark.operators.similarity import cosine_topk, rp_lsh_topk
 from iot_sensor_data_pipeline_spark.sources.tables import load_table
-
-
-def test_cosine_primitive(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [1.0, 1.0]), ([1.0, 0.0], [-1.0, 0.0])],
-        "a array<double>, b array<double>",
-    )
-    got = [round(r.c, 9) for r in df.select(cosine(F.col("a"), F.col("b")).alias("c")).collect()]
-    assert got == [0.0, 1.0, -1.0]
 
 
 def test_lsh_recall_vs_brute_force_isotropic_worst_case(spark, sf_dir_mid):
@@ -175,55 +162,15 @@ def test_ivf_build_probe_matches_fused_and_bucketed_plan(spark, sf_dir_mid):
         spark.sql("DROP TABLE IF EXISTS b_ivf_postings")
 
 
-def test_ivf_assign_incremental_append(spark, sf_dir_mid):
-    """Round 5: new vectors join the index via ivf_assign (no retrain,
-    no touch of indexed rows) — assignment agrees with what ivf_build
-    would produce for the same centroids, and a probe over the merged
-    posting lists finds the appended vectors."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        ivf_assign,
-        ivf_build,
-        ivf_probe,
-    )
-
-    emb = load_table(spark, sf_dir_mid, "embeddings")
-    old = emb.where(F.col("vec_id") % 2 == 0)
-    new = emb.where(F.col("vec_id") % 2 == 1)
-
-    assignments, centroids = ivf_build(old, n_centroids=8)
-    delta = ivf_assign(new, centroids)
-
-    # same assignment function: re-assigning the OLD vectors matches
-    # the build output exactly
-    rebuilt = {(r.nid, r.cid) for r in ivf_assign(old, centroids).collect()}
-    built = {(r.nid, r.cid) for r in assignments.collect()}
-    assert rebuilt == built
-
-    # probing the merged index with a new vector's own embedding must
-    # return that vector as a (trivially) similar neighbor of others:
-    # every query finds k neighbors from the union, including new ids
-    merged = assignments.unionByName(delta)
-    queries = new.where(F.col("vec_id") % 50 == 1).limit(5)
-    got = ivf_probe(queries, merged, centroids, k=5, n_probe=8).collect()
-    assert got
-    assert {r.nid % 2 for r in got} == {0, 1}  # both halves reachable
-
-
 def test_rp_lsh_build_probe_matches_fused_and_bucketed_plan(spark, sf_dir_mid):
     """Round 5: the RP-LSH build/probe split mirrors the IVF one —
     split == fused for the same parameters; a bucket-table index probes
-    with the index-side exchange gone; recommended_n_planes encodes the
-    docstring sizing rule."""
+    with the index-side exchange gone."""
     from iot_sensor_data_pipeline_spark.operators.similarity import (
-        recommended_n_planes,
         rp_lsh_build,
         rp_lsh_probe,
         rp_lsh_topk,
     )
-
-    assert recommended_n_planes(2_000, 64) == 5
-    assert recommended_n_planes(20_000, 64) == 9
-    assert recommended_n_planes(1, 64) == 1
 
     emb = load_table(spark, sf_dir_mid, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
@@ -355,54 +302,6 @@ def test_ivf_small_and_large_paths_agree_on_exhaustive_probe(spark, sf_dir_mid):
     assert large == e
 
 
-def test_cosine_topk_blocked_equals_brute_force(spark, sf_dir_mid):
-    """Blocked GEMM (big-queries x big-corpus regime) must equal the
-    broadcast brute-force baseline exactly — same scores, same
-    tie-break — for several block geometries, including blocks that
-    don't divide the data evenly and a 1x1 grid (degenerate = one
-    tile)."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_blocked,
-    )
-    from iot_sensor_data_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir_mid, "embeddings")
-    queries = emb.where(F.col("vec_id") % 10 == 0)  # all-pairs-ish: 10% of corpus
-
-    want = {
-        (r.qid, r.rn): (r.nid, r.score)
-        for r in cosine_topk(queries, emb, k=5).collect()
-    }
-    for qb, cb in ((1, 1), (3, 4), (8, 8)):
-        got = {
-            (r.qid, r.rn): (r.nid, r.score)
-            for r in cosine_topk_blocked(
-                queries, emb, k=5, q_blocks=qb, c_blocks=cb
-            ).collect()
-        }
-        assert got == want, f"mismatch at blocks ({qb},{cb})"
-
-
-def test_cosine_topk_blocked_edge_cases(spark):
-    """k exceeding the corpus, single-row sides, and empty tiles (more
-    blocks than rows) must all match the broadcast baseline."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_blocked,
-    )
-
-    rows = [(i, [float(i + 1), float((i * 7) % 5 + 1), 1.0]) for i in range(6)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    want = sorted(
-        map(tuple, cosine_topk(df, df, k=10).collect())
-    )  # k > |corpus|-1
-    got = sorted(
-        map(tuple, cosine_topk_blocked(df, df, k=10, q_blocks=4, c_blocks=8).collect())
-    )
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # semantic_dedup (SemDeDup)
 # ---------------------------------------------------------------------------
@@ -478,31 +377,6 @@ def test_semantic_dedup_max_cluster_size_guard(spark):
     assert all(r.kept == 1 for r in out)
 
 
-def test_semdedup_incremental_replay_safe(spark):
-    """A batch whose delta was ALREADY appended (at-least-once replay)
-    must emit exactly its original pairs — never match itself in the
-    index."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        ivf_build,
-        semdedup_incremental,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    postings, centroids = ivf_build(corpus, n_centroids=2)
-    batch = spark.createDataFrame(
-        [(10, [0.999, 0.01])], "vec_id long, embedding array<double>"
-    )
-    pairs1, delta = semdedup_incremental(batch, postings, centroids, 0.9)
-    want = {(r.i, r.j) for r in pairs1.collect()}
-    assert want == {(10, 1)}
-    # replay: the index already contains the batch's own posting rows
-    replayed_index = postings.unionByName(delta)
-    pairs2, _ = semdedup_incremental(batch, replayed_index, centroids, 0.9)
-    assert {(r.i, r.j) for r in pairs2.collect()} == want
-
-
 # ---------------------------------------------------------------------------
 # ann_recall_report
 # ---------------------------------------------------------------------------
@@ -567,51 +441,3 @@ def test_ann_recall_report_on_real_variants(spark, sf_dir_mid):
     assert 0.0 < rep["rp_lsh"].macro_recall <= 1.0
     # pruning can only lose neighbors, never gain
     assert rep["ivf_p2"].macro_recall <= rep["ivf_full_probe"].macro_recall
-
-
-def test_choose_n_probe_picks_smallest_compliant(spark, sf_dir_mid):
-    """Recall-targeted probe tuning on the scoreboard fixture: the
-    chosen n_probe is the smallest candidate whose MEASURED recall
-    meets the floor; exhaustive probe pins recall 1.0 (probing every
-    cell IS brute force), so a floor of 1.0 always resolves to it."""
-    from iot_sensor_data_pipeline_spark.operators.similarity import (
-        choose_n_probe,
-        cosine_topk,
-        ivf_topk,
-    )
-
-    emb = load_table(spark, sf_dir_mid, "embeddings").where(F.col("vec_id") < 300)
-    queries = emb.where(F.col("vec_id") < 20)
-    truth = cosine_topk(queries, emb, k=10).persist()
-
-    def probe(p):
-        return ivf_topk(queries, emb, k=10, n_centroids=8, n_probe=p, seed=7)
-
-    chosen, frontier = choose_n_probe(
-        truth, probe, [2, 4, 8], recall_floor=1.0, n_cells=8
-    )
-    rows = {r.n_probe: r for r in frontier.collect()}
-    truth.unpersist()
-    # full probe = brute force = exactly 1.0
-    assert rows[8].macro_recall == 1.0
-    assert chosen == 8 or rows[chosen].macro_recall >= 1.0
-    # monotone frontier: more probes never lose recall
-    assert rows[2].macro_recall <= rows[4].macro_recall <= rows[8].macro_recall
-    assert rows[4].scan_fraction == 0.5
-
-    # a floor below the measured p2 recall picks p2 (smallest compliant)
-    floor = max(rows[2].macro_recall / 2, 0.01)
-    chosen_lo, _ = choose_n_probe(truth, probe, [2, 4, 8], recall_floor=floor)
-    assert chosen_lo == 2
-    # an unreachable floor returns None (fall back to exhaustive)
-    empty = spark.createDataFrame([], "qid long, nid long")
-    none_chosen, _ = choose_n_probe(
-        truth, lambda p: empty, [1, 2], recall_floor=0.5
-    )
-    assert none_chosen is None
-    import pytest
-
-    with pytest.raises(ValueError, match="recall_floor"):
-        choose_n_probe(truth, probe, [2], recall_floor=1.5)
-    with pytest.raises(ValueError, match="candidate_probes"):
-        choose_n_probe(truth, probe, [], recall_floor=0.5)

@@ -149,213 +149,3 @@ def test_random_corpora_match_python_reference(spark):
             for r in remove_duplicated_spans(df, k=k).collect()
         }
         assert got == expected, (trial, k, docs)
-
-
-# ---------------------------------------------------------------------------
-# incremental variant
-# ---------------------------------------------------------------------------
-
-
-def _inc(spark, batch_rows, corpus_spans, k=8):
-    from iot_sensor_data_pipeline_spark.operators.span_dedup import (
-        span_dedup_incremental,
-    )
-
-    return span_dedup_incremental(_docs(spark, batch_rows), corpus_spans, k=k)
-
-
-def _empty_spans(spark):
-    return spark.createDataFrame([], "doc_id long, start int, span_hash long")
-
-
-def test_incremental_cleans_against_corpus_history(spark):
-    # batch 1: W appears once -> kept; its spans enter the index
-    cleaned1, delta1 = _inc(spark, [(1, f"{W} one")], _empty_spans(spark))
-    assert cleaned1.collect()[0]["n_removed"] == 0
-    # batch 2: W appears once IN THE BATCH but already in the corpus
-    cleaned2, _ = _inc(spark, [(2, f"two {W}")], delta1)
-    row = cleaned2.collect()[0]
-    assert row["text_clean"] == "two" and row["n_removed"] == 8
-
-
-def test_incremental_detects_within_batch_duplicates(spark):
-    cleaned, _ = _inc(
-        spark, [(1, f"{W} a"), (2, f"b {W}")], _empty_spans(spark)
-    )
-    out = {r["doc_id"]: r["text_clean"] for r in cleaned.collect()}
-    assert out == {1: "a", 2: "b"}
-
-
-def test_incremental_equals_batch_restricted_to_new_ids(spark):
-    """The documented invariant: incremental cleaning of batch 2 equals
-    the batch operator over (batch1 ∪ batch2), restricted to batch-2
-    docs — window counts add across history exactly."""
-    import random
-
-    rng = random.Random(7)
-    vocab = ["a", "b", "c"]
-    b1 = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 10)))) for i in range(5)]
-    b2 = [(i + 10, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 10)))) for i in range(5)]
-    k = 3
-    _, delta1 = _inc(spark, b1, _empty_spans(spark), k=k)
-    cleaned2, _ = _inc(spark, b2, delta1, k=k)
-    full = remove_duplicated_spans(_docs(spark, b1 + b2), k=k)
-    want = {
-        r["doc_id"]: (r["text_clean"], r["n_removed"])
-        for r in full.collect()
-        if r["doc_id"] >= 10
-    }
-    got = {
-        r["doc_id"]: (r["text_clean"], r["n_removed"]) for r in cleaned2.collect()
-    }
-    assert got == want
-
-
-def test_incremental_replay_is_idempotent(spark):
-    """Crash-replay: the batch's delta was already appended; re-running
-    the same batch must yield the original output (id exclusion)."""
-    batch = [(5, f"{W} solo")]
-    cleaned_a, delta = _inc(spark, batch, _empty_spans(spark))
-    first = cleaned_a.collect()
-    # replayed epoch probes an index that already contains its own rows
-    cleaned_b, _ = _inc(spark, batch, delta)
-    assert cleaned_b.collect() == first
-    assert first[0]["n_removed"] == 0  # its own appended spans don't count
-
-
-# ---------------------------------------------------------------------------
-# streaming job
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_spandedup_cleans_across_restart(spark, tmp_path):
-    """Streaming exact-substring dedup: batch 2 (after a restart) is
-    cleaned against the span index batch 1 persisted — no streaming
-    state carries the memory — and the index holds only hashes+ints,
-    never text. Also covers within-batch duplication and compaction."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        compact_spandedup_index,
-        start_incremental_spandedup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "out"
-    idx_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_batch(fname, rows):
-        (src / fname).write_text(
-            "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-        )
-
-    def sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    def drain():
-        docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_incremental_spandedup(
-            docs, idx_dir, ckpt, sink, k=8, available_now=True
-        )
-        q.awaitTermination(120)
-
-    # batch 1: docs 1 and 2 share W within the batch; doc 3 unique
-    write_batch("b1.json", [(1, f"{W} one"), (2, f"two {W}"), (3, "unique doc")])
-    drain()
-    got1 = {r.doc_id: (r.text_clean, r.n_removed)
-            for r in spark.read.parquet(str(out_dir)).collect()}
-    assert got1 == {1: ("one", 8), 2: ("two", 8), 3: ("unique doc", 0)}
-
-    # batch 2 after a RESTART: doc 4 repeats W (only via the index)
-    write_batch("b2.json", [(4, f"{W} four")])
-    drain()
-    got2 = {r.doc_id: (r.text_clean, r.n_removed)
-            for r in spark.read.parquet(str(out_dir)).collect()}
-    assert got2[4] == ("four", 8)
-
-    # index carries no text
-    idx = spark.read.parquet(f"{idx_dir}/spans")
-    assert set(idx.columns) == {"doc_id", "start", "span_hash"}
-
-    # compaction folds append files without changing the row multiset
-    before = idx.count()
-    after = compact_spandedup_index(spark, idx_dir)
-    assert after == before  # no replay duplicates in a clean run
-    got_after = spark.read.parquet(f"{idx_dir}/spans").count()
-    assert got_after == after
-
-
-def test_incremental_folds_replayed_index_rows(spark):
-    """A crash-replayed append duplicates index ROWS; the operator must
-    dedup the hash-restricted corpus slice on full row identity or a
-    span's corpus count doubles. With min_count=3: corpus holds the
-    span ONCE (but its row is appended twice) and the batch once —
-    true total 2 < 3, so nothing may be cut."""
-    from iot_sensor_data_pipeline_spark.operators.span_dedup import (
-        span_dedup_incremental,
-    )
-
-    _, delta = _inc(spark, [(1, f"{W} one")], _empty_spans(spark))
-    doubled = delta.unionAll(delta)  # replayed append of batch 1
-    cleaned, _ = span_dedup_incremental(
-        _docs(spark, [(2, f"two {W}")]), doubled, k=8, min_count=3
-    )
-    row = cleaned.collect()[0]
-    assert row["n_removed"] == 0 and row["text_clean"] == f"two {W}"
-
-
-def test_streaming_spandedup_bucketed_table_index(spark, tmp_path):
-    """The index_tables variant: the span index lives as a catalog
-    table bucketed by span_hash, appends repeat the spec across
-    epochs/restarts, and cleaning agrees with the parquet-path run."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        start_incremental_spandedup,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS spanidx_spans")
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_batch(fname, rows):
-        (src / fname).write_text(
-            "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-        )
-
-    def sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    def drain():
-        docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_incremental_spandedup(
-            docs, None, ckpt, sink, k=8, available_now=True,
-            index_tables="spanidx", index_buckets=4,
-        )
-        q.awaitTermination(120)
-
-    write_batch("b1.json", [(1, f"{W} one"), (2, "plain unique")])
-    drain()
-    write_batch("b2.json", [(3, f"three {W}")])  # dup only via the index
-    drain()
-    got = {r.doc_id: (r.text_clean, r.n_removed)
-           for r in spark.read.parquet(str(out_dir)).collect()}
-    assert got[3] == ("three", 8)
-    assert got[1] == (f"{W} one", 0)  # batch 1 saw no duplication yet
-
-    # the catalog table is bucketed by span_hash: joining it to itself
-    # on span_hash plans without an exchange on either side
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        t = spark.table("spanidx_spans")
-        j = t.alias("x").join(t.alias("y"), "span_hash")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS spanidx_spans")

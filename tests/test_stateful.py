@@ -1,71 +1,6 @@
-"""Custom stateful operators: alert debounce (applyInPandasWithState)
-and session windows — streaming with controlled micro-batches."""
+"""Alert lifecycle: resolve_alerts closes active alerts on recovery."""
 
 from __future__ import annotations
-
-import json
-import time
-
-import pytest
-from pyspark.sql import functions as F
-
-from iot_sensor_data_pipeline_spark.functions.rules import classify
-from iot_sensor_data_pipeline_spark.sources.json_ingest import ingest_readings
-from iot_sensor_data_pipeline_spark.streaming.stateful import (
-    debounce_alerts,
-    session_window_agg,
-)
-from tests.test_streaming import reading_json, write_batch
-
-
-@pytest.fixture()
-def stream_dirs(tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    return src, str(tmp_path / "chk")
-
-
-def _classified(raw):
-    flat = ingest_readings(raw)
-    return flat.withColumn("alert_type", classify())
-
-
-def test_debounce_emits_transitions_only(spark, stream_dirs):
-    src, chk = stream_dirs
-    out = []
-    raw = spark.readStream.text(str(src))
-    q = (
-        debounce_alerts(_classified(raw))
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        # batch 1: normal -> warning -> warning (dup) -> critical
-        write_batch(
-            src,
-            "b1.json",
-            [
-                reading_json("00:10", 22.0),
-                reading_json("01:00", 28.0),
-                reading_json("01:30", 28.5),
-                reading_json("02:00", 31.0),
-            ],
-        )
-        q.processAllAvailable()
-        # batch 2: still critical (dup across BATCHES -> state store), then recover
-        write_batch(src, "b2.json", [reading_json("03:00", 32.0), reading_json("04:00", 22.0)])
-        q.processAllAvailable()
-
-        got = [(r.transition, r.prev_alert_type, r.alert_type) for r in sorted(out, key=lambda r: r.timestamp)]
-        assert got == [
-            ("raised", None, "temperature_warning"),
-            ("changed", "temperature_warning", "temperature_critical"),
-            ("recovered", "temperature_critical", None),
-        ]
-    finally:
-        q.stop()
 
 
 def test_resolve_alerts_closes_on_recovery(spark):
@@ -93,484 +28,3 @@ def test_resolve_alerts_closes_on_recovery(spark):
     assert out[("s1", "temperature_warning")].status == "active"
     # other sensors untouched
     assert out[("s2", "battery_warning")].status == "active"
-
-
-def test_session_window_batch(spark):
-    import datetime as dt
-
-    T0 = dt.datetime(2026, 1, 1)
-    rows = [
-        ("s1", T0, 1.0),
-        ("s1", T0 + dt.timedelta(minutes=10), 2.0),     # same session (gap 10m < 30m)
-        ("s1", T0 + dt.timedelta(minutes=50), 3.0),     # new session (gap 40m)
-        ("s2", T0, 5.0),
-    ]
-    df = spark.createDataFrame(rows, "sensor_id string, ts timestamp, value double")
-    out = session_window_agg(df, "ts", ["sensor_id"], "value", gap="30 minutes")
-    got = {(r.sensor_id, r.n, r.avg_value) for r in out.collect()}
-    assert got == {("s1", 2, 1.5), ("s1", 1, 3.0), ("s2", 1, 5.0)}
-
-
-def test_session_window_streaming_append(spark, stream_dirs):
-    src, chk = stream_dirs
-    out = []
-    raw = spark.readStream.text(str(src))
-    flat = ingest_readings(raw)
-    agg = session_window_agg(flat, "timestamp", ["sensor_id"], "value", gap="2 minutes", watermark="1 minute")
-    q = (
-        agg.writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        write_batch(src, "b1.json", [reading_json("00:10", 22.0), reading_json("01:00", 24.0)])
-        q.processAllAvailable()
-        # silence > gap, then a much later reading to push the watermark past session close
-        write_batch(src, "b2.json", [reading_json("10:00", 23.0)])
-        q.processAllAvailable()
-        write_batch(src, "b3.json", [reading_json("20:00", 23.0)])
-        q.processAllAvailable()
-        sessions = [(r.n, r.avg_value) for r in out]
-        assert (2, 23.0) in sessions  # first session: the two early readings
-    finally:
-        q.stop()
-
-
-def test_stale_sensor_watchdog_fires_on_silence(spark, tmp_path):
-    """transformWithState watchdog: sensor A reports once then goes
-    silent; B keeps reporting. Only A is flagged stale, with its real
-    last_seen — proves timer-driven emission on ABSENCE of data, which
-    no row-driven operator can produce."""
-    import json as _json
-    import time
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import stale_sensors
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def feed(fname, sensors, ts):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"sensor_id": s, "timestamp": ts}) for s in sensors
-            )
-        )
-
-    t0 = "2026-01-01 00:00:00"
-    feed("b1.json", ["A", "B"], t0)
-
-    readings = (
-        spark.readStream.schema("sensor_id string, timestamp timestamp")
-        .json(str(src))
-    )
-    out = stale_sensors(readings, timeout_ms=6000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("watchdog")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        # keep B alive past A's timeout by feeding it fresh files
-        deadline = time.time() + 90
-        i = 0
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM watchdog").collect()
-            if rows:
-                break
-            if i % 3 == 2:  # every ~3s: B reports again, A stays silent
-                feed(f"b_alive_{i}.json", ["B"], "2026-01-01 00:00:05")
-            i += 1
-            time.sleep(1)
-        rows = spark.sql("SELECT * FROM watchdog").collect()
-        assert rows, "watchdog emitted nothing within 90s"
-        stale_ids = {r.sensor_id for r in rows}
-        assert "A" in stale_ids
-        a = [r for r in rows if r.sensor_id == "A"][0]
-        assert str(a.last_seen) == "2026-01-01 00:00:00"
-        # B was re-armed continuously; it must not be flagged while A is
-        assert "B" not in stale_ids
-    finally:
-        q.stop()
-
-
-def test_ewma_anomalies_stream_state_spans_batches(spark, tmp_path):
-    """Streaming EWMA anomalies: baseline learned in batch 1 flags a
-    spike arriving in batch 2 (state store carries the moments); the
-    spike is judged BEFORE being folded into the baseline; warm-up
-    points emit NULL."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import ewma_anomalies
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = []
-
-    def feed(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"sensor_id": s, "timestamp": ts, "value": v})
-                for s, ts, v in rows
-            )
-        )
-
-    raw = (
-        spark.readStream.schema("sensor_id string, timestamp string, value double")
-        .json(str(src))
-        .withColumn("timestamp", __import__("pyspark.sql.functions", fromlist=["F"]).col("timestamp").cast("timestamp"))
-    )
-    q = (
-        ewma_anomalies(raw, alpha=0.2, k_sigma=3.0, min_periods=5)
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        feed(
-            "b1.json",
-            [("A", f"2026-01-01 00:00:{i:02d}", 20.0 + (i % 2) * 0.4) for i in range(8)]
-            + [("FLAT", f"2026-01-01 00:00:{i:02d}", 7.0) for i in range(8)],
-        )
-        q.processAllAvailable()
-        feed(
-            "b2.json",
-            [
-                ("A", "2026-01-01 00:01:00", 50.0),
-                ("A", "2026-01-01 00:01:01", 20.2),
-                ("FLAT", "2026-01-01 00:01:00", 7.0),
-            ],
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    by_ts = {str(r.timestamp): r for r in out if r.sensor_id == "A"}
-    # warm-up: first 5 readings unjudged
-    for i in range(5):
-        assert by_ts[f"2026-01-01 00:00:0{i}"].is_anomaly is None
-    # settled baseline: normal readings pass
-    assert by_ts["2026-01-01 00:00:07"].is_anomaly is False
-    # batch-2 spike flagged against batch-1 state, judged BEFORE fold-in
-    spike = by_ts["2026-01-01 00:01:00"]
-    assert spike.is_anomaly is True
-    assert spike.mu is not None and abs(spike.mu - 20.2) < 0.5  # pre-spike baseline
-    # a constant series never earns a judgment (zero variance), even
-    # past min_periods and across batches
-    assert all(r.is_anomaly is None for r in out if r.sensor_id == "FLAT")
-
-
-def test_streaming_funnel_spans_micro_batches(spark, tmp_path):
-    """Step 1 arrives in batch 1, step 2 in batch 2 within budget: the
-    DP state carries the anchor across batches and the completion is
-    emitted exactly once; repeats advance nothing; the greedy-trap
-    re-anchor (a fresh A in batch 2) also works incrementally."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import streaming_funnel
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = []
-
-    def feed(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"user_id": u, "event_type": e, "ts": t})
-                for u, e, t in rows
-            )
-        )
-
-    raw = spark.readStream.schema("user_id string, event_type string, ts double").json(
-        str(src)
-    )
-    q = (
-        streaming_funnel(raw, ["A", "B"], within_seconds=100)
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        feed("b1.json", [("u1", "A", 10.0), ("u2", "A", 0.0), ("u2", "B", 500.0)])
-        q.processAllAvailable()
-        # u1 completes across the batch boundary; u2's stale anchor is
-        # refreshed by a new A, then B lands within budget of it
-        feed("b2.json", [("u1", "B", 50.0), ("u1", "B", 60.0), ("u2", "A", 600.0), ("u2", "B", 650.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = sorted((r.user, r.stage_reached, r.ts) for r in out)
-    assert got == [
-        ("u1", 1, 10.0),   # batch 1: A
-        ("u1", 2, 50.0),   # batch 2: first B completes; second B emits nothing
-        ("u2", 1, 0.0),    # batch 1: A (B@500 out of budget)
-        ("u2", 2, 650.0),  # batch 2: B within budget of the re-anchor A@600
-    ]
-
-
-def test_streaming_funnel_late_data_matches_batch_semantics(spark, tmp_path):
-    """Late cross-batch data must not fabricate completions: B@40
-    arriving after A@50 (step 2 BEFORE step 1 in event time) advances
-    nothing — the stream agrees with the batch operator; and a late
-    re-delivered earlier A cannot regress the stored anchor."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import streaming_funnel
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = []
-
-    def feed(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"user_id": u, "event_type": e, "ts": t})
-                for u, e, t in rows
-            )
-        )
-
-    raw = spark.readStream.schema("user_id string, event_type string, ts double").json(
-        str(src)
-    )
-    q = (
-        streaming_funnel(raw, ["A", "B"], within_seconds=20)
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        feed("b1.json", [("u1", "A", 50.0), ("u2", "A", 50.0)])
-        q.processAllAvailable()
-        # u1: B@40 is BEFORE the anchor -> no completion
-        # u2: late A@5 must not regress the anchor; B@60 completes vs A@50
-        feed("b2.json", [("u1", "B", 40.0), ("u2", "A", 5.0), ("u2", "B", 60.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = sorted((r.user, r.stage_reached, r.ts) for r in out)
-    assert got == [("u1", 1, 50.0), ("u2", 1, 50.0), ("u2", 2, 60.0)]
-
-
-def test_ewma_null_readings_never_poison_state(spark, tmp_path):
-    """A null reading (PERMISSIVE ingest drift) used to fold NaN into
-    the EWMA moments, after which the sensor silently emitted
-    is_anomaly=False forever. Null value/ts rows are now dropped
-    pre-shuffle: the baseline survives them and a later spike is still
-    flagged."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import ewma_anomalies
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = []
-
-    def feed(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"sensor_id": s, "timestamp": ts, "value": v})
-                for s, ts, v in rows
-            )
-        )
-
-    raw = (
-        spark.readStream.schema("sensor_id string, timestamp string, value double")
-        .json(str(src))
-        .withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-    )
-    q = (
-        ewma_anomalies(raw, alpha=0.2, k_sigma=3.0, min_periods=5)
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        # warm baseline WITH null values and a null timestamp mixed in
-        feed(
-            "b1.json",
-            [("A", f"2026-01-01 00:00:{i:02d}", 20.0 + (i % 2) * 0.4) for i in range(8)]
-            + [("A", "2026-01-01 00:00:03", None), ("A", None, 21.0)],
-        )
-        q.processAllAvailable()
-        feed("b2.json", [("A", "2026-01-01 00:01:00", None),
-                         ("A", "2026-01-01 00:01:01", 50.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # null rows emit nothing (they are filtered, not judged)
-    assert all(r.value is not None for r in out)
-    spike = [r for r in out if str(r.timestamp) == "2026-01-01 00:01:01"][0]
-    assert spike.is_anomaly is True            # baseline NOT NaN-poisoned
-    assert abs(spike.mu - 20.2) < 0.5
-
-
-def test_streaming_funnel_null_ts_never_freezes_user(spark, tmp_path):
-    """A null ts used to arrive as NaN, set best[0]=NaN, and freeze the
-    user at stage 1 forever (NaN fails every later delta check). Null-
-    ts rows are now dropped pre-shuffle; the funnel still completes."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import streaming_funnel
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = []
-
-    def feed(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"user_id": u, "event_type": e, "ts": t})
-                for u, e, t in rows
-            )
-        )
-
-    raw = spark.readStream.schema("user_id string, event_type string, ts double").json(
-        str(src)
-    )
-    q = (
-        streaming_funnel(raw, ["A", "B"], within_seconds=100)
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        feed("b1.json", [("u1", "A", None)])   # poison attempt
-        q.processAllAvailable()
-        feed("b2.json", [("u1", "A", 10.0), ("u1", "B", 20.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = sorted((r.user, r.stage_reached, r.ts) for r in out)
-    assert got == [("u1", 1, 10.0), ("u1", 2, 20.0)]
-
-
-def _poll(predicate, timeout_s=60):
-    """Poll until predicate() is truthy. With ProcessingTimeTimeout the
-    query runs state-cleanup batches on EVERY trigger, so
-    processAllAvailable never settles — polling (the stale_sensors
-    test's pattern) is the only correct wait."""
-    import time
-
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        if predicate():
-            return True
-        time.sleep(0.5)
-    return predicate()
-
-
-def test_ewma_state_ttl_evicts_and_rewarms(spark, tmp_path):
-    """With state_ttl_ms, a dormant sensor's moments are evicted (the
-    timeout fires in the no-data cleanup batches); when it returns, it
-    re-enters WARM-UP (first reading seeds, mu=None) — NOT judged
-    against the stale baseline. Bounds state by active sensors, not
-    sensors-ever-seen."""
-    import json as _json
-    import time
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import ewma_anomalies
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = []
-
-    def feed(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"sensor_id": s, "timestamp": ts, "value": v})
-                for s, ts, v in rows
-            )
-        )
-
-    raw = (
-        spark.readStream.schema("sensor_id string, timestamp string, value double")
-        .json(str(src))
-        .withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-    )
-    q = (
-        ewma_anomalies(raw, alpha=0.2, k_sigma=3.0, min_periods=3,
-                       state_ttl_ms=4000)
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        feed("b1.json",
-             [("A", f"2026-01-01 00:00:{i:02d}", 20.0) for i in range(6)])
-        assert _poll(lambda: len([r for r in out if r.sensor_id == "A"]) >= 6), \
-            "batch 1 never produced output"
-        time.sleep(10)  # > ttl + trigger margin: cleanup batches evict A
-        feed("probe.json", [("A", "2026-01-01 02:00:00", 50.0)])
-        assert _poll(lambda: any(str(r.timestamp) == "2026-01-01 02:00:00"
-                                 for r in out)), "probe reading never surfaced"
-    finally:
-        q.stop()
-
-    probe = [r for r in out if str(r.timestamp) == "2026-01-01 02:00:00"][0]
-    # evicted -> re-warm-up: the 50.0 seeds a FRESH baseline (mu None,
-    # no judgment); stale-state behavior would flag it True vs mu~20
-    assert probe.mu is None and probe.is_anomaly is None
-
-
-def test_streaming_funnel_state_ttl_evicts(spark, tmp_path):
-    """With state_ttl_ms, a dormant user's DP vector is evicted: a B
-    arriving after eviction advances nothing (the funnel restarted at
-    stage 0)."""
-    import json as _json
-    import time
-
-    from iot_sensor_data_pipeline_spark.streaming.stateful import streaming_funnel
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = []
-
-    def feed(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"user_id": u, "event_type": e, "ts": t})
-                for u, e, t in rows
-            )
-        )
-
-    raw = spark.readStream.schema("user_id string, event_type string, ts double").json(
-        str(src)
-    )
-    q = (
-        streaming_funnel(raw, ["A", "B"], within_seconds=10_000,
-                         state_ttl_ms=4000)
-        .writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        feed("b1.json", [("u1", "A", 10.0)])
-        assert _poll(lambda: any(r.user == "u1" for r in out)), \
-            "batch 1 never produced output"
-        time.sleep(10)  # > ttl: cleanup batches evict u1's DP vector
-        # u2's fresh A is the processed-sentinel for the probe batch
-        feed("probe.json", [("u1", "B", 20.0), ("u2", "A", 100.0)])
-        assert _poll(lambda: any(r.user == "u2" for r in out)), \
-            "probe batch never surfaced"
-    finally:
-        q.stop()
-
-    u1 = sorted((r.stage_reached, r.ts) for r in out if r.user == "u1")
-    # stage 1 from batch 1; the post-eviction B must NOT complete stage 2
-    assert u1 == [(1, 10.0)]

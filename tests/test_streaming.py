@@ -18,7 +18,6 @@ import pytest
 
 from iot_sensor_data_pipeline_spark.sources.json_ingest import ingest_readings
 from iot_sensor_data_pipeline_spark.streaming.jobs import (
-    dedup_within_watermark,
     start_aggregator,
     start_alerts,
 )
@@ -162,34 +161,6 @@ def test_epoch_aware_sink_receives_epoch_id(spark, stream_dirs):
         q.stop()
 
 
-def test_dedup_within_watermark(spark, stream_dirs):
-    """Duplicate readings (same sensor_id+timestamp) inside the
-    watermark are emitted once — the reference's unimplemented email
-    dedup (gestionnaire_mail.py:19)."""
-    src, chk, tmp = stream_dirs
-    out: list = []
-
-    raw = spark.readStream.text(str(src))
-    deduped = dedup_within_watermark(
-        ingest_readings(raw), keys=["sensor_id", "timestamp"], ts_col="timestamp", watermark="10 minutes"
-    )
-    q = (
-        deduped.writeStream.foreachBatch(lambda df, eid: out.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        dup = reading_json("01:00", 28.0)
-        write_batch(src, "b1.json", [dup, dup, reading_json("02:00", 22.0)])
-        q.processAllAvailable()
-        write_batch(src, "b2.json", [dup])  # same key again, later batch, in-watermark
-        q.processAllAvailable()
-        assert len(out) == 2  # one per distinct (sensor_id, timestamp)
-    finally:
-        q.stop()
-
-
 def test_streaming_batch_share_transform(spark, stream_dirs):
     """The SAME detect_alerts/ingest pipeline runs in batch mode with
     identical results — unified API, zero code duplication."""
@@ -200,536 +171,6 @@ def test_streaming_batch_share_transform(spark, stream_dirs):
     alerts = detect_alerts(ingest_readings(batch_df)).collect()
     assert [a.alert_type for a in alerts] == ["temperature_warning"]
 
-def test_incremental_dedup_stream_survives_restart(spark, tmp_path):
-    """Streaming exact dedup against the persistent fingerprint index:
-    within-batch dups collapse, cross-RESTART dups are dropped (the
-    index — not streaming state — carries the memory), and the index
-    never stores text."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import start_incremental_dedup
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "out"
-    idx_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_batch(fname, rows):
-        (src / fname).write_text(
-            "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-        )
-
-    def sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    def drain():
-        docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_incremental_dedup(
-            docs, idx_dir, ckpt, [sink], available_now=True
-        )
-        q.awaitTermination(120)
-
-    # batch 1: doc 3 duplicates doc 1 within the batch
-    write_batch("b1.json", [(1, "alpha text"), (2, "beta text"), (3, "alpha text")])
-    drain()
-    got1 = {(r.doc_id, r.text) for r in spark.read.parquet(str(out_dir)).collect()}
-    assert got1 == {(1, "alpha text"), (2, "beta text")}
-
-    # batch 2 after a RESTART: doc 4 duplicates batch 1's doc 1; doc 5 fresh
-    write_batch("b2.json", [(4, "alpha text"), (5, "gamma text")])
-    drain()
-    got2 = {(r.doc_id, r.text) for r in spark.read.parquet(str(out_dir)).collect()}
-    assert got2 == got1 | {(5, "gamma text")}
-
-    # the index holds only fingerprints (no text), one per distinct doc
-    idx = spark.read.parquet(idx_dir)
-    assert idx.columns == ["fp"]
-    assert idx.distinct().count() == 3  # alpha, beta, gamma
-
-def test_incremental_neardup_stream_probes_persistent_index(spark, tmp_path):
-    """Streaming near-dup: batch 2 (after restart) probes the MinHash
-    index batch 1 persisted — a near-copy of an already-indexed doc is
-    reported without re-sketching the corpus; the index holds only
-    sketches (no text)."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import start_incremental_neardup
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "pairs"
-    idx_dir = str(tmp_path / "ndindex")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while autumn rain "
-        "falls softly on the quiet village rooftops tonight"
-    )
-    near = base.replace("autumn", "winter")  # 1 word of 20 -> J ~ 0.7
-    other = "completely different content all about catalyst optimizer join plans"
-    fresh = "yet another unrelated document mentioning shuffle partitions and codegen stages"
-
-    def write_batch(fname, rows):
-        (src / fname).write_text(
-            "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-        )
-
-    def pairs_sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    def drain():
-        docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_incremental_neardup(
-            docs, idx_dir, ckpt, pairs_sink, threshold=0.5, available_now=True
-        )
-        q.awaitTermination(120)
-
-    write_batch("b1.json", [(1, base), (2, other)])
-    drain()
-    assert spark.read.parquet(str(out_dir)).count() == 0  # nothing similar yet
-
-    write_batch("b2.json", [(3, near), (4, fresh)])
-    drain()
-    got = {(r.i, r.j): r.est_jaccard for r in spark.read.parquet(str(out_dir)).collect()}
-    assert set(got) == {(3, 1)}  # the near-copy against the INDEXED doc
-    assert got[(3, 1)] >= 0.5
-
-    # index holds sketches only, for all 4 docs
-    sigs = spark.read.parquet(f"{idx_dir}/sigs")
-    assert "text" not in sigs.columns and sigs.select("id").distinct().count() == 4
-    bands = spark.read.parquet(f"{idx_dir}/bands")
-    assert set(bands.columns) == {"id", "band_idx", "band_hash"}
-
-def test_incremental_neardup_stream_bucketed_index(spark, tmp_path):
-    """VERDICT r04 #4: the same cross-restart near-dup e2e, but with
-    the index stored as catalog-registered BUCKETED tables
-    ({prefix}_bands / {prefix}_sigs / {prefix}_shingles — this run
-    also exercises verify_exact in table mode) instead of parquet
-    paths — probe semantics identical, then compaction folds the
-    per-epoch bucket files while preserving the bucketing spec, and
-    the compacted index still probes correctly."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.operators.dedup import neardup_incremental
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        compact_neardup_index_bucketed,
-        start_incremental_neardup,
-    )
-
-    prefix = "ndtest_bucketed"
-    for suf in (
-        "bands", "sigs", "shingles",
-        "bands_compacting", "sigs_compacting", "shingles_compacting",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{suf}")
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "pairs"
-    ckpt = str(tmp_path / "ckpt")
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while autumn rain "
-        "falls softly on the quiet village rooftops tonight"
-    )
-    near = base.replace("autumn", "winter")
-    other = "completely different content all about catalyst optimizer join plans"
-    fresh = "yet another unrelated document mentioning shuffle partitions and codegen stages"
-
-    def write_batch(fname, rows):
-        (src / fname).write_text(
-            "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-        )
-
-    def pairs_sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    def drain():
-        docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_incremental_neardup(
-            docs,
-            None,
-            ckpt,
-            pairs_sink,
-            threshold=0.5,
-            available_now=True,
-            index_tables=prefix,
-            index_buckets=4,
-            verify_exact=True,
-        )
-        q.awaitTermination(120)
-
-    write_batch("b1.json", [(1, base), (2, other)])
-    drain()
-    assert spark.read.parquet(str(out_dir)).count() == 0
-
-    write_batch("b2.json", [(3, near), (4, fresh)])
-    drain()
-    got = {(r.i, r.j): r.jaccard for r in spark.read.parquet(str(out_dir)).collect()}
-    assert set(got) == {(3, 1)} and got[(3, 1)] >= 0.5
-    # table-mode exact verification used the persisted shingle table
-    assert spark.table(f"{prefix}_shingles").select("id").distinct().count() == 4
-
-    # index tables hold sketches only; bucketing spec is in the catalog
-    assert spark.table(f"{prefix}_sigs").select("id").distinct().count() == 4
-    assert "CLUSTERED BY" in spark.sql(
-        f"SHOW CREATE TABLE {prefix}_bands"
-    ).first()[0].upper().replace("\n", " ")
-
-    # compaction folds per-epoch bucket files, keeps rows + spec
-    n_bands = spark.table(f"{prefix}_bands").count()
-    n_sigs = spark.table(f"{prefix}_sigs").count()
-    nb, ns = compact_neardup_index_bucketed(spark, prefix, n_buckets=4)
-    assert (nb, ns) == (n_bands, n_sigs)  # no replay dups to fold here
-    assert "CLUSTERED BY" in spark.sql(
-        f"SHOW CREATE TABLE {prefix}_bands"
-    ).first()[0].upper().replace("\n", " ")
-
-    # the compacted bucketed index still probes correctly — exact mode
-    # against the compacted shingle table
-    probe = spark.createDataFrame(
-        [(9, base.replace("quick", "sneaky"))], "doc_id long, text string"
-    )
-    pairs, _, _ = neardup_incremental(
-        probe,
-        spark.table(f"{prefix}_bands"),
-        spark.table(f"{prefix}_sigs"),
-        "doc_id",
-        "text",
-        threshold=0.5,
-        corpus_shingles=spark.table(f"{prefix}_shingles"),
-    )
-    assert {(r.i, r.j) for r in pairs.collect()} == {(9, 1), (9, 3)}
-
-    for suf in ("bands", "sigs", "shingles"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{suf}")
-
-
-def test_incremental_neardup_stream_verify_exact(spark, tmp_path):
-    """Round 5: verify_exact persists the hashed-shingle relation as a
-    third index table and emits EXACT Jaccard pairs (column `jaccard`)
-    — a batch-2 near-copy of a batch-1 doc is verified against the
-    persisted corpus shingles, and the value equals an independently
-    computed exact ngram Jaccard. Compaction folds all three tables."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.operators.dedup import (
-        hashed_shingles,
-        ngram_jaccard_pairs,
-    )
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        compact_neardup_index,
-        start_incremental_neardup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "pairs"
-    idx_dir = str(tmp_path / "ndindex")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while autumn rain "
-        "falls softly on the quiet village rooftops tonight"
-    )
-    near = base.replace("autumn", "winter")
-    other = "completely different content all about catalyst optimizer join plans"
-
-    def write_batch(fname, rows):
-        (src / fname).write_text(
-            "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
-        )
-
-    def pairs_sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    def drain():
-        docs = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = start_incremental_neardup(
-            docs, idx_dir, ckpt, pairs_sink, threshold=0.5,
-            available_now=True, verify_exact=True,
-        )
-        q.awaitTermination(120)
-
-    write_batch("b1.json", [(1, base), (2, other)])
-    drain()
-    assert spark.read.parquet(str(out_dir)).count() == 0
-
-    write_batch("b2.json", [(3, near)])
-    drain()
-    got = {(r.i, r.j): r.jaccard for r in spark.read.parquet(str(out_dir)).collect()}
-    assert set(got) == {(3, 1)}
-
-    # the streamed value IS the exact Jaccard (not an estimate):
-    # recompute independently from the raw texts
-    both = spark.createDataFrame(
-        [(1, base), (3, near)], "doc_id long, text string"
-    )
-    cand = spark.createDataFrame([(3, 1)], "i long, j long")
-    want = ngram_jaccard_pairs(
-        hashed_shingles(both, "doc_id", "text", n=3), 0.0, candidates=cand
-    ).first()
-    assert got[(3, 1)] == want.jaccard
-
-    # shingle index exists, holds both batches' docs, and compaction
-    # folds it alongside bands/sigs
-    sh = spark.read.parquet(f"{idx_dir}/shingles")
-    assert set(sh.columns) == {"id", "shingle"}
-    assert sh.select("id").distinct().count() == 3
-    n_sh = sh.count()
-    sh.write.mode("append").parquet(f"{idx_dir}/shingles")  # fake replay
-    compact_neardup_index(spark, idx_dir)
-    assert spark.read.parquet(f"{idx_dir}/shingles").count() == n_sh
-
-
-def test_incremental_neardup_bucketed_detects_crashed_compaction(spark, tmp_path):
-    """The bucketed-table compaction swap has a crash window (between
-    DROP of the live table and RENAME of the staging table). The
-    streaming job must detect that state — live table missing but
-    {name}_compacting present — and FAIL the batch instead of treating
-    it as a first batch and silently rebuilding an empty index."""
-    import json as _json
-
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import start_incremental_neardup
-
-    prefix = "ndtest_crashed"
-    for suf in ("bands", "sigs", "bands_compacting"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{suf}")
-    # simulate the mid-swap state: only the staging table exists
-    spark.createDataFrame(
-        [(1, 0, 123)], "id long, band_idx int, band_hash long"
-    ).write.saveAsTable(f"{prefix}_bands_compacting")
-
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "b.json").write_text(_json.dumps({"doc_id": 1, "text": "some words here"}))
-
-    q = start_incremental_neardup(
-        spark.readStream.schema("doc_id long, text string").json(str(src)),
-        None,
-        str(tmp_path / "ckpt"),
-        lambda df: None,
-        available_now=True,
-        index_tables=prefix,
-    )
-    try:
-        import pytest as _pytest
-
-        with _pytest.raises((StreamingQueryException, Py4JJavaError)) as exc:
-            q.awaitTermination(120)
-        assert "compaction" in str(exc.value)
-    finally:
-        for suf in ("bands", "sigs", "bands_compacting"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{suf}")
-
-
-def test_incremental_neardup_requires_exactly_one_index_location(spark, tmp_path):
-    import pytest as _pytest
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import start_incremental_neardup
-
-    docs = spark.readStream.format("rate").load()
-    with _pytest.raises(ValueError, match="exactly one"):
-        start_incremental_neardup(docs, None, str(tmp_path / "c1"), lambda df: None)
-    with _pytest.raises(ValueError, match="exactly one"):
-        start_incremental_neardup(
-            docs,
-            str(tmp_path / "idx"),
-            str(tmp_path / "c2"),
-            lambda df: None,
-            index_tables="x",
-        )
-
-
-def test_compact_neardup_index_folds_replay_duplicates(spark, tmp_path):
-    """Compaction folds duplicate index rows (crash-replay appends)
-    into a clean snapshot; a probe over the compacted index returns
-    the same pairs."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.operators.dedup import neardup_incremental
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        compact_neardup_index,
-        start_incremental_neardup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    idx_dir = str(tmp_path / "ndindex")
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while autumn rain "
-        "falls softly on the quiet village rooftops tonight"
-    )
-    (src / "b1.json").write_text(
-        "\n".join(
-            _json.dumps({"doc_id": i, "text": t})
-            for i, t in [(1, base), (2, "unrelated words about query planning here")]
-        )
-    )
-
-    def sink(df):
-        df.write.mode("append").parquet(str(tmp_path / "pairs"))
-
-    q = start_incremental_neardup(
-        spark.readStream.schema("doc_id long, text string").json(str(src)),
-        idx_dir,
-        str(tmp_path / "ckpt"),
-        sink,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-    # simulate a crash-replay double append
-    bands = spark.read.parquet(f"{idx_dir}/bands")
-    sigs = spark.read.parquet(f"{idx_dir}/sigs")
-    n_bands, n_sigs = bands.count(), sigs.count()
-    bands.write.mode("append").parquet(f"{idx_dir}/bands")
-    sigs.write.mode("append").parquet(f"{idx_dir}/sigs")
-    assert spark.read.parquet(f"{idx_dir}/bands").count() == 2 * n_bands
-
-    nb, ns = compact_neardup_index(spark, idx_dir)
-    assert (nb, ns) == (n_bands, n_sigs)
-
-    # probe the compacted index: the near-copy of doc 1 is found once
-    probe = spark.createDataFrame([(9, base.replace("autumn", "winter"))], "doc_id long, text string")
-    pairs, _, _ = neardup_incremental(
-        probe,
-        spark.read.parquet(f"{idx_dir}/bands"),
-        spark.read.parquet(f"{idx_dir}/sigs"),
-        "doc_id",
-        "text",
-        threshold=0.5,
-    )
-    got = [(r.i, r.j) for r in pairs.collect()]
-    assert got == [(9, 1)]
-
-
-def test_incremental_semdedup_stream_probes_posting_index(spark, tmp_path):
-    """Streaming SEMANTIC dedup: batch 1 trains the quantizer and
-    indexes its embeddings; batch 2 (a fresh query — restart) detects
-    near-copies of indexed vectors AND within its own batch, emitting
-    (i, j, score) pairs; orthogonal vectors emit nothing. The index
-    (postings + driver-small centroids) carries the memory."""
-    import json as _json
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        start_incremental_semdedup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out_dir = tmp_path / "pairs"
-    idx_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_batch(fname, rows):
-        (src / fname).write_text(
-            "\n".join(
-                _json.dumps({"vec_id": i, "embedding": v}) for i, v in rows
-            )
-        )
-
-    def sink(df):
-        df.write.mode("append").parquet(str(out_dir))
-
-    def drain():
-        vecs = spark.readStream.schema(
-            "vec_id long, embedding array<double>"
-        ).json(str(src))
-        q = start_incremental_semdedup(
-            vecs, idx_dir, ckpt, sink,
-            n_centroids=2, threshold=0.9, available_now=True,
-        )
-        q.awaitTermination(120)
-
-    write_batch(
-        "b1.json",
-        [(1, [1.0, 0, 0, 0]), (2, [0, 1.0, 0, 0]), (3, [0, 0, 1.0, 0])],
-    )
-    drain()
-    # orthogonal batch: no pairs, but the sink was called (empty append ok)
-    got1 = (
-        {(r.i, r.j) for r in spark.read.parquet(str(out_dir)).collect()}
-        if out_dir.exists()
-        else set()
-    )
-    assert got1 == set()
-
-    write_batch(
-        "b2.json",
-        [
-            (4, [0.999, 0.01, 0, 0]),   # near-copy of indexed 1
-            (5, [0, 0, 0, 1.0]),        # fresh direction: no pair
-            (6, [0, 0, 0.999, 0.02]),   # near-copy of indexed 3 ...
-            (7, [0, 0, 0.998, 0.03]),   # ... and of 6 (within-batch)
-        ],
-    )
-    drain()
-    got2 = {(r.i, r.j) for r in spark.read.parquet(str(out_dir)).collect()}
-    assert got2 == {(4, 1), (6, 3), (7, 3), (6, 7)}
-    for r in spark.read.parquet(str(out_dir)).collect():
-        assert r.score >= 0.9
-
-    postings = spark.read.parquet(f"{idx_dir}/postings")
-    assert sorted(postings.columns) == ["cid", "cv", "nid"]
-    assert postings.select("nid").distinct().count() == 7
-    cents = spark.read.parquet(f"{idx_dir}/centroids")
-    assert cents.count() == 2  # written once by the first batch
-
-
-def test_incremental_semdedup_fails_loud_on_orphaned_postings(spark, tmp_path):
-    """Postings without centroids = a first batch crashed mid-write;
-    the next batch must fail, never silently retrain a new quantizer
-    over a forgotten corpus."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        start_incremental_semdedup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    idx_dir = str(tmp_path / "index")
-    (src / "b1.json").write_text(
-        _json.dumps({"vec_id": 1, "embedding": [1.0, 0.0]})
-    )
-    # orphaned postings, no centroids dir
-    spark.createDataFrame(
-        [(0, 1, [1.0, 0.0])], "cid int, nid long, cv array<double>"
-    ).write.parquet(f"{idx_dir}/postings")
-
-    vecs = spark.readStream.schema("vec_id long, embedding array<double>").json(str(src))
-    q = start_incremental_semdedup(
-        vecs, idx_dir, str(tmp_path / "ckpt"), lambda df: None,
-        n_centroids=1, available_now=True,
-    )
-    with _pytest.raises(Exception, match="postings but no"):
-        q.awaitTermination(120)
-        raise RuntimeError("query should have failed")
-
-
-def test_compact_semdedup_index_folds_duplicates(spark, tmp_path):
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        compact_semdedup_index,
-    )
-
-    idx_dir = str(tmp_path / "index")
-    rows = [(0, 1, [1.0, 0.0]), (0, 2, [0.9, 0.1])]
-    df = spark.createDataFrame(rows, "cid int, nid long, cv array<double>")
-    df.write.mode("append").parquet(f"{idx_dir}/postings")
-    df.write.mode("append").parquet(f"{idx_dir}/postings")  # replay dup
-    n = compact_semdedup_index(spark, idx_dir)
-    assert n == 2
-    compacted = spark.read.parquet(f"{idx_dir}/postings")
-    assert compacted.count() == 2
-    assert compacted.select("nid").distinct().count() == 2
 
 def test_cdc_apply_stream_maintains_versioned_snapshot(spark, tmp_path):
     """CDC change stream folds into an epoch-versioned snapshot:
@@ -1422,191 +863,3 @@ def test_streaming_constraint_monitor(spark, tmp_path):
     replay = parquet_batch_sink(reports, checkpoint=ckpt)
     replay(spark.read.parquet(reports).where(F.col("epoch") == 1).coalesce(1), 1)
     assert spark.read.parquet(reports).count() == 6
-
-
-def test_streaming_constraint_gate_routes_and_converges(spark, tmp_path):
-    """start_constraint_gate (r12, VERDICT r11 task 5): one scan per
-    batch routes clean rows to the primary epoch-idempotent sink and
-    violating rows (tagged) to the quarantine; counts reconcile to the
-    input per epoch; a restart replays nothing and a forced epoch
-    replay converges on BOTH tables."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from iot_sensor_data_pipeline_spark.operators.constraints import (
-        in_range,
-        not_null,
-        unique,
-    )
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        start_constraint_gate,
-    )
-
-    src = tmp_path / "cg_src"
-    src.mkdir()
-    primary = str(tmp_path / "cg_primary")
-    quarantine = str(tmp_path / "cg_quar")
-    reports = str(tmp_path / "cg_reports")
-    ckpt = str(tmp_path / "cg_ckpt")
-    alerts: list[int] = []
-    checks = [
-        not_null("sensor_id"),
-        in_range("temperature", -40, 85),
-        unique("reading_id"),  # set-level: reports, never gates
-    ]
-
-    def run():
-        stream = spark.readStream.schema(
-            "reading_id long, sensor_id string, temperature double"
-        ).json(str(src))
-        q = start_constraint_gate(
-            stream, checks, primary, quarantine, ckpt,
-            reports_dir=reports,
-            on_violation=lambda e, rows: alerts.append(e),
-            available_now=True,
-        )
-        q.awaitTermination(120)
-
-    # batch 0: clean -> everything lands in primary, no quarantine file
-    (src / "b0.json").write_text("\n".join(
-        _json.dumps({"reading_id": i, "sensor_id": f"s{i % 4}",
-                     "temperature": 20.0 + i % 10})
-        for i in range(100)
-    ))
-    run()
-    assert spark.read.parquet(primary).count() == 100
-    assert not _os.path.exists(quarantine)
-    assert not alerts
-
-    # batch 1: two bad rows (NULL key, out-of-range), two clean (one a
-    # dup key — set-level, must NOT be quarantined)
-    rows = [
-        {"reading_id": 200, "sensor_id": None, "temperature": 21.0},
-        {"reading_id": 201, "sensor_id": "s1", "temperature": 900.0},
-        {"reading_id": 202, "sensor_id": "s2", "temperature": 22.0},
-        {"reading_id": 202, "sensor_id": "s3", "temperature": 23.0},
-    ]
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in rows))
-    run()
-    prim = spark.read.parquet(primary)
-    assert prim.count() == 102  # 100 + the 2 clean rows of batch 1
-    # primary holds ONLY clean rows: every row satisfies every row check
-    assert prim.where(
-        F.col("sensor_id").isNull()
-        | ~F.col("temperature").between(-40, 85)
-    ).count() == 0
-    assert "__violated" not in prim.columns
-    quar = spark.read.parquet(quarantine).collect()
-    assert {(r.reading_id, r["__violated"]) for r in quar} == {
-        (200, "not_null(sensor_id)"), (201, "in_range(temperature)"),
-    }
-    # counts reconcile: input == primary + quarantine, per epoch
-    assert 100 + len(rows) == prim.count() + len(quar)
-    assert alerts == [1]
-    rep1 = {r.check: r.n_violations for r in
-            spark.read.parquet(reports).where(F.col("epoch") == 1).collect()}
-    assert rep1["unique(reading_id)"] == 2  # observed, not gated
-
-    # restart with no new data: nothing replays anywhere
-    run()
-    assert spark.read.parquet(primary).count() == 102
-    assert spark.read.parquet(quarantine).count() == 2
-    assert alerts == [1]
-
-    # forced epoch-1 replay converges on BOTH tables (epoch-idempotent
-    # sinks scoped to this checkpoint's lineage)
-    from iot_sensor_data_pipeline_spark.sources.sinks import parquet_batch_sink
-    replay_p = parquet_batch_sink(primary, checkpoint=ckpt)
-    replay_q = parquet_batch_sink(quarantine, checkpoint=ckpt)
-    replay_p(
-        spark.read.parquet(primary)
-        .where((F.col("reading_id") == 202) & (F.col("sensor_id") == "s2"))
-        .coalesce(1),
-        1,
-    )
-    replay_q(spark.read.parquet(quarantine).coalesce(1), 1)
-    # the replayed epoch REPLACES its prior files (1 row now stands in
-    # for epoch 1's two clean rows) instead of appending duplicates
-    assert spark.read.parquet(primary).count() == 101
-    assert spark.read.parquet(quarantine).count() == 2
-
-
-def test_streaming_ab_accumulator_unit_grain(spark, tmp_path):
-    """start_ab_accumulator (r12): unit sums accumulate across batches
-    as mergeable partials; the live report equals the batch report
-    over the full event history, a restart replays nothing, and a
-    forced epoch replay converges."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from iot_sensor_data_pipeline_spark.operators.experiment import (
-        ab_test_report,
-    )
-    from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        read_ab_report,
-        start_ab_accumulator,
-    )
-
-    src = tmp_path / "ab_src"
-    src.mkdir()
-    stats = str(tmp_path / "ab_stats")
-    ckpt = str(tmp_path / "ab_ckpt")
-
-    def run():
-        stream = spark.readStream.schema(
-            "u long, variant string, m double"
-        ).json(str(src))
-        q = start_ab_accumulator(
-            stream, "u", "variant", "m", stats, ckpt, available_now=True
-        )
-        q.awaitTermination(120)
-
-    # unit 1's events SPAN both batches — the accumulated report must
-    # treat them as one unit, not two samples
-    b0 = [
-        {"u": 1, "variant": "control", "m": 1.0},
-        {"u": 2, "variant": "control", "m": 3.0},
-        {"u": 3, "variant": "t", "m": 4.0},
-        {"u": None, "variant": "t", "m": 9.0},  # excluded: no unit
-    ]
-    b1 = [
-        {"u": 1, "variant": "control", "m": 2.0},  # same unit, later batch
-        {"u": 4, "variant": "t", "m": 6.0},
-        {"u": 5, "variant": "t", "m": 8.0},
-    ]
-    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in b0))
-    run()
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in b1))
-    run()
-
-    live = {r.variant: r for r in
-            read_ab_report(spark, stats, "u", "variant", "control").collect()}
-    all_events = spark.createDataFrame(
-        [(r["u"], r["variant"], r["m"]) for r in b0 + b1],
-        "u long, variant string, m double",
-    )
-    want = {r.variant: r for r in
-            ab_test_report(all_events, "u", "variant", "m", "control").collect()}
-    for v in ("control", "t"):
-        for fld in ("n_units", "mean", "lift", "rel_lift", "z"):
-            assert getattr(live[v], fld) == getattr(want[v], fld), (v, fld)
-    assert live["control"].n_units == 2  # unit 1 counted ONCE (m=3.0)
-
-    # restart with no new data: nothing replays, report unchanged
-    run()
-    live2 = {r.variant: r for r in
-             read_ab_report(spark, stats, "u", "variant", "control").collect()}
-    assert live2["control"].mean == live["control"].mean
-
-    # forced epoch-1 replay converges (epoch-idempotent partials)
-    from iot_sensor_data_pipeline_spark.sources.sinks import parquet_batch_sink
-    replay = parquet_batch_sink(stats, checkpoint=ckpt)
-    epoch1 = spark.read.parquet(stats).where(F.col("__epoch") == 1)
-    replay(epoch1.coalesce(1), 1)
-    live3 = {r.variant: r for r in
-             read_ab_report(spark, stats, "u", "variant", "control").collect()}
-    assert live3["control"].mean == live["control"].mean
-    assert live3["t"].z == live["t"].z

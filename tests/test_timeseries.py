@@ -608,107 +608,6 @@ def test_twa_randomized_python_differential(spark):
                 assert gc == pytest.approx(wc, rel=1e-6, abs=1e-6), (method, carry, key)
 
 
-# ---------------------------------------------------------------------------
-# lttb_downsample
-# ---------------------------------------------------------------------------
-
-
-def _lttb_python(pts, n):
-    """Reference LTTB (Steinarsson 2013), independent formulation."""
-    m = len(pts)
-    if m <= n:
-        return list(pts)
-    import math
-
-    edges = [int(math.floor(i * (m - 2) / (n - 2))) + 1 for i in range(n - 1)]
-    edges.append(m - 1)
-    keep = [0]
-    prev = 0
-    for b in range(n - 2):
-        lo, hi = edges[b], edges[b + 1]
-        if b == n - 3:
-            cx, cy = pts[m - 1][0], pts[m - 1][1]
-        else:
-            nxt = pts[edges[b + 1]:edges[b + 2]]
-            cx = sum(p[0] for p in nxt) / len(nxt)
-            cy = sum(p[1] for p in nxt) / len(nxt)
-        ax, ay = pts[prev][0], pts[prev][1]
-        best, best_area = lo, -1.0
-        for i in range(lo, hi):
-            area = abs((ax - cx) * (pts[i][1] - ay) - (ax - pts[i][0]) * (cy - ay))
-            if area > best_area:
-                best, best_area = i, area
-        keep.append(best)
-        prev = best
-    keep.append(m - 1)
-    return [pts[i] for i in keep]
-
-
-def test_lttb_keeps_endpoints_spike_and_count(spark):
-    from iot_sensor_data_pipeline_spark.operators.timeseries import (
-        lttb_downsample,
-    )
-
-    # flat line with one huge spike: any shape-preserving reduction
-    # must keep the spike
-    pts = [(float(i), 1.0) for i in range(100)]
-    pts[57] = (57.0, 50.0)
-    df = spark.createDataFrame(
-        [("k", t, v) for t, v in pts], "key string, ts double, value double"
-    )
-    out = sorted(
-        (r.ts, r.value)
-        for r in lttb_downsample(df, 10, "key", "ts", "value").collect()
-    )
-    assert len(out) == 10
-    assert out[0] == (0.0, 1.0) and out[-1] == (99.0, 1.0)
-    assert (57.0, 50.0) in out
-
-
-def test_lttb_short_series_pass_through_and_guard(spark):
-    from iot_sensor_data_pipeline_spark.operators.timeseries import (
-        lttb_downsample,
-    )
-
-    df = spark.createDataFrame(
-        [("k", 1.0, 5.0), ("k", 2.0, 6.0)], "key string, ts double, value double"
-    )
-    out = lttb_downsample(df, 5, "key", "ts", "value").collect()
-    assert sorted((r.ts, r.value) for r in out) == [(1.0, 5.0), (2.0, 6.0)]
-
-    with pytest.raises(ValueError, match="n_out"):
-        lttb_downsample(df, 2, "key", "ts", "value")
-
-
-def test_lttb_differential_vs_python_reference(spark):
-    import random
-
-    from iot_sensor_data_pipeline_spark.operators.timeseries import (
-        lttb_downsample,
-    )
-
-    rnd = random.Random(41)
-    rows = []
-    series = {}
-    for k in ("a", "b"):
-        pts = []
-        t = 0.0
-        for _ in range(rnd.randint(40, 200)):
-            t += rnd.uniform(0.5, 3.0)
-            pts.append((round(t, 3), round(rnd.uniform(-10, 10), 3)))
-        series[k] = pts
-        rows += [(k, t, v) for t, v in pts]
-    df = spark.createDataFrame(rows, "key string, ts double, value double")
-
-    for n in (3, 7, 24):
-        got = {}
-        for r in lttb_downsample(df.repartition(5), n, "key", "ts", "value").collect():
-            got.setdefault(r.key, []).append((r.ts, r.value))
-        for k, pts in series.items():
-            want = _lttb_python(pts, n)
-            assert sorted(got[k]) == sorted(want), (k, n)
-
-
 def test_twa_auto_carry_bounds_sparse_explosion(spark):
     """Default max_carry='auto' derives the bound from the p99
     inter-sample gap (floored at one bucket width): a lone week-long
