@@ -64,6 +64,22 @@ def stopword_hits(text: Column, lang: str) -> Column:
     return F.size(F.filter(tokens(text), lambda t: t.isin(*words)))
 
 
+def lang_id(text: Column) -> Column:
+    """Argmax of per-language stopword hits; 'und' when nothing hits.
+
+    Ties break in the fixed order en > de > fr > es (greatest-first
+    CASE scan), so results are deterministic. A production system
+    would swap in a trained classifier via pandas_udf; the Spark-side
+    contract (one string column in, one out) is identical.
+    """
+    hits = {lang: stopword_hits(text, lang) for lang in STOPWORDS}
+    best = F.greatest(*hits.values())
+    expr = F.when(best <= 0, "und")
+    for lang in STOPWORDS:  # insertion order = tie priority
+        expr = expr.when(hits[lang] == best, lang)
+    return expr
+
+
 def punct_ratio(text: Column) -> Column:
     stripped = F.regexp_replace(text, r"[.,!?;:]", "")
     # nullif: empty text -> null ratio, not DIVIDE_BY_ZERO (ANSI mode)
@@ -123,6 +139,32 @@ def char_grams(text: Column, q: int) -> Column:
     )
 
 
+def winnow_fingerprints(text: Column, k: int = 5, w: int = 4) -> Column:
+    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
+    SIGMOD '03 — the MOSS algorithm): hash every character k-gram,
+    slide a window of ``w`` hashes, keep each window's minimum; the
+    distinct selected hashes are the document's fingerprint set
+    (``array<long>``).
+
+    Guarantee: any two documents sharing a substring of length
+    >= w + k - 1 share at least one fingerprint, while only ~2/(w+1)
+    of all k-gram hashes are kept. Pure JVM higher-order expressions
+    (substr/xxhash64/slice/array_min) — no UDF, no shuffle; pair the
+    exploded output with a group-by join for plagiarism-style overlap
+    detection at corpus scale.
+    """
+    empty = F.array().cast("array<bigint>")
+    gram_hashes = F.transform(char_grams(text, k), lambda g: F.xxhash64(g))
+    n_windows = F.size(gram_hashes) - (w - 1)
+    selected = F.when(n_windows < 1, empty).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(n_windows, F.lit(1))),
+            lambda i: F.array_min(F.slice(gram_hashes, i, w)),
+        )
+    )
+    return F.array_distinct(selected)
+
+
 def text_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """The canonical per-document feature relation.
 
@@ -161,7 +203,7 @@ def text_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     hits = {lang: F.col(f"__h_{lang}") for lang in STOPWORDS}
     best = F.greatest(*hits.values())
     lang_expr = F.when(best <= 0, "und")
-    for lang in STOPWORDS:  # insertion order = tie priority
+    for lang in STOPWORDS:  # insertion order = tie priority (lang_id)
         lang_expr = lang_expr.when(hits[lang] == best, lang)
     quality = (
         (F.least(F.col("n_tokens"), F.lit(200)) / 200.0)

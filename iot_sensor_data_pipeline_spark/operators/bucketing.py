@@ -10,8 +10,8 @@ key with compatible bucket counts then sort-merge join with NO exchange
 — each task reads bucket i of both sides. `sortBy` additionally
 pre-sorts within buckets, removing the per-task Sort as well. At 100 TB
 this converts the recurring O(|fact|) shuffle into a one-time write
-cost, which is why the streaming incremental indexes
-(streaming/jobs.py) bucket their persisted state the same way.
+cost; the bucketed CDC snapshot (streaming/jobs.py) hash-buckets its
+persisted state on the key for the same reason.
 
 Bucket-count discipline: both sides equal (or one a multiple of the
 other with `spark.sql.bucketing.coalesceBucketsInJoin.enabled`);

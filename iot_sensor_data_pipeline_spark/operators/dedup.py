@@ -337,6 +337,38 @@ def minhash_dedup_pairs(
     return ngram_jaccard_pairs(sh, threshold, candidates=cands, candidates_distinct=True)
 
 
+def estimated_jaccard_pairs(
+    cand: DataFrame, sigs_i: DataFrame, sigs_j: DataFrame, threshold: float
+) -> DataFrame:
+    """Signature-estimated Jaccard for candidate (i, j) pairs: the
+    fraction of agreeing minhash components is an unbiased estimator of
+    the true Jaccard (the classic Broder '97 property), so no shingle
+    sets — and therefore no document text — are needed at verify time.
+    ``sigs_i``/``sigs_j`` are (id, mh*) relations covering the i and j
+    sides. Output (i, j, est_jaccard >= threshold).
+    """
+    sig_cols = [c for c in sigs_i.columns if c.startswith("mh")]
+    k = len(sig_cols)
+    a = sigs_i.select(
+        F.col("id").alias("i"), *[F.col(c).alias(f"a_{c}") for c in sig_cols]
+    )
+    b = sigs_j.select(
+        F.col("id").alias("j"), *[F.col(c).alias(f"b_{c}") for c in sig_cols]
+    )
+    agree = sum(
+        F.when(F.col(f"a_{c}") == F.col(f"b_{c}"), 1).otherwise(0) for c in sig_cols
+    )
+    return (
+        cand.select("i", "j")
+        .distinct()
+        .join(a, "i")
+        .join(b, "j")
+        .withColumn("est_jaccard", F.round(agree / F.lit(k), 6))
+        .where(F.col("est_jaccard") >= threshold)
+        .select("i", "j", "est_jaccard")
+    )
+
+
 def dedup_incremental(
     new_docs: DataFrame,
     seen_fingerprints: DataFrame,

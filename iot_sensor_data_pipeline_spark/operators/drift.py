@@ -45,6 +45,7 @@ __all__ = [
     "drift_report",
     "build_drift_reference",
     "drift_against_reference",
+    "schema_drift",
     "drift_report_categorical",
     "build_drift_reference_categorical",
 ]
@@ -345,6 +346,33 @@ def drift_against_reference(current: DataFrame, ref_dir: str) -> DataFrame:
         _long_form(current, list(stats)), stats, n_bins
     ).withColumnRenamed("n", "n_cur_bin")
     return _report_from_counts(ref_counts, cur_counts, n_bins)
+
+
+def schema_drift(reference: DataFrame, current: DataFrame) -> DataFrame:
+    """Schema-level drift between two snapshots: one row per column
+    whose presence or type changed — ``(col, change, ref_type,
+    cur_type)`` with change in {'added', 'removed', 'retyped'}.
+    Unchanged columns are omitted (empty result == schemas agree).
+
+    The complement :func:`drift_report` assumes: distribution drift is
+    only defined for columns both sides HAVE; a column that vanished or
+    changed type is upstream breakage the distribution gate would
+    silently omit (documented there). Pure metadata — no jobs, no
+    scans; the result is a local relation so it composes with the
+    report tables."""
+    ref_t = {f.name: f.dataType.simpleString() for f in reference.schema.fields}
+    cur_t = {f.name: f.dataType.simpleString() for f in current.schema.fields}
+    rows = []
+    for c in sorted(set(ref_t) | set(cur_t)):
+        if c not in cur_t:
+            rows.append((c, "removed", ref_t[c], None))
+        elif c not in ref_t:
+            rows.append((c, "added", None, cur_t[c]))
+        elif ref_t[c] != cur_t[c]:
+            rows.append((c, "retyped", ref_t[c], cur_t[c]))
+    return reference.sparkSession.createDataFrame(
+        rows, "col string, change string, ref_type string, cur_type string"
+    )
 
 
 def drift_report_categorical(

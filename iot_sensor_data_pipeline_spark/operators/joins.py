@@ -199,6 +199,146 @@ def asof_join(
     )
 
 
+def range_join(
+    left: DataFrame,
+    right: DataFrame,
+    left_point: str,
+    right_lo: str,
+    right_hi: str,
+    bucket_width: float | None = None,
+    extra_on: Sequence[str] = (),
+    long_span_buckets: int | None = None,
+    tune_sample_rows: int = 100_000,
+    tuned: dict | None = None,
+) -> DataFrame:
+    """Scale-safe interval join: pairs every left row with the right
+    rows whose half-open interval ``[lo, hi)`` contains its point
+    value. Spark plans a bare non-equi join as a broadcast-nested-loop
+    or cartesian product — O(|L| x |R|) and a cluster-killer at any
+    real size. This operator makes it an EQUI-join by binning:
+
+    - each left row gets ONE bucket, ``floor(point / width)``;
+    - each right interval explodes to the buckets it covers
+      (``sequence(floor(lo/w), floor(hi/w))``);
+    - equi-join on the bucket (plus ``extra_on`` keys), then the exact
+      residual predicate ``lo <= point < hi``.
+
+    Every matching pair survives exactly once (the left row's single
+    bucket is covered by the right interval at most once), so no
+    distinct pass is needed. Shuffle volume is |L| + |R| x (mean
+    interval span / width): pick ``bucket_width`` near the MEDIAN
+    interval length — too small multiplies right rows, too large packs
+    unrelated rows into one bucket and pushes work into the residual
+    filter. A long-tail interval (>> width) multiplies accordingly;
+    split pathological spans into a separate branch if the tail is
+    heavy — ``long_span_buckets`` does exactly that: intervals covering
+    MORE than that many buckets skip the explode and instead broadcast
+    into a nested-loop branch against the points (union with the
+    bucketed branch; each pair still matches exactly once since every
+    interval takes exactly one branch). The long stratum must be
+    broadcast-small — that is the premise (a heavy tail of wide spans
+    means the bucket width is wrong, not that this branch should
+    grow). Columns are numeric; join on timestamps by passing epoch
+    expressions (``F.unix_timestamp``) in a prior select.
+
+    ``bucket_width=None`` AUTO-TUNES both knobs from the data instead
+    of asking the user to guess: a hash-ordered capped sample of the
+    interval spans (``tune_sample_rows``, TakeOrderedAndProject — no
+    full sort, layout-independent) feeds ``approxQuantile``; the width
+    becomes the median span (p90, then 1.0, when degenerate
+    zero-length spans drag the median to 0), and — unless the caller
+    pinned ``long_span_buckets`` — the long stratum cut becomes
+    ``ceil(p99 span / width)`` (min 2), so the per-row explode factor
+    is bounded by the p99/p50 span ratio and at most ~1% of intervals
+    take the broadcast branch. Pass a dict as ``tuned`` to receive the
+    chosen ``{"bucket_width", "long_span_buckets"}``.
+
+    Column names must be disjoint apart from ``extra_on`` (both
+    sides' columns pass through unprefixed); overlapping names raise
+    here at plan-build time instead of surfacing as an
+    AMBIGUOUS_REFERENCE from the residual predicate.
+    """
+    if bucket_width is None:
+        spans = (
+            right.select(
+                (F.col(right_hi) - F.col(right_lo)).cast("double").alias("__span"),
+                # order by a hash of DATA columns, not row position:
+                # monotonically_increasing_id encodes partition id +
+                # offset, so it would make the sample (hence the tuned
+                # knobs) vary with layout and stage retries; endpoint
+                # hashes are layout-independent, and hash-ties are
+                # exact duplicate intervals whose spans are identical
+                # — the sampled span multiset is deterministic
+                F.xxhash64(
+                    F.col(right_lo),
+                    F.col(right_hi),
+                    *[F.col(c) for c in extra_on],
+                ).alias("__h"),
+            )
+            .orderBy("__h")
+            .limit(tune_sample_rows)
+            .drop("__h")
+        )
+        qs = spans.approxQuantile("__span", [0.5, 0.9, 0.99], 0.01)
+        if not qs:
+            raise ValueError(
+                "range_join: cannot auto-tune bucket_width on an empty "
+                "right side — pass it explicitly"
+            )
+        p50, p90, p99 = qs
+        bucket_width = next((v for v in (p50, p90) if v > 0.0), 1.0)
+        if long_span_buckets is None:
+            long_span_buckets = max(2, math.ceil(p99 / bucket_width))
+        if tuned is not None:
+            tuned["bucket_width"] = bucket_width
+            tuned["long_span_buckets"] = long_span_buckets
+    w = float(bucket_width)
+    if not (w > 0.0) or math.isinf(w):
+        # w=0 would floor every value into one bucket (Infinity /
+        # Long.MaxValue) — the single-partition quadratic join this
+        # operator exists to prevent, with CORRECT output masking it
+        raise ValueError(f"range_join: bucket_width must be a positive finite number, got {bucket_width}")
+    overlap = (set(left.columns) & set(right.columns)) - set(extra_on)
+    if overlap:
+        raise ValueError(
+            "range_join: left and right share non-key columns "
+            f"{sorted(overlap)} — rename or drop them (output columns "
+            "pass through unprefixed), or list join keys in extra_on"
+        )
+    lb = left.withColumn("__bucket", F.floor(F.col(left_point) / w))
+    span_buckets = F.floor(F.col(right_hi) / w) - F.floor(F.col(right_lo) / w) + 1
+    narrow = right
+    if long_span_buckets is not None:
+        if long_span_buckets < 1:
+            raise ValueError("range_join: long_span_buckets must be >= 1")
+        narrow = right.where(span_buckets <= long_span_buckets)
+    rb = narrow.withColumn(
+        "__bucket",
+        F.explode(
+            F.sequence(
+                F.floor(F.col(right_lo) / w), F.floor(F.col(right_hi) / w)
+            )
+        ),
+    )
+    on = ["__bucket", *extra_on]
+    residual = (F.col(right_lo) <= F.col(left_point)) & (
+        F.col(left_point) < F.col(right_hi)
+    )
+    bucketed = lb.join(rb, on).where(residual).drop("__bucket")
+    if long_span_buckets is None:
+        return bucketed
+    wide = right.where(span_buckets > long_span_buckets)
+    cond = residual
+    for c in extra_on:
+        cond = cond & (lb[c] == wide[c])
+    broadcast_branch = lb.drop("__bucket").join(F.broadcast(wide), cond)
+    # the equi branch merges each extra_on pair into one column; drop
+    # the wide side's copies so both branches align for the union
+    for c in extra_on:
+        broadcast_branch = broadcast_branch.drop(wide[c])
+    return bucketed.unionByName(broadcast_branch.select(bucketed.columns))
+
+
 def fuzzy_join(
     left: DataFrame,
     right: DataFrame,
@@ -396,8 +536,9 @@ def interval_overlap_join(
     """Interval x interval overlap join (half-open: ``[lo, hi)``
     overlap iff ``l_lo < r_hi AND r_lo < l_hi``) — downtime
     attribution, session-vs-outage overlap, concurrent-activity
-    detection. An EQUI-join by binning where the naive formulation is
-    a nested-loop O(|L| x |R|).
+    detection. The interval sibling of :func:`range_join`, and like it
+    an EQUI-join by binning where the naive formulation is a
+    nested-loop O(|L| x |R|).
 
     Both sides explode to the buckets their interval covers and
     equi-join on the bucket (plus ``extra_on``). Two overlapping
@@ -408,7 +549,7 @@ def interval_overlap_join(
     sides cover whenever they overlap. Shuffle volume is
     (|L| + |R|) x (mean span / width): pick ``bucket_width`` near the
     MEDIAN interval length of the finer side; split pathological
-    long-tail spans into their own branch.
+    long-tail spans into their own branch as with :func:`range_join`.
 
     Column names must be disjoint apart from ``extra_on`` (both sides
     pass through unprefixed).

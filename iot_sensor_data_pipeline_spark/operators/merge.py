@@ -21,6 +21,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def upsert_snapshot(
+    current: DataFrame, updates: DataFrame, keys: Sequence[str]
+) -> DataFrame:
+    """Last-writer-wins upsert: rows of ``updates`` replace same-key
+    rows of ``current``; new keys append. (MERGE WHEN MATCHED UPDATE /
+    WHEN NOT MATCHED INSERT.)"""
+    keys = list(keys)
+    survivors = current.join(updates.select(*keys).distinct(), keys, "left_anti")
+    return survivors.unionByName(updates)
+
+
 def scd2_apply(
     history: DataFrame,
     updates: DataFrame,
@@ -86,8 +97,8 @@ def snapshot_diff(
 
     At scale this is ONE full-outer shuffle join on the keys —
     co-located (zero shuffle) when both snapshot versions are stored
-    bucketed on the keys, which is exactly how a recurring diff job
-    should persist them.
+    bucketed on the keys (operators/bucketing.py), which is exactly how
+    a recurring diff job should persist them.
     """
     keys = list(keys)
     if not keys:
@@ -133,6 +144,20 @@ def snapshot_diff(
     return out
 
 
+def diff_summary(
+    old: DataFrame,
+    new: DataFrame,
+    keys: Sequence[str],
+    compare_cols: Sequence[str] | None = None,
+) -> DataFrame:
+    """(change, n) counts for a snapshot diff, unchanged included."""
+    return (
+        snapshot_diff(old, new, keys, compare_cols, include_unchanged=True)
+        .groupBy("change")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 def apply_cdc(
     base: DataFrame,
     changes: DataFrame,
@@ -152,8 +177,8 @@ def apply_cdc(
     the key; keys untouched by the log pass through.
 
     Scale shape: one window over the CHANGE LOG (shuffled on its keys —
-    the log is the small side in steady state) + an anti-join / union;
-    the base relation never sorts.
+    the log is the small side in steady state) + the same anti-join /
+    union as :func:`upsert_snapshot`; the base relation never sorts.
     Unknown (or NULL) op values fail loudly rather than silently
     dropping changes — the check rides the main projection
     (``raise_error`` under a ``when``), so a call is exactly one job

@@ -224,3 +224,18 @@ def score_perplexity(
         "avg_logprob",
         F.exp(-F.col("avg_logprob")).alias("perplexity"),
     )
+
+
+def perplexity_filter(
+    docs: DataFrame,
+    lm: dict,
+    max_perplexity: float,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """CCNet-style gate: keep documents the LM finds unsurprising
+    (perplexity <= threshold). Join-back by id keeps full rows."""
+    keep = score_perplexity(docs, lm, id_col, text_col).where(
+        F.col("perplexity") <= max_perplexity
+    )
+    return docs.join(keep.select(id_col), id_col, "left_semi")

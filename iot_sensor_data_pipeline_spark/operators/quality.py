@@ -2,20 +2,27 @@
 training-data pipeline: a linear model trained to separate a
 high-quality reference corpus (positives) from the raw crawl
 (negatives), then applied to score every document; the scores drive a
-threshold filter (the published GPT-3 / LLaMA data recipes).
+threshold filter or deterministic importance sampling (the published
+GPT-3 / LLaMA data recipes).
 
 Spark-first shape: training is a standard Spark ML pipeline
 (Tokenizer -> HashingTF -> LogisticRegression) fitted on a labeled
 frame — one distributed job, the model itself is driver-small (a
 num_features weight vector). Scoring is ``model.transform``: the
 hashed-TF featurization and the dot product run inside the executors,
-shuffle-free, so scoring cost is one corpus scan at any scale.
+shuffle-free, so scoring cost is one corpus scan at any scale. The
+importance filter reuses the engine's deterministic md5-bucket
+convention (operators/curation.py), so keep/drop decisions are
+reproducible across runs, partitionings, cluster sizes, and engines —
+never ``rand()``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from iot_sensor_data_pipeline_spark.operators.curation import md5_bucket_expr
 
 
 def train_quality_classifier(
@@ -71,3 +78,70 @@ def score_quality(
     return scored.withColumn(
         output_col, vector_to_array(F.col("__probability")).getItem(1)
     ).drop("__words", "__features", "__probability", "__raw", "__prediction")
+
+
+def quality_importance_filter(
+    scored: DataFrame,
+    id_col: str,
+    prob_col: str = "quality_prob",
+    alpha: float = 1.0,
+) -> DataFrame:
+    """Importance-sample by quality score: keep a document with
+    probability ``prob ** alpha`` (alpha > 1 sharpens toward
+    high-quality docs; alpha=0 keeps everything). The GPT-3 recipe
+    draws a Pareto variate per document; this is the deterministic
+    equivalent — the keep decision is ``md5_bucket(id) < prob**alpha``
+    against the engine's [0, 1e6) bucket space, so it is a pure
+    scan-side filter (zero shuffle, no RNG state) and a kept document
+    stays kept across reruns and corpus growth, which keeps
+    incremental refreshes append-only (same argument as
+    ``weighted_mix``).
+
+    ``alpha=0`` returns the input unchanged — including rows with a
+    NULL score or id. For ``alpha > 0`` the predicate is
+    NULL-propagating (the engine's deliberate convention, see
+    ``md5_mix_bucket_expr``): an unscored document (NULL ``prob_col``,
+    e.g. from a left join of fresh docs against an older score table)
+    or a NULL id fails the comparison and is dropped — score before
+    filtering, or coalesce a default probability first."""
+    if alpha == 0.0:
+        return scored
+    return scored.where(
+        md5_bucket_expr(id_col)
+        < (F.pow(F.col(prob_col), F.lit(float(alpha))) * F.lit(1_000_000)).cast("long")
+    )
+
+
+def compression_ratio(
+    df: DataFrame, text_col: str = "text", out_col: str = "compression_ratio"
+) -> DataFrame:
+    """zlib(deflate) compressed size / raw UTF-8 size per document —
+    the cheap repetitiveness detector of the natural-language heuristic
+    suites (RefinedWeb/Gopher family): templated or looping junk
+    compresses far below genuine prose, so a low ratio flags documents
+    the repetition metrics (operators/curation.py:repetition_metrics)
+    would also catch, at a fraction of the cost and with no tokenizer.
+
+    Arrow-batched pandas UDF (zlib runs at C speed; the Python boundary
+    is the documented batch regime — never row-at-a-time). Empty and
+    NULL texts yield NULL (a ratio of header bytes over zero content is
+    noise, not signal).
+    """
+    from pyspark.sql.functions import pandas_udf
+
+    def ratio_series(s):
+        import zlib
+
+        import pandas as pd
+
+        out = []
+        for x in s:
+            if not x:
+                out.append(None)
+                continue
+            raw = x.encode("utf-8")
+            out.append(len(zlib.compress(raw, 6)) / len(raw))
+        return pd.Series(out, dtype="float64")
+
+    ratio = pandas_udf(ratio_series, "double")
+    return df.withColumn(out_col, ratio(F.col(text_col)))

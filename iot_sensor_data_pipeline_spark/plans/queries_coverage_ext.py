@@ -353,8 +353,8 @@ LIMIT {_SKEW_TOPK}
     "lineitem_skew_report", oracle=_SKEW_ORACLE, tags=("skew", "diagnostics")
 )
 def lineitem_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaviest (returnflag, linestatus) keys with the salt fan-out
-    that would level them. One map-side-combined
+    """Heaviest (returnflag, linestatus) keys with the salted_join /
+    salted_agg fan-out that would level them. One map-side-combined
     groupBy + a 1-row totals broadcast + TakeOrderedAndProject."""
     from iot_sensor_data_pipeline_spark.operators.skew import skew_report
 
@@ -493,8 +493,8 @@ def lineitem_partial_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitem_histogram_partials — the mergeable-HISTOGRAM build side
 # (operators/sketches.py histogram_partials): per-group per-bin
 # (count, exact lo, exact hi) rows over FIXED edges. Edges are literal
-# here (approxQuantile edges would be engine-specific; the bin-fold
-# mechanics are what this differential pins — searchsorted
+# here (histogram_bins' approxQuantile edges are engine-specific; the
+# bin-fold mechanics are what this differential pins — searchsorted
 # over shared edges, exact per-bin min/max).
 # ---------------------------------------------------------------------------
 

@@ -635,8 +635,8 @@ def documents_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Domain-level curation (operators/curation.py domain_stats):
-# per-source n_docs / total_chars /
+# Domain-level curation (operators/curation.py domain_stats /
+# filter_by_domain_stats): per-source n_docs / total_chars /
 # mean_quality / intra-domain dup_rate, plus the kept flag at a
 # quality threshold chosen inside a wide inter-domain gap at both SFs
 # (0.195) so float summation-order differences can never flip it.
@@ -690,8 +690,8 @@ FROM stats
 def documents_domain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-grain curation report: per-source doc count, char
     volume, mean quality-heuristic score, intra-domain normalized-
-    fingerprint dup rate, and whether a domain filter would keep the
-    domain at mean_quality >= 0.195 — the aggregation level
+    fingerprint dup rate, and whether filter_by_domain_stats would
+    keep the domain at mean_quality >= 0.195 — the aggregation level
     web-corpus pipelines (C4, RefinedWeb, Gopher) actually filter at."""
     from iot_sensor_data_pipeline_spark.operators.curation import domain_stats
 

@@ -121,6 +121,17 @@ def renest_reading(df: DataFrame) -> DataFrame:
     return nested.drop("building", "floor", "room", "battery_level", "signal_strength")
 
 
+def serialize_json(df: DataFrame, key_col: str | None = None) -> DataFrame:
+    """P13/P14: struct-of-all-columns -> JSON string `value` (+ string
+    `key`) — the Kafka wire format (reference alert_detector.py:215-241)."""
+    cols = [c for c in df.columns if c != key_col]
+    out = df.select(
+        *( [F.col(key_col).cast("string").alias("key")] if key_col else [] ),
+        F.to_json(F.struct(*cols)).alias("value"),
+    )
+    return out
+
+
 #: top-level fields of the reference's alert wire payload, IN ORDER
 #: (reference alert_detector.py:216-241) — sensor_id appears in both
 #: the Kafka key and the payload; resolved_at/created_at are
@@ -151,4 +162,44 @@ def alert_wire_frame(alerts: DataFrame) -> DataFrame:
     return nested.select(
         F.col("sensor_id").cast("string").alias("key"),
         F.to_json(F.struct(*ALERT_WIRE_FIELDS)).alias("value"),
+    )
+
+
+def ingest_readings_variant(df: DataFrame, json_col: str = "value") -> DataFrame:
+    """Schema-LESS ingest of the sensor wire frame via Spark 4's
+    VARIANT type: ``parse_json`` keeps the full semi-structured value
+    (open content model — unknown producer fields survive instead of
+    being silently projected away), and each persisted column is a
+    typed ``variant_get`` path extraction. Same 10-column output as
+    :func:`ingest_readings`, plus the raw variant as ``v``.
+
+    Why it exists next to the StructType path: the reference declared
+    THREE conflicting schemas for one topic (SURVEY.md §1.2) because
+    from_json forces every consumer to commit to a projection upfront;
+    VARIANT defers typing to the extraction site, so producer schema
+    drift (new fields, widened types) needs no redeclaration — check
+    ``schema_of_variant_agg`` over a sample to audit what a topic
+    actually carries. Extraction is JVM-native over the binary
+    variant encoding (no JSON re-parse per path).
+
+    ``try_parse_json`` (not the strict ``parse_json``) and
+    ``try_variant_get`` (not the strict ``variant_get``) together
+    mirror the PERMISSIVE contract of the StructType path: malformed
+    wire text yields a null variant, and a type-drifted field (a
+    string where a number is expected) yields a null COLUMN — never a
+    failed batch. The strict getters would abort the job on the exact
+    drift this operator exists to tolerate."""
+    v = df.select(F.try_parse_json(F.col(json_col).cast("string")).alias("v"))
+    return v.select(
+        F.try_variant_get("v", "$.sensor_id", "string").alias("sensor_id"),
+        F.try_variant_get("v", "$.sensor_type", "string").alias("sensor_type"),
+        F.try_variant_get("v", "$.value", "double").alias("value"),
+        F.try_variant_get("v", "$.unit", "string").alias("unit"),
+        F.to_timestamp(F.try_variant_get("v", "$.timestamp", "string")).alias("timestamp"),
+        F.try_variant_get("v", "$.location.building", "string").alias("building"),
+        F.try_variant_get("v", "$.location.floor", "int").alias("floor"),
+        F.try_variant_get("v", "$.location.room", "string").alias("room"),
+        F.try_variant_get("v", "$.metadata.battery_level", "int").alias("battery_level"),
+        F.try_variant_get("v", "$.metadata.signal_strength", "int").alias("signal_strength"),
+        "v",
     )

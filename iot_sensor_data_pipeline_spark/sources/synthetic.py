@@ -80,6 +80,12 @@ def _reading_columns(df: DataFrame, id_col: str, ts_col) -> DataFrame:
     )
 
 
+def reading_stream(spark: SparkSession, rows_per_second: int = 8) -> DataFrame:
+    """Unbounded stream of canonical readings (streaming S5)."""
+    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
+    return _reading_columns(rate, "value", F.col("timestamp"))
+
+
 def reading_batch(spark: SparkSession, n: int, start_ts: str = "2026-01-01 00:00:00") -> DataFrame:
     """Bounded batch of canonical readings (batch S5) — fleet sweep
     every 3 s like the reference's cadence."""
@@ -88,3 +94,11 @@ def reading_batch(spark: SparkSession, n: int, start_ts: str = "2026-01-01 00:00
         secs=(F.col("id") / FLEET).cast("int") * 3
     )
     return _reading_columns(df, "id", ts)
+
+
+def reading_json_stream(spark: SparkSession, rows_per_second: int = 8) -> DataFrame:
+    """Wire-format variant: one JSON string column ``value`` — feeds the
+    ingest path exactly like a Kafka topic would."""
+    return reading_stream(spark, rows_per_second).select(
+        F.to_json(F.struct("*")).alias("value")
+    )

@@ -1,5 +1,5 @@
 """Training-data curation operators: PII redaction, deterministic
-splits, exact stratified sampling, mixing, chunking."""
+splits, exact stratified sampling, sequence packing."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from iot_sensor_data_pipeline_spark.operators.curation import (
     PII_PATTERNS,
     deterministic_split,
+    pack_sequences,
     pii_hit_counts,
     pii_redact,
     stratified_sample_exact,
@@ -77,6 +78,59 @@ def test_stratified_sample_exact_counts_and_determinism(spark, sf_dir_mid):
     assert {r.doc_id for r in out.select("doc_id").collect()} == {
         r.doc_id for r in again.select("doc_id").collect()
     }
+
+
+def test_pack_sequences_respects_capacity_and_covers_all(spark):
+    rows = [(i, 100 + (i * 37) % 400) for i in range(200)] + [(900, 5000)]
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+    out = pack_sequences(df, "doc_id", "n_tokens", max_tokens=1024, num_partitions=4)
+    got = out.collect()
+
+    assert len(got) == len(rows)  # every document assigned exactly once
+    assert len({r.id for r in got}) == len(rows)
+
+    fills = {}
+    for r in got:
+        fills.setdefault(r.pack_id, []).append(r)
+    for pack_id, members in fills.items():
+        total = sum(r.n_tokens for r in members)
+        if len(members) > 1:
+            assert total <= 1024  # capacity respected for packed bins
+        positions = sorted(r.pack_pos for r in members)
+        assert positions == list(range(len(members)))  # dense positions
+
+    oversize = [r for r in got if r.id == 900]
+    assert len(oversize) == 1
+    assert len(fills[oversize[0].pack_id]) == 1  # singleton bin
+
+
+def test_pack_sequences_utilization(spark):
+    """FFD should keep multi-doc bins >70% full on a uniform mix."""
+    rows = [(i, 50 + (i * 97) % 450) for i in range(500)]
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+    out = pack_sequences(df, "doc_id", "n_tokens", max_tokens=1024, num_partitions=4).collect()
+    per_bin: dict = {}
+    for r in out:
+        per_bin[r.pack_id] = per_bin.get(r.pack_id, 0) + r.n_tokens
+    fills = sorted(per_bin.values())
+    # ignore each bucket's final partially-filled bin (up to 4 buckets)
+    well_packed = fills[4:] if len(fills) > 4 else fills
+    assert sum(well_packed) / (1024 * len(well_packed)) >= 0.7
+
+
+def test_pack_sequences_deterministic(spark):
+    rows = [(i, 64 + (i % 9) * 100) for i in range(300)]
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+    a = sorted(map(tuple, pack_sequences(df, "doc_id", "n_tokens", 512, 4).collect()))
+    b = sorted(
+        map(
+            tuple,
+            pack_sequences(
+                df.orderBy(F.rand(3)).repartition(7), "doc_id", "n_tokens", 512, 4
+            ).collect(),
+        )
+    )
+    assert a == b
 
 
 @pytest.mark.parametrize(
@@ -195,6 +249,24 @@ def test_contamination_max_shingle_freq_guard(spark):
     without = contamination_tags(sh, ev).collect()
     assert len(without) == 9
 
+def test_pack_sequences_string_ids(spark):
+    """Non-numeric doc ids are first-class across the pipeline (dedup,
+    shingles); packing must carry the input id type through instead of
+    coercing to int64 (ADVICE r03)."""
+    rows = [(f"doc-{i:03d}", 100 + (i * 37) % 400) for i in range(60)]
+    df = spark.createDataFrame(rows, "doc_id string, n_tokens long")
+    out = pack_sequences(df, "doc_id", "n_tokens", max_tokens=1024, num_partitions=4)
+    assert out.schema["id"].dataType.simpleString() == "string"
+    got = out.collect()
+    assert {r.id for r in got} == {r[0] for r in rows}
+    per_bin: dict = {}
+    for r in got:
+        per_bin[r.pack_id] = per_bin.get(r.pack_id, 0) + r.n_tokens
+    assert all(
+        tot <= 1024
+        for pid, tot in per_bin.items()
+        if sum(1 for r in got if r.pack_id == pid) > 1
+    )
 
 def test_weighted_mix_rates_and_determinism(spark):
     """Data-mixing filter: per-domain keep fraction tracks the rate,
@@ -610,16 +682,18 @@ def test_chunker_udtf_matches_native_operator(spark):
 
 
 def test_curation_pipeline_composition_end_to_end(spark):
-    """The curation chain composes: boilerplate removal ->
-    normalized-fingerprint dedup -> chunking. Asserts cross-operator
-    invariants: boilerplate never reaches chunks, normalized duplicates
-    collapse to one survivor, and every surviving token lands in
-    exactly one chunk."""
+    """The full curation chain composes: boilerplate removal ->
+    normalized-fingerprint dedup -> chunking -> sequence packing.
+    Asserts cross-operator invariants: boilerplate never reaches
+    chunks, normalized duplicates collapse to one survivor, every
+    surviving token lands in exactly one chunk, and packing covers
+    every chunk exactly once within capacity."""
     from pyspark.sql import functions as F
 
     from iot_sensor_data_pipeline_spark.functions.text import normalize_text
     from iot_sensor_data_pipeline_spark.operators.curation import (
         chunk_documents,
+        pack_sequences,
         remove_boilerplate_lines,
     )
 
@@ -670,6 +744,21 @@ def test_curation_pipeline_composition_end_to_end(spark):
             t for _, text in sorted(per_doc[i]) for t in text.split()
         )
         assert reassembled == " ".join(toks)
+
+    sized = chunks.select(
+        F.concat_ws("#", F.col("id").cast("string"), F.col("chunk_idx").cast("string")).alias("id"),
+        F.col("n_tokens"),
+    )
+    packed = pack_sequences(sized, "id", "n_tokens", max_tokens=8)
+    prows = packed.collect()
+    assert {r.id for r in prows} == {
+        f"{r.id}#{r.chunk_idx}" for rs in [chunks.collect()] for r in rs
+    }
+    bins = {}
+    for r in prows:
+        bins.setdefault(r.pack_id, 0)
+        bins[r.pack_id] += r.n_tokens
+    assert all(total <= 8 for total in bins.values())
 
 
 def test_mixture_report_shortfall_and_crossing_doc(spark):
@@ -786,7 +875,7 @@ def test_weighted_sample_plan_is_top_n_not_global_sort(spark):
 
 
 # ---------------------------------------------------------------------------
-# domain_stats
+# domain_stats / filter_by_domain_stats
 # ---------------------------------------------------------------------------
 
 
@@ -821,6 +910,54 @@ def test_domain_stats_counts_and_dup_rate(spark):
         total = sum(len(t) for i, s, t in _DOMAIN_ROWS if s == d)
         assert r.total_chars == total, d
     assert 0.0 <= stats["good"].mean_quality <= 1.0
+
+
+def test_filter_by_domain_stats_drops_failing_domains(spark):
+    from iot_sensor_data_pipeline_spark.operators.curation import (
+        filter_by_domain_stats,
+    )
+
+    df = _domain_fixture(spark)
+    # dup_rate gate removes the template farm
+    kept = filter_by_domain_stats(df, max_dup_rate=0.5)
+    assert sorted(r.source for r in kept.select("source").distinct().collect()) == [
+        "good", "tiny",
+    ]
+    # min_docs gate removes the singleton domain
+    kept2 = filter_by_domain_stats(df, min_docs=2)
+    assert sorted(r.source for r in kept2.select("source").distinct().collect()) == [
+        "good", "spam",
+    ]
+    # composed gates
+    kept3 = filter_by_domain_stats(df, max_dup_rate=0.5, min_docs=2)
+    assert [r.source for r in kept3.select("source").distinct().collect()] == ["good"]
+    # docs of surviving domains come through untouched
+    assert kept3.count() == 3
+
+
+def test_filter_by_domain_stats_guard_and_broadcast_plan(spark):
+    import pytest
+
+    from iot_sensor_data_pipeline_spark.operators.curation import (
+        domain_stats,
+        filter_by_domain_stats,
+    )
+
+    df = _domain_fixture(spark)
+    with pytest.raises(ValueError, match="at least one"):
+        filter_by_domain_stats(df)
+
+    # precomputed-stats reuse path + broadcast semi join (the corpus
+    # side must NOT shuffle for the filter-back)
+    stats = domain_stats(df)
+    plan = (
+        filter_by_domain_stats(df, min_docs=2, stats=stats)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -168,6 +168,32 @@ def test_shingles_short_docs_empty_not_error(spark):
     assert {r.id for r in got} == {2}
 
 
+def _mk_docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_estimated_jaccard_identical_and_disjoint(spark):
+    from iot_sensor_data_pipeline_spark.operators.dedup import (
+        estimated_jaccard_pairs,
+        hashed_shingles,
+        minhash_signatures,
+    )
+
+    rows = [
+        (0, "alpha beta gamma delta epsilon zeta eta theta"),
+        (1, "alpha beta gamma delta epsilon zeta eta theta"),  # identical
+        (2, "one two three four five six seven eight nine"),   # disjoint
+    ]
+    sigs = minhash_signatures(hashed_shingles(_mk_docs(spark, rows), "doc_id", "text", n=3))
+    cand = spark.createDataFrame([(0, 1), (0, 2)], "i long, j long")
+    got = {
+        (r.i, r.j): r.est_jaccard
+        for r in estimated_jaccard_pairs(cand, sigs, sigs, threshold=0.0).collect()
+    }
+    assert got[(0, 1)] == 1.0   # identical docs agree on every component
+    assert got[(0, 2)] < 0.2    # disjoint shingle sets barely agree
+
+
 def test_duplicate_clusters_star_matches_union_find(spark):
     """large-star/small-star CC vs an independent python union-find on
     pseudo-random graphs (multiple densities, isolated nodes, chains

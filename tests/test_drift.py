@@ -170,6 +170,22 @@ def test_column_all_null_in_reference_is_omitted(spark):
     assert got[0].n_ref == 3 and got[0].n_cur == 2
 
 
+def test_schema_drift(spark):
+    from iot_sensor_data_pipeline_spark.operators.drift import schema_drift
+
+    ref = spark.createDataFrame([(1.0, "a", 1)], "x double, s string, gone int")
+    cur = spark.createDataFrame([(1.0, 2, 5.0)], "x double, s int, fresh double")
+    got = {r.col: r for r in schema_drift(ref, cur).collect()}
+    assert set(got) == {"s", "gone", "fresh"}
+    assert got["gone"].change == "removed" and got["gone"].ref_type == "int"
+    assert got["fresh"].change == "added" and got["fresh"].cur_type == "double"
+    assert got["s"].change == "retyped" and (got["s"].ref_type, got["s"].cur_type) == ("string", "int")
+    # agreeing schemas -> empty relation with the report schema
+    same = schema_drift(ref, ref)
+    assert same.count() == 0
+    assert same.columns == ["col", "change", "ref_type", "cur_type"]
+
+
 def test_categorical_drift(spark):
     """Python-mirror differential plus the bucket semantics: top-K
     reference categories, <OTHER> fold, <NULL> as a real bucket, and

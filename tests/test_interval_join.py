@@ -86,3 +86,115 @@ def test_matches_duckdb_oracle(spark, sf):
     q = EXTENDED_REGISTRY["orders_window_overlap_join"]
     ok, msg = compare_query(spark, sf, q.fn, q.oracle)
     assert ok, msg
+
+
+def test_range_join_long_span_branch_equivalence(spark):
+    """With long_span_buckets set, wide intervals take a broadcast
+    branch instead of exploding to thousands of bucket rows; output is
+    identical to the pure-bucketed plan, each pair exactly once."""
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    import random
+
+    rng = random.Random(99)
+    points = [(float(rng.uniform(0, 1000)),) for _ in range(200)]
+    ivs = [(lo, lo + rng.uniform(0.5, 8.0)) for lo in
+           (rng.uniform(0, 1000) for _ in range(50))]
+    ivs += [(100.0, 900.0), (0.0, 999.0)]  # pathological wide spans
+    left = spark.createDataFrame(points, "p double")
+    right = spark.createDataFrame(ivs, "lo double, hi double")
+
+    def rows(**kw):
+        return sorted(
+            (r["p"], r["lo"], r["hi"])
+            for r in range_join(left, right, "p", "lo", "hi", 4.0, **kw).collect()
+        )
+
+    base = rows()
+    split = rows(long_span_buckets=16)
+    assert base == split and len(base) > 0
+
+    # the wide stratum actually broadcasts
+    df = range_join(left, right, "p", "lo", "hi", 4.0, long_span_buckets=16)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in plan and "Union" in plan
+
+
+def test_range_join_long_span_guard(spark):
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    left = spark.createDataFrame([(1.0,)], "p double")
+    right = spark.createDataFrame([(0.0, 2.0)], "lo double, hi double")
+    with pytest.raises(ValueError, match="long_span_buckets"):
+        range_join(left, right, "p", "lo", "hi", 1.0, long_span_buckets=0)
+
+
+def test_range_join_auto_tune_correct_and_bounded(spark):
+    """bucket_width=None tunes width from the median span and the long
+    cut from p99: results equal an explicit-width run (and a python
+    reference), and on a skewed-span fixture the explode factor of the
+    bucketed branch stays bounded by the tuned cut."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    rng = random.Random(1234)
+    points = [(float(rng.uniform(0, 1000)),) for _ in range(300)]
+    # skewed spans: 95% around ~4 wide, a heavy tail up to whole-domain
+    ivs = [(lo, lo + rng.uniform(1.0, 8.0)) for lo in
+           (rng.uniform(0, 1000) for _ in range(190))]
+    ivs += [(lo, lo + rng.uniform(200.0, 990.0)) for lo in
+            (rng.uniform(0, 10) for _ in range(10))]
+    left = spark.createDataFrame(points, "p double")
+    right = spark.createDataFrame(ivs, "lo double, hi double")
+
+    tuned: dict = {}
+    auto = range_join(left, right, "p", "lo", "hi", tuned=tuned)
+    got = sorted((r["p"], r["lo"], r["hi"]) for r in auto.collect())
+    want = sorted(
+        (p, lo, hi) for (p,) in points for (lo, hi) in ivs if lo <= p < hi
+    )
+    assert got == want and len(want) > 0
+    # tuned width ~ median span (1..8 range, p99 tail excluded)
+    assert 1.0 <= tuned["bucket_width"] <= 10.0
+    assert tuned["long_span_buckets"] >= 2
+    # bounded explode: rows entering the bucketed branch expand by at
+    # most long_span_buckets + 1 buckets each
+    w, cut = tuned["bucket_width"], tuned["long_span_buckets"]
+    span_buckets = F.floor(F.col("hi") / w) - F.floor(F.col("lo") / w) + 1
+    narrow = right.where(span_buckets <= cut)
+    exploded = narrow.select(
+        F.explode(
+            F.sequence(F.floor(F.col("lo") / w), F.floor(F.col("hi") / w))
+        )
+    ).count()
+    assert exploded <= narrow.count() * (cut + 1)
+    # caller-pinned long_span_buckets survives auto width
+    tuned2: dict = {}
+    pinned = range_join(
+        left, right, "p", "lo", "hi", long_span_buckets=64, tuned=tuned2
+    )
+    assert tuned2["long_span_buckets"] == 64
+    assert sorted(
+        (r["p"], r["lo"], r["hi"]) for r in pinned.collect()
+    ) == want
+
+
+def test_range_join_auto_tune_degenerate_spans(spark):
+    """All-zero-length spans: median 0 must not produce width 0."""
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    left = spark.createDataFrame([(1.0,), (2.0,)], "p double")
+    right = spark.createDataFrame(
+        [(1.0, 1.0), (2.0, 2.0), (0.0, 0.0)], "lo double, hi double"
+    )
+    tuned: dict = {}
+    out = range_join(left, right, "p", "lo", "hi", tuned=tuned)
+    assert tuned["bucket_width"] > 0.0
+    assert out.count() == 0  # half-open [x, x) is empty
+
+    empty = right.where("lo > 1e9")
+    with pytest.raises(ValueError, match="empty"):
+        range_join(left, empty, "p", "lo", "hi")

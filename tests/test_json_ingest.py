@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from iot_sensor_data_pipeline_spark.sources.json_ingest import (
     ingest_readings,
     renest_reading,
+    serialize_json,
 )
 
 GOOD = {
@@ -62,11 +63,7 @@ def test_type_mismatch_nulls_only_that_field(spark):
 
 def test_renest_serialize_roundtrip(spark):
     flat = ingest_readings(_df(spark, [json.dumps(GOOD)]))
-    nested = renest_reading(flat)
-    wire = nested.select(
-        F.col("sensor_id").alias("key"),
-        F.to_json(F.struct(*[c for c in nested.columns if c != "sensor_id"])).alias("value"),
-    ).collect()[0]
+    wire = serialize_json(renest_reading(flat), key_col="sensor_id").collect()[0]
     assert wire.key == "A_1_100_temperature"
     payload = json.loads(wire.value)
     assert payload["location"] == {"building": "A", "floor": 1, "room": "100"}
@@ -111,3 +108,76 @@ def test_ingest_collapses_to_single_projection(spark):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("from_json") == 1
     assert plan.count("Project") == 1
+
+
+def test_variant_ingest_parity_with_struct_path(spark):
+    """The VARIANT-based ingest produces the same 10 typed columns as
+    the StructType path on valid wire JSON; unknown producer fields
+    survive in the variant; malformed text nulls, never fails."""
+    import json as _json
+
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.sources.json_ingest import (
+        ingest_readings,
+        ingest_readings_variant,
+    )
+
+    reading = {
+        "sensor_id": "A_1_100_temperature",
+        "sensor_type": "temperature",
+        "location": {"building": "A", "floor": 1, "room": "100"},
+        "timestamp": "2026-01-01T10:00:00",
+        "value": 22.5,
+        "unit": "celsius",
+        "metadata": {"battery_level": 87, "signal_strength": -55},
+        "future_field": {"added_by": "a newer producer"},  # unknown
+    }
+    raw = spark.createDataFrame(
+        [(_json.dumps(reading),), ("{not json",)], "value string"
+    )
+    via_struct = ingest_readings(raw).collect()
+    via_variant = ingest_readings_variant(raw).collect()
+    cols = [
+        "sensor_id", "sensor_type", "value", "unit", "timestamp",
+        "building", "floor", "room", "battery_level", "signal_strength",
+    ]
+    s_rows = sorted((tuple(getattr(r, c) for c in cols) for r in via_struct), key=repr)
+    v_rows = sorted((tuple(getattr(r, c) for c in cols) for r in via_variant), key=repr)
+    assert s_rows == v_rows  # incl. the all-null malformed row
+    good = next(r for r in via_variant if r.sensor_id is not None)
+    # the open content model keeps what the schema path would drop
+    kept = (
+        ingest_readings_variant(raw)
+        .where(F.col("sensor_id").isNotNull())
+        .select(
+            F.variant_get("v", "$.future_field.added_by", "string").alias("x")
+        )
+        .collect()
+    )
+    assert kept[0].x == "a newer producer"
+    assert good.value == 22.5 and good.floor == 1
+
+
+def test_variant_ingest_tolerates_type_drift(spark):
+    """A producer that sends a string where a number is expected must
+    null THAT column, never fail the batch (try_variant_get)."""
+    import json as _json
+
+    from iot_sensor_data_pipeline_spark.sources.json_ingest import (
+        ingest_readings_variant,
+    )
+
+    drifted = {
+        "sensor_id": "A_1_100_temperature",
+        "value": "not-a-number",       # type drift
+        "location": {"floor": "two"},  # type drift, nested
+        "metadata": {"battery_level": 90},
+    }
+    raw = spark.createDataFrame([(_json.dumps(drifted),)], "value string")
+    rows = ingest_readings_variant(raw).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert r.sensor_id == "A_1_100_temperature"
+    assert r.value is None and r.floor is None  # drifted fields null
+    assert r.battery_level == 90  # clean fields still extract

@@ -1,5 +1,5 @@
-"""Multimodal column plumbing: schemas and the Arrow batch path
-(codecs are deterministic stubs)."""
+"""Multimodal column plumbing: schemas, Arrow batch path, frame
+sampling, byte-weighted partitioning (codecs are deterministic stubs)."""
 
 from __future__ import annotations
 
@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from iot_sensor_data_pipeline_spark.operators.multimodal import (
     extract_features,
+    frame_sample,
+    repartition_for_payload,
 )
 
 
@@ -44,3 +46,67 @@ def test_feature_metadata_pushdown_stays_jvm_side(spark):
     # filtering on the metadata struct must not invoke the Python stage
     df = _media_df(spark).where(F.col("media.kind") == "image")
     assert df.count() == 2  # plain JVM filter over the struct
+
+
+def test_frame_sample_video_explodes(spark):
+    out = frame_sample(_media_df(spark), every_n=10)
+    by_id = {}
+    for r in out.collect():
+        by_id.setdefault(r.item_id, []).append(r)
+    assert [r.frame_idx for r in sorted(by_id[3], key=lambda x: x.frame_idx)] == [0, 10, 20]
+    assert all(len(r.frame_bytes) > 0 for r in by_id[3])
+    assert [r.frame_idx for r in by_id[1]] == [-1]  # non-video passthrough
+
+
+def test_repartition_for_payload_scales_with_bytes(spark):
+    df = _media_df(spark).where(F.col("content").isNotNull())
+    small = repartition_for_payload(df, target_bytes_per_task=100)
+    assert small.rdd.getNumPartitions() > 1
+    big = repartition_for_payload(df, target_bytes_per_task=10**9)
+    assert big.rdd.getNumPartitions() == 1
+
+
+def test_sniff_format_magic_bytes(spark):
+    """Real container headers resolve to their formats; RIFF refines
+    via the inner tag; junk and short payloads are 'unknown'."""
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.operators.multimodal import sniff_format
+
+    payloads = [
+        (1, b"\xff\xd8\xff\xe0" + b"\x00" * 16, "jpeg"),
+        (2, b"\x89PNG\r\n\x1a\n" + b"\x00" * 16, "png"),
+        (3, b"GIF89a" + b"\x00" * 16, "gif"),
+        (4, b"RIFF\x24\x08\x00\x00WAVEfmt ", "wav"),
+        (5, b"RIFF\x24\x08\x00\x00WEBPVP8 ", "webp"),
+        (6, b"\x00\x00\x00\x20ftypisom" + b"\x00" * 8, "mp4"),
+        (7, b"%PDF-1.7\n", "pdf"),
+        (8, b"PK\x03\x04" + b"\x00" * 16, "zip"),
+        (9, b"fLaC\x00\x00\x00\x22", "flac"),
+        (10, b"OggS\x00\x02", "ogg"),
+        (11, b"not a media file", "unknown"),
+        (12, b"\xff", "unknown"),  # too short for any signature
+    ]
+    df = spark.createDataFrame(
+        [(i, p) for i, p, _ in payloads], "item_id long, content binary"
+    )
+    got = {
+        r.item_id: r.fmt
+        for r in df.select("item_id", sniff_format(F.col("content")).alias("fmt")).collect()
+    }
+    assert got == {i: want for i, _, want in payloads}
+
+
+def test_sniff_format_is_codegen_no_python(spark):
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.operators.multimodal import sniff_format
+
+    df = spark.createDataFrame([(1, b"\xff\xd8\xff")], "item_id long, content binary")
+    plan = (
+        df.select(sniff_format(F.col("content")).alias("fmt"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "EvalPython" not in plan and "Exchange" not in plan

@@ -11,6 +11,7 @@ import math
 from iot_sensor_data_pipeline_spark.operators.ngram_lm import (
     BOS,
     EOS,
+    perplexity_filter,
     score_perplexity,
     train_ngram_lm,
 )
@@ -82,6 +83,14 @@ def test_fluent_beats_scrambled(spark):
     probe = _df(spark, ["the cat sat on the mat", "mat zzz cat qqq the xyzzy"])
     rows = {r["doc_id"]: r["perplexity"] for r in score_perplexity(probe, lm).collect()}
     assert rows[0] < rows[1]
+
+
+def test_perplexity_filter_keeps_in_distribution_docs(spark):
+    train = ["alpha beta gamma delta"] * 6
+    lm = train_ngram_lm(_df(spark, train))
+    docs = _df(spark, ["alpha beta gamma delta", "zz yy xx ww vv uu"])
+    kept = perplexity_filter(docs, lm, max_perplexity=5.0)
+    assert [r["doc_id"] for r in kept.collect()] == [0]
 
 
 def test_empty_doc_scores_eos_only(spark):

@@ -116,6 +116,103 @@ def test_setops_module_surface(spark):
 
 
 # ---------------------------------------------------------------------------
+# range_join: bucketized interval join
+# ---------------------------------------------------------------------------
+
+
+def _range_fixture(spark, seed=5, n_points=400, n_intervals=60):
+    import random
+
+    rnd = random.Random(seed)
+    pts = [(i, rnd.uniform(0, 1000.0)) for i in range(n_points)]
+    ivs = []
+    for j in range(n_intervals):
+        lo = rnd.uniform(0, 1000.0)
+        ivs.append((j, lo, lo + rnd.uniform(0.0, 40.0)))
+    points = spark.createDataFrame(pts, "pid long, x double")
+    intervals = spark.createDataFrame(ivs, "iid long, lo double, hi double")
+    return points, intervals
+
+
+def test_range_join_matches_naive_nonequi_join(spark):
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    points, intervals = _range_fixture(spark)
+    naive = points.join(
+        intervals,
+        (F.col("lo") <= F.col("x")) & (F.col("x") < F.col("hi")),
+    )
+    got = range_join(points, intervals, "x", "lo", "hi", bucket_width=20.0)
+    want_set = {(r.pid, r.iid) for r in naive.collect()}
+    got_rows = [(r.pid, r.iid) for r in got.collect()]
+    assert len(got_rows) == len(want_set)  # exactly-once, no dup pass
+    assert set(got_rows) == want_set
+    assert len(want_set) > 100  # fixture actually exercises overlaps
+
+
+def test_range_join_half_open_boundaries(spark):
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    points = spark.createDataFrame(
+        [(1, 10.0), (2, 20.0)], "pid long, x double"
+    )
+    intervals = spark.createDataFrame([(7, 10.0, 20.0)], "iid long, lo double, hi double")
+    got = {(r.pid, r.iid) for r in range_join(points, intervals, "x", "lo", "hi", 5.0).collect()}
+    assert got == {(1, 7)}  # lo inclusive, hi exclusive
+
+
+def test_range_join_plan_has_no_nested_loop(spark):
+    """The whole point: an equi-join plan (SMJ/SHJ/BHJ on the bucket),
+    never BroadcastNestedLoopJoin or CartesianProduct."""
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    points, intervals = _range_fixture(spark)
+    plan = (
+        range_join(points, intervals, "x", "lo", "hi", 20.0)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_range_join_extra_keys(spark):
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    points = spark.createDataFrame(
+        [(1, "a", 15.0), (2, "b", 15.0)], "pid long, grp string, x double"
+    )
+    intervals = spark.createDataFrame(
+        [(7, "a", 10.0, 20.0), (8, "b", 10.0, 20.0)],
+        "iid long, grp string, lo double, hi double",
+    )
+    got = {
+        (r.pid, r.iid)
+        for r in range_join(points, intervals, "x", "lo", "hi", 5.0, extra_on=["grp"]).collect()
+    }
+    assert got == {(1, 7), (2, 8)}
+
+
+def test_range_join_rejects_bad_width_and_ambiguous_columns(spark):
+    import pytest as _pytest
+
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    points = spark.createDataFrame([(1, 5.0)], "pid long, x double")
+    intervals = spark.createDataFrame([(2, 0.0, 10.0)], "iid long, lo double, hi double")
+    with _pytest.raises(ValueError, match="bucket_width"):
+        range_join(points, intervals, "x", "lo", "hi", 0.0)
+    with _pytest.raises(ValueError, match="bucket_width"):
+        range_join(points, intervals, "x", "lo", "hi", float("inf"))
+    clash = intervals.withColumnRenamed("iid", "pid")  # shares 'pid'
+    with _pytest.raises(ValueError, match="share non-key"):
+        range_join(points, clash, "x", "lo", "hi", 5.0)
+
+
+# ---------------------------------------------------------------------------
 # fuzzy_join (q-gram blocked edit-distance join)
 # ---------------------------------------------------------------------------
 

@@ -270,6 +270,47 @@ def test_weighted_mix_matches_python_md5(spark, rows):
 
 
 # ---------------------------------------------------------------------------
+# range_join vs a Python reference on randomized points/intervals
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    pts=st.lists(
+        st.floats(min_value=-100, max_value=100, allow_nan=False), min_size=1, max_size=40
+    ),
+    ivs=st.lists(
+        st.tuples(
+            st.floats(min_value=-100, max_value=100, allow_nan=False),
+            st.floats(min_value=0, max_value=30, allow_nan=False),
+        ),
+        min_size=1,
+        max_size=25,
+    ),
+    width=st.sampled_from([0.5, 3.0, 17.0, 120.0]),
+)
+def test_range_join_property_vs_python(spark, pts, ivs, width):
+    from iot_sensor_data_pipeline_spark.operators.joins import range_join
+
+    points = spark.createDataFrame(list(enumerate(pts)), "pid long, x double")
+    intervals = spark.createDataFrame(
+        [(j, lo, lo + span) for j, (lo, span) in enumerate(ivs)],
+        "iid long, lo double, hi double",
+    )
+    got = sorted(
+        (r.pid, r.iid)
+        for r in range_join(points, intervals, "x", "lo", "hi", width).collect()
+    )
+    want = sorted(
+        (i, j)
+        for i, x in enumerate(pts)
+        for j, (lo, span) in enumerate(ivs)
+        if lo <= x < lo + span
+    )
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
 # chunk_documents coverage/reassembly property
 # ---------------------------------------------------------------------------
 

@@ -1,6 +1,7 @@
 """Model-based quality filtering (operators/quality.py): the classifier
-separates a synthetic reference corpus from synthetic crawl junk, and
-the scorer is distributed and shape-preserving."""
+separates a synthetic reference corpus from synthetic crawl junk, the
+scorer is distributed and shape-preserving, and the importance filter
+is deterministic and monotone in the score."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import random
 from pyspark.sql import functions as F
 
 from iot_sensor_data_pipeline_spark.operators.quality import (
+    quality_importance_filter,
     score_quality,
     train_quality_classifier,
 )
@@ -48,3 +50,79 @@ def test_scoring_preserves_columns_and_adds_prob(spark):
     assert set(out.columns) == {"doc_id", "text", "label", "quality_prob"}
     probs = [r.quality_prob for r in out.collect()]
     assert all(0.0 <= p <= 1.0 for p in probs)
+
+
+def test_importance_filter_deterministic_and_monotone(spark):
+    corpus = _corpus(spark)
+    model = train_quality_classifier(corpus, num_features=1 << 12)
+    scored = score_quality(model, corpus)
+    kept1 = {r.doc_id for r in quality_importance_filter(scored, "doc_id").collect()}
+    kept2 = {
+        r.doc_id
+        for r in quality_importance_filter(
+            scored.repartition(7), "doc_id"
+        ).collect()
+    }
+    # deterministic: identical keep set regardless of partitioning
+    assert kept1 == kept2
+    # monotone: high-quality docs survive at a much higher rate
+    good = {r.doc_id for r in scored.where("label = 1").collect()}
+    junk = {r.doc_id for r in scored.where("label = 0").collect()}
+    good_rate = len(kept1 & good) / len(good)
+    junk_rate = len(kept1 & junk) / len(junk)
+    assert good_rate > 0.85
+    assert junk_rate < 0.15
+    # alpha=0 keeps everything: prob^0 = 1 -> bucket < 1e6 always
+    kept_all = quality_importance_filter(scored, "doc_id", alpha=0.0).count()
+    assert kept_all == corpus.count()
+
+
+def test_importance_filter_zero_shuffle_plan(spark):
+    """The keep decision is a pure scan-side filter — no Exchange."""
+    corpus = _corpus(spark, n=50)
+    model = train_quality_classifier(corpus, num_features=1 << 10)
+    scored = score_quality(model, corpus.localCheckpoint(eager=True))
+    plan = (
+        quality_importance_filter(scored, "doc_id")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan
+
+
+def test_importance_filter_alpha_zero_keeps_null_scores(spark):
+    """alpha=0 must keep EVERYTHING, including unscored (NULL) rows;
+    alpha>0 drops NULL scores by the engine's NULL-propagation
+    convention."""
+    from pyspark.sql import functions as F
+
+    scored = spark.createDataFrame(
+        [(1, 0.9), (2, None), (3, 0.1)], "doc_id long, quality_prob double"
+    )
+    assert quality_importance_filter(scored, "doc_id", alpha=0.0).count() == 3
+    kept = quality_importance_filter(scored, "doc_id", alpha=1.0)
+    assert kept.where(F.col("quality_prob").isNull()).count() == 0
+
+
+def test_compression_ratio_flags_repetitive_text(spark):
+    from iot_sensor_data_pipeline_spark.operators.quality import compression_ratio
+
+    rows = [
+        (1, "spam spam spam spam " * 50),
+        (2, "the quiet harbor holds seven boats while gulls wheel over "
+            "the gray water and fishermen mend their torn nets slowly"),
+        (3, ""),
+        (4, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r["compression_ratio"]
+           for r in compression_ratio(df).collect()}
+    assert out[1] < out[2]          # repetitive compresses far better
+    assert out[1] < 0.1 and out[2] > 0.5
+    assert out[3] is None and out[4] is None
+
+    # deterministic across partitionings
+    again = {r["doc_id"]: r["compression_ratio"]
+             for r in compression_ratio(df.repartition(5)).collect()}
+    assert again == out

@@ -1,6 +1,42 @@
-"""Explicit broadcast hints plan a BroadcastHashJoin."""
+"""The rate-source synthetic stream (streaming S5) produces valid
+canonical readings under a live micro-batch trigger."""
 
 from __future__ import annotations
+
+import time
+
+from iot_sensor_data_pipeline_spark.sources.synthetic import reading_stream
+
+
+def test_reading_stream_produces_valid_rows(spark):
+    stream = reading_stream(spark, rows_per_second=200)
+    assert stream.isStreaming
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("rate_smoke")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 30
+        n = 0
+        while time.monotonic() < deadline:
+            n = spark.sql("SELECT count(*) FROM rate_smoke").collect()[0][0]
+            if n >= 24:
+                break
+            time.sleep(0.5)
+        assert n >= 24, f"only {n} rows after 30s"
+        rows = spark.sql(
+            "SELECT * FROM rate_smoke WHERE sensor_id IS NULL OR value IS NULL OR timestamp IS NULL"
+        ).collect()
+        assert rows == []
+        kinds = {
+            r.sensor_type
+            for r in spark.sql("SELECT DISTINCT sensor_type FROM rate_smoke").collect()
+        }
+        assert kinds <= {"temperature", "humidity", "pressure"}
+    finally:
+        q.stop()
 
 
 def test_broadcast_hint_overrides_threshold(spark, sf_dir):

@@ -97,6 +97,38 @@ KEEP: dict[str, str] = {
     "operators/similarity.py:ann_recall_report": (
         "ANN recall@k against exact kNN, the planned check for the ANN gate queries"
     ),
+    # Library operators that no query calls yet but whose own tests stay in
+    # the default tier. Each one either gets a registered query or goes with
+    # its tests in a later change.
+    "functions/text.py:lang_id": "stopword-vote language id, tested on real sentences",
+    "functions/text.py:winnow_fingerprints": (
+        "winnowing fingerprints with the shared-substring guarantee its tests pin"
+    ),
+    "operators/bucketing.py:*": "bucketed write and zero-shuffle bucketed join",
+    "operators/curation.py:filter_by_domain_stats": "domain filter over domain_stats",
+    "operators/curation.py:pack_sequences": "sequence packing into fixed-capacity bins",
+    "operators/dedup.py:estimated_jaccard_pairs": "MinHash Jaccard estimate per pair",
+    "operators/drift.py:schema_drift": "schema-level complement of drift_report",
+    "operators/joins.py:range_join": "bucketized point-in-interval equi-join",
+    "operators/merge.py:upsert_snapshot": "upsert of a change log into a snapshot",
+    "operators/merge.py:diff_summary": "per-kind counts of snapshot_diff",
+    "operators/multimodal.py:sniff_format": "magic-byte payload format sniffing",
+    "operators/multimodal.py:frame_sample": "video frame sampling",
+    "operators/multimodal.py:repartition_for_payload": "payload-size-aware repartitioning",
+    "operators/ngram_lm.py:perplexity_filter": "threshold gate over score_perplexity",
+    "operators/quality.py:compression_ratio": "repetition score by compression ratio",
+    "operators/quality.py:quality_importance_filter": "importance-sampled quality filter",
+    "operators/similarity.py:cosine": "cosine similarity column primitive",
+    "operators/similarity.py:ivf_assign": "incremental IVF assignment without retraining",
+    "operators/similarity.py:recommended_n_planes": "LSH plane-count sizing rule",
+    "operators/sketches.py:distinct_sketches": "mergeable HLL distinct-count sketches",
+    "operators/sketches.py:merge_distinct_counts": "merge of distinct_sketches partials",
+    "operators/sketches.py:histogram_bins": "fixed histogram edges per column",
+    "operators/sketches.py:merge_histogram_quantiles": "quantiles from merged histograms",
+    "operators/skew.py:salted_*": "salted join and aggregation for skewed keys",
+    "sources/json_ingest.py:ingest_readings_variant": "schema-less VARIANT ingest",
+    "sources/json_ingest.py:serialize_json": "Kafka wire-format serializer",
+    "sources/synthetic.py:reading_*stream": "rate-source reading streams",
 }
 
 ROOT_FILES = ("main.py", "demo.py")

@@ -5,8 +5,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from iot_sensor_data_pipeline_spark.operators.similarity import cosine_topk, rp_lsh_topk
+from iot_sensor_data_pipeline_spark.operators.similarity import (
+    cosine,
+    cosine_topk,
+    rp_lsh_topk,
+)
 from iot_sensor_data_pipeline_spark.sources.tables import load_table
+
+
+def test_cosine_primitive(spark):
+    df = spark.createDataFrame(
+        [([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [1.0, 1.0]), ([1.0, 0.0], [-1.0, 0.0])],
+        "a array<double>, b array<double>",
+    )
+    got = [round(r.c, 9) for r in df.select(cosine(F.col("a"), F.col("b")).alias("c")).collect()]
+    assert got == [0.0, 1.0, -1.0]
 
 
 def test_lsh_recall_vs_brute_force_isotropic_worst_case(spark, sf_dir_mid):
@@ -162,15 +175,55 @@ def test_ivf_build_probe_matches_fused_and_bucketed_plan(spark, sf_dir_mid):
         spark.sql("DROP TABLE IF EXISTS b_ivf_postings")
 
 
+def test_ivf_assign_incremental_append(spark, sf_dir_mid):
+    """Round 5: new vectors join the index via ivf_assign (no retrain,
+    no touch of indexed rows) — assignment agrees with what ivf_build
+    would produce for the same centroids, and a probe over the merged
+    posting lists finds the appended vectors."""
+    from iot_sensor_data_pipeline_spark.operators.similarity import (
+        ivf_assign,
+        ivf_build,
+        ivf_probe,
+    )
+
+    emb = load_table(spark, sf_dir_mid, "embeddings")
+    old = emb.where(F.col("vec_id") % 2 == 0)
+    new = emb.where(F.col("vec_id") % 2 == 1)
+
+    assignments, centroids = ivf_build(old, n_centroids=8)
+    delta = ivf_assign(new, centroids)
+
+    # same assignment function: re-assigning the OLD vectors matches
+    # the build output exactly
+    rebuilt = {(r.nid, r.cid) for r in ivf_assign(old, centroids).collect()}
+    built = {(r.nid, r.cid) for r in assignments.collect()}
+    assert rebuilt == built
+
+    # probing the merged index with a new vector's own embedding must
+    # return that vector as a (trivially) similar neighbor of others:
+    # every query finds k neighbors from the union, including new ids
+    merged = assignments.unionByName(delta)
+    queries = new.where(F.col("vec_id") % 50 == 1).limit(5)
+    got = ivf_probe(queries, merged, centroids, k=5, n_probe=8).collect()
+    assert got
+    assert {r.nid % 2 for r in got} == {0, 1}  # both halves reachable
+
+
 def test_rp_lsh_build_probe_matches_fused_and_bucketed_plan(spark, sf_dir_mid):
     """Round 5: the RP-LSH build/probe split mirrors the IVF one —
     split == fused for the same parameters; a bucket-table index probes
-    with the index-side exchange gone."""
+    with the index-side exchange gone; recommended_n_planes encodes the
+    docstring sizing rule."""
     from iot_sensor_data_pipeline_spark.operators.similarity import (
+        recommended_n_planes,
         rp_lsh_build,
         rp_lsh_probe,
         rp_lsh_topk,
     )
+
+    assert recommended_n_planes(2_000, 64) == 5
+    assert recommended_n_planes(20_000, 64) == 9
+    assert recommended_n_planes(1, 64) == 1
 
     emb = load_table(spark, sf_dir_mid, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)

@@ -1,10 +1,85 @@
-"""Sketch and mergeable-aggregate operators (operators/sketches.py):
-heavy hitters, partial-aggregate algebra, the column profiler,
-histogram partials, exact grouped quantiles, robust statistics."""
+"""Mergeable HLL distinct sketches (operators/sketches.py): accuracy,
+merge==rebuild equivalence, append-only incremental refresh, and
+idempotence under re-added values."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+from iot_sensor_data_pipeline_spark.operators.sketches import (
+    distinct_sketches,
+    merge_distinct_counts,
+)
+
+
+def _data(spark, days=4, per_day=5000, overlap=1000):
+    """Each day shares `overlap` users with the previous day."""
+    rows = []
+    for d in range(days):
+        base = d * (per_day - overlap)
+        rows.extend((f"d{d}", base + i) for i in range(per_day))
+    return spark.createDataFrame(rows, "day string, user_id long")
+
+
+def test_estimate_within_hll_error_bound(spark):
+    df = _data(spark)
+    true = df.select("user_id").distinct().count()
+    est = merge_distinct_counts(
+        distinct_sketches(df, ["day"], "user_id", lg_k=12)
+    ).collect()[0].approx_distinct
+    assert abs(est - true) / true < 0.05  # lg_k=12 -> ~1.6% typical
+
+
+def test_union_of_partition_sketches_equals_global_sketch(spark):
+    """Merging per-day sketches must give the SAME estimate as one
+    sketch built over all days — the mergeability contract that makes
+    persisted sketch tables trustworthy."""
+    df = _data(spark)
+    merged = merge_distinct_counts(
+        distinct_sketches(df, ["day"], "user_id")
+    ).collect()[0].approx_distinct
+    direct = df.agg(
+        F.hll_sketch_estimate(F.hll_sketch_agg("user_id", F.lit(12))).alias("e")
+    ).collect()[0].e
+    assert merged == direct
+
+
+def test_incremental_append_equals_recompute(spark):
+    """The 100 TB point: yesterday's sketch rows + today's NEW sketch
+    row answer the all-time question without rescanning history."""
+    df = _data(spark, days=4)
+    old = distinct_sketches(df.where(F.col("day") != "d3"), ["day"], "user_id")
+    new_day = distinct_sketches(df.where(F.col("day") == "d3"), ["day"], "user_id")
+    incremental = merge_distinct_counts(old.unionByName(new_day)).collect()[0].approx_distinct
+    recomputed = merge_distinct_counts(
+        distinct_sketches(df, ["day"], "user_id")
+    ).collect()[0].approx_distinct
+    assert incremental == recomputed
+
+
+def test_reprocessed_day_does_not_inflate(spark):
+    """Re-appending a replayed day's sketch (at-least-once pipelines)
+    cannot raise the estimate: union is idempotent over identical
+    value sets."""
+    df = _data(spark, days=3)
+    sk = distinct_sketches(df, ["day"], "user_id")
+    replay = sk.where(F.col("day") == "d1")
+    once = merge_distinct_counts(sk).collect()[0].approx_distinct
+    twice = merge_distinct_counts(sk.unionByName(replay)).collect()[0].approx_distinct
+    assert twice == once
+
+
+def test_rollup_grains_from_same_sketches(spark):
+    """Any grouping coarser than the build partitioning is answerable
+    from the stored sketches: per-day counts and the global count from
+    ONE relation."""
+    df = _data(spark, days=3)
+    sk = distinct_sketches(df, ["day"], "user_id")
+    per_day = {r.day: r.approx_distinct for r in merge_distinct_counts(sk, ["day"]).collect()}
+    assert set(per_day) == {"d0", "d1", "d2"}
+    for day, est in per_day.items():
+        true = df.where(F.col("day") == day).select("user_id").distinct().count()
+        assert abs(est - true) / true < 0.05
 
 
 # ---------------------------------------------------------------------------
@@ -253,40 +328,90 @@ def test_profile_columns_wide_table_chunks(spark):
 
 
 # ---------------------------------------------------------------------------
-# histogram_partials (mergeable histogram rows)
+# histogram_partials / merge_histogram_quantiles (mergeable quantiles)
 # ---------------------------------------------------------------------------
 
 
+def test_histogram_quantiles_accuracy_vs_exact(spark):
+    """Quantiles estimated from merged histogram rows land within ~one
+    bin of rank of the exact percentiles."""
+    import random
+
+    from iot_sensor_data_pipeline_spark.operators.sketches import (
+        histogram_bins,
+        histogram_partials,
+        merge_histogram_quantiles,
+    )
+
+    rnd = random.Random(11)
+    vals = sorted(rnd.lognormvariate(0, 1.2) for _ in range(20000))  # skewed
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    bins = histogram_bins(df, "v", n_bins=128)
+    partials = histogram_partials(df, [], "v", bins)
+    got = merge_histogram_quantiles(partials, [0.1, 0.5, 0.9, 0.99]).collect()[0]
+    assert got.n == 20000
+    for q, col in [(0.1, "q_0_1"), (0.5, "q_0_5"), (0.9, "q_0_9"), (0.99, "q_0_99")]:
+        est = got[col]
+        # rank of the estimate in the exact sorted data
+        import bisect
+
+        r = bisect.bisect_right(vals, est) / len(vals)
+        assert abs(r - q) <= 2.5 / 128, (q, est, r)
+
+
 def test_histogram_partials_append_equals_recompute(spark):
-    """Yesterday's histogram rows + today's new rows are exactly the
-    rows of a full rebuild — the continuous-aggregate property (same
-    bins, counts add exactly)."""
+    """Yesterday's histogram rows + today's new rows answer the same
+    quantiles as a full rebuild — the continuous-aggregate property
+    (identical, not just close: same bins, counts add exactly)."""
     from pyspark.sql import functions as F
 
-    from iot_sensor_data_pipeline_spark.operators.sketches import histogram_partials
+    from iot_sensor_data_pipeline_spark.operators.sketches import (
+        histogram_bins,
+        histogram_partials,
+        merge_histogram_quantiles,
+    )
 
     df = spark.range(10000).select((F.hash("id") % 1000).cast("double").alias("v"),
                                    (F.col("id") % 4).alias("day"))
-    bins = [float(x) for x in range(-990, 1000, 30)]
+    bins = histogram_bins(df, "v", n_bins=64)
     old = histogram_partials(df.where(F.col("day") != 3), ["day"], "v", bins)
     new = histogram_partials(df.where(F.col("day") == 3), ["day"], "v", bins)
-    inc = sorted(map(tuple, old.unionByName(new).collect()))
-    full = sorted(map(tuple, histogram_partials(df, ["day"], "v", bins).collect()))
+    inc = merge_histogram_quantiles(old.unionByName(new), [0.25, 0.75]).collect()[0]
+    full = merge_histogram_quantiles(
+        histogram_partials(df, ["day"], "v", bins), [0.25, 0.75]
+    ).collect()[0]
     assert inc == full
-    assert sum(r.n for r in old.unionByName(new).collect()) == 10000
 
 
-def test_histogram_partials_grouped_and_null_excluded(spark):
-    from iot_sensor_data_pipeline_spark.operators.sketches import histogram_partials
+def test_histogram_quantiles_grouped_and_null_excluded(spark):
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.operators.sketches import (
+        histogram_partials,
+        merge_histogram_quantiles,
+    )
 
     rows = [("a", float(i)) for i in range(100)] + [("b", float(i * 10)) for i in range(100)]
     rows += [("a", None)] * 5  # nulls never counted
     df = spark.createDataFrame(rows, "g string, v double")
     bins = [float(x) for x in range(10, 1000, 10)]
-    n = {}
-    for r in histogram_partials(df, ["g"], "v", bins).collect():
-        n[r.g] = n.get(r.g, 0) + r.n
-    assert n == {"a": 100, "b": 100}
+    partials = histogram_partials(df, ["g"], "v", bins)
+    out = {r.g: r for r in merge_histogram_quantiles(partials, [0.5], ["g"]).collect()}
+    assert out["a"].n == 100 and out["b"].n == 100
+    assert abs(out["a"].q_0_5 - 50) <= 2
+    assert abs(out["b"].q_0_5 - 500) <= 20  # same rank, 10x scale
+
+
+def test_histogram_quantiles_validates_qs(spark):
+    import pytest as _pytest
+
+    from iot_sensor_data_pipeline_spark.operators.sketches import (
+        merge_histogram_quantiles,
+    )
+
+    df = spark.createDataFrame([(0, 1, 0.0, 1.0)], "bin int, n long, lo double, hi double")
+    with _pytest.raises(ValueError, match="qs must be"):
+        merge_histogram_quantiles(df, [1.5])
 
 
 def test_grouped_quantiles_exact_goldens_and_guards(spark):

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from iot_sensor_data_pipeline_spark.functions.text import (
     bpe_ish_token_count,
+    lang_id,
     quality_score,
     token_count,
 )
@@ -16,6 +17,18 @@ def _one(spark, text, col):
     return spark.createDataFrame([(text,)], "text string").select(
         col(F.col("text")).alias("v")
     ).collect()[0].v
+
+
+def test_lang_id_on_real_sentences(spark):
+    samples = {
+        "the cat is in the house and it is warm for now": "en",
+        "der Hund ist nicht mit der Katze und das ist gut": "de",
+        "le chat est dans la maison et il est content pour le moment": "fr",
+        "el perro es grande y la casa es una de las mejores": "es",
+        "xyzzy plugh qwerty asdf": "und",
+    }
+    for text, want in samples.items():
+        assert _one(spark, text, lang_id) == want, text
 
 
 def test_token_counts(spark):
@@ -35,6 +48,56 @@ def test_quality_score_bounded(spark):
     for text in ["", "a", "the " * 500, "!!!!" * 100]:
         v = _one(spark, text, quality_score)
         assert v is None or 0.0 <= v <= 1.0
+
+
+class TestWinnowFingerprints:
+    """Winnowing (MOSS) fingerprint properties — the rolling-hash
+    fingerprinting surface beyond the md5 whole-document hash."""
+
+    K, W = 5, 4
+
+    def _fps(self, spark, texts):
+        from iot_sensor_data_pipeline_spark.functions.text import winnow_fingerprints
+
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
+        rows = df.select(
+            winnow_fingerprints(F.col("text"), k=self.K, w=self.W).alias("fp")
+        ).collect()
+        return [set(r.fp) for r in rows]
+
+    def test_deterministic_and_selective(self, spark):
+        t = "the quick brown fox jumps over the lazy dog " * 5
+        a, b = self._fps(spark, [t, t])
+        assert a == b and a
+        # winnowing keeps ~2/(w+1) of the gram hashes — assert well
+        # under half are selected on a long-enough text
+        assert len(a) < (len(t) - self.K + 1) / 2
+
+    def test_shared_substring_guarantee(self, spark):
+        """Docs sharing a substring of length >= w + k - 1 MUST share
+        at least one fingerprint (the winnowing matching guarantee)."""
+        shared = "zqxjkwvbnmpl"  # length 12 >= 4 + 5 - 1
+        assert len(shared) >= self.W + self.K - 1
+        a, b = self._fps(
+            spark,
+            ["aaaa " + shared + " bbbb", "cccccc " + shared + " dddd"],
+        )
+        assert a & b
+
+    def test_disjoint_texts_disjoint_fingerprints(self, spark):
+        a, b = self._fps(spark, ["aaaaaaaaaaaaaaaa", "bbbbbbbbbbbbbbbb"])
+        assert not (a & b)
+
+    def test_short_and_empty_inputs(self, spark):
+        fps = self._fps(spark, ["", "abc", "a" * (self.K + self.W - 2)])
+        assert fps[0] == set() and fps[1] == set()
+        # k+w-2 chars -> k-grams exist but fewer than w windows
+        assert fps[2] == set()
+
+    def test_minimum_matchable_length(self, spark):
+        t = "abcdefgh"  # exactly w + k - 1 = 8 chars -> one window
+        (fp,) = self._fps(spark, [t])
+        assert len(fp) == 1
 
 
 def test_normalize_text_fuzzy_exact_equivalence(spark):
