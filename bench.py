@@ -191,10 +191,7 @@ def bench_maintenance(spark) -> dict[str, float]:
         # bytes_rewritten / table_bytes ~= 1.0 here by construction
         # (every file is small); the signal is SECONDS at fixed shape +
         # that a second run is a cheap noop.
-        from iot_sensor_data_pipeline_spark.sources.manifest import (
-            optimize_table,
-            optimize_table_partitioned,
-        )
+        from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
 
         opt_tbl = os.path.join(tmp, "opt_tbl")
         for i in range(40):
@@ -219,7 +216,7 @@ def bench_maintenance(spark) -> dict[str, float]:
             )
         ptbl_bytes = sum(_du(popt_tbl).values())
         t0 = time.perf_counter()
-        pres = optimize_table_partitioned(spark, popt_tbl, target_bytes=1 << 30)
+        pres = optimize_table(spark, popt_tbl, target_bytes=1 << 30)
         optimize_part_sec = time.perf_counter() - t0
         assert pres["status"] == "optimized" and pres["n_partitions"] == 3
 

@@ -360,20 +360,13 @@ def _write_sync_state(fs, jvm, index_path: str, state: dict) -> None:
     """Commit the index sidecar (``_sync_state.json``) atomically:
     write-then-rename, the same discipline every sidecar writer in the
     mutation layer uses."""
-    import json
+    from iot_sensor_data_pipeline_spark.sources.manifest import _commit_json_file
 
-    state_p = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/_sync_state.json"
+    _commit_json_file(
+        fs, jvm,
+        jvm.org.apache.hadoop.fs.Path(f"{index_path}/_sync_state.json"),
+        state, "sync state commit",
     )
-    tmp = jvm.org.apache.hadoop.fs.Path(str(state_p) + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(json.dumps(state).encode("utf-8"))
-    finally:
-        out.close()
-    fs.delete(state_p, False)
-    if not fs.rename(tmp, state_p):
-        raise RuntimeError(f"sync state commit failed: {state_p}")
 
 
 def index_corpus_stats(spark, index_path: str) -> tuple[int, float]:

@@ -36,6 +36,14 @@ reads the kept files with ``basePath`` so partition columns survive.
 Stats domains: numeric, string, and timestamp columns (timestamps
 compare in epoch-seconds domain); a requested column absent from the
 files (e.g. a partition column) yields conservative no-stats rows.
+
+Maintenance: ``optimize_table`` is the one OPTIMIZE for both layouts —
+``plan_compaction`` bins small files per partition directory over the
+same listing, one routed job rewrites every bin, and
+``_journaled_swap`` publishes the result under a crash journal that
+``recover_optimize`` heals. ``vacuum_table`` reclaims orphans and
+``table_health`` is the metadata-grain probe the orchestrator's
+``Pipeline.maintain`` acts on.
 """
 
 from __future__ import annotations
@@ -54,10 +62,7 @@ __all__ = [
     "prune_files",
     "read_pruned",
     "plan_compaction",
-    "compact_files",
-    "compact_clustered",
     "optimize_table",
-    "optimize_table_partitioned",
     "recover_optimize",
     "vacuum_table",
     "table_health",
@@ -650,21 +655,10 @@ def read_pruned(
     return df
 
 
-def _list_parquet_files_with_size(
-    spark: SparkSession, path: str
-) -> list[tuple[str, int]]:
-    """(path, bytes) for non-hidden *.parquet files under ``path``."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        raise ValueError(f"no parquet files under {path}")
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isFile() and is_data_file(name):
-            out.append((st.getPath().toString(), int(st.getLen())))
-    return sorted(out)
+def _partition_keys(rel_dir: str) -> list[str]:
+    """Partition-column key sequence of a table-relative dir
+    (``"dt=a/hour=1"`` -> ``["dt", "hour"]``; the root ``""`` -> [])."""
+    return [s.split("=")[0] for s in rel_dir.split("/")] if rel_dir else []
 
 
 def plan_compaction(
@@ -676,13 +670,25 @@ def plan_compaction(
     exclude_fn=None,
 ) -> DataFrame:
     """Small-file compaction plan — the maintenance half of the
-    lakehouse OPTIMIZE loop. Streaming/incremental writers (every
-    foreachBatch sink in ``streaming/jobs.py``) emit one file per
-    micro-batch per partition; at 100 TB the resulting million-file
-    directory pays a listing + footer + task-schedule cost per file on
-    EVERY read. This plans the rewrite: files already >= ``target_bytes``
-    are kept as-is, smaller files are packed into bins of ~``target_bytes``
-    by a cumulative-sum split over the (deterministic) name order.
+    lakehouse OPTIMIZE loop, and the one planner :func:`optimize_table`
+    acts on. Streaming/incremental writers (every foreachBatch sink in
+    ``streaming/jobs.py``) emit one file per micro-batch per partition;
+    at 100 TB the resulting million-file directory pays a listing +
+    footer + task-schedule cost per file on EVERY read. This plans the
+    rewrite: files already >= ``target_bytes`` are kept as-is, smaller
+    files are packed into bins of ~``target_bytes`` by a cumulative-sum
+    split over the (deterministic) name order.
+
+    Flat and hive-partitioned tables plan alike: one
+    :func:`_walk_data_files` listing, and bins are packed WITHIN each
+    partition directory (rows never migrate across partitions, so
+    partition pruning is untouched). Bin ids are unique across
+    directories; a flat table is the single directory ``""``. Every
+    listed file must carry the SAME partition-column key sequence — a
+    mixed-depth or reordered layout (``dt=a/f.parquet`` next to
+    ``dt=b/hour=1/g.parquet``, or root files next to ``k=v`` dirs)
+    raises before anything is planned: a rewrite would silently migrate
+    the odd files' rows across partition levels.
 
     Returns one row per file: ``(file, size, action, bin)`` where
     ``action`` is 'keep' or 'compact' and ``bin`` numbers the rewrite
@@ -690,27 +696,44 @@ def plan_compaction(
     most one straddling file — the greedy cumsum split, same answer on
     any engine (the python mirror in tests pins it). Bins holding fewer
     than ``min_bin_files`` files are downgraded to 'keep' (rewriting a
-    single file buys nothing).
+    single file buys nothing). ``exclude`` (base names) and
+    ``exclude_fn`` (a predicate over this listing's base names — see
+    :func:`_live_epoch_exclude_fn`) remove files from candidacy
+    entirely: neither compacted nor 'keep' rows.
 
     Scale note: the plan is FILE-METADATA-grain (one row per file from
-    one directory listing the driver already holds — no footer or data
-    reads), so the cumsum split runs as PLAIN PYTHON over that list and
-    the returned DataFrame is a local relation: zero Spark jobs, zero
-    shuffles, and no global-order window for maintenance logs to warn
-    about (r12 — the previous windowed formulation was metadata-grain
-    and benign, but ``Window.partitionBy(lit)`` is folded away by
-    Catalyst's EliminateWindowPartitions, so every OPTIMIZE cried
-    WindowExec's single-partition scale-wolf). A million-file table
-    plans in driver milliseconds; the python mirror in tests pins the
-    split's exact semantics.
+    one listing the driver already holds — no footer or data reads), so
+    the cumsum split runs as PLAIN PYTHON over that list and the
+    returned DataFrame is a local relation: zero Spark jobs, zero
+    shuffles, and no window for maintenance logs to warn about. A
+    million-file table plans in driver milliseconds.
     """
     if target_bytes < 1:
         raise ValueError(f"plan_compaction: target_bytes must be positive, got {target_bytes}")
-    files = _list_parquet_files_with_size(spark, path)
-    # `exclude` (base names) removes files from candidacy entirely —
-    # neither compacted nor 'keep' rows. The epoch-sink use: a LIVE
-    # stream's newest epoch files (sinks.newest_epoch_files) must not
-    # be retired while their offsets may be uncommitted
+    files = _walk_data_files(spark, path)
+    fs, root, _ = _fs_for(spark, path)
+    base = fs.makeQualified(root).toString().rstrip("/")
+    dir_of = {f: f[len(base):].strip("/").rpartition("/")[0] for f, _ in files}
+    if files:
+        first = files[0][0]
+        part_cols = _partition_keys(dir_of[first])
+        offenders = [
+            f[len(base):].strip("/") for f, _ in files
+            if _partition_keys(dir_of[f]) != part_cols
+        ]
+        if offenders:
+            raise ValueError(
+                f"plan_compaction: mixed partition layouts under {path} — "
+                f"expected the partition keys {part_cols} of "
+                f"{first[len(base):].strip('/')}, but these differ: "
+                f"{offenders[:10]}{' ...' if len(offenders) > 10 else ''}. "
+                "A rewrite would migrate their rows across partition "
+                "levels; fix the layout first."
+            )
+    # `exclude` (base names) removes files from candidacy entirely. The
+    # epoch-sink use: a LIVE stream's newest epoch files
+    # (sinks.newest_epoch_files) must not be retired while their
+    # offsets may be uncommitted
     if exclude:
         skip = set(exclude)
         files = [(f, s) for f, s in files if f.rsplit("/", 1)[-1] not in skip]
@@ -719,12 +742,22 @@ def plan_compaction(
         # exclusion rules like "the newest live epoch" are race-free
         # (a precomputed name list could miss an epoch committed after
         # the caller's own listing — see _live_epoch_exclude_fn)
-        names = [f.rsplit("/", 1)[-1] for f, _ in files]
-        skip2 = set(exclude_fn(names))
+        skip2 = set(exclude_fn([f.rsplit("/", 1)[-1] for f, _ in files]))
         files = [(f, s) for f, s in files if f.rsplit("/", 1)[-1] not in skip2]
+    by_dir: dict[str, list[tuple[str, int]]] = {}
+    for f, s in files:  # name-sorted, so each dir's files stay in order
+        by_dir.setdefault(dir_of[f], []).append((f, s))
+    rows: list[tuple[str, int, str, int | None]] = []
+    next_bin = 0
+    for dir_files in by_dir.values():
+        packed = _pack_bins(dir_files, target_bytes, min_bin_files)
+        rows.extend(
+            (f, s, a, None if b is None else b + next_bin)
+            for f, s, a, b in packed
+        )
+        next_bin += 1 + max((b for *_, b in packed if b is not None), default=-1)
     return spark.createDataFrame(
-        _pack_bins(files, target_bytes, min_bin_files),
-        "file string, size long, action string, bin long",
+        rows, "file string, size long, action string, bin long"
     )
 
 
@@ -739,7 +772,7 @@ def _pack_bins(
     cum = 0
     bin_of: dict[str, int] = {}
     n_in_bin: dict[int, int] = {}
-    for f, s in files:  # _list_parquet_files_with_size sorts by name
+    for f, s in files:  # _walk_data_files sorts by name
         if s >= target_bytes:
             continue
         b = cum // target_bytes
@@ -756,152 +789,9 @@ def _pack_bins(
     return rows
 
 
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_bytes: int,
-    min_bin_files: int = 2,
-    exclude: Sequence[str] = (),
-    exclude_fn=None,
-) -> tuple[DataFrame, list[str]]:
-    """Execute a :func:`plan_compaction` plan: rewrite every 'compact'
-    bin into ONE file under ``out_path`` in a single distributed job,
-    and return ``(plan, keep_files)`` — the caller swaps the directory
-    (or union-reads ``out_path`` + keeps) once the write commits.
-    Originals are never deleted here: publish-then-retire is the
-    caller's transaction to manage.
-
-    One job, no per-bin driver loop: the small files are read in one
-    scan, rows are tagged with their bin via a broadcast join on
-    ``input_file_name()``, hash-repartitioned BY BIN (each output task
-    receives whole bins), and written append-mode. Task count equals
-    bin count; each task writes ~``target_bytes``.
-    """
-    plan = plan_compaction(
-        spark, path, target_bytes, min_bin_files, exclude, exclude_fn
-    ).persist()
-    df = None
-    try:  # unpersist on EVERY exit — a raised guard must not leak caches
-        compact_rows = plan.where(F.col("action") == "compact")
-        pairs = [(r.file, r.bin) for r in compact_rows.select("file", "bin").collect()]
-        keep_files = [r.file for r in plan.where(F.col("action") == "keep").collect()]
-        if pairs:
-            n_bins = len({b for _, b in pairs})
-            bin_map = spark.createDataFrame(pairs, "file string, __bin long")
-            full_schema = spark.read.parquet(path).schema
-            if "__src_file" in full_schema.fieldNames():
-                raise ValueError(
-                    "compact_files: the table has a column named '__src_file' "
-                    "(the rewrite's routing column) — rename it first"
-                )
-            _guard_lossy_rewrite_schema(
-                spark, full_schema.fieldNames(), [f for f, _ in pairs],
-                "compact_files",
-            )
-            # canonicalize the local-FS scheme: listStatus renders
-            # 'file:/x', input_file_name() 'file:///x' — same file.
-            # The routing column is reserved-named, NOT 'file': a user
-            # column called 'file' must survive the rewrite untouched
-            canon = lambda c: F.regexp_replace(c, r"^file:/+", "file:///")  # noqa: E731
-            df = (
-                spark.read.schema(full_schema)
-                .parquet(*[f for f, _ in pairs])
-                .withColumn("__src_file", canon(F.input_file_name()))
-                .join(
-                    F.broadcast(
-                        bin_map.select(
-                            canon(F.col("file")).alias("__src_file"), "__bin"
-                        )
-                    ),
-                    "__src_file",
-                    "left",
-                )
-                .drop("__src_file")
-            ).persist()
-            n_unmatched = df.where(F.col("__bin").isNull()).count()
-            if n_unmatched:
-                raise RuntimeError(
-                    f"compact_files: {n_unmatched} rows' input_file_name did "
-                    "not match the plan's file list (URI scheme mismatch?) — "
-                    "refusing to write a partial compaction"
-                )
-            (
-                df.repartition(n_bins, "__bin")
-                .drop("__bin")
-                .write.mode("append")
-                .parquet(out_path)
-            )
-    finally:
-        if df is not None:
-            df.unpersist()
-        plan.unpersist()
-    return plan, keep_files
-
-
-def compact_clustered(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_bytes: int,
-    cluster_by: Sequence,
-    min_bin_files: int = 2,
-    exclude: Sequence[str] = (),
-    exclude_fn=None,
-) -> tuple[DataFrame, list[str]]:
-    """Compact AND cluster in one rewrite — the ``OPTIMIZE ... ZORDER
-    BY`` pairing: since every small file is being rewritten anyway,
-    spend the same pass range-partitioning rows by ``cluster_by`` so
-    each output file holds a NARROW key range. Plain compaction
-    (:func:`compact_files`) preserves the accidental row placement the
-    streaming sinks produced — every output file still spans the full
-    key domain and the footer-stats manifest (:func:`write_manifest`,
-    :func:`read_pruned`) can prune nothing; after a clustered rewrite
-    the per-file min/max become selective, which is exactly what makes
-    file skipping work (pair multi-dimension keys via
-    ``operators.layout.zorder_key`` — pass the expression as a
-    ``cluster_by`` element).
-
-    Output file count = ceil(total small bytes / target_bytes); one
-    ``repartitionByRange`` (sampled boundaries, one shuffle of the
-    small files only) + ``sortWithinPartitions`` for row-group-level
-    locality inside each file. Keep-files (already >= target) are
-    untouched and returned for the caller's publish step, exactly as
-    in :func:`compact_files`.
-    """
-    cluster_by = list(cluster_by)
-    if not cluster_by:
-        raise ValueError("compact_clustered: cluster_by must name at least one column")
-    plan = plan_compaction(
-        spark, path, target_bytes, min_bin_files, exclude, exclude_fn
-    ).persist()
-    compact_rows = plan.where(F.col("action") == "compact").collect()
-    keep_files = [r.file for r in plan.where(F.col("action") == "keep").collect()]
-    if compact_rows:
-        total = sum(r.size for r in compact_rows)
-        n_bins = max(1, -(-total // int(target_bytes)))
-        full_schema = spark.read.parquet(path).schema
-        _guard_lossy_rewrite_schema(
-            spark, full_schema.fieldNames(),
-            [r.file for r in compact_rows], "compact_clustered",
-        )
-        cols = [F.col(c) if isinstance(c, str) else c for c in cluster_by]
-        (
-            spark.read.schema(full_schema)
-            .parquet(*[r.file for r in compact_rows])
-            .repartitionByRange(n_bins, *cols)
-            .sortWithinPartitions(*cols)
-            .write.mode("append")
-            .parquet(out_path)
-        )
-    plan.unpersist()
-    return plan, keep_files
-
-
 # ---------------------------------------------------------------------------
 # OPTIMIZE in place: plan -> rewrite -> journaled publish-then-retire
-# swap -> index refresh. Completes the loop compact_files leaves to the
-# caller ("the caller swaps the directory once the write commits").
+# swap -> index refresh.
 # ---------------------------------------------------------------------------
 
 
@@ -911,16 +801,15 @@ def _guard_lossy_rewrite_schema(
 ) -> None:
     """Fail-before-write on lossy schema evolution (ADVICE r11): every
     compaction rewrite reads its candidates under ONE pinned schema
-    (a single footer probe, or Spark's sampled table schema), so a
-    schema-evolved candidate carrying a data column that schema lacks
-    would have that column's values silently DROPPED from the
-    compacted output — data loss dressed as maintenance. The union
-    footer schema across all candidates (mergeSchema — Spark reads the
-    footers distributed) is checked against the pinned field set and
-    any extra column raises before a byte is written, the same
-    discipline as the partitioned path's mixed-depth guard. The
-    reverse direction (a candidate MISSING a pinned column) is
-    non-lossy — its rows read as NULL, exactly what a union-schema
+    (the first candidate's footer), so a schema-evolved candidate
+    carrying a data column that schema lacks would have that column's
+    values silently DROPPED from the compacted output — data loss
+    dressed as maintenance. The union footer schema across all
+    candidates (mergeSchema — Spark reads the footers distributed) is
+    checked against the pinned field set and any extra column raises
+    before a byte is written, the same discipline as the planner's
+    mixed-layout guard. The reverse direction (a candidate MISSING a
+    pinned column) is non-lossy — its rows read as NULL, exactly what a union-schema
     reader of the originals sees — and incompatible TYPE evolution
     fails inside mergeSchema itself, also before the write."""
     merged = (
@@ -946,8 +835,8 @@ def _journal_path(path: str, jvm):
 def _write_json_file(fs, jvm, path_str: str, obj: Mapping) -> None:
     """Write ``obj`` as JSON to ``path_str`` (overwrite). Callers
     needing atomic visibility put the file inside a staged dir that
-    renames as a whole (``_commit_version_in``'s ``meta``) or
-    write-then-rename themselves."""
+    renames as a whole (``_commit_version_in``'s ``meta``) or commit it
+    with :func:`_commit_json_file`."""
     import json
 
     out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), True)
@@ -957,7 +846,24 @@ def _write_json_file(fs, jvm, path_str: str, obj: Mapping) -> None:
         out.close()
 
 
+def _commit_json_file(fs, jvm, p, obj: Mapping, what: str) -> None:
+    """Write-then-rename ``obj`` as JSON to the Hadoop Path ``p`` — the
+    commit every JSON sidecar (journal, watermarks, lineage and sync
+    state, bucket manifests) shares: a crash mid-write leaves only a
+    ``.tmp`` beside it, never a torn ``p``. Delete-then-rename, because a Hadoop rename
+    does not overwrite; raises ``RuntimeError("<what> failed: <p>")``
+    when the rename fails."""
+    tmp = jvm.org.apache.hadoop.fs.Path(str(p) + ".tmp")
+    _write_json_file(fs, jvm, str(tmp), obj)
+    fs.delete(p, False)
+    if not fs.rename(tmp, p):
+        raise RuntimeError(f"{what} failed: {p}")
+
+
 def _read_json_file(fs, jvm, p) -> dict:
+    """The JSON object at the Hadoop Path ``p``. py4j can't read into a
+    Python-side buffer (arrays pass by value), so the JVM drains the
+    stream to a string."""
     import json
 
     stream = fs.open(p)
@@ -1086,9 +992,10 @@ def _commit_journal(
     fs, jvm, path: str, add: Sequence[str], retire: Sequence[str],
     cdf_staging: str | None = None,
 ):
-    """Write-then-rename the (add, retire) journal — shared by the flat
-    and partitioned OPTIMIZE so the swap discipline recover_optimize
-    depends on cannot drift between them. The journal also carries the
+    """Write-then-rename the (add, retire) journal — shared by OPTIMIZE
+    and the row-level mutations (via :func:`_journaled_swap`) so the
+    swap discipline recover_optimize depends on cannot drift between
+    them. The journal also carries the
     per-lineage ``compacted_epochs`` watermarks derived from the retire
     list, so a crash AFTER retires but BEFORE the watermark write still
     ends with the watermark persisted (the forward-recovery arm re-runs
@@ -1096,10 +1003,7 @@ def _commit_journal(
     ``cdf_staging`` dir name, so the feed commits or discards WITH the
     swap (forward recovery publishes it, rollback deletes it; the feed
     can never disagree with the table). Returns the journal Path."""
-    import json
-
     jp = _journal_path(path, jvm)
-    tmp = jvm.org.apache.hadoop.fs.Path(str(jp) + ".tmp")
     payload = {
         "add": list(add),
         "retire": list(retire),
@@ -1107,14 +1011,7 @@ def _commit_journal(
     }
     if cdf_staging is not None:
         payload["cdf_staging"] = cdf_staging
-    out = fs.create(tmp, True)
-    try:
-        out.write(json.dumps(payload, sort_keys=True).encode("utf-8"))
-    finally:
-        out.close()
-    fs.delete(jp, False)
-    if not fs.rename(tmp, jp):
-        raise RuntimeError(f"optimize journal commit failed: {jp}")
+    _commit_json_file(fs, jvm, jp, payload, "optimize journal commit")
     return jp
 
 
@@ -1213,7 +1110,7 @@ def _journaled_swap(
     cdf_staging: str | None = None,
 ) -> int:
     """Publish-then-retire a staged rewrite under the crash journal —
-    THE swap discipline, shared by flat/partitioned OPTIMIZE and the
+    THE swap discipline, shared by OPTIMIZE and the
     row-level mutations (``sources.mutations``), so
     :func:`recover_optimize`'s forward/back rules can never drift
     between writers. Staged data files (listed recursively, so a
@@ -1280,16 +1177,36 @@ def optimize_table(
     live_checkpoints: Sequence[str] = (),
     epoch_caps: Mapping[str, int] | None = None,
 ) -> dict:
-    """The full OPTIMIZE loop, IN PLACE: plan small-file bins, rewrite
-    them (optionally range-clustered — the ``OPTIMIZE ZORDER BY``
-    pairing), swap the compacted files into the table under a crash
+    """The full OPTIMIZE loop, IN PLACE, for flat and hive-partitioned
+    tables alike: plan small-file bins (:func:`plan_compaction` — per
+    partition directory, so rows never migrate across partitions),
+    rewrite them, swap the compacted files into the table under a crash
     journal, and refresh the skipping manifest / bloom index so file
     skipping works on the new layout immediately.
 
-    Swap discipline (no transactional format, so the order carries the
-    guarantees): (1) the journal — the complete (add, retire) name
-    lists — commits to ``_optimize_journal.json`` via write-then-rename
-    BEFORE any table mutation; (2) compacted files rename IN under
+    The rewrite is ONE distributed job for every bin in every
+    partition: the candidates are read under one pinned schema (the
+    first candidate's footer, checked by
+    :func:`_guard_lossy_rewrite_schema`) with ``basePath`` so partition
+    values ride along as STRING columns, rows are tagged with their bin
+    via a broadcast join on ``input_file_name()``, hash-repartitioned
+    by bin (each output task receives whole bins), and written
+    ``partitionBy`` back into a staging dir. Two bins hashing into one
+    task merge into a single larger file — a size wobble, never a
+    correctness or placement issue. ``cluster_by`` (flat tables only —
+    a partitioned table raises before any write) instead
+    range-partitions the candidates into ceil(bytes / target) files and
+    sorts within each — the ``OPTIMIZE ZORDER BY`` pairing: every small
+    file is rewritten anyway, so the same pass makes each output file
+    hold a NARROW key range and the footer-stats manifest selective
+    (pair multi-dimension keys via ``operators.layout.zorder_key`` —
+    pass the expression as a ``cluster_by`` element).
+
+    Swap discipline (:func:`_journaled_swap`; no transactional format,
+    so the order carries the guarantees): (1) the journal — the
+    complete (add, retire) name lists, partition-relative — commits to
+    ``_optimize_journal.json`` via write-then-rename BEFORE any table
+    mutation; (2) compacted files rename IN under
     ``c<token>-<i>.parquet`` names; (3) originals delete; (4) journal
     deletes; (5) indexes refresh incrementally (the new files
     footer/bloom-read, the retired files drop out — never a rebuild).
@@ -1301,25 +1218,25 @@ def optimize_table(
 
     MUST run in a maintenance window for epoch-idempotent sink tables —
     OR pass ``live_checkpoints=[<the sink's checkpoint path>]`` to
-    exclude each live lineage's NEWEST epoch from candidacy and compact
-    everything else with the stream running. The exclusion is evaluated
-    against the planner's OWN listing (``_live_epoch_exclude_fn``), not
-    a precomputed name list — a caller-side ``newest_epoch_files``
-    snapshot would race an epoch committed between the two listings,
-    whose retirement + replay would duplicate rows permanently.
-    CAVEAT: when the live sink also keeps the manifest/bloom index
-    fresh (``manifest_cols``/``bloom_cols`` on the SINK), do NOT pass
-    the index columns here too — the metadata commit protocol assumes
-    one maintenance writer, and the sink's next per-batch refresh
-    absorbs the swap by itself (retired files drop, c-files enter; a
-    stale index in between is conservative, never wrong).
-    Readers during the swap may see duplicate rows (add+retire window)
-    — the same brief-inconsistency contract every logless OPTIMIZE has.
-    ``epoch_caps`` bounds candidacy further: epoch-named files above a
-    lineage's cap (or of a lineage the caps dict does not know) are
-    not compacted — how a maintenance tick keeps this swap from
-    absorbing epochs its materialized views have not folded yet (see
-    ``_live_epoch_exclude_fn``).
+    exclude each live lineage's NEWEST epoch from candidacy (in every
+    partition it lives in) and compact everything else with the stream
+    running. The exclusion is evaluated against the planner's OWN
+    listing (``_live_epoch_exclude_fn``), not a precomputed name list —
+    a caller-side ``newest_epoch_files`` snapshot would race an epoch
+    committed between the two listings, whose retirement + replay would
+    duplicate rows permanently. CAVEAT: when the live sink also keeps
+    the manifest/bloom index fresh (``manifest_cols``/``bloom_cols`` on
+    the SINK), do NOT pass the index columns here too — the metadata
+    commit protocol assumes one maintenance writer, and the sink's next
+    per-batch refresh absorbs the swap by itself (retired files drop,
+    c-files enter; a stale index in between is conservative, never
+    wrong). Readers during the swap may see duplicate rows (add+retire
+    window) — the same brief-inconsistency contract every logless
+    OPTIMIZE has. ``epoch_caps`` bounds candidacy further: epoch-named
+    files above a lineage's cap (or of a lineage the caps dict does not
+    know) are not compacted — how a maintenance tick keeps this swap
+    from absorbing epochs its materialized views have not folded yet
+    (see ``_live_epoch_exclude_fn``).
 
     COMPACTION ENDS TIME TRAVEL for the epochs it retires: when the
     retire list contains ``e<N>-<lineage>-`` files, the max retired
@@ -1330,19 +1247,20 @@ def optimize_table(
     returning partial history (VERDICT r10 task 1). Keep a table out of
     OPTIMIZE if its epoch history must stay reconstructible.
 
-    Returns ``{"status", "n_compacted", "n_bins", "recovered"}``;
-    status 'noop' when no bin met ``min_bin_files``. Index refresh runs
-    on the noop path too: a crash AFTER a previous run's retire but
-    BEFORE its refresh must not leave the indexes permanently ignorant
-    of the c-files the forward-recovery just confirmed (the refresh is
-    itself a no-op when nothing changed)."""
+    Returns ``{"status", "n_compacted", "n_bins", "n_partitions",
+    "recovered"}``; ``n_partitions`` counts the partition dirs that had
+    a bin rewritten (0 on a flat table), and status is 'noop' when no
+    bin met ``min_bin_files``. Index refresh runs on the noop path too:
+    a crash AFTER a previous run's retire but BEFORE its refresh must
+    not leave the indexes permanently ignorant of the c-files the
+    forward-recovery just confirmed (the refresh is itself a no-op when
+    nothing changed)."""
     import uuid
 
+    from pyspark.sql.types import StringType, StructField, StructType
+
     recovered = recover_optimize(spark, path)
-    jvm = spark._jvm
     fs, root, _ = _fs_for(spark, path)
-    token = uuid.uuid4().hex[:8]
-    staging = f"{path}/.compact_{token}"
     exclude_fn = (
         _live_epoch_exclude_fn(spark, path, live_checkpoints, epoch_caps)
         if live_checkpoints or epoch_caps is not None
@@ -1359,217 +1277,40 @@ def optimize_table(
 
             update_bloom_index(spark, path, list(bloom_cols))
 
-    if cluster_by:
-        plan, _keeps = compact_clustered(
-            spark, path, staging, target_bytes, cluster_by, min_bin_files,
-            exclude, exclude_fn,
+    plan = plan_compaction(
+        spark, path, target_bytes, min_bin_files, exclude, exclude_fn
+    ).collect()  # a local relation: no Spark job
+    bin_of = {r.file: r.bin for r in plan if r.action == "compact"}
+    base = fs.makeQualified(root).toString().rstrip("/")
+    retire_rels = [f[len(base):].strip("/") for f in bin_of]
+    # the planner's layout guard gives every file the first one's keys
+    part_cols = (
+        _partition_keys(plan[0].file[len(base):].strip("/").rpartition("/")[0])
+        if plan else []
+    )
+    if cluster_by and part_cols:
+        raise ValueError(
+            f"optimize_table: cluster_by is not supported on the "
+            f"hive-partitioned table {path} (partition keys {part_cols}) "
+            "— a range-clustered rewrite would spread each range across "
+            "every partition dir; compact it without cluster_by"
         )
-    else:
-        plan, _keeps = compact_files(
-            spark, path, staging, target_bytes, min_bin_files, exclude,
-            exclude_fn,
-        )
-    retire = [r.file for r in plan.where(F.col("action") == "compact").collect()]
-    spath = jvm.org.apache.hadoop.fs.Path(staging)
-    if not retire or not fs.exists(spath):
+    if not bin_of:
         _refresh_indexes()  # heals the crash-after-retire gap (above)
         return {"status": "noop", "n_compacted": 0, "n_bins": 0,
-                "recovered": recovered}
-    retire_names = [n.rsplit("/", 1)[-1] for n in retire]
-    n_adds = _journaled_swap(spark, path, staging, retire_names, token)
-    # (5) indexes: incremental refresh absorbs adds + retires
-    _refresh_indexes()
-    return {
-        "status": "optimized",
-        "n_compacted": len(retire_names),
-        "n_bins": n_adds,
-        "recovered": recovered,
-    }
-
-
-def _list_partition_files_with_size(
-    spark: SparkSession, path: str
-) -> list[tuple[str, str, int]]:
-    """(relative subpath, partition dir rel path, bytes) for every data
-    file under a hive-partitioned table — one recursive listing."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        raise ValueError(f"no parquet files under {path}")
-    base = fs.makeQualified(root).toString().rstrip("/")
-    out = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        name = p.getName()
-        if not is_data_file(name):
-            continue
-        rel = p.toString()[len(base):].strip("/")
-        if "/" not in rel:
-            continue  # root-level files are the flat layout's business
-        # every ancestor dir must be a k=v partition segment; skip
-        # staging or foreign subtrees
-        segs = rel.split("/")[:-1]
-        if not all("=" in s and not s.startswith((".", "_")) for s in segs):
-            continue
-        out.append((rel, "/".join(segs), int(st.getLen())))
-    return sorted(out)
-
-
-def optimize_table_partitioned(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int,
-    min_bin_files: int = 2,
-    exclude: Sequence[str] = (),
-    live_checkpoints: Sequence[str] = (),
-    manifest_cols: Sequence[str] | None = None,
-    bloom_cols: Sequence[str] | None = None,
-    epoch_caps: Mapping[str, int] | None = None,
-) -> dict:
-    """:func:`optimize_table` for HIVE-PARTITIONED layouts — the common
-    100 TB case: a date-partitioned streaming sink accumulates one
-    small file per micro-batch PER PARTITION, and the flat planner
-    cannot see them. Bins are packed WITHIN each partition directory
-    (rows never migrate across partitions, so partition pruning is
-    untouched), the rewrite is ONE distributed job for every bin in
-    every partition (read with basePath so partition values ride along,
-    repartition by bin key, write partitionBy back), and the swap runs
-    under the same journal + :func:`recover_optimize` crash discipline
-    as the flat path — journal first, token-named adds in, originals
-    retired, all names PARTITION-RELATIVE so recovery needs nothing but
-    the journal. Two bins of one directory hashing into one task merge
-    into a single larger file — a size wobble, never a correctness or
-    placement issue.
-
-    ``live_checkpoints`` makes this safe to run WITH a partitioned
-    epoch-idempotent sink still streaming (VERDICT r10 task 3 — the
-    date-partitioned live sink is the single most common 100 TB shape):
-    each named checkpoint's lineage keeps its NEWEST epoch's files (the
-    epoch whose offsets may be uncommitted — a replay after their
-    retirement would re-add rows as permanent duplicates). The epoch id
-    is parsed from each candidate's BASE name against the planner's OWN
-    listing (the shared ``_live_epoch_exclude_fn`` discipline; a
-    caller-side precomputed list would race an epoch committed between
-    two listings). ``exclude`` removes explicit base names from
-    candidacy; ``epoch_caps`` caps compactable epochs per lineage (the
-    matview-cursor fence — see :func:`optimize_table`). Without any,
-    the maintenance-window rule applies unchanged
-    (``streaming.orchestrator.plan_maintenance``).
-
-    Every listed file must carry the SAME partition-column key sequence
-    — a mixed-depth or reordered layout (``dt=a/f.parquet`` next to
-    ``dt=b/hour=1/g.parquet``) raises BEFORE any write (VERDICT r10
-    task 4): the explicit read schema lists exactly the first file's
-    partition columns, so a deeper file's extra column would silently
-    drop and its rows would migrate up a level on write-back — the
-    exact failure this function promises cannot happen.
-
-    Since r11 the skipping manifest / bloom index cover hive layouts
-    too, so ``manifest_cols``/``bloom_cols`` refresh them incrementally
-    after the swap exactly as the flat path does (the new c-files
-    footer/bloom-read, the retired files drop out) — same CAVEAT as
-    there: when the live SINK keeps the indexes fresh, do not also pass
-    the columns here (one maintenance writer; the sink's next per-batch
-    refresh absorbs the swap, stale-in-between is conservative).
-
-    Returns ``{"status", "n_compacted", "n_bins", "n_partitions",
-    "recovered"}``."""
-    import uuid
-
-    from pyspark.sql import Window
-
-    recovered = recover_optimize(spark, path)
-    jvm = spark._jvm
-    fs, root, _ = _fs_for(spark, path)
-
-    def _refresh_indexes() -> None:
-        # runs on the noop paths too, for the same
-        # crash-after-retire-before-refresh healing as the flat path
-        if manifest_cols:
-            update_manifest(spark, path, list(manifest_cols))
-        if bloom_cols:
-            from iot_sensor_data_pipeline_spark.sources.bloom_index import (
-                update_bloom_index,
-            )
-
-            update_bloom_index(spark, path, list(bloom_cols))
-
-    files = _list_partition_files_with_size(spark, path)
-    if not files:
-        return {"status": "noop", "n_compacted": 0, "n_bins": 0,
                 "n_partitions": 0, "recovered": recovered}
-    part_cols = [s.split("=")[0] for s in files[0][1].split("/")]
-    # uniform-depth guard: every file's partition KEY SEQUENCE must
-    # match the first's, or rows would silently migrate partitions
-    offenders = sorted(
-        rel for rel, pdir, _sz in files
-        if [s.split("=")[0] for s in pdir.split("/")] != part_cols
-    )
-    if offenders:
+    candidates = list(bin_of)
+    data_schema = spark.read.parquet(candidates[0]).schema
+    if "__src_file" in data_schema.fieldNames():
         raise ValueError(
-            "optimize_table_partitioned: mixed partition layouts under "
-            f"{path} — expected every file under {'/'.join(part_cols)}= "
-            f"directories (from {files[0][0]}), but these differ: "
-            f"{offenders[:10]}{' ...' if len(offenders) > 10 else ''}. "
-            "A rewrite would migrate their rows across partition "
-            "levels; fix the layout first."
+            "optimize_table: the table has a column named '__src_file' "
+            "(the rewrite's routing column) — rename it first"
         )
-    if exclude:
-        skip = set(exclude)
-        files = [t for t in files if t[0].rsplit("/", 1)[-1] not in skip]
-    if live_checkpoints or epoch_caps is not None:
-        exclude_fn = _live_epoch_exclude_fn(
-            spark, path, live_checkpoints, epoch_caps
-        )
-        names = [t[0].rsplit("/", 1)[-1] for t in files]
-        skip2 = exclude_fn(names)
-        files = [t for t in files if t[0].rsplit("/", 1)[-1] not in skip2]
-    if not files:
-        _refresh_indexes()
-        return {"status": "noop", "n_compacted": 0, "n_bins": 0,
-                "n_partitions": 0, "recovered": recovered}
-    fdf = spark.createDataFrame(files, "rel string, dir string, size long")
-    small = fdf.where(F.col("size") < target_bytes)
-    # cumsum bin WITHIN each partition dir — the same greedy split as
-    # plan_compaction, partitioned by dir (metadata relation: windows
-    # here are fine, they never touch data)
-    w = Window.partitionBy("dir").orderBy("rel").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    binned = small.select(
-        "rel", "dir", "size",
-        F.floor(
-            F.coalesce(F.sum("size").over(w), F.lit(0)) / target_bytes
-        ).alias("bin"),
-    )
-    counts = binned.groupBy("dir", "bin").agg(F.count(F.lit(1)).alias("__n"))
-    todo = (
-        binned.join(counts, ["dir", "bin"])
-        .where(F.col("__n") >= min_bin_files)
-        .select("rel", "dir", F.concat_ws("#", "dir", "bin").alias("binkey"))
-        .collect()
-    )  # file-metadata grain: one row per small file
-    if not todo:
-        _refresh_indexes()
-        return {"status": "noop", "n_compacted": 0, "n_bins": 0,
-                "n_partitions": 0, "recovered": recovered}
-    retire_rels = [r.rel for r in todo]
-    bin_of = {r.rel: r.binkey for r in todo}
-    n_bins = len(set(bin_of.values()))
-    n_parts = len({r.dir for r in todo})
-    token = uuid.uuid4().hex[:8]
-    staging = f"{path}/.compact_{token}"
-    base = fs.makeQualified(root).toString().rstrip("/")
-    # ONE distributed rewrite job for every bin in every partition:
-    # basePath keeps the partition values as columns, the broadcast
-    # bin map routes rows, partitionBy puts them back
-    canon = lambda c: F.regexp_replace(c, r"^file:/+", "file:///")  # noqa: E731
-    bin_map = spark.createDataFrame(
-        [(f"{base}/{rel}", bk) for rel, bk in bin_of.items()],
-        "file string, __binkey string",
+    # the planner's layout guard covers partition KEYS; this covers
+    # DATA columns: a schema-evolved candidate's added column must not
+    # be silently dropped by the first-candidate-pinned read schema
+    _guard_lossy_rewrite_schema(
+        spark, data_schema.fieldNames(), candidates, "optimize_table"
     )
     # partition values must round-trip VERBATIM: with type inference, a
     # zero-padded dir like hour=00 reads back as long 0 and the
@@ -1580,67 +1321,71 @@ def optimize_table_partitioned(
     # as the literal strings they spell — scoped to THIS read, unlike
     # toggling the session-wide inference conf (which would silently
     # retype partition columns for every concurrent reader).
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    data_schema = spark.read.parquet(f"{path}/{files[0][0]}").schema
-    if "__src_file" in data_schema.fieldNames():
-        raise ValueError(
-            "optimize_table_partitioned: the table has a column named "
-            "'__src_file' (the rewrite's routing column) — rename it first"
-        )
-    # the r11 mixed-depth guard covers partition KEYS; this covers DATA
-    # columns: a schema-evolved candidate's added column must not be
-    # silently dropped by the first-file-pinned read schema below
-    _guard_lossy_rewrite_schema(
-        spark, data_schema.fieldNames(),
-        [f"{path}/{rel}" for rel in retire_rels],
-        "optimize_table_partitioned",
-    )
     read_schema = StructType(
         list(data_schema.fields)
         + [StructField(c, StringType()) for c in part_cols]
     )
-    df = (
-        spark.read.option("basePath", path)
-        .schema(read_schema)
-        .parquet(*[f"{path}/{rel}" for rel in retire_rels])
-        .withColumn("__src_file", canon(F.input_file_name()))
-        .join(
-            F.broadcast(
-                bin_map.select(
-                    canon(F.col("file")).alias("__src_file"), "__binkey"
-                )
-            ),
-            "__src_file",
-            "left",
-        )
-        .drop("__src_file")
-    ).persist()
-    try:
-        n_unmatched = df.where(F.col("__binkey").isNull()).count()
-        if n_unmatched:
-            raise RuntimeError(
-                f"optimize_table_partitioned: {n_unmatched} rows' "
-                "input_file_name did not match the plan (URI scheme "
-                "mismatch?) — refusing a partial compaction"
-            )
+    df = spark.read.option("basePath", path).schema(read_schema).parquet(*candidates)
+    token = uuid.uuid4().hex[:8]
+    staging = f"{path}/.compact_{token}"
+    if cluster_by:
+        cols = [F.col(c) if isinstance(c, str) else c for c in cluster_by]
+        total = sum(r.size for r in plan if r.action == "compact")
         (
-            df.repartition(n_bins, "__binkey")
-            .drop("__binkey")
+            df.repartitionByRange(max(1, -(-total // int(target_bytes))), *cols)
+            .sortWithinPartitions(*cols)
             .write.mode("append")
-            .partitionBy(*part_cols)
             .parquet(staging)
         )
-    finally:
-        df.unpersist()
-    # journal-first swap, names partition-relative (shared discipline)
+    else:
+        # canonicalize the local-FS scheme: listStatus renders
+        # 'file:/x', input_file_name() 'file:///x' — same file. The
+        # routing column is reserved-named, NOT 'file': a user column
+        # called 'file' must survive the rewrite untouched
+        canon = lambda c: F.regexp_replace(c, r"^file:/+", "file:///")  # noqa: E731
+        bin_map = spark.createDataFrame(
+            list(bin_of.items()), "file string, __bin long"
+        )
+        routed = (
+            df.withColumn("__src_file", canon(F.input_file_name()))
+            .join(
+                F.broadcast(
+                    bin_map.select(
+                        canon(F.col("file")).alias("__src_file"), "__bin"
+                    )
+                ),
+                "__src_file",
+                "left",
+            )
+            .drop("__src_file")
+        ).persist()
+        try:
+            n_unmatched = routed.where(F.col("__bin").isNull()).count()
+            if n_unmatched:
+                raise RuntimeError(
+                    f"optimize_table: {n_unmatched} rows' input_file_name "
+                    "did not match the plan's file list (URI scheme "
+                    "mismatch?) — refusing to write a partial compaction"
+                )
+            (
+                routed.repartition(len(set(bin_of.values())), "__bin")
+                .drop("__bin")
+                .write.mode("append")
+                .partitionBy(*part_cols)
+                .parquet(staging)
+            )
+        finally:
+            routed.unpersist()
     n_adds = _journaled_swap(spark, path, staging, retire_rels, token)
+    # (5) indexes: incremental refresh absorbs adds + retires
     _refresh_indexes()
     return {
         "status": "optimized",
         "n_compacted": len(retire_rels),
         "n_bins": n_adds,
-        "n_partitions": n_parts,
+        "n_partitions": (
+            len({r.rpartition("/")[0] for r in retire_rels}) if part_cols else 0
+        ),
         "recovered": recovered,
     }
 

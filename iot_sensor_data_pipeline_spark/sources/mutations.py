@@ -63,9 +63,11 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from iot_sensor_data_pipeline_spark.sources.manifest import (
     CHANGES_DIR,
+    _commit_json_file,
     _fs_for,
     _journaled_swap,
     _live_epoch_exclude_fn,
+    _read_json_file,
     _retired_epoch_watermarks,
     _walk_data_files,
     _write_epoch_watermarks,
@@ -118,7 +120,7 @@ def _guard_cdf_schema(read_schema: StructType) -> None:
 
 def _canon_expr(c: Column) -> Column:
     # listStatus renders the local scheme 'file:/x', input_file_name
-    # 'file:///x' — same file (see compact_files)
+    # 'file:///x' — same file (see optimize_table)
     return F.regexp_replace(c, r"^file:/+", "file:///")
 
 
@@ -1217,8 +1219,6 @@ def sync_from_change_feed(
     The replica must be keyed the same way the upstream's mutations
     are (``on``). Returns ``{"applied_versions", "n_upserted",
     "n_deleted", "n_merges", "from_version", "to_version"}``."""
-    import json
-
     on = list(on)
     pred = (
         None if where is None
@@ -1237,10 +1237,6 @@ def sync_from_change_feed(
     state_p = jvm.org.apache.hadoop.fs.Path(f"{dst_path}/_sync_state.json")
     last = 0
     if fs.exists(state_p):
-        from iot_sensor_data_pipeline_spark.sources.manifest import (
-            _read_json_file,
-        )
-
         last = int(_read_json_file(fs, jvm, state_p).get("version", 0))
     all_versions = change_feed_versions(spark, src_path)
     if all_versions and last + 1 < all_versions[0]:
@@ -1310,17 +1306,9 @@ def sync_from_change_feed(
             newest.unpersist()
         # state AFTER the netted slice fully applied: a crash
         # re-applies the whole slice (idempotent), never skips any of it
-        tmp = jvm.org.apache.hadoop.fs.Path(str(state_p) + ".tmp")
-        out = fs.create(tmp, True)
-        try:
-            out.write(
-                json.dumps({"version": versions[-1]}).encode("utf-8")
-            )
-        finally:
-            out.close()
-        fs.delete(state_p, False)
-        if not fs.rename(tmp, state_p):
-            raise RuntimeError(f"sync state commit failed: {state_p}")
+        _commit_json_file(
+            fs, jvm, state_p, {"version": versions[-1]}, "sync state commit"
+        )
     return {
         "applied_versions": versions,
         "n_upserted": n_up,
@@ -1342,10 +1330,6 @@ def _consumer_cursor(spark: SparkSession, consumer_path: str) -> int:
         f"{consumer_path}/_sync_state.json"
     )
     if fs.exists(sync_p):
-        from iot_sensor_data_pipeline_spark.sources.manifest import (
-            _read_json_file,
-        )
-
         return int(_read_json_file(fs, jvm, sync_p).get("version", 0))
     from iot_sensor_data_pipeline_spark.sources.manifest import _versions_in
 

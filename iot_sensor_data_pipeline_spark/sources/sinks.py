@@ -113,42 +113,27 @@ def _read_compacted_through(fs, jvm, path: str, lineage: str) -> int | None:
     """Highest epoch id of this lineage whose files an OPTIMIZE has
     retired into lineage-less ``c<token>-`` compacted files, or None
     when the lineage's history is fully intact."""
-    import json
+    from iot_sensor_data_pipeline_spark.sources.manifest import _read_json_file
 
     p = _compacted_marker_path(path, lineage, jvm)
     if not fs.exists(p):
         return None
-    stream = fs.open(p)
-    try:
-        state = json.loads(
-            jvm.org.apache.commons.io.IOUtils.toString(
-                stream, jvm.java.nio.charset.StandardCharsets.UTF_8
-            )
-        )
-    finally:
-        stream.close()
-    return int(state["compacted_through"])
+    return int(_read_json_file(fs, jvm, p)["compacted_through"])
 
 
 def _write_compacted_through(fs, jvm, path: str, lineage: str, epoch: int) -> None:
     """Monotone (max-of) write of the lineage's compaction watermark —
     write-then-rename, idempotent, so the forward arm of
     ``manifest.recover_optimize`` can re-run it safely."""
-    import json
+    from iot_sensor_data_pipeline_spark.sources.manifest import _commit_json_file
 
     existing = _read_compacted_through(fs, jvm, path, lineage)
     if existing is not None and existing >= epoch:
         return
-    p = _compacted_marker_path(path, lineage, jvm)
-    tmp = jvm.org.apache.hadoop.fs.Path(str(p) + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(json.dumps({"compacted_through": epoch}).encode("utf-8"))
-    finally:
-        out.close()
-    fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        raise RuntimeError(f"compacted-through watermark swap failed: {p}")
+    _commit_json_file(
+        fs, jvm, _compacted_marker_path(path, lineage, jvm),
+        {"compacted_through": epoch}, "compacted-through watermark swap",
+    )
 
 
 def read_compacted_through(spark, path: str, checkpoint: str) -> int | None:
@@ -195,7 +180,7 @@ def newest_epoch_files(spark, path: str, checkpoint: str) -> list[str]:
     lineage — the files a compaction must NOT retire while the stream
     is live (that epoch's offsets may be uncommitted; a replay would
     re-add rows already absorbed into the compacted file — see
-    ``streaming.orchestrator.plan_maintenance``). Diagnostic/manual
+    ``manifest.optimize_table``). Diagnostic/manual
     use; for a LIVE stream prefer ``optimize_table(...,
     live_checkpoints=[checkpoint])``, which derives the same exclusion
     from the planner's own listing — a precomputed list from here races
@@ -340,14 +325,14 @@ def parquet_batch_sink(
     (``write_bloom_index`` once at table creation fixes its sizing);
     the refresh bloom-reads only the batch's new files. This is
     exactly the small-file/stale-stats loop a micro-batch sink creates
-    — the matching compaction half surfaces through
-    ``streaming.orchestrator.Pipeline.plan_maintenance``. Index scope
-    is flat parquet directories, so both are mutually exclusive with
-    ``partition_cols`` (hive layouts get directory pruning from Spark
-    itself). Maintenance failures never poison data: a stale
-    manifest/index is conservative by design, so refresh errors are
-    logged and skipped (the parquet append is not idempotent — an
-    escaping exception would replay the batch into duplicates)."""
+    — the matching compaction half is ``manifest.optimize_table``,
+    which ``streaming.orchestrator.Pipeline.maintain`` runs on tracked
+    tables. Index columns must not be ``partition_cols`` (their values
+    live in dir names, not footers). Maintenance failures never poison
+    data: a stale manifest/index is conservative by design, so refresh
+    errors are logged and skipped (the parquet append is not
+    idempotent — an escaping exception would replay the batch into
+    duplicates)."""
     manifest_cols = list(manifest_cols)
     bloom_cols = list(bloom_cols)
     # hive layouts keep their indexes too (r11 — the manifest/bloom
@@ -433,20 +418,11 @@ def parquet_batch_sink(
         e<N>-<lineage>- file names on disk; adopt a wiped-checkpoint
         table explicitly by writing ``{"max_epoch": -1}`` into the
         lineage state file."""
-        import json
+        from iot_sensor_data_pipeline_spark.sources.manifest import _read_json_file
 
         p = jvm.org.apache.hadoop.fs.Path(f"{path}/_sink_lineage_{lineage}.json")
         if fs.exists(p):
-            stream = fs.open(p)
-            try:
-                state = json.loads(
-                    jvm.org.apache.commons.io.IOUtils.toString(
-                        stream, jvm.java.nio.charset.StandardCharsets.UTF_8
-                    )
-                )
-            finally:
-                stream.close()
-            max_epoch = state["max_epoch"]
+            max_epoch = _read_json_file(fs, jvm, p)["max_epoch"]
             source = f"lineage state {p}"
         else:
             max_epoch = _infer_max_epoch(fs, jvm)
@@ -462,18 +438,13 @@ def parquet_batch_sink(
             )
 
     def _commit_epoch_state(fs, jvm, epoch_id: int) -> None:
-        import json
+        from iot_sensor_data_pipeline_spark.sources.manifest import _commit_json_file
 
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/_sink_lineage_{lineage}.json")
-        tmp = jvm.org.apache.hadoop.fs.Path(str(p) + ".tmp")
-        out = fs.create(tmp, True)
-        try:
-            out.write(json.dumps({"max_epoch": epoch_id}).encode("utf-8"))
-        finally:
-            out.close()
-        fs.delete(p, False)
-        if not fs.rename(tmp, p):
-            raise RuntimeError(f"parquet_batch_sink: lineage-state swap failed: {p}")
+        _commit_json_file(
+            fs, jvm,
+            jvm.org.apache.hadoop.fs.Path(f"{path}/_sink_lineage_{lineage}.json"),
+            {"max_epoch": epoch_id}, "parquet_batch_sink: lineage-state swap",
+        )
 
     def _write_epoch_idempotent(batch_df: DataFrame, epoch_id: int) -> None:
         import uuid

@@ -418,21 +418,11 @@ def _bucket_manifest_versions(spark, snapshot_dir: str) -> list[int]:
 
 
 def _read_bucket_manifest(spark, snapshot_dir: str, version: int) -> dict:
-    import json
+    from iot_sensor_data_pipeline_spark.sources.manifest import _read_json_file
 
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/manifests/v{version}.json")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(p)
-    try:
-        # py4j can't read into a Python-side buffer (arrays pass by
-        # value); let the JVM drain the stream to a string instead
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
+    return _read_json_file(p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm, p)
 
 
 def _write_bucket_manifest(spark, snapshot_dir: str, version: int, payload: dict):
@@ -440,23 +430,14 @@ def _write_bucket_manifest(spark, snapshot_dir: str, version: int, payload: dict
     newest manifest: the momentary no-v{N} window makes readers resolve
     v{N-1} (complete, consistent); a torn in-place write would make
     them parse garbage. The .tmp suffix keeps the listing blind to the
-    staging file (_bucket_manifest_versions requires the .json suffix)."""
-    import json
+    staging file (_bucket_manifest_versions requires the .json suffix).
+    A replayed epoch swaps over its own version."""
+    from iot_sensor_data_pipeline_spark.sources.manifest import _commit_json_file
 
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/manifests/v{version}.json")
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{snapshot_dir}/manifests/v{version}.json.tmp"
-    )
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(tmp, True)
-    try:
-        out.write(json.dumps(payload, sort_keys=True).encode("utf-8"))
-    finally:
-        out.close()
-    fs.delete(p, False)  # a replayed epoch swaps over its own version
-    if not fs.rename(tmp, p):
-        raise RuntimeError(f"manifest swap failed: {tmp} -> {p}")
+    _commit_json_file(fs, jvm, p, payload, "bucket manifest swap")
 
 
 def read_cdc_snapshot_bucketed(

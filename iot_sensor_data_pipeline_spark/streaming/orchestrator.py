@@ -383,93 +383,6 @@ class Pipeline:
                 return
             time.sleep(poll_seconds)
 
-    def plan_maintenance(
-        self,
-        spark,
-        tables: dict[str, str],
-        target_bytes: int,
-        manifest_cols: dict[str, Sequence[str]] | None = None,
-        bloom_cols: dict[str, Sequence[str]] | None = None,
-    ) -> dict[str, DataFrame]:
-        """Maintenance planning for the parquet tables the pipeline's
-        sinks feed — the OPTIMIZE loop a micro-batch writer needs:
-        every foreachBatch append is one file per partition per batch,
-        so file counts grow linearly with uptime and footer manifests
-        go stale. For each ``name -> path``: refresh the skipping
-        manifest incrementally (when ``manifest_cols[name]`` is given —
-        footer-reads only files added since the last refresh), refresh
-        the per-file Bloom point-lookup index the same way (when
-        ``bloom_cols[name]`` is given — bloom-reads only new files;
-        both refreshes are zero-job no-ops when the file set is
-        unchanged), and return the table's
-        :func:`~.manifest.plan_compaction` plan (file-metadata grain —
-        one listing, no data reads). The caller executes chosen plans
-        via ``sources.manifest.optimize_table`` (the in-place journaled
-        swap, which also refreshes the manifest/bloom index
-        INCREMENTALLY — the swap is just new files + dropped files to
-        them) or the lower-level ``compact_files`` /
-        ``compact_clustered`` during a low-traffic window; nothing is
-        rewritten here.
-
-        EPOCH-IDEMPOTENT SINK TABLES (``parquet_batch_sink`` with
-        ``checkpoint=``): STOP the stream before executing a compaction
-        plan against the table, or exclude the newest epoch's
-        ``e<N>-<lineage>-`` files from retirement. Retiring originals
-        must not race a live stream: if the newest epoch's files are
-        compacted+retired and that epoch is then REPLAYED (its offsets
-        were uncommitted at a crash), the replay re-adds rows already
-        absorbed into the compacted file — duplicates that never
-        converge, because the replay's dead-attempt sweep only matches
-        epoch-named files, not the compacted one. Same discipline as
-        :func:`~.jobs.rebucket_cdc_snapshot` documents for the bucketed
-        CDC layout."""
-        from iot_sensor_data_pipeline_spark.sources.bloom_index import (
-            update_bloom_index,
-        )
-        from iot_sensor_data_pipeline_spark.sources.manifest import (
-            plan_compaction,
-            update_manifest,
-        )
-
-        import logging
-
-        log = logging.getLogger(__name__)
-        plans: dict[str, DataFrame] = {}
-        for name, path in tables.items():
-            # per-table isolation: one table's broken/missing index must
-            # not abort maintenance planning for every healthy table —
-            # stale skipping state is conservative by design
-            cols = (manifest_cols or {}).get(name)
-            if cols:
-                try:
-                    update_manifest(spark, path, cols)
-                except Exception:  # noqa: BLE001
-                    log.warning(
-                        "plan_maintenance: manifest refresh failed for %s "
-                        "(%s); continuing stale", name, path, exc_info=True,
-                    )
-            bcols = (bloom_cols or {}).get(name)
-            if bcols:
-                try:
-                    update_bloom_index(spark, path, bcols)
-                except Exception:  # noqa: BLE001
-                    log.warning(
-                        "plan_maintenance: bloom refresh failed for %s (%s) "
-                        "— rebuild with write_bloom_index if the index dir "
-                        "is missing (e.g. after compaction); continuing "
-                        "stale", name, path, exc_info=True,
-                    )
-            try:
-                plans[name] = plan_compaction(spark, path, target_bytes)
-            except Exception:  # noqa: BLE001
-                # e.g. a table whose stream has not committed its first
-                # batch yet (directory missing) — skip it, plan the rest
-                log.warning(
-                    "plan_maintenance: compaction planning failed for %s "
-                    "(%s); skipping this table", name, path, exc_info=True,
-                )
-        return plans
-
     def recover_on_start(self, spark, tables: dict[str, str]) -> dict[str, str]:
         """Run :func:`~.manifest.recover_optimize` over every table the
         pipeline's sinks feed, BEFORE any query starts — closing the
@@ -512,9 +425,9 @@ class Pipeline:
         self, spark, tables: dict[str, str], target_bytes: int | None = None
     ) -> dict[str, dict]:
         """Per-table :func:`~.manifest.table_health` probe — the
-        scheduled heartbeat companion to :meth:`plan_maintenance`
-        (plan_maintenance REFRESHES and PLANS; this only OBSERVES:
-        metadata-grain, zero mutation, zero data reads). A table whose
+        scheduled heartbeat companion to :meth:`maintain` (maintain
+        ACTS; this only OBSERVES: metadata-grain, zero mutation, zero
+        data reads). A table whose
         probe fails (not created yet, FS hiccup) reports
         ``{"error": <message>}`` and the rest still report."""
         from iot_sensor_data_pipeline_spark.sources.manifest import (
@@ -543,8 +456,9 @@ class Pipeline:
 
         1. **OPTIMIZE** when ``small_file_fraction >=
            policy.small_file_fraction`` and ``n_files >=
-           policy.min_files`` — the partitioned or flat path by the
-           table's layout, with the spec's ``checkpoints`` as
+           policy.min_files`` — one ``optimize_table`` for either
+           layout (``cluster_by`` on a partitioned table fails the
+           table's step with an error), with the spec's ``checkpoints`` as
            ``live_checkpoints`` (newest live epoch excluded, so the
            stream keeps running) and the spec's index columns refreshed
            by the swap itself (skipped when
@@ -632,9 +546,6 @@ class Pipeline:
             write_bloom_index,
         )
         from iot_sensor_data_pipeline_spark.sources.manifest import (
-            _walk_data_files,
-            optimize_table,
-            optimize_table_partitioned,
             recover_optimize,
             table_health,
             update_manifest,
@@ -788,31 +699,12 @@ class Pipeline:
                     spark, ispec.index_path, policy.target_bytes,
                     vacuum_min_age_seconds=policy.vacuum_min_age_seconds,
                 )
-                isig = (ih["n_files"], ih["total_bytes"])
-                istate = self._maint_state.get(name)
-                itrigger = (
-                    ih.get("small_file_fraction", 0.0)
-                    >= policy.small_file_fraction
-                    and ih["n_files"] >= policy.min_files
+                ires = self._optimize_if_due(
+                    spark, name, ispec.index_path, ih, policy,
+                    bloom_cols=ispec.bloom_cols or None,
                 )
-                iquiet = istate is not None and isig == istate["post_sig"]
-                icooling = (
-                    istate is not None
-                    and time.monotonic() - istate["t"]
-                    < policy.cooldown_seconds
-                )
-                if itrigger and not iquiet and not icooling:
-                    ix_actions["optimize"] = optimize_table(
-                        spark, ispec.index_path, policy.target_bytes,
-                        bloom_cols=ispec.bloom_cols or None,
-                    )
-                    walked = _walk_data_files(spark, ispec.index_path)
-                    self._maint_state[name] = {
-                        "post_sig": (
-                            len(walked), sum(s for _f, s in walked),
-                        ),
-                        "t": time.monotonic(),
-                    }
+                if ires is not None:
+                    ix_actions["optimize"] = ires
                 elif ih["pending_journal"]:
                     ix_actions["recover"] = recover_optimize(
                         spark, ispec.index_path
@@ -850,53 +742,24 @@ class Pipeline:
             except Exception as e:  # noqa: BLE001 — per-table isolation
                 out[name] = {"health": None, "actions": {"error": str(e)}}
                 continue
+            idx_kw = (
+                {}
+                if spec.sink_maintains_indexes
+                else {
+                    "manifest_cols": spec.manifest_cols or None,
+                    "bloom_cols": spec.bloom_cols or None,
+                }
+            )
             try:
-                sig = (h["n_files"], h["total_bytes"])
-                state = self._maint_state.get(name)
-                trigger = (
-                    h.get("small_file_fraction", 0.0)
-                    >= policy.small_file_fraction
-                    and h["n_files"] >= policy.min_files
+                res = self._optimize_if_due(
+                    spark, name, spec.path, h, policy,
+                    cluster_by=spec.cluster_by or None,
+                    live_checkpoints=spec.checkpoints,
+                    epoch_caps=epoch_caps_by_path.get(spec.path), **idx_kw,
                 )
-                quiet = state is not None and sig == state["post_sig"]
-                cooling = (
-                    state is not None
-                    and time.monotonic() - state["t"]
-                    < policy.cooldown_seconds
-                )
-                optimized = False
-                if trigger and not quiet and not cooling:
-                    idx_kw = (
-                        {}
-                        if spec.sink_maintains_indexes
-                        else {
-                            "manifest_cols": spec.manifest_cols or None,
-                            "bloom_cols": spec.bloom_cols or None,
-                        }
-                    )
-                    caps = epoch_caps_by_path.get(spec.path)
-                    if h["partitioned"]:
-                        res = optimize_table_partitioned(
-                            spark, spec.path, policy.target_bytes,
-                            live_checkpoints=spec.checkpoints,
-                            epoch_caps=caps, **idx_kw,
-                        )
-                    else:
-                        res = optimize_table(
-                            spark, spec.path, policy.target_bytes,
-                            cluster_by=spec.cluster_by or None,
-                            live_checkpoints=spec.checkpoints,
-                            epoch_caps=caps, **idx_kw,
-                        )
+                optimized = res is not None
+                if optimized:
                     actions["optimize"] = res
-                    optimized = True
-                    walked = _walk_data_files(spark, spec.path)
-                    self._maint_state[name] = {
-                        "post_sig": (
-                            len(walked), sum(s for _f, s in walked),
-                        ),
-                        "t": time.monotonic(),
-                    }
                 elif h["pending_journal"]:
                     actions["recover"] = recover_optimize(spark, spec.path)
                 if not optimized and not spec.sink_maintains_indexes:
@@ -943,14 +806,6 @@ class Pipeline:
                         partition_values(spark, spec.path, ret.column)
                     )
                     if doomed:
-                        idx_kw = (
-                            {}
-                            if spec.sink_maintains_indexes
-                            else {
-                                "manifest_cols": spec.manifest_cols or None,
-                                "bloom_cols": spec.bloom_cols or None,
-                            }
-                        )
                         # on_live="skip": a doomed subtree holding a
                         # live lineage's newest epoch survives this
                         # tick and expires on a later one — retention
@@ -1036,6 +891,45 @@ class Pipeline:
                 actions["error"] = str(e)
                 out[name] = {"health": h, "actions": actions}
         return out
+
+    def _optimize_if_due(
+        self, spark, name: str, path: str, health: dict,
+        policy: MaintenancePolicy, **optimize_kw,
+    ) -> dict | None:
+        """The health->OPTIMIZE trigger :meth:`maintain` applies to
+        tables and search indexes alike: run ``optimize_table`` when
+        the small-file trigger fires, unless the HYSTERESIS signature
+        (the post-optimize (n_files, total_bytes) listing) still
+        matches — nothing landed since — or the last attempt is within
+        ``policy.cooldown_seconds``. Returns the optimize result, or
+        None when the trigger did not run it."""
+        from iot_sensor_data_pipeline_spark.sources.manifest import (
+            _walk_data_files,
+            optimize_table,
+        )
+
+        state = self._maint_state.get(name)
+        trigger = (
+            health.get("small_file_fraction", 0.0)
+            >= policy.small_file_fraction
+            and health["n_files"] >= policy.min_files
+        )
+        quiet = state is not None and (
+            health["n_files"], health["total_bytes"]
+        ) == state["post_sig"]
+        cooling = (
+            state is not None
+            and time.monotonic() - state["t"] < policy.cooldown_seconds
+        )
+        if not trigger or quiet or cooling:
+            return None
+        res = optimize_table(spark, path, policy.target_bytes, **optimize_kw)
+        walked = _walk_data_files(spark, path)
+        self._maint_state[name] = {
+            "post_sig": (len(walked), sum(s for _f, s in walked)),
+            "t": time.monotonic(),
+        }
+        return res
 
     def process_all_available(self) -> None:
         """Drain every query synchronously (test/batch-drive mode)."""

@@ -192,7 +192,7 @@ def test_update_manifest_incremental(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# plan_compaction / compact_files
+# plan_compaction / optimize_table
 # ---------------------------------------------------------------------------
 
 
@@ -212,11 +212,9 @@ def fragmented(spark, tmp_path_factory):
 
 
 def _sizes(spark, path):
-    from iot_sensor_data_pipeline_spark.sources.manifest import (
-        _list_parquet_files_with_size,
-    )
+    from iot_sensor_data_pipeline_spark.sources.manifest import _walk_data_files
 
-    return _list_parquet_files_with_size(spark, path)
+    return _walk_data_files(spark, path)
 
 
 def test_plan_compaction_bins_and_python_mirror(spark, fragmented):
@@ -265,23 +263,23 @@ def test_plan_compaction_respects_min_bin_files(spark, fragmented):
 
 
 def test_compact_files_preserves_rows_and_reduces_files(spark, fragmented, tmp_path):
-    from iot_sensor_data_pipeline_spark.sources.manifest import compact_files
+    import shutil
 
-    out = str(tmp_path / "compacted")
-    files = _sizes(spark, fragmented)
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
+
+    path = str(tmp_path / "tbl")
+    shutil.copytree(fragmented, path)  # in place: leave the shared fixture
+    files = _sizes(spark, path)
     target = sum(s for _, s in files[:-1])  # pack all tinies generously
-    plan, keeps = compact_files(spark, fragmented, out, target)
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    res = optimize_table(spark, path, target)
 
-    n_compacted_in = plan.where(F.col("action") == "compact").count()
-    assert n_compacted_in >= 10 and len(keeps) >= 1
-
-    before = spark.read.parquet(fragmented)
-    after = spark.read.parquet(out, *keeps) if keeps else spark.read.parquet(out)
-    assert after.count() == before.count()
-    assert sorted(map(tuple, after.collect())) == sorted(map(tuple, before.collect()))
-
-    n_out_files = len(_sizes(spark, out))
-    assert n_out_files < n_compacted_in  # strictly fewer files
+    assert res["status"] == "optimized" and res["n_partitions"] == 0
+    assert res["n_compacted"] >= 10 and len(files) - res["n_compacted"] >= 1
+    assert res["n_bins"] < res["n_compacted"]  # strictly fewer files
+    after_files = _sizes(spark, path)
+    assert len(after_files) == len(files) - res["n_compacted"] + res["n_bins"]
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
 
 
 def test_compact_clustered_makes_file_stats_selective(spark, tmp_path):
@@ -290,8 +288,8 @@ def test_compact_clustered_makes_file_stats_selective(spark, tmp_path):
     the clustered rewrite makes per-file ranges narrow enough that a
     range predicate prunes most output files."""
     from iot_sensor_data_pipeline_spark.sources.manifest import (
-        compact_clustered,
         footer_stats,
+        optimize_table,
     )
 
     src = str(tmp_path / "src")
@@ -301,23 +299,25 @@ def test_compact_clustered_makes_file_stats_selective(spark, tmp_path):
             (F.col("id") * 10 + i).alias("k"), F.col("id").alias("v")
         ).coalesce(1).write.mode("append").parquet(src)
 
-    out = str(tmp_path / "clustered")
     sizes = _sizes(spark, src)
     target = sum(s for _, s in sizes) // 5  # ~5 output bins
-    plan, keeps = compact_clustered(spark, src, out, target, cluster_by=["k"])
+    before = sorted(map(tuple, spark.read.parquet(src).collect()))
+    res = optimize_table(spark, src, target, cluster_by=["k"])
     # uneven snappy sizes can leave singleton bins as 'keep' (the
     # cumsum boundary jitters run-to-run with compressed sizes; two
     # such tails observed in practice) — the selectivity assertions
     # below are the property under test, keeps just must stay a small
     # minority
-    assert len(keeps) <= 2
+    assert res["status"] == "optimized"
+    assert len(sizes) - res["n_compacted"] <= 2
 
-    before = spark.read.parquet(src)
-    after = spark.read.parquet(out, *keeps) if keeps else spark.read.parquet(out)
-    assert after.count() == before.count()
-    assert sorted(map(tuple, after.collect())) == sorted(map(tuple, before.collect()))
+    assert sorted(map(tuple, spark.read.parquet(src).collect())) == before
 
-    stats = footer_stats(spark, out, ["k"]).collect()
+    # the rewritten (c-named) files; the keeps still span the domain
+    stats = [
+        r for r in footer_stats(spark, src, ["k"]).collect()
+        if r.file.rsplit("/", 1)[-1].startswith("c")
+    ]
     assert len(stats) >= 3
     # disjoint-ish narrow ranges: each file's span far below the domain
     domain = 10_000
@@ -327,9 +327,6 @@ def test_compact_clustered_makes_file_stats_selective(spark, tmp_path):
     lo, hi = 100.0, 900.0
     overlapping = [r for r in stats if not (r.max_num < lo or r.min_num > hi)]
     assert len(overlapping) <= max(1, len(stats) // 2)
-
-    with pytest.raises(ValueError, match="cluster_by"):
-        compact_clustered(spark, src, out, target, cluster_by=[])
 
 
 def test_prune_and_update_driver_materialization_is_sublinear(
@@ -557,7 +554,7 @@ def test_optimize_table_clustered_variant(spark, tmp_path):
     stats = footer_stats(spark, path, ["k"]).collect()
     # clustered rewrite -> narrow per-file ranges for the REWRITTEN
     # files (size jitter can leave a singleton bin as an untouched
-    # full-domain original — same tolerance as the compact_clustered
+    # full-domain original — same tolerance as the clustered compaction
     # test)
     rewritten = [r for r in stats if r.file.rsplit("/", 1)[-1].startswith("c")]
     assert len(rewritten) >= 3
@@ -649,7 +646,7 @@ def test_optimize_table_partitioned(spark, tmp_path):
     import json
 
     from iot_sensor_data_pipeline_spark.sources.manifest import (
-        optimize_table_partitioned,
+        optimize_table,
         recover_optimize,
     )
 
@@ -668,7 +665,7 @@ def test_optimize_table_partitioned(spark, tmp_path):
     }
     assert all(n == 5 for n in files_per_dir_before.values())
 
-    res = optimize_table_partitioned(spark, path, target_bytes=1 << 30)
+    res = optimize_table(spark, path, target_bytes=1 << 30)
     assert res["status"] == "optimized"
     assert res["n_compacted"] == 15 and res["n_partitions"] == 3
     after = sorted(r.k for r in spark.read.parquet(path).collect())
@@ -684,7 +681,7 @@ def test_optimize_table_partitioned(spark, tmp_path):
     assert "PartitionFilters" in plan
 
     # steady state
-    assert optimize_table_partitioned(spark, path, 1 << 30)["status"] == "noop"
+    assert optimize_table(spark, path, 1 << 30)["status"] == "noop"
 
     # crash recovery with partition-relative names: forge a journal
     # whose add is missing -> rollback leaves the committed layout
@@ -809,9 +806,7 @@ def test_optimize_partitioned_preserves_literal_partition_values(spark, tmp_path
     VERBATIM through the rewrite — type inference would rewrite them to
     hour=0 and the journaled renames would target a partition that
     does not exist."""
-    from iot_sensor_data_pipeline_spark.sources.manifest import (
-        optimize_table_partitioned,
-    )
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
 
     path = str(tmp_path / "zp")
     for b in range(3):
@@ -822,7 +817,7 @@ def test_optimize_partitioned_preserves_literal_partition_values(spark, tmp_path
     dirs_before = sorted(d for d in os.listdir(path) if d.startswith("hour="))
     assert dirs_before == ["hour=00", "hour=01"]
 
-    res = optimize_table_partitioned(spark, path, target_bytes=1 << 30)
+    res = optimize_table(spark, path, target_bytes=1 << 30)
     assert res["status"] == "optimized" and res["n_partitions"] == 2
     dirs_after = sorted(d for d in os.listdir(path) if d.startswith("hour="))
     assert dirs_after == ["hour=00", "hour=01"]  # literal dirs intact
@@ -964,9 +959,7 @@ def test_optimize_partitioned_live_checkpoints(spark, tmp_path):
     epoch-idempotent sink compacts WITHOUT stopping the stream; the
     newest epoch's files survive in EVERY partition they live in, and a
     replay of that epoch still converges on the compacted table."""
-    from iot_sensor_data_pipeline_spark.sources.manifest import (
-        optimize_table_partitioned,
-    )
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
     from iot_sensor_data_pipeline_spark.sources.sinks import parquet_batch_sink
 
     path = str(tmp_path / "popt_live")
@@ -982,7 +975,7 @@ def test_optimize_partitioned_live_checkpoints(spark, tmp_path):
     for e, (lo, hi) in enumerate([(0, 100), (100, 200), (200, 260)]):
         sink(batch(lo, hi), e)
 
-    res = optimize_table_partitioned(
+    res = optimize_table(
         spark, path, target_bytes=1 << 30, live_checkpoints=[ckpt]
     )
     assert res["status"] == "optimized"
@@ -1005,14 +998,14 @@ def test_optimize_partitioned_live_checkpoints(spark, tmp_path):
 
 def test_optimize_partitioned_mixed_depth_raises(spark, tmp_path):
     """VERDICT r10 task 4: a mixed-depth layout (dt=a files next to
-    dt=b/hour=1 files) must raise BEFORE any write — the explicit read
-    schema would silently drop the deeper partition column and migrate
-    its rows up a level."""
+    dt=b/hour=1 files, or root files next to dt= dirs) must raise
+    BEFORE any write — the explicit read schema would silently drop the
+    deeper partition column and migrate its rows up a level."""
+    import shutil
+
     import pytest as _pytest
 
-    from iot_sensor_data_pipeline_spark.sources.manifest import (
-        optimize_table_partitioned,
-    )
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
 
     path = str(tmp_path / "mixed")
     for b in range(2):
@@ -1035,12 +1028,44 @@ def test_optimize_partitioned_mixed_depth_raises(spark, tmp_path):
         for r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
     )
     with _pytest.raises(ValueError, match="mixed partition layouts"):
-        optimize_table_partitioned(spark, path, target_bytes=1 << 30)
+        optimize_table(spark, path, target_bytes=1 << 30)
     files_after = sorted(
         os.path.join(r, f)
         for r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
     )
     assert files_after == files_before  # nothing rewritten or retired
+
+    # a root-level file next to the k=v dirs is a mixed layout too
+    shutil.rmtree(os.path.join(path, "dt=b"))
+    moved = next(f for f in os.listdir(os.path.join(path, "dt=a"))
+                 if f.endswith(".parquet") and not f.startswith("."))
+    os.rename(os.path.join(path, "dt=a", moved),
+              os.path.join(path, "root-0.parquet"))
+    with _pytest.raises(ValueError, match="mixed partition layouts"):
+        optimize_table(spark, path, target_bytes=1 << 30)
+    assert os.path.exists(os.path.join(path, "root-0.parquet"))
+
+
+def test_optimize_partitioned_cluster_by_raises_before_write(spark, tmp_path):
+    """cluster_by is a flat-table rewrite: on a hive-partitioned table
+    optimize_table raises before writing, and no file changes."""
+    import pytest as _pytest
+
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
+
+    path = str(tmp_path / "pclu")
+    for b in range(3):
+        spark.range(b * 100, (b + 1) * 100).select(
+            F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("dt")
+        ).repartition(1).write.mode("append").partitionBy("dt").parquet(path)
+
+    def listing():
+        return sorted(os.path.join(r, f) for r, _d, fs in os.walk(path) for f in fs)
+
+    before = listing()
+    with _pytest.raises(ValueError, match="cluster_by"):
+        optimize_table(spark, path, target_bytes=1 << 30, cluster_by=["k"])
+    assert listing() == before
 
 
 def test_commit_version_concurrent_writers_both_survive(spark, tmp_path):
@@ -1309,12 +1334,10 @@ def test_partitioned_sink_keeps_manifest_fresh(spark, tmp_path):
 
 
 def test_partitioned_optimize_refreshes_manifest(spark, tmp_path):
-    """r11: optimize_table_partitioned(manifest_cols=...) leaves the
+    """r11: optimize_table(manifest_cols=...) leaves the
     partitioned table's skipping manifest exactly matching disk after
     the swap — c-files in, retired micro-batch files out."""
-    from iot_sensor_data_pipeline_spark.sources.manifest import (
-        optimize_table_partitioned,
-    )
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
 
     path = str(tmp_path / "pomr")
     for b in range(4):
@@ -1325,7 +1348,7 @@ def test_partitioned_optimize_refreshes_manifest(spark, tmp_path):
     write_manifest(spark, path, ["k"])
     assert read_manifest(spark, path).count() == 8
 
-    res = optimize_table_partitioned(
+    res = optimize_table(
         spark, path, target_bytes=1 << 30, manifest_cols=["k"]
     )
     assert res["status"] == "optimized"
@@ -1425,7 +1448,7 @@ def test_table_health_partitioned(spark, tmp_path):
 
 
 def test_partitioned_optimize_refreshes_bloom(spark, tmp_path):
-    """r11: optimize_table_partitioned(bloom_cols=...) leaves the
+    """r11: optimize_table(bloom_cols=...) leaves the
     partitioned table's bloom index covering exactly the compacted
     files; point reads stay exact afterwards."""
     from iot_sensor_data_pipeline_spark.sources.bloom_index import (
@@ -1434,7 +1457,7 @@ def test_partitioned_optimize_refreshes_bloom(spark, tmp_path):
     )
     from iot_sensor_data_pipeline_spark.sources.manifest import (
         _read_versioned_in,
-        optimize_table_partitioned,
+        optimize_table,
     )
 
     path = str(tmp_path / "pob")
@@ -1445,7 +1468,7 @@ def test_partitioned_optimize_refreshes_bloom(spark, tmp_path):
         ).repartition(1).write.mode("append").partitionBy("dt").parquet(path)
     write_bloom_index(spark, path, ["k"], expected_keys_per_file=500)
 
-    res = optimize_table_partitioned(
+    res = optimize_table(
         spark, path, target_bytes=1 << 30, bloom_cols=["k"]
     )
     assert res["status"] == "optimized"
@@ -1556,11 +1579,9 @@ def test_optimize_partitioned_schema_evolution_raises_before_write(
     spark, tmp_path
 ):
     """ADVICE r11: a schema-evolved candidate (added data column) must
-    fail the compaction BEFORE any write — the first-file-pinned read
+    fail the compaction BEFORE any write — the first-candidate-pinned read
     schema would silently drop the new column's values."""
-    from iot_sensor_data_pipeline_spark.sources.manifest import (
-        optimize_table_partitioned,
-    )
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
 
     path = str(tmp_path / "evo")
     # dt=a files sort FIRST -> they pin the read schema (no 'extra')
@@ -1582,7 +1603,7 @@ def test_optimize_partitioned_schema_evolution_raises_before_write(
 
     before = listing()
     with pytest.raises(ValueError, match="extra"):
-        optimize_table_partitioned(spark, path, target_bytes=1 << 30)
+        optimize_table(spark, path, target_bytes=1 << 30)
     assert listing() == before  # fail-before-write: table untouched
     # and the evolved rows are still fully readable
     got = spark.read.option("mergeSchema", "true").parquet(path)

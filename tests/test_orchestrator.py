@@ -74,12 +74,12 @@ def test_streaming_sink_keeps_manifest_fresh_and_plans_compaction(
 ):
     """The maintenance loop end-to-end: a manifest-keeping parquet sink
     runs N micro-batches; after each commit the skipping manifest is
-    fresh WITHOUT a rebuild (read_pruned == full scan), and the
-    orchestrator's plan_maintenance shrinks the small-file count."""
+    fresh WITHOUT a rebuild (read_pruned == full scan), and an in-place
+    OPTIMIZE shrinks the small-file count."""
     import pytest
 
     from iot_sensor_data_pipeline_spark.sources.manifest import (
-        compact_files,
+        optimize_table,
         read_manifest,
         read_pruned,
     )
@@ -107,26 +107,15 @@ def test_streaming_sink_keeps_manifest_fresh_and_plans_compaction(
     )
     assert got == want and len(got) == 101
 
-    # compaction: 4 tiny files pack into one bin; executing the plan
-    # shrinks the physical file count
-    with Pipeline() as p:
-        plans = p.plan_maintenance(
-            spark, {"events": out}, target_bytes=1 << 30,
-            manifest_cols={"events": ["k"]},
-        )
-    plan = plans["events"]
-    acts = {r.action for r in plan.collect()}
-    assert acts == {"compact"}
-    compacted_dir = str(tmp_path / "events_compacted")
-    _plan, keeps = compact_files(spark, out, compacted_dir, 1 << 30)
-    assert keeps == []
+    # compaction: the 4 tiny files pack into one bin, rewritten in place
+    res = optimize_table(spark, out, 1 << 30)
+    assert res["status"] == "optimized" and res["n_compacted"] == 4
     files = [
-        f
-        for f in __import__("os").listdir(compacted_dir)
-        if f.endswith(".parquet")
+        f for f in os.listdir(out)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
     ]
-    assert len(files) == 1
-    assert spark.read.parquet(compacted_dir).count() == 400
+    assert len(files) == 1 and files[0].startswith("c")
+    assert spark.read.parquet(out).count() == 400
 
     # r11: manifests cover hive layouts too — only indexing a
     # PARTITION column is rejected (its values live in dir names, not
@@ -487,6 +476,48 @@ def test_pipeline_maintain_closes_the_loop(spark, tmp_path):
         "optimized", "noop",
     )
     assert read_keys() == set(range(600))
+
+
+def test_maintain_compacts_live_partitioned_sink_in_place(spark, tmp_path):
+    """maintain() runs the one optimize_table on a tracked LIVE
+    hive-partitioned epoch sink: bins pack within each partition dir,
+    the newest live epoch survives in every partition it wrote, and
+    every partition keeps exactly its rows."""
+    from iot_sensor_data_pipeline_spark.sources.sinks import parse_epoch_file
+    from iot_sensor_data_pipeline_spark.streaming.orchestrator import (
+        MaintenancePolicy,
+    )
+
+    path = str(tmp_path / "mpart")
+    ckpt = "/ckpt/MAINT_PART"
+    sink = parquet_batch_sink(path, partition_cols=["dt"], checkpoint=ckpt)
+    for e in range(4):
+        sink(
+            spark.range(e * 90, (e + 1) * 90).select(
+                F.col("id").alias("k"),
+                F.concat(F.lit("d"), (F.col("id") % 3).cast("string")).alias("dt"),
+            ).repartition(1),
+            e,
+        )
+
+    def per_partition():
+        return {
+            r.dt: (r.n, r.s)
+            for r in spark.read.parquet(path).groupBy("dt")
+            .agg(F.count("*").alias("n"), F.sum("k").alias("s")).collect()
+        }
+
+    before = per_partition()
+    pl = Pipeline().track_table("t", path, checkpoints=[ckpt])
+    tick = pl.maintain(spark, MaintenancePolicy(target_bytes=1 << 30, min_files=2))
+    opt = tick["t"]["actions"]["optimize"]
+    assert opt["status"] == "optimized"
+    assert opt["n_compacted"] == 9 and opt["n_partitions"] == 3
+    for d in ("dt=d0", "dt=d1", "dt=d2"):
+        names = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        epochs = {(parse_epoch_file(f) or (None,))[0] for f in names}
+        assert epochs == {3, None}, (d, names)  # e3 live + one c-file
+    assert per_partition() == before
 
 
 def test_await_all_self_maintains_on_a_cadence(spark, tmp_path):
