@@ -1113,7 +1113,7 @@ def _journaled_swap(
     THE swap discipline, shared by OPTIMIZE and the
     row-level mutations (``sources.mutations``), so
     :func:`recover_optimize`'s forward/back rules can never drift
-    between writers. Staged data files (listed recursively, so a
+    between writers. Staged data files (one :func:`_walk_data_files`, so a
     ``partitionBy`` staging layout keeps its partition-relative dirs)
     are journaled as ``c<token>-<i>.parquet`` adds alongside the
     partition-relative retire names, renamed in (destination partition
@@ -1128,15 +1128,10 @@ def _journaled_swap(
     fs, _root, _ = _fs_for(spark, path)
     spath = jvm.org.apache.hadoop.fs.Path(staging)
     staging_base = fs.makeQualified(spath).toString().rstrip("/")
-    staged = []
-    it = fs.listFiles(spath, True)
-    while it.hasNext():
-        st = it.next()
-        if st.isFile() and is_data_file(st.getPath().getName()):
-            staged.append(st.getPath())
+    staged = [f for f, _sz in _walk_data_files(spark, staging)]
     add_rels = []
-    for i, p in enumerate(staged):
-        rel_dir = p.getParent().toString()[len(staging_base):].strip("/")
+    for i, f in enumerate(staged):
+        rel_dir = f.rpartition("/")[0][len(staging_base):].strip("/")
         name = f"c{token}-{i}.parquet"
         add_rels.append(f"{rel_dir}/{name}" if rel_dir else name)
     # (1) journal first: the swap is re-derivable from names alone
@@ -1147,7 +1142,7 @@ def _journaled_swap(
         parent = dst.getParent()
         if not fs.exists(parent):
             fs.mkdirs(parent)
-        if not fs.rename(src, dst):
+        if not fs.rename(jvm.org.apache.hadoop.fs.Path(src), dst):
             raise RuntimeError(f"journaled swap: rename {src} -> {dst} failed")
     fs.delete(spath, True)
     # (3) retire originals, (3.5) persist the per-lineage
@@ -1346,6 +1341,10 @@ def optimize_table(
         bin_map = spark.createDataFrame(
             list(bin_of.items()), "file string, __bin long"
         )
+        # an unrouted row fails the write itself (raise_error under
+        # when, the apply_cdc discipline — no validation pass), before
+        # the swap, so no journal is written; recover_optimize reclaims
+        # the partial staging
         routed = (
             df.withColumn("__src_file", canon(F.input_file_name()))
             .join(
@@ -1357,25 +1356,23 @@ def optimize_table(
                 "__src_file",
                 "left",
             )
+            .withColumn("__bin", F.when(F.col("__bin").isNotNull(), F.col("__bin"))
+                        .otherwise(F.raise_error(F.concat(
+                            F.lit("optimize_table: input_file_name "),
+                            F.col("__src_file"),
+                            F.lit(" did not match the plan's file list (URI "
+                                  "scheme mismatch?) — refusing to write a "
+                                  "partial compaction"),
+                        ))))
             .drop("__src_file")
-        ).persist()
-        try:
-            n_unmatched = routed.where(F.col("__bin").isNull()).count()
-            if n_unmatched:
-                raise RuntimeError(
-                    f"optimize_table: {n_unmatched} rows' input_file_name "
-                    "did not match the plan's file list (URI scheme "
-                    "mismatch?) — refusing to write a partial compaction"
-                )
-            (
-                routed.repartition(len(set(bin_of.values())), "__bin")
-                .drop("__bin")
-                .write.mode("append")
-                .partitionBy(*part_cols)
-                .parquet(staging)
-            )
-        finally:
-            routed.unpersist()
+        )
+        (
+            routed.repartition(len(set(bin_of.values())), "__bin")
+            .drop("__bin")
+            .write.mode("append")
+            .partitionBy(*part_cols)
+            .parquet(staging)
+        )
     n_adds = _journaled_swap(spark, path, staging, retire_rels, token)
     # (5) indexes: incremental refresh absorbs adds + retires
     _refresh_indexes()

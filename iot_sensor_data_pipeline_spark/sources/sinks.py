@@ -376,18 +376,16 @@ def parquet_batch_sink(
         else None
     )
 
-    def _iter_table_files(fs, jvm):
-        """All files under the table, RECURSIVE (partition subdirs
-        included), as (hadoop Path, name) pairs. Staging dirs are
-        skipped by name — their contents are part-* files that never
-        match an e<N>-<lineage>- prefix anyway."""
-        it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
-        while it.hasNext():
-            st = it.next()
-            p = st.getPath()
-            yield p, p.getName()
+    def _table_files(spark) -> list[tuple[str, str]]:
+        """(path, name) of every data file under the table, partition
+        subdirs included, via the table walk (``listStatus``: no
+        per-file permission load). Staging and metadata subtrees are
+        not walked — their files never carry an e<N>-<lineage>- name."""
+        from iot_sensor_data_pipeline_spark.sources.manifest import _walk_data_files
 
-    def _infer_max_epoch(fs, jvm) -> int:
+        return [(f, f.rpartition("/")[2]) for f, _sz in _walk_data_files(spark, path)]
+
+    def _infer_max_epoch(spark, fs, jvm) -> int:
         """Largest epoch id among this lineage's committed file names.
         The fallback authority when the lineage state file is missing
         (crash between its delete and rename, manual cleanup): the
@@ -398,7 +396,7 @@ def parquet_batch_sink(
         file names alone UNDERSTATE the max epoch and a wiped-checkpoint
         replay could slip past the guard."""
         best = -1
-        for p, name in _iter_table_files(fs, jvm):
+        for _f, name in _table_files(spark):
             epoch = parse_epoch_name(name, lineage)
             if epoch is not None:
                 best = max(best, epoch)
@@ -407,7 +405,7 @@ def parquet_batch_sink(
             best = max(best, watermark)
         return best
 
-    def _guard_epoch_regression(fs, jvm, epoch_id: int) -> None:
+    def _guard_epoch_regression(spark, fs, jvm, epoch_id: int) -> None:
         """Fail loudly when this lineage's epochs go BACKWARD: epoch
         ids restart at 0 when a checkpoint is wiped and recreated at
         the SAME path (same lineage hash), and letting the new run's
@@ -425,7 +423,7 @@ def parquet_batch_sink(
             max_epoch = _read_json_file(fs, jvm, p)["max_epoch"]
             source = f"lineage state {p}"
         else:
-            max_epoch = _infer_max_epoch(fs, jvm)
+            max_epoch = _infer_max_epoch(spark, fs, jvm)
             source = "file names on disk (lineage state file missing)"
         if epoch_id < max_epoch:
             raise ValueError(
@@ -449,7 +447,7 @@ def parquet_batch_sink(
     def _write_epoch_idempotent(batch_df: DataFrame, epoch_id: int) -> None:
         import uuid
 
-        from iot_sensor_data_pipeline_spark.sources.manifest import is_data_file
+        from iot_sensor_data_pipeline_spark.sources.manifest import _walk_data_files
 
         spark = batch_df.sparkSession
         jvm = spark._jvm
@@ -462,7 +460,7 @@ def parquet_batch_sink(
         # attempt's overwrite/rename claim the other's staged files
         staging = f"{path}/_staging_e{epoch_id}_{lineage}_{token}"
         if fs.exists(root):
-            _guard_epoch_regression(fs, jvm, epoch_id)
+            _guard_epoch_regression(spark, fs, jvm, epoch_id)
         # routed through write_partitioned_parquet so epoch writes keep
         # the maxRecordsPerFile bound (one skewed batch must not
         # produce a 100 GB file); hive layouts stage partitionBy'd so
@@ -476,20 +474,14 @@ def parquet_batch_sink(
         # rename the new attempt IN first — preserving each staged
         # file's partition subpath (dt=.../hour=...) so hive partition
         # inference sees the same layout a plain append would produce
-        i = 0
         spath = jvm.org.apache.hadoop.fs.Path(staging)
-        # listFiles yields scheme-qualified paths (file:/x); qualify the
+        # the walk yields scheme-qualified paths (file:/x); qualify the
         # staging root the same way or the relative-subpath slice is
         # computed at the wrong offset
         staging_uri = fs.makeQualified(spath).toString().rstrip("/")
-        it = fs.listFiles(spath, True)
         made_dirs: set[str] = set()
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not is_data_file(name):
-                continue
-            parent = st.getPath().getParent().toString().rstrip("/")
+        for i, (staged, _sz) in enumerate(_walk_data_files(spark, staging)):
+            parent, _, name = staged.rpartition("/")
             rel = parent[len(staging_uri):].strip("/")  # '' for flat
             dst_dir = f"{path}/{rel}".rstrip("/")
             if rel and dst_dir not in made_dirs:
@@ -498,11 +490,10 @@ def parquet_batch_sink(
             dst = jvm.org.apache.hadoop.fs.Path(
                 f"{dst_dir}/{prefix}{token}-{i}.parquet"
             )
-            if not fs.rename(st.getPath(), dst):
+            if not fs.rename(jvm.org.apache.hadoop.fs.Path(staged), dst):
                 raise RuntimeError(
                     f"parquet_batch_sink: rename {name} -> {dst} failed"
                 )
-            i += 1
         fs.delete(spath, True)
         # ...THEN drop dead attempts of this (epoch, lineage),
         # RECURSIVELY: a replay may land rows in different partition
@@ -512,13 +503,9 @@ def parquet_batch_sink(
         # batch's offsets were not committed) converges — never a
         # window with committed rows missing
         marker = f"-{token}-"
-        dead = [
-            fpath
-            for fpath, name in _iter_table_files(fs, jvm)
-            if name.startswith(prefix) and marker not in name
-        ]  # materialize before deleting: never mutate under the iterator
-        for fpath in dead:
-            fs.delete(fpath, False)
+        for fpath, name in _table_files(spark):
+            if name.startswith(prefix) and marker not in name:
+                fs.delete(jvm.org.apache.hadoop.fs.Path(fpath), False)
         _commit_epoch_state(fs, jvm, epoch_id)
 
     def sink(batch_df: DataFrame, epoch_id: int | None = None) -> None:

@@ -77,16 +77,18 @@ def _fanout(
     reference data_persistance.py:41,55). Sinks declaring a second
     parameter receive the epoch id (replay-dedup key). ``auditor``
     (a ``plans.audit.StreamAuditor``) gates each micro-batch's inner
-    plan against the scale-killer rules, warn-once per rule."""
+    plan against the scale-killer rules, warn-once per rule. The
+    emptiness probe runs on the persisted batch, so it never executes
+    the lineage (a stateful job's state stage included) a second time."""
     epoch_aware = [(sink, _wants_epoch(sink)) for sink in sinks]
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if auditor is not None:
-            auditor.check(batch_df)
         batch_df.persist()
         try:
+            if batch_df.isEmpty():
+                return
+            if auditor is not None:
+                auditor.check(batch_df)
             for sink, wants_epoch in epoch_aware:
                 if wants_epoch:
                     sink(batch_df, epoch_id)

@@ -51,3 +51,65 @@ def test_json_corrupt_line_permissive(spark, tmp_path):
     rows = back.collect()
     assert len(rows) == 2  # corrupt line kept as all-null row (PERMISSIVE)
     assert sorted([r.id for r in rows], key=lambda x: (x is None, x)) == [1, None]
+
+
+def _jobs_of(spark, group: str, fn):
+    """fn() under its own job group; returns (result, job ids launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_schema_without_a_job(spark, tmp_path):
+    """The second load_table of an unchanged table reuses the first
+    read's inferred schema: same schema and rows, no Spark job."""
+    from iot_sensor_data_pipeline_spark.sources.tables import load_table
+
+    spark.createDataFrame(ROWS, SCHEMA).write.parquet(str(tmp_path / "t.parquet"))
+    first, jobs1 = _jobs_of(spark, "schema-first", lambda: load_table(spark, str(tmp_path), "t"))
+    again, jobs2 = _jobs_of(spark, "schema-again", lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs1  # the first read infers the schema with a footer job
+    assert jobs2 == []
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_load_table_sees_a_rewritten_table(spark, tmp_path):
+    """A table rewritten at the same path with an added column is
+    re-inferred: the cached schema is keyed on the file set."""
+    from iot_sensor_data_pipeline_spark.sources.tables import load_table
+
+    path = str(tmp_path / "t.parquet")
+    df = spark.createDataFrame(ROWS, SCHEMA)
+    df.write.parquet(path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "name", "score"]
+    df.withColumn("extra", F.col("id") * 2).write.mode("overwrite").parquet(path)
+    back = load_table(spark, str(tmp_path), "t")
+    assert back.columns == ["id", "name", "score", "extra"]
+    assert sorted(r.extra for r in back.collect()) == [2, 4, 6]
+
+
+def test_load_table_reinfers_when_an_inference_conf_changes(spark, tmp_path):
+    """Toggling spark.sql.parquet.binaryAsString between two reads of
+    an unchanged table re-infers the schema (a plain BINARY column,
+    written without Spark's schema metadata)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iot_sensor_data_pipeline_spark.sources.tables import load_table
+
+    pq.write_table(pa.table({"b": pa.array([b"xy"], pa.binary())}), str(tmp_path / "t.parquet"))
+    conf = "spark.sql.parquet.binaryAsString"
+    try:
+        spark.conf.set(conf, "false")
+        assert load_table(spark, str(tmp_path), "t").dtypes == [("b", "binary")]
+        spark.conf.set(conf, "true")
+        back = load_table(spark, str(tmp_path), "t")
+        assert back.dtypes == [("b", "string")]
+        assert back.collect()[0].b == "xy"
+    finally:
+        spark.conf.unset(conf)

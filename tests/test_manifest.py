@@ -533,6 +533,40 @@ def test_optimize_table_in_place(spark, tmp_path):
     assert optimize_table(spark, path, 1 << 30, manifest_cols=["k"])["status"] == "noop"
 
 
+def test_optimize_unmatched_rows_raise_before_swap(spark, tmp_path, monkeypatch):
+    """A plan whose file names cannot match ``input_file_name()`` (here:
+    scheme-less paths) fails the rewrite itself: the table's files and
+    rows are unchanged, no journal is written, and recovery reclaims
+    the partial staging."""
+    from iot_sensor_data_pipeline_spark.sources import manifest
+    from iot_sensor_data_pipeline_spark.sources.manifest import (
+        optimize_table,
+        recover_optimize,
+    )
+
+    path = str(tmp_path / "opt_unmatched")
+    for i in range(3):
+        spark.range(i * 100, (i + 1) * 100).select(
+            F.col("id").alias("k")
+        ).coalesce(1).write.mode("append").parquet(path)
+    files_before = sorted(manifest._list_parquet_files(spark, path))
+    real_plan = manifest.plan_compaction
+    monkeypatch.setattr(
+        manifest, "plan_compaction",
+        lambda *a, **kw: real_plan(*a, **kw).withColumn(
+            "file", F.regexp_replace("file", "^file:", "")
+        ),
+    )
+    with pytest.raises(Exception, match="did not match the plan's file list"):
+        optimize_table(spark, path, target_bytes=1 << 30)
+    monkeypatch.undo()
+    assert sorted(manifest._list_parquet_files(spark, path)) == files_before
+    assert spark.read.parquet(path).count() == 300
+    assert not os.path.exists(os.path.join(path, "_optimize_journal.json"))
+    assert recover_optimize(spark, path) == "clean"
+    assert not [f for f in os.listdir(path) if f.startswith(".compact_")]
+
+
 def test_optimize_table_clustered_variant(spark, tmp_path):
     from iot_sensor_data_pipeline_spark.sources.manifest import (
         footer_stats,

@@ -3,6 +3,9 @@ promises must be visible in the executed plans, not just intended."""
 
 from __future__ import annotations
 
+import ast
+import os
+
 import pytest
 
 from iot_sensor_data_pipeline_spark.plans import EXTENDED_REGISTRY, REGISTRY
@@ -313,3 +316,37 @@ def test_heavy_hitters_fuzzy_plan_shape(spark):
     assert "MapInPandas" in plan  # the MG candidate sketch
     assert "LeftSemi" in plan  # exact recount restricted to candidates
     assert "CartesianProduct" not in plan
+
+
+def _lake_bench_queries() -> tuple[str, ...]:
+    """``perfbench/lake.py:QUERIES``, read as a literal (importing the
+    benchmark module would pull in its harness)."""
+    src = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "perfbench", "lake.py")
+    with open(src) as fh:
+        tree = ast.parse(fh.read())
+    return next(
+        ast.literal_eval(node.value) for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "QUERIES" for t in node.targets)
+    )
+
+
+def test_lake_bench_queries_rebuild_without_jobs(spark, sf_dir):
+    """Building each benchmark lake query a second time over unchanged
+    tables launches no Spark job: query construction stays lazy, and
+    each table's parquet schema is inferred once per file set
+    (``sources.tables``)."""
+    names = _lake_bench_queries()
+    assert len(names) == 6
+    sc = spark.sparkContext
+    for name in names:
+        fn = (REGISTRY.get(name) or EXTENDED_REGISTRY[name]).fn
+        fn(spark, sf_dir)
+        group = f"rebuild:{name}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name

@@ -161,6 +161,42 @@ def test_epoch_aware_sink_receives_epoch_id(spark, stream_dirs):
         q.stop()
 
 
+def test_fanout_evaluates_each_row_once_per_batch(spark, stream_dirs):
+    """The fan-out's emptiness probe reads the persisted batch: every
+    input row runs through the batch's lineage exactly once per
+    micro-batch, probe and sink together. The UDF sits in a filter, so
+    the probe's column pruning cannot drop it (a stateful job's state
+    stage cannot be pruned either). Each evaluation appends one byte to
+    a file: an accumulator loses the updates of a task cut short by the
+    probe's LIMIT 1."""
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.streaming.jobs import _start
+
+    src, chk, tmp = stream_dirs
+    evals = tmp / "evals"
+    evals.write_text("")
+    evals_path = str(evals)
+
+    @F.udf("long")
+    def counted(v):
+        with open(evals_path, "a") as fh:
+            fh.write("x")
+        return len(v)
+
+    got: list = []
+    df = spark.readStream.text(str(src)).where(counted("value") > 0)
+    q = _start(df, [lambda b: got.extend(b.collect())], chk)
+    try:
+        for i in range(2):
+            write_batch(src, f"b{i}.txt", [f"row-{i}-{j}" for j in range(20)])
+            q.processAllAvailable()
+            assert len(got) == 20 * (i + 1)
+            assert len(evals.read_text()) == 20 * (i + 1)
+    finally:
+        q.stop()
+
+
 def test_streaming_batch_share_transform(spark, stream_dirs):
     """The SAME detect_alerts/ingest pipeline runs in batch mode with
     identical results — unified API, zero code duplication."""
