@@ -4,8 +4,9 @@ The whole engine in one run, no external services:
 
 1. synthesize a sensor fleet's readings (sources/synthetic.py),
 2. stream them (file source, micro-batches) through the three
-   standard jobs — persistence, rule-engine alerts, windowed
-   aggregation — into partitioned parquet + a console notifier,
+   standard jobs — persistence and rule-engine alerts as one query,
+   windowed aggregation as a second — into partitioned parquet + a
+   console notifier,
 3. run a few registry queries against the driver testdata.
 
 The reference needs Kafka + Postgres + SMTP + 4 processes for step 2
@@ -43,7 +44,9 @@ def main() -> None:
         )
         (src / f"{batch}.json").write_text("\n".join(r.value for r in wire.collect()))
 
-    # -- 2. the three standard jobs, one source read each, parquet sinks
+    # -- 2. the three standard jobs as two queries: persistence and
+    # alerts share one source read and parse, the aggregator reads its
+    # own; parquet sinks
     notifications: list = []
     with Pipeline() as p:
         chk = str(tmp / "chk")
@@ -55,12 +58,12 @@ def main() -> None:
             readings_sinks=[
                 parquet_batch_sink(
                     str(tmp / "lake" / "readings"),
-                    checkpoint=f"{chk}/persistence",
+                    checkpoint=f"{chk}/ingest",
                 )
             ],
             alerts_sinks=[
                 parquet_batch_sink(
-                    str(tmp / "lake" / "alerts"), checkpoint=f"{chk}/alerts"
+                    str(tmp / "lake" / "alerts"), checkpoint=f"{chk}/ingest"
                 ),
                 notification_sink(lambda subj, body: notifications.append(subj)),
             ],

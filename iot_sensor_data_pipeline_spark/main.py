@@ -70,8 +70,9 @@ def main() -> None:
     spark = get_spark("iot_pipeline")
 
     alerts_sinks: list = list(_jdbc_sinks("alerts"))
-    # Kafka alert fan-out happens in the SAME foreachBatch as JDBC —
-    # one source subscription, unlike the reference's second stream
+    # Kafka alert fan-out happens in the SAME foreachBatch as JDBC and
+    # as the readings persistence — one source subscription and one
+    # parse, unlike the reference's separate streams
     alerts_sinks.append(
         lambda df: kafka_batch_sink(bootstrap, alert_topic)(alert_wire_frame(df))
     )

@@ -51,7 +51,7 @@ from __future__ import annotations
 import datetime as _dt
 from collections.abc import Iterator, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -112,50 +112,38 @@ def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
 _LIST_THREADS = 16
 
 
-def _walk_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) for every data file, via a level-synchronized BFS
-    that descends ONLY into k=v partition directories — never into
-    metadata/staging subtrees ('_manifest', '_bloom_*', '.compact_*'):
-    a blanket recursive listFiles would iterate those lazily and throw
-    when a concurrent maintenance commit prunes a version directory
-    mid-iteration (and would waste listing calls on files the filter
-    drops anyway). Sizes ride along from the same listStatus entries,
-    so consumers that need them (table_health) never pay a per-file
-    getFileStatus round-trip on top. Levels with more than one
-    directory list concurrently on a bounded thread pool (up to
-    ``_LIST_THREADS`` in-flight listStatus RPCs — the deep/wide
-    hive-layout case); a vanished directory (concurrent
-    compaction/retire) contributes nothing, same as the serial walk
-    did. Output is sorted, so ordering is identical to the serial
-    walk regardless of completion order."""
+def _walk_status(fs, root, descend=None, strict: bool = False) -> list:
+    """Hadoop ``FileStatus`` of every file under ``root``, via a
+    level-synchronized BFS of ``listStatus`` calls — the one recursive
+    listing of this package (a recursive ``listFiles`` iterates lazily,
+    loads per-file block locations, and throws when a concurrent
+    maintenance commit prunes a directory mid-iteration). ``descend``
+    (a predicate over a directory's ``FileStatus``; None = every
+    directory) picks the subdirectories to enter. Levels with more
+    than one directory list concurrently on a bounded thread pool (up
+    to ``_LIST_THREADS`` in-flight listStatus RPCs — the deep/wide
+    hive-layout case). A directory that vanishes mid-walk (concurrent
+    compaction/retire) contributes nothing, or raises with
+    ``strict=True`` — the age fences' reading: a subtree that changes
+    under the walk is live, not an old orphan. Unordered."""
     from concurrent.futures import ThreadPoolExecutor
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        raise ValueError(f"no parquet files under {path}")
-
-    def list_one(d) -> tuple[list[tuple[str, int]], list]:
-        files: list[tuple[str, int]] = []
-        dirs: list = []
+    def list_one(d) -> tuple[list, list]:
         try:
             entries = fs.listStatus(d)
-        except Exception:  # noqa: BLE001 — partition dir vanished
-            # mid-walk: its files are gone, which every consumer
-            # already treats conservatively
-            return files, dirs
-        for st in entries:
-            name = st.getPath().getName()
-            if st.isFile() and is_data_file(name):
-                files.append((st.getPath().toString(), int(st.getLen())))
-            elif (st.isDirectory() and "=" in name
-                  and not name.startswith((".", "_"))):
-                dirs.append(st.getPath())
+        except Exception:  # noqa: BLE001 — directory vanished mid-walk
+            if strict:
+                raise
+            return [], []
+        files = [st for st in entries if st.isFile()]
+        dirs = [
+            st.getPath() for st in entries
+            if st.isDirectory() and (descend is None or descend(st))
+        ]
         return files, dirs
 
-    out: list[tuple[str, int]] = []
-    level = [jpath]
+    out: list = []
+    level = [root]
     pool: ThreadPoolExecutor | None = None
     try:
         while level:
@@ -172,7 +160,45 @@ def _walk_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     finally:
         if pool is not None:
             pool.shutdown(wait=False)
-    return sorted(out)
+    return out
+
+
+def _is_partition_dir(st) -> bool:
+    name = st.getPath().getName()
+    return "=" in name and not name.startswith((".", "_"))
+
+
+def _walk_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(path, bytes) for every data file, name-sorted, via
+    :func:`_walk_status` descending ONLY into k=v partition
+    directories — never into metadata/staging subtrees ('_manifest',
+    '_bloom_*', '.compact_*'), whose files the filter would drop
+    anyway. Sizes ride along from the same listStatus entries, so
+    consumers that need them (table_health) never pay a per-file
+    getFileStatus round-trip on top."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        raise ValueError(f"no parquet files under {path}")
+    return sorted(
+        (st.getPath().toString(), int(st.getLen()))
+        for st in _walk_status(fs, jpath, _is_partition_dir)
+        if is_data_file(st.getPath().getName())
+    )
+
+
+def _newest_mtime_ms(fs, root) -> int | None:
+    """Newest file modification time (epoch ms) anywhere under
+    ``root`` (0 for an empty subtree), or None when the subtree
+    changed under the walk — the age fences read that as live."""
+    try:
+        return max(
+            (st.getModificationTime() for st in _walk_status(fs, root, strict=True)),
+            default=0,
+        )
+    except Exception:  # noqa: BLE001 — vanished mid-walk: actively mutated
+        return None
 
 
 def _to_num(v) -> float | None:
@@ -432,16 +458,8 @@ def _commit_version_in(
     gc_cutoff_ms = (_time.time() - _STAGING_GC_AGE_SECONDS) * 1000.0
 
     def _subtree_quiet(p) -> bool:
-        newest_mtime = 0
-        it = fs.listFiles(p, True)
-        try:
-            while it.hasNext():
-                newest_mtime = max(
-                    newest_mtime, it.next().getModificationTime()
-                )
-        except Exception:  # noqa: BLE001 — vanished mid-walk: actively
-            return False  # mutated, definitely not an old orphan
-        return newest_mtime <= gc_cutoff_ms
+        newest_mtime = _newest_mtime_ms(fs, p)
+        return newest_mtime is not None and newest_mtime <= gc_cutoff_ms
 
     for st in fs.listStatus(root):
         name = st.getPath().getName()
@@ -668,7 +686,7 @@ def plan_compaction(
     min_bin_files: int = 2,
     exclude: Sequence[str] = (),
     exclude_fn=None,
-) -> DataFrame:
+) -> list[Row]:
     """Small-file compaction plan — the maintenance half of the
     lakehouse OPTIMIZE loop, and the one planner :func:`optimize_table`
     acts on. Streaming/incremental writers (every foreachBatch sink in
@@ -690,9 +708,9 @@ def plan_compaction(
     raises before anything is planned: a rewrite would silently migrate
     the odd files' rows across partition levels.
 
-    Returns one row per file: ``(file, size, action, bin)`` where
+    Returns one ``Row(file, size, action, bin)`` per file, where
     ``action`` is 'keep' or 'compact' and ``bin`` numbers the rewrite
-    groups (NULL for keeps). A bin can exceed ``target_bytes`` by at
+    groups (None for keeps). A bin can exceed ``target_bytes`` by at
     most one straddling file — the greedy cumsum split, same answer on
     any engine (the python mirror in tests pins it). Bins holding fewer
     than ``min_bin_files`` files are downgraded to 'keep' (rewriting a
@@ -703,9 +721,10 @@ def plan_compaction(
 
     Scale note: the plan is FILE-METADATA-grain (one row per file from
     one listing the driver already holds — no footer or data reads), so
-    the cumsum split runs as PLAIN PYTHON over that list and the
-    returned DataFrame is a local relation: zero Spark jobs, zero
-    shuffles, and no window for maintenance logs to warn about. A
+    the cumsum split runs as PLAIN PYTHON over that list and the plan
+    stays a Python list: zero Spark jobs, zero shuffles, and no Python
+    worker (a ``createDataFrame`` over the list would cost a job with
+    a worker on every collect). A
     million-file table plans in driver milliseconds.
     """
     if target_bytes < 1:
@@ -747,18 +766,16 @@ def plan_compaction(
     by_dir: dict[str, list[tuple[str, int]]] = {}
     for f, s in files:  # name-sorted, so each dir's files stay in order
         by_dir.setdefault(dir_of[f], []).append((f, s))
-    rows: list[tuple[str, int, str, int | None]] = []
+    rows: list[Row] = []
     next_bin = 0
     for dir_files in by_dir.values():
         packed = _pack_bins(dir_files, target_bytes, min_bin_files)
         rows.extend(
-            (f, s, a, None if b is None else b + next_bin)
+            Row(file=f, size=s, action=a, bin=None if b is None else b + next_bin)
             for f, s, a, b in packed
         )
         next_bin += 1 + max((b for *_, b in packed if b is not None), default=-1)
-    return spark.createDataFrame(
-        rows, "file string, size long, action string, bin long"
-    )
+    return rows
 
 
 def _pack_bins(
@@ -1250,6 +1267,7 @@ def optimize_table(
     not leave the indexes permanently ignorant of the c-files the
     forward-recovery just confirmed (the refresh is itself a no-op when
     nothing changed)."""
+    import json
     import uuid
 
     from pyspark.sql.types import StringType, StructField, StructType
@@ -1274,7 +1292,7 @@ def optimize_table(
 
     plan = plan_compaction(
         spark, path, target_bytes, min_bin_files, exclude, exclude_fn
-    ).collect()  # a local relation: no Spark job
+    )
     bin_of = {r.file: r.bin for r in plan if r.action == "compact"}
     base = fs.makeQualified(root).toString().rstrip("/")
     retire_rels = [f[len(base):].strip("/") for f in bin_of]
@@ -1338,9 +1356,13 @@ def optimize_table(
         # routing column is reserved-named, NOT 'file': a user column
         # called 'file' must survive the rewrite untouched
         canon = lambda c: F.regexp_replace(c, r"^file:/+", "file:///")  # noqa: E731
-        bin_map = spark.createDataFrame(
-            list(bin_of.items()), "file string, __bin long"
-        )
+        # the plan rides into the JVM as one JSON literal: a
+        # createDataFrame over the Python list would be an RDD that
+        # needs a Python worker to broadcast
+        bin_map = spark.range(1).select(F.inline(F.from_json(
+            F.lit(json.dumps([{"file": f, "__bin": b} for f, b in bin_of.items()])),
+            "array<struct<file:string,__bin:bigint>>",
+        )))
         # an unrouted row fails the write itself (raise_error under
         # when, the apply_cdc discipline — no validation pass), before
         # the swap, so no journal is written; recover_optimize reclaims
@@ -1450,14 +1472,8 @@ def vacuum_table(
         # partition subdir exists while files keep landing below — the
         # age fence must read the NEWEST mtime anywhere in the subtree
         # or a long-running in-flight batch could be reclaimed
-        newest = 0
-        it = fs.listFiles(p, True)
-        try:
-            while it.hasNext():
-                newest = max(newest, it.next().getModificationTime())
-        except Exception:  # noqa: BLE001 — vanished mid-walk: actively
-            return False  # mutated, definitely not an old orphan
-        return newest <= cutoff_ms
+        newest = _newest_mtime_ms(fs, p)
+        return newest is not None and newest <= cutoff_ms
 
     n_sink = n_tmp = n_meta = 0
     for st in fs.listStatus(root):

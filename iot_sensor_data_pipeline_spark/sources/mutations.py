@@ -347,13 +347,8 @@ def _prune_empty_staged(spark: SparkSession, staging: str) -> None:
     shard. One tiny job over the STAGED files only (per-file row
     presence via ``input_file_name``); files absent from the grouped
     result are the empties."""
-    fs, root, jvm = _fs_for(spark, staging)
-    staged = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        if st.isFile() and st.getPath().getName().endswith(".parquet"):
-            staged.append(st.getPath().toString())
+    fs, _root, jvm = _fs_for(spark, staging)
+    staged = [f for f, _sz in _walk_data_files(spark, staging)]
     if not staged:
         return
     nonempty = {

@@ -148,22 +148,14 @@ def read_compacted_through(spark, path: str, checkpoint: str) -> int | None:
 
 
 def _iter_lineage_files(spark, path: str, lineage: str):
-    """(hadoop Path, epoch) for every committed e<N>-<lineage>- data
-    file under the table, RECURSIVE (partition subdirs included)."""
-    from iot_sensor_data_pipeline_spark.sources.manifest import is_data_file
+    """(path, epoch) for every committed e<N>-<lineage>- data file
+    under the table, partition subdirs included (the table walk)."""
+    from iot_sensor_data_pipeline_spark.sources.manifest import _walk_data_files
 
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if not is_data_file(name):
-            continue
-        epoch = parse_epoch_name(name, lineage)
+    for f, _sz in _walk_data_files(spark, path):
+        epoch = parse_epoch_name(f.rpartition("/")[2], lineage)
         if epoch is not None:
-            yield st.getPath(), epoch
+            yield f, epoch
 
 
 def list_sink_epochs(spark, path: str, checkpoint: str) -> list[int]:
@@ -187,7 +179,7 @@ def newest_epoch_files(spark, path: str, checkpoint: str) -> list[str]:
     an epoch committed between the two listings. Empty when the lineage
     never wrote."""
     lineage = _lineage_of(checkpoint)
-    pairs = [(p.getName(), e) for p, e in _iter_lineage_files(spark, path, lineage)]
+    pairs = [(f.rpartition("/")[2], e) for f, e in _iter_lineage_files(spark, path, lineage)]
     if not pairs:
         return []
     newest = max(e for _, e in pairs)
@@ -252,9 +244,7 @@ def read_sink_as_of(
     # ONE recursive listing, reused for the selection, the existence
     # check, and the schema probe — on an object store the listing is
     # the dominant metadata cost and must not triple
-    all_files = [
-        (p.toString(), e) for p, e in _iter_lineage_files(spark, path, lineage)
-    ]
+    all_files = list(_iter_lineage_files(spark, path, lineage))
     if not all_files:
         raise ValueError(
             f"no committed files for lineage of {checkpoint!r} under {path}"

@@ -3,24 +3,30 @@ its anti-patterns fixed (SURVEY.md §4 table, last row):
 
 reference                               | this engine
 ----------------------------------------|------------------------------
-two .start()s on one lineage = double   | ONE stream -> foreachBatch ->
-Kafka read (alert_detector.py:246-262)  | persist -> N sinks
+persistence + alerts: two subscriptions | ONE query -> foreachBatch ->
+parsing the same JSON twice; a second   | persist -> readings sinks,
+Kafka read (alert_detector.py:246-262)  | then detect_alerts -> alerts sinks
 no checkpoint on 3 of 4 queries         | checkpoint REQUIRED (ctor arg)
-batch_df.count() twice per batch        | isEmpty() + cached count once
+batch_df.count() twice per batch        | persist, then isEmpty() once
 startingOffsets=latest + no checkpoint  | checkpointed offsets, earliest
   -> data loss on restart               |   on first run
 no maxOffsetsPerTrigger -> unbounded    | rate limit parameter
   first batch                           |
 
 Each job takes a source DataFrame (kafka/file/rate/memory — anything
-``readStream`` produces) so the logic is testable without Kafka, and a
-list of batch sinks (callables DataFrame -> None) fanned out from one
-``foreachBatch``.
+``readStream`` produces) so the logic is testable without Kafka, and
+lists of batch sinks (callables DataFrame -> None) fanned out from one
+``foreachBatch`` over one persisted micro-batch.
 
 The jobs:
 
-- ``start_persistence``, ``start_alerts``, ``start_aggregator`` — the
-  reference's three jobs (``Pipeline.start_standard_jobs`` wires them);
+- ``start_ingest`` — the reference's persistence and alert jobs as one
+  query: one parse per micro-batch feeds the readings sinks, then the
+  stateless rule engine's alerts feed the alerts sinks, under one
+  epoch;
+- ``start_aggregator`` — the reference's windowed aggregation, its own
+  query because its window state lives in the streaming plan
+  (``Pipeline.start_standard_jobs`` wires both);
 - ``start_cdc_apply_bucketed`` — a change stream maintained into a
   bucketed snapshot, with its readers, ``validate_cdc_snapshot`` and
   ``rebucket_cdc_snapshot``; ``start_cdc_apply`` is its unbucketed
@@ -68,32 +74,72 @@ def _wants_epoch(sink: BatchSink) -> bool:
         return False
 
 
+def _call(sink: BatchSink, wants_epoch: bool, df: DataFrame, epoch_id: int) -> None:
+    if wants_epoch:
+        sink(df, epoch_id)
+    else:
+        sink(df)
+
+
+#: one output of a fan-out: a per-batch derivation of the batch's
+#: readings (None: the readings themselves) and the sinks it feeds
+Route = tuple[Callable[[DataFrame], DataFrame] | None, Sequence[BatchSink]]
+
+
 def _fanout(
-    sinks: Sequence[BatchSink], auditor=None
+    routes: Sequence[Route],
+    auditor=None,
+    dead_letter: BatchSink | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """One foreachBatch callback feeding every sink from ONE computed
-    batch. The batch is persisted so N sinks don't recompute the
-    lineage N times (the reference recomputed per count() call,
-    reference data_persistance.py:41,55). Sinks declaring a second
-    parameter receive the epoch id (replay-dedup key). ``auditor``
-    (a ``plans.audit.StreamAuditor``) gates each micro-batch's inner
-    plan against the scale-killer rules, warn-once per rule. The
-    emptiness probe runs on the persisted batch, so it never executes
-    the lineage (a stateful job's state stage included) a second time."""
-    epoch_aware = [(sink, _wants_epoch(sink)) for sink in sinks]
+    batch. The batch is persisted first, so neither the emptiness
+    probes nor the N sinks recompute the lineage (the reference
+    recomputed per count() call, reference data_persistance.py:41,55),
+    and a stateful job's state stage runs and commits once.
+
+    ``routes`` are (derive, sinks) pairs fed in order with the same
+    epoch id: ``derive`` (stateless, run on the persisted batch) maps
+    the batch's readings to what its sinks store — ``None`` passes them
+    through. A derived output that comes out empty skips its sinks.
+    Sinks declaring a second parameter receive the epoch id
+    (replay-dedup key).
+
+    ``dead_letter`` expects a corrupt-capturing parse
+    (``parse_json_column(..., corrupt_col=CORRUPT_COL)``): the persisted
+    batch splits into clean readings, which feed the routes, and
+    quarantined raw rows, which go to ``dead_letter`` once per batch.
+    Clean rows are never blocked or dropped by bad wire data — the
+    capture semantics the reference lacks (it silently nulls,
+    data_persistance.py:76).
+
+    ``auditor`` (a ``plans.audit.StreamAuditor``) gates each route's
+    plan — post-derivation, the plan its sinks actually consume —
+    against the scale-killer rules, warn-once per rule."""
+    routes = [
+        (derive, [(sink, _wants_epoch(sink)) for sink in sinks])
+        for derive, sinks in routes
+        if sinks
+    ]
+    dl_wants_epoch = dead_letter is not None and _wants_epoch(dead_letter)
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
             if batch_df.isEmpty():
                 return
-            if auditor is not None:
-                auditor.check(batch_df)
-            for sink, wants_epoch in epoch_aware:
-                if wants_epoch:
-                    sink(batch_df, epoch_id)
-                else:
-                    sink(batch_df)
+            readings = batch_df
+            if dead_letter is not None:
+                readings, dead = split_quarantine(batch_df)
+                if not dead.isEmpty():
+                    _call(dead_letter, dl_wants_epoch, dead, epoch_id)
+            for derive, sinks in routes:
+                out = readings if derive is None else derive(readings)
+                if auditor is not None:
+                    auditor.check(out)
+                if out is not batch_df and out.isEmpty():
+                    continue
+                for sink, wants_epoch in sinks:
+                    _call(sink, wants_epoch, out, epoch_id)
         finally:
             batch_df.unpersist()
 
@@ -111,7 +157,9 @@ def _start(
     auditor=None,
 ) -> StreamingQuery:
     writer = (
-        df.writeStream.foreachBatch(foreach_batch or _fanout(sinks, auditor=auditor))
+        df.writeStream.foreachBatch(
+            foreach_batch or _fanout([(None, sinks)], auditor=auditor)
+        )
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
     )
@@ -122,128 +170,61 @@ def _start(
     return writer.start()
 
 
-def _fanout_quarantined(
-    sinks: Sequence[BatchSink],
-    dead_letter: BatchSink,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    auditor=None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch callback over a corrupt-capturing parsed stream:
-    one persisted batch split into clean readings (optionally run
-    through ``transform`` ONCE, then fanned to ``sinks``) and
-    quarantined raw rows (to ``dead_letter``). Clean rows are never
-    blocked or dropped by bad wire data — the capture semantics the
-    reference lacks (it silently nulls, data_persistance.py:76)."""
-    epoch_aware = [(sink, _wants_epoch(sink)) for sink in sinks]
-    dl_wants_epoch = _wants_epoch(dead_letter)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.persist()
-        try:
-            clean, dead = split_quarantine(batch_df)
-            if not dead.isEmpty():
-                if dl_wants_epoch:
-                    dead_letter(dead, epoch_id)
-                else:
-                    dead_letter(dead)
-            if transform is not None:
-                clean = transform(clean)
-            if auditor is not None:
-                # post-transform: the plan sinks actually consume
-                # (covers a transform-introduced scale-killer too)
-                auditor.check(clean)
-            if not clean.isEmpty():
-                for sink, wants_epoch in epoch_aware:
-                    if wants_epoch:
-                        sink(clean, epoch_id)
-                    else:
-                        sink(clean)
-        finally:
-            batch_df.unpersist()
-
-    return write
-
-
-def start_persistence(
+def start_ingest(
     raw: DataFrame,
-    sinks: Sequence[BatchSink],
-    checkpoint: str,
-    dead_letter: BatchSink | None = None,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    **kw,
-) -> StreamingQuery:
-    """Job 1 (reference data_persistance.py): raw JSON -> flat readings
-    -> sinks.
-
-    With ``dead_letter`` set, malformed wire records are captured and
-    routed there (raw text + quarantine timestamp) instead of flowing
-    through as all-null readings — see sources.json_ingest.
-
-    ``transform`` runs ONCE per batch on the parsed (clean) readings
-    before the sink fan-out — the pre-storage scrub hook (e.g.
-    ``operators.curation.pii_redact`` over free-text columns, unit
-    conversions, column pruning). Stateless transforms only: it runs
-    inside foreachBatch, so streaming state would not carry across
-    batches.
-    """
-    if dead_letter is None:
-        parsed = ingest_readings(raw)
-        if transform is not None:
-            parsed = transform(parsed)
-        return _start(parsed, sinks, checkpoint, **kw)
-    parsed = parse_json_column(
-        raw, "value", SENSOR_READING_SCHEMA, corrupt_col=CORRUPT_COL
-    )
-    auditor = kw.pop("auditor", None)
-    return _start(
-        parsed,
-        sinks,
-        checkpoint,
-        foreach_batch=_fanout_quarantined(
-            sinks, dead_letter, transform=transform, auditor=auditor
-        ),
-        **kw,
-    )
-
-
-def start_alerts(
-    raw: DataFrame,
-    sinks: Sequence[BatchSink],
+    readings_sinks: Sequence[BatchSink],
+    alerts_sinks: Sequence[BatchSink],
     checkpoint: str,
     rules=SENSOR_RULES,
     dead_letter: BatchSink | None = None,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+    auditor=None,
     **kw,
 ) -> StreamingQuery:
-    """Job 2 (reference alert_detector.py): rule-engine alerts, ONE
-    source read fanned to all sinks (JDBC + Kafka in production) —
-    fixing the reference's double Kafka subscription (SURVEY.md §3.3).
+    """Jobs 1 and 2 (reference data_persistance.py, alert_detector.py)
+    as ONE query: raw JSON -> flat readings, parsed once per
+    micro-batch, persisted, and fed to ``readings_sinks``; then the
+    rule engine's ``detect_alerts(readings, rules)`` over the same
+    persisted batch feeds ``alerts_sinks`` (JDBC + Kafka + SMTP in
+    production) with the same epoch id. The reference subscribes to
+    the topic twice and parses every record twice (SURVEY.md §3.3);
+    the rule engine is stateless, so its detection runs inside the
+    fan-out. One offset log covers both sink sets: a batch that fails
+    between them replays whole, and the epoch-aware sinks
+    (``parquet_batch_sink(checkpoint=...)``, the idempotent JDBC
+    append) converge to exactly one copy of each reading and alert.
 
-    ``dead_letter`` captures malformed wire records like
-    :func:`start_persistence` (the rule engine is stateless, so
-    detection moves into the per-batch fan-out unchanged). The
-    aggregator job has no such option: its windowed aggregation is a
-    CONTINUOUS stateful operator that must live in the streaming plan,
-    and a second dead-letter query would mean a second source
-    subscription — the exact anti-pattern this module removes. Corrupt
-    rows there parse to all-null keys and fall out of the aggregates.
+    With ``dead_letter`` set, malformed wire records are captured and
+    routed there once per batch (raw text + quarantine timestamp)
+    instead of flowing through as all-null readings — see
+    sources.json_ingest.
+
+    ``transform`` is the pre-storage scrub hook for the READINGS sinks
+    only (e.g. ``operators.curation.pii_redact`` over free-text
+    columns, unit conversions, column pruning); alerts are detected on
+    the parsed readings before it. Stateless transforms only: it runs
+    inside foreachBatch, so streaming state would not carry across
+    batches.
+
+    The aggregator stays its own query (:func:`start_aggregator`): its
+    windowed aggregation is a CONTINUOUS stateful operator that must
+    live in the streaming plan.
     """
     if dead_letter is None:
-        return _start(detect_alerts(ingest_readings(raw), rules), sinks, checkpoint, **kw)
-    parsed = parse_json_column(
-        raw, "value", SENSOR_READING_SCHEMA, corrupt_col=CORRUPT_COL
-    )
-    auditor = kw.pop("auditor", None)
+        parsed = ingest_readings(raw)
+    else:
+        parsed = parse_json_column(
+            raw, "value", SENSOR_READING_SCHEMA, corrupt_col=CORRUPT_COL
+        )
     return _start(
         parsed,
-        sinks,
+        (),
         checkpoint,
-        foreach_batch=_fanout_quarantined(
-            sinks,
-            dead_letter,
-            transform=lambda df: detect_alerts(df, rules),
+        foreach_batch=_fanout(
+            [(transform, readings_sinks),
+             (lambda df: detect_alerts(df, rules), alerts_sinks)],
             auditor=auditor,
+            dead_letter=dead_letter,
         ),
         **kw,
     )

@@ -7,7 +7,7 @@ every job is a StreamingQuery handle; the orchestrator owns a single
 poll loop, propagates the first failure, and stops everything cleanly.
 
 The notification sink (the reference's SMTP consumer) is just another
-foreachBatch sink on the alert stream — in-process, checkpointed,
+alerts sink of the ingest query's foreachBatch — in-process, checkpointed,
 restart-safe — not an out-of-band Kafka consumer.
 """
 
@@ -23,8 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 from iot_sensor_data_pipeline_spark.streaming.jobs import (
     BatchSink,
     start_aggregator,
-    start_alerts,
-    start_persistence,
+    start_ingest,
 )
 
 
@@ -201,6 +200,33 @@ class TableSpec:
     feed_consumers: tuple[str, ...] = ()
 
 
+def _refuse_split_checkpoints(spark, checkpoint_root: str) -> None:
+    """Raise when ``<checkpoint_root>/persistence`` or ``/alerts`` — the
+    checkpoints of the earlier layout, where persistence and alerts
+    were separate queries — holds an offsets log."""
+    jvm = spark._jvm
+    old = [f"{checkpoint_root}/persistence", f"{checkpoint_root}/alerts"]
+    live = []
+    for d in old:
+        offsets = jvm.org.apache.hadoop.fs.Path(f"{d}/offsets")
+        fs = offsets.getFileSystem(spark._jsc.hadoopConfiguration())
+        if fs.exists(offsets) and any(
+            st.getPath().getName().isdigit() for st in fs.listStatus(offsets)
+        ):
+            live.append(d)
+    if live:
+        raise RuntimeError(
+            f"start_standard_jobs: {old[0]} and {old[1]} are the "
+            "checkpoints of separate persistence and alerts queries, and "
+            f"{' and '.join(live)} holds an offsets log. Both jobs now "
+            f"run as one query checkpointed at {checkpoint_root}/ingest; "
+            "the old logs may stand at different offsets, so resuming "
+            "either would lose or repeat alerts. Drain and stop the old "
+            "queries, then move both directories away (or start from a "
+            "new checkpoint_root)."
+        )
+
+
 class Pipeline:
     """Owns the engine's streaming queries; context-manager lifecycle."""
 
@@ -317,22 +343,47 @@ class Pipeline:
         agg_sinks: Sequence[BatchSink],
         **agg_kw,
     ) -> "Pipeline":
-        """Start the reference's three jobs. ``raw_factory`` builds one
-        source DataFrame per job — separate checkpointed subscriptions,
-        each reading the source exactly once for ALL its sinks."""
-        self.add(
-            "persistence",
-            start_persistence(raw_factory(), readings_sinks, f"{checkpoint_root}/persistence"),
+        """Start the reference's three jobs as two checkpointed
+        subscriptions, each reading the source once per micro-batch for
+        ALL its sinks. ``raw_factory`` builds one source DataFrame per
+        query:
+
+        - ``<checkpoint_root>/ingest``: persistence and alerts
+          (:func:`~.jobs.start_ingest`) — one parse per micro-batch
+          feeds ``readings_sinks``, then ``alerts_sinks``, under one
+          epoch. ``self.queries`` maps both ``"persistence"`` and
+          ``"alerts"`` to this one query;
+        - ``<checkpoint_root>/aggregator``: the windowed aggregation,
+          whose state lives in its own streaming plan.
+
+        Refuses, before any query starts, to run over the earlier
+        layout's ``persistence/`` or ``alerts/`` checkpoint when either
+        holds an offsets log: the two logs may stand at different
+        offsets, so resuming either one as the merged query would lose
+        or repeat alerts."""
+        raw = raw_factory()
+        _refuse_split_checkpoints(raw.sparkSession, checkpoint_root)
+        ingest = start_ingest(
+            raw, readings_sinks, alerts_sinks, f"{checkpoint_root}/ingest"
         )
-        self.add(
-            "alerts",
-            start_alerts(raw_factory(), alerts_sinks, f"{checkpoint_root}/alerts"),
-        )
+        self.add("persistence", ingest)
+        self.add("alerts", ingest)
         self.add(
             "aggregator",
             start_aggregator(raw_factory(), agg_sinks, f"{checkpoint_root}/aggregator", **agg_kw),
         )
         return self
+
+    def _distinct(self) -> dict[str, StreamingQuery]:
+        """One entry per distinct query, keyed by the names it is
+        registered under, joined with '+' (``"persistence+alerts"``
+        for the shared ingest query)."""
+        names: dict[int, list[str]] = {}
+        queries: dict[int, StreamingQuery] = {}
+        for name, q in self.queries.items():
+            names.setdefault(id(q), []).append(name)
+            queries[id(q)] = q
+        return {"+".join(names[k]): q for k, q in queries.items()}
 
     def await_all(
         self,
@@ -359,8 +410,9 @@ class Pipeline:
         maintaining = spark is not None and maintenance_policy is not None
         next_tick = time.monotonic() if maintaining else None
         while True:
-            active = [q for q in self.queries.values() if q.isActive]
-            for name, q in self.queries.items():
+            distinct = self._distinct()
+            active = [q for q in distinct.values() if q.isActive]
+            for name, q in distinct.items():
                 if not q.isActive and q.exception() is not None:
                     self.stop_all()
                     raise RuntimeError(f"query '{name}' failed") from q.exception()
@@ -933,11 +985,11 @@ class Pipeline:
 
     def process_all_available(self) -> None:
         """Drain every query synchronously (test/batch-drive mode)."""
-        for q in self.queries.values():
+        for q in self._distinct().values():
             q.processAllAvailable()
 
     def stop_all(self) -> None:
-        for q in self.queries.values():
+        for q in self._distinct().values():
             if q.isActive:
                 q.stop()
 

@@ -158,7 +158,7 @@ def test_stream_auditor_flags_bnlj_batch_and_warns_once(spark, tmp_path):
     import time
 
     from iot_sensor_data_pipeline_spark.plans.audit import StreamAuditor
-    from iot_sensor_data_pipeline_spark.streaming.jobs import start_persistence
+    from iot_sensor_data_pipeline_spark.streaming.jobs import start_ingest
 
     src = tmp_path / "src"
     src.mkdir()
@@ -191,9 +191,10 @@ def test_stream_auditor_flags_bnlj_batch_and_warns_once(spark, tmp_path):
     auditor = StreamAuditor(name="bnlj-stream")
     collected: list = []
     raw = spark.readStream.text(str(src))
-    q = start_persistence(
+    q = start_ingest(
         raw,
-        sinks=[lambda df: collected.extend(df.collect())],
+        readings_sinks=[lambda df: collected.extend(df.collect())],
+        alerts_sinks=[],
         checkpoint=str(tmp_path / "chk"),
         dead_letter=lambda df: None,
         transform=transform,
@@ -217,7 +218,7 @@ def test_stream_auditor_flags_bnlj_batch_and_warns_once(spark, tmp_path):
 
 def test_stream_auditor_silent_on_clean_stream(spark, tmp_path):
     from iot_sensor_data_pipeline_spark.plans.audit import StreamAuditor, blocking
-    from iot_sensor_data_pipeline_spark.streaming.jobs import start_persistence
+    from iot_sensor_data_pipeline_spark.streaming.jobs import start_ingest
 
     import json
     import time
@@ -242,9 +243,10 @@ def test_stream_auditor_silent_on_clean_stream(spark, tmp_path):
 
     auditor = StreamAuditor()
     got: list = []
-    q = start_persistence(
+    q = start_ingest(
         spark.readStream.text(str(src)),
-        sinks=[lambda df: got.extend(df.collect())],
+        readings_sinks=[lambda df: got.extend(df.collect())],
+        alerts_sinks=[],
         checkpoint=str(tmp_path / "chk"),
         auditor=auditor,
     )

@@ -223,7 +223,7 @@ def test_plan_compaction_bins_and_python_mirror(spark, fragmented):
     files = _sizes(spark, fragmented)
     big = max(s for _, s in files)
     target = big  # the big file is kept, every tiny file is packable
-    plan = {r.file: r for r in plan_compaction(spark, fragmented, target).collect()}
+    plan = {r.file: r for r in plan_compaction(spark, fragmented, target)}
     assert len(plan) == len(files)
 
     # python mirror of the cumsum split over name order
@@ -256,10 +256,32 @@ def test_plan_compaction_respects_min_bin_files(spark, fragmented):
     files = _sizes(spark, fragmented)
     tiny = sorted(s for _, s in files)[:-1]
     plan = plan_compaction(spark, fragmented, max(tiny) + 1, min_bin_files=3)
-    assert plan.where(F.col("action") == "compact").count() == 0
+    assert len(plan) == len(files)
+    assert [r for r in plan if r.action == "compact"] == []
 
     with pytest.raises(ValueError, match="target_bytes"):
         plan_compaction(spark, fragmented, 0)
+
+
+def test_compaction_planning_launches_no_job(spark, fragmented):
+    """The plan is built in Python from the table's listing: planning (a
+    no-op OPTIMIZE's whole work, and plan_compaction itself) launches
+    no Spark job. Counted by the status tracker per job group."""
+    from iot_sensor_data_pipeline_spark.sources.manifest import (
+        optimize_table,
+        plan_compaction,
+    )
+    from tests.test_file_sources import _jobs_of
+
+    target = max(s for _, s in _sizes(spark, fragmented))
+    # min_bin_files above the file count: every bin downgrades to keep
+    res, jobs = _jobs_of(spark, "optimize-noop", lambda: optimize_table(
+        spark, fragmented, target, min_bin_files=100))
+    assert res["status"] == "noop"
+    assert jobs == []
+    plan, jobs = _jobs_of(spark, "plan", lambda: plan_compaction(spark, fragmented, target))
+    assert jobs == []
+    assert [r.action for r in plan].count("compact") == 12
 
 
 def test_compact_files_preserves_rows_and_reduces_files(spark, fragmented, tmp_path):
@@ -538,6 +560,10 @@ def test_optimize_unmatched_rows_raise_before_swap(spark, tmp_path, monkeypatch)
     scheme-less paths) fails the rewrite itself: the table's files and
     rows are unchanged, no journal is written, and recovery reclaims
     the partial staging."""
+    import re
+
+    from pyspark.sql import Row
+
     from iot_sensor_data_pipeline_spark.sources import manifest
     from iot_sensor_data_pipeline_spark.sources.manifest import (
         optimize_table,
@@ -553,9 +579,10 @@ def test_optimize_unmatched_rows_raise_before_swap(spark, tmp_path, monkeypatch)
     real_plan = manifest.plan_compaction
     monkeypatch.setattr(
         manifest, "plan_compaction",
-        lambda *a, **kw: real_plan(*a, **kw).withColumn(
-            "file", F.regexp_replace("file", "^file:", "")
-        ),
+        lambda *a, **kw: [
+            Row(**{**r.asDict(), "file": re.sub("^file:", "", r.file)})
+            for r in real_plan(*a, **kw)
+        ],
     )
     with pytest.raises(Exception, match="did not match the plan's file list"):
         optimize_table(spark, path, target_bytes=1 << 30)

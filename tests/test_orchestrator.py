@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from iot_sensor_data_pipeline_spark.sources.sinks import (
@@ -34,12 +35,56 @@ def test_pipeline_three_jobs_end_to_end(spark, tmp_path):
         write_batch(src, "b2.json", [reading_json("05:00", 23.0)])  # advance watermark
         p.process_all_available()
         assert len(p.queries) == 3 and all(q.isActive for q in p.queries.values())
+        # persistence and alerts share one query: two streams, not three
+        assert p.queries["persistence"] is p.queries["alerts"]
+        ids = {q.id for q in p.queries.values()}
+        assert len(ids) == 2 and ids <= {q.id for q in spark.streams.active}
         p.stop_all()
         p.await_all(poll_seconds=0.1, timeout=30)
 
     assert len(readings) == 3              # every reading persisted
     assert [a.alert_type for a in alerts] == ["temperature_critical"]
     assert any(r.n == 2 for r in aggs)      # first window finalized
+
+
+class _FakeQuery:
+    """Counts the StreamingQuery calls the Pipeline makes."""
+
+    def __init__(self, error=None) -> None:
+        self.isActive = error is None
+        self.error = error
+        self.drains = self.stops = 0
+
+    def processAllAvailable(self) -> None:
+        self.drains += 1
+
+    def stop(self) -> None:
+        self.stops += 1
+        self.isActive = False
+
+    def exception(self):
+        return self.error
+
+
+def test_pipeline_acts_once_per_distinct_query():
+    """A query registered under two names is drained, stopped and
+    polled once, and a failure names it by both names."""
+    shared, other = _FakeQuery(), _FakeQuery()
+    p = Pipeline()
+    p.add("persistence", shared)
+    p.add("alerts", shared)
+    p.add("aggregator", other)
+    p.process_all_available()
+    assert (shared.drains, other.drains) == (1, 1)
+    p.stop_all()
+    assert (shared.stops, other.stops) == (1, 1)
+
+    failed = _FakeQuery(error=ValueError("boom"))
+    p = Pipeline()
+    p.add("persistence", failed)
+    p.add("alerts", failed)
+    with pytest.raises(RuntimeError, match="query 'persistence\\+alerts' failed"):
+        p.await_all(poll_seconds=0.01, timeout=5)
 
 
 def test_partitioned_parquet_roundtrip_and_pruning(spark, tmp_path):

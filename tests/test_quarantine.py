@@ -18,7 +18,7 @@ from iot_sensor_data_pipeline_spark.sources.json_ingest import (
     parse_json_column,
     split_quarantine,
 )
-from iot_sensor_data_pipeline_spark.streaming.jobs import start_persistence
+from iot_sensor_data_pipeline_spark.streaming.jobs import start_ingest
 
 GOOD = json.dumps(
     {
@@ -76,7 +76,7 @@ def test_default_parse_unchanged(spark):
 
 
 def test_streaming_dead_letter_sink(spark, tmp_path):
-    """End-to-end: start_persistence(dead_letter=...) splits a mixed
+    """End-to-end: start_ingest(dead_letter=...) splits a mixed
     micro-batch — readings reach the sinks, corrupt rows reach the
     dead-letter sink, counts add up."""
     src = tmp_path / "src"
@@ -84,9 +84,10 @@ def test_streaming_dead_letter_sink(spark, tmp_path):
     readings: list = []
     dead_rows: list = []
 
-    q = start_persistence(
+    q = start_ingest(
         spark.readStream.text(str(src)),
-        sinks=[lambda df: readings.extend(df.collect())],
+        readings_sinks=[lambda df: readings.extend(df.collect())],
+        alerts_sinks=[],
         checkpoint=str(tmp_path / "chk"),
         dead_letter=lambda df: dead_rows.extend(df.collect()),
     )
@@ -111,9 +112,10 @@ def test_streaming_without_dead_letter_keeps_reference_semantics(spark, tmp_path
     src.mkdir()
     readings: list = []
 
-    q = start_persistence(
+    q = start_ingest(
         spark.readStream.text(str(src)),
-        sinks=[lambda df: readings.extend(df.collect())],
+        readings_sinks=[lambda df: readings.extend(df.collect())],
+        alerts_sinks=[],
         checkpoint=str(tmp_path / "chk"),
     )
     try:
@@ -133,11 +135,9 @@ def test_streaming_without_dead_letter_keeps_reference_semantics(spark, tmp_path
 
 
 def test_alerts_job_dead_letter_sink(spark, tmp_path):
-    """start_alerts(dead_letter=...): corrupt wire rows quarantine,
-    clean rows still run the rule engine — one source read, the
-    detection transform applied once per batch."""
-    from iot_sensor_data_pipeline_spark.streaming.jobs import start_alerts
-
+    """start_ingest(dead_letter=...) with alerts sinks: corrupt wire
+    rows quarantine, clean rows still run the rule engine — one source
+    read, the detection applied once per batch."""
     src = tmp_path / "src"
     src.mkdir()
     alerts: list = []
@@ -145,9 +145,10 @@ def test_alerts_job_dead_letter_sink(spark, tmp_path):
 
     hot = json.loads(GOOD)
     hot["value"] = 31.0  # temperature_critical (> 30)
-    q = start_alerts(
+    q = start_ingest(
         spark.readStream.text(str(src)),
-        sinks=[lambda df: alerts.extend(df.collect())],
+        readings_sinks=[],
+        alerts_sinks=[lambda df: alerts.extend(df.collect())],
         checkpoint=str(tmp_path / "chk"),
         dead_letter=lambda df: dead_rows.extend(df.collect()),
     )
@@ -168,7 +169,9 @@ def test_alerts_job_dead_letter_sink(spark, tmp_path):
 def test_persistence_transform_hook_both_paths(spark, tmp_path):
     """The pre-storage scrub hook runs on clean rows in BOTH persistence
     paths (plain and quarantined) — e.g. masking device identifiers
-    before they hit storage, the same shape as a curation PII scrub."""
+    before they hit storage, the same shape as a curation PII scrub. It
+    feeds the readings sinks only: alerts are detected on the parsed
+    readings before it."""
     from pyspark.sql import functions as F
 
     def scrub(df):
@@ -176,23 +179,28 @@ def test_persistence_transform_hook_both_paths(spark, tmp_path):
             "sensor_id", F.regexp_replace("sensor_id", r"\d", "#")
         )
 
+    hot = json.loads(GOOD)
+    hot["value"] = 31.0  # temperature_critical (> 30)
     for variant, kw in [("plain", {}), ("quarantined", {"dead_letter": lambda df: None})]:
         src = tmp_path / f"src_{variant}"
         src.mkdir()
         rows: list = []
-        q = start_persistence(
+        alerts: list = []
+        q = start_ingest(
             spark.readStream.text(str(src)),
-            sinks=[lambda df: rows.extend(df.collect())],
+            readings_sinks=[lambda df: rows.extend(df.collect())],
+            alerts_sinks=[lambda df: alerts.extend(df.collect())],
             checkpoint=str(tmp_path / f"chk_{variant}"),
             transform=scrub,
             **kw,
         )
         try:
             tmp = src / ".b1.tmp"
-            tmp.write_text(GOOD + "\n")
+            tmp.write_text(GOOD + "\n" + json.dumps(hot) + "\n")
             tmp.rename(src / "b1.json")
             time.sleep(0.05)
             q.processAllAvailable()
         finally:
             q.stop()
-        assert [r.sensor_id for r in rows] == ["A_#_###_temperature"], variant
+        assert [r.sensor_id for r in rows] == ["A_#_###_temperature"] * 2, variant
+        assert [a.sensor_id for a in alerts] == ["A_1_100_temperature"], variant

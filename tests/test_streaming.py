@@ -19,7 +19,7 @@ import pytest
 from iot_sensor_data_pipeline_spark.sources.json_ingest import ingest_readings
 from iot_sensor_data_pipeline_spark.streaming.jobs import (
     start_aggregator,
-    start_alerts,
+    start_ingest,
 )
 
 T0 = "2026-01-01T00:00:"
@@ -112,9 +112,10 @@ def test_alert_stream_single_read_multi_sink(spark, stream_dirs):
     sink_b: list = []
 
     raw = spark.readStream.text(str(src))
-    q = start_alerts(
+    q = start_ingest(
         raw,
-        sinks=[
+        readings_sinks=[],
+        alerts_sinks=[
             lambda df: sink_a.extend(df.collect()),
             lambda df: sink_b.extend(r.alert_type for r in df.collect()),
         ],
@@ -144,9 +145,10 @@ def test_epoch_aware_sink_receives_epoch_id(spark, stream_dirs):
         epochs.append((epoch_id, df.count()))
 
     raw = spark.readStream.text(str(src))
-    q = start_alerts(
+    q = start_ingest(
         raw,
-        sinks=[lambda df: plain.extend(df.collect()), epoch_sink],
+        readings_sinks=[],
+        alerts_sinks=[lambda df: plain.extend(df.collect()), epoch_sink],
         checkpoint=chk,
     )
     try:
@@ -193,6 +195,48 @@ def test_fanout_evaluates_each_row_once_per_batch(spark, stream_dirs):
             q.processAllAvailable()
             assert len(got) == 20 * (i + 1)
             assert len(evals.read_text()) == 20 * (i + 1)
+    finally:
+        q.stop()
+
+
+def test_dead_letter_fanout_evaluates_each_row_once_per_batch(spark, stream_dirs):
+    """The quarantining fan-out persists the parsed batch before its
+    first emptiness probe: every wire row, corrupt ones included, runs
+    through the source lineage exactly once per micro-batch while the
+    batch feeds the dead-letter, readings and alerts sinks. Counted as
+    in :func:`test_fanout_evaluates_each_row_once_per_batch`."""
+    from pyspark.sql import functions as F
+
+    src, chk, tmp = stream_dirs
+    evals = tmp / "evals"
+    evals.write_text("")
+    evals_path = str(evals)
+
+    @F.udf("long")
+    def counted(v):
+        with open(evals_path, "a") as fh:
+            fh.write("x")
+        return len(v)
+
+    readings: list = []
+    alerts: list = []
+    dead: list = []
+    raw = spark.readStream.text(str(src)).where(counted("value") > 0)
+    q = start_ingest(
+        raw,
+        readings_sinks=[lambda b: readings.extend(b.collect())],
+        alerts_sinks=[lambda b: alerts.extend(b.collect())],
+        checkpoint=chk,
+        dead_letter=lambda b: dead.extend(b.collect()),
+    )
+    try:
+        for i in range(2):
+            lines = [reading_json(f"0{i}:{j:02d}", 31.0 if j == 0 else 22.0) for j in range(20)]
+            write_batch(src, f"b{i}.json", [*lines, '{"sensor_id": "broken",'])
+            q.processAllAvailable()
+            assert len(readings) == 20 * (i + 1)
+            assert len(alerts) == i + 1 and len(dead) == i + 1
+            assert len(evals.read_text()) == 21 * (i + 1)
     finally:
         q.stop()
 
