@@ -97,7 +97,7 @@ def snapshot_diff(
 
     At scale this is ONE full-outer shuffle join on the keys —
     co-located (zero shuffle) when both snapshot versions are stored
-    bucketed on the keys (operators/bucketing.py), which is exactly how
+    bucketed on the keys (``DataFrameWriter.bucketBy``), which is exactly how
     a recurring diff job should persist them.
     """
     keys = list(keys)

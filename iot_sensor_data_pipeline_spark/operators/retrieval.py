@@ -760,13 +760,15 @@ def baseline_search_index(
     ``create_agg_view`` discipline: an insert-only feed version
     committing mid-build would re-apply as silent double postings — a
     moved cursor deletes the suspect index and raises)."""
-    from iot_sensor_data_pipeline_spark.sources.manifest import _fs_for
-    from iot_sensor_data_pipeline_spark.sources.mutations import (
+    from iot_sensor_data_pipeline_spark.sources.manifest import (
+        _fs_for,
         _layout,
         _read_files,
         _read_schema_for,
-        change_feed_versions,
         recover_optimize,
+    )
+    from iot_sensor_data_pipeline_spark.sources.mutations import (
+        change_feed_versions,
     )
 
     if kind not in ("tf", "positional"):

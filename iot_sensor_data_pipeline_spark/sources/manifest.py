@@ -51,8 +51,9 @@ from __future__ import annotations
 import datetime as _dt
 from collections.abc import Iterator, Mapping, Sequence
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 __all__ = [
     "footer_stats",
@@ -701,12 +702,8 @@ def plan_compaction(
     :func:`_walk_data_files` listing, and bins are packed WITHIN each
     partition directory (rows never migrate across partitions, so
     partition pruning is untouched). Bin ids are unique across
-    directories; a flat table is the single directory ``""``. Every
-    listed file must carry the SAME partition-column key sequence — a
-    mixed-depth or reordered layout (``dt=a/f.parquet`` next to
-    ``dt=b/hour=1/g.parquet``, or root files next to ``k=v`` dirs)
-    raises before anything is planned: a rewrite would silently migrate
-    the odd files' rows across partition levels.
+    directories; a flat table is the single directory ``""``. A mixed
+    layout raises before anything is planned (:func:`_partition_cols`).
 
     Returns one ``Row(file, size, action, bin)`` per file, where
     ``action`` is 'keep' or 'compact' and ``bin`` numbers the rewrite
@@ -730,25 +727,10 @@ def plan_compaction(
     if target_bytes < 1:
         raise ValueError(f"plan_compaction: target_bytes must be positive, got {target_bytes}")
     files = _walk_data_files(spark, path)
-    fs, root, _ = _fs_for(spark, path)
-    base = fs.makeQualified(root).toString().rstrip("/")
-    dir_of = {f: f[len(base):].strip("/").rpartition("/")[0] for f, _ in files}
-    if files:
-        first = files[0][0]
-        part_cols = _partition_keys(dir_of[first])
-        offenders = [
-            f[len(base):].strip("/") for f, _ in files
-            if _partition_keys(dir_of[f]) != part_cols
-        ]
-        if offenders:
-            raise ValueError(
-                f"plan_compaction: mixed partition layouts under {path} — "
-                f"expected the partition keys {part_cols} of "
-                f"{first[len(base):].strip('/')}, but these differ: "
-                f"{offenders[:10]}{' ...' if len(offenders) > 10 else ''}. "
-                "A rewrite would migrate their rows across partition "
-                "levels; fix the layout first."
-            )
+    base = _table_base(spark, path)
+    rel_of = {f: _rel_to(f, base) for f, _ in files}
+    _partition_cols(path, list(rel_of.values()))
+    dir_of = {f: rel.rpartition("/")[0] for f, rel in rel_of.items()}
     # `exclude` (base names) removes files from candidacy entirely. The
     # epoch-sink use: a LIVE stream's newest epoch files
     # (sinks.newest_epoch_files) must not be retired while their
@@ -810,39 +792,6 @@ def _pack_bins(
 # OPTIMIZE in place: plan -> rewrite -> journaled publish-then-retire
 # swap -> index refresh.
 # ---------------------------------------------------------------------------
-
-
-def _guard_lossy_rewrite_schema(
-    spark: SparkSession, pinned_fields: Sequence[str],
-    candidate_paths: Sequence[str], who: str,
-) -> None:
-    """Fail-before-write on lossy schema evolution (ADVICE r11): every
-    compaction rewrite reads its candidates under ONE pinned schema
-    (the first candidate's footer), so a schema-evolved candidate
-    carrying a data column that schema lacks would have that column's
-    values silently DROPPED from the compacted output — data loss
-    dressed as maintenance. The union footer schema across all
-    candidates (mergeSchema — Spark reads the footers distributed) is
-    checked against the pinned field set and any extra column raises
-    before a byte is written, the same discipline as the planner's
-    mixed-layout guard. The reverse direction (a candidate MISSING a
-    pinned column) is non-lossy — its rows read as NULL, exactly what a union-schema
-    reader of the originals sees — and incompatible TYPE evolution
-    fails inside mergeSchema itself, also before the write."""
-    merged = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*candidate_paths).schema
-    )
-    pinned = set(pinned_fields)
-    extra = [f for f in merged.fieldNames() if f not in pinned]
-    if extra:
-        raise ValueError(
-            f"{who}: candidate files carry data columns {extra} that the "
-            "pinned rewrite schema lacks (schema-evolved table) — "
-            "compacting would silently drop their values. Exclude the "
-            "evolved files or rewrite the table under a unified schema "
-            "first."
-        )
 
 
 def _journal_path(path: str, jvm):
@@ -961,7 +910,7 @@ def recover_optimize(spark: SparkSession, path: str) -> str:
         # staging may already be gone when the crash hit between the
         # feed commit and the journal delete — idempotent)
         if journal_cdf is not None:
-            _commit_cdf_staging(fs, jvm, path, journal_cdf)
+            _commit_cdf_staging(spark, path, journal_cdf)
         fs.delete(jp, False)
         return "forward"
     for p in adds:
@@ -1035,24 +984,22 @@ def _commit_journal(
 CHANGES_DIR = "_changes"
 
 
-def _commit_cdf_staging(fs, jvm, path: str, staging_name: str) -> int | None:
+def _commit_cdf_staging(
+    spark: SparkSession, path: str, staging_name: str
+) -> int | None:
     """Publish a staged change-feed dir as the next committed version
     under ``<path>/_changes/v<N>``; returns N, or None when the staging
     dir no longer exists (already committed by a prior attempt —
     idempotent under forward-recovery re-runs)."""
+    fs, _root, jvm = _fs_for(spark, path)
     src = jvm.org.apache.hadoop.fs.Path(
         f"{path}/{CHANGES_DIR}/{staging_name}"
     )
     if not fs.exists(src):
         return None
     # single-maintenance-writer: max+1 cannot race another allocator
-    out = []
-    root = jvm.org.apache.hadoop.fs.Path(f"{path}/{CHANGES_DIR}")
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    nxt = (max(out) + 1) if out else 1
+    out = _versions_in(spark, f"{path}/{CHANGES_DIR}")
+    nxt = (out[-1] + 1) if out else 1
     dst = jvm.org.apache.hadoop.fs.Path(f"{path}/{CHANGES_DIR}/v{nxt}")
     if not fs.rename(src, dst):
         raise RuntimeError(f"change-feed commit failed: {src} -> {dst}")
@@ -1144,11 +1091,11 @@ def _journaled_swap(
     jvm = spark._jvm
     fs, _root, _ = _fs_for(spark, path)
     spath = jvm.org.apache.hadoop.fs.Path(staging)
-    staging_base = fs.makeQualified(spath).toString().rstrip("/")
+    staging_base = _table_base(spark, staging)
     staged = [f for f, _sz in _walk_data_files(spark, staging)]
     add_rels = []
     for i, f in enumerate(staged):
-        rel_dir = f.rpartition("/")[0][len(staging_base):].strip("/")
+        rel_dir = _rel_to(f, staging_base).rpartition("/")[0]
         name = f"c{token}-{i}.parquet"
         add_rels.append(f"{rel_dir}/{name}" if rel_dir else name)
     # (1) journal first: the swap is re-derivable from names alone
@@ -1172,9 +1119,171 @@ def _journaled_swap(
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}"), False)
     _write_epoch_watermarks(fs, jvm, path, _retired_epoch_watermarks(retire_rels))
     if cdf_staging is not None:
-        _commit_cdf_staging(fs, jvm, path, cdf_staging)
+        _commit_cdf_staging(spark, path, cdf_staging)
     fs.delete(jp, False)
     return len(add_rels)
+
+
+# ---------------------------------------------------------------------------
+# The copy-on-write rewrite, shared by OPTIMIZE and the row-level
+# mutations (``sources.mutations``): one layout check, one union-schema
+# read, one routed write into staging, then :func:`_journaled_swap` and
+# one index refresh.
+# ---------------------------------------------------------------------------
+
+#: reserved routing column of every copy-on-write rewrite: the source
+#: file (mutations) or the bin id (OPTIMIZE) each row is routed by
+_SRC = "__src_file"
+
+
+def _canon(name: str) -> str:
+    """One spelling per local file: listStatus renders 'file:/x',
+    ``input_file_name()`` 'file:///x' — the same file."""
+    import re
+
+    return re.sub(r"^file:/+", "file:///", name)
+
+
+def _canon_expr(c: Column) -> Column:
+    """:func:`_canon` as a column expression."""
+    return F.regexp_replace(c, r"^file:/+", "file:///")
+
+
+def _table_base(spark: SparkSession, path: str) -> str:
+    """The table root as the listing spells it (fully qualified)."""
+    fs, root, _ = _fs_for(spark, path)
+    return fs.makeQualified(root).toString().rstrip("/")
+
+
+def _rel_to(f: str, base: str) -> str:
+    """Path of the listed file ``f`` relative to the table root ``base``."""
+    return _canon(f)[len(_canon(base)):].strip("/")
+
+
+def _partition_cols(path: str, rels: Sequence[str]) -> list[str]:
+    """The partition-column keys every table-relative file path in
+    ``rels`` shares (``[]`` for a flat table) — the one layout check of
+    every rewrite. A mixed-depth or reordered layout (``dt=a/f.parquet``
+    next to ``dt=b/hour=1/g.parquet``, or root files next to ``k=v``
+    dirs) raises before anything is read: a rewrite would silently
+    migrate the odd files' rows across partition levels."""
+    if not rels:
+        return []
+    part_cols = _partition_keys(rels[0].rpartition("/")[0])
+    offenders = sorted(
+        r for r in rels if _partition_keys(r.rpartition("/")[0]) != part_cols
+    )
+    if offenders:
+        raise ValueError(
+            f"mixed partition layouts under {path} — expected the "
+            f"partition keys {part_cols} of {rels[0]}, but these differ: "
+            f"{offenders[:10]}{' ...' if len(offenders) > 10 else ''}. A "
+            "rewrite would migrate their rows across partition levels; "
+            "fix the layout first."
+        )
+    return part_cols
+
+
+def _layout(
+    spark: SparkSession, path: str
+) -> tuple[list[str], list[str], dict[str, str]]:
+    """(partition columns, canon file URIs, {canon file URI:
+    partition-relative path}) for the table, from one listing — flat
+    tables return ``part_cols == []``; a mixed layout raises
+    (:func:`_partition_cols`)."""
+    files = [f for f, _sz in _walk_data_files(spark, path)]
+    if not files:
+        raise ValueError(f"no parquet data files under {path}")
+    base = _table_base(spark, path)
+    rel_of = {_canon(f): _rel_to(f, base) for f in files}
+    part_cols = _partition_cols(path, list(rel_of.values()))
+    return part_cols, sorted(rel_of), rel_of
+
+
+def _read_schema_for(
+    spark: SparkSession, path: str, candidates: Sequence[str],
+    part_cols: Sequence[str],
+) -> tuple[StructType, StructType]:
+    """(data schema = the mergeSchema UNION over the candidate files,
+    read schema = that plus the partition columns typed STRING).
+
+    The union is what makes every rewrite safe on a schema-evolved
+    table: a candidate missing a newer column reads it as NULL (exactly
+    what a union-schema reader of the original sees), and no
+    candidate's column can be dropped, because every column is in the
+    union by construction. Rewritten files upgrade to the union schema
+    — the standard lakehouse CoW behavior — and incompatible TYPE
+    evolution fails inside mergeSchema, before anything is written.
+
+    Partition values must round-trip VERBATIM: with type inference, a
+    zero-padded dir like ``hour=00`` reads back as long 0 and the
+    write-back targets ``hour=0``. Typing every partition column STRING
+    in this read's explicit schema makes Spark parse the dir values as
+    the literal strings they spell — scoped to this read, unlike the
+    session-wide inference conf. The footer pass is distributed and
+    covers the candidates only."""
+    data_schema = (
+        spark.read.option("mergeSchema", "true").parquet(*candidates).schema
+    )
+    if _SRC in data_schema.fieldNames():
+        raise ValueError(
+            f"the table has a column named '{_SRC}' (the rewrite's "
+            "routing column) — rename it first"
+        )
+    overlap = [c for c in part_cols if c in data_schema.fieldNames()]
+    if overlap:
+        raise ValueError(
+            f"partition columns {overlap} also exist INSIDE the data "
+            "files — an ambiguous layout this writer refuses to rewrite"
+        )
+    read_schema = StructType(
+        list(data_schema.fields)
+        + [StructField(c, StringType()) for c in part_cols]
+    )
+    return data_schema, read_schema
+
+
+def _read_files(
+    spark: SparkSession, path: str, files: Sequence[str],
+    read_schema: StructType,
+) -> DataFrame:
+    """``files`` under ``read_schema``; ``basePath`` keeps the partition
+    columns on the explicit file list."""
+    return (
+        spark.read.option("basePath", path)
+        .schema(read_schema)
+        .parquet(*files)
+    )
+
+
+def _write_routed(
+    df: DataFrame, n_tasks: int, staging: str, part_cols: Sequence[str]
+) -> None:
+    """Write the rewrite relation to staging, hash-repartitioned by the
+    ``_SRC`` routing column into ``n_tasks`` output tasks, so the output
+    file count follows the routing groups (the source files a mutation
+    replaces, or OPTIMIZE's bins) rather than the read's split count."""
+    w = df.repartition(n_tasks, F.col(_SRC)).drop(_SRC).write.mode("append")
+    if part_cols:
+        w = w.partitionBy(*part_cols)
+    w.parquet(staging)
+
+
+def _refresh_indexes(
+    spark: SparkSession, path: str,
+    manifest_cols: Sequence[str] | None, bloom_cols: Sequence[str] | None,
+) -> None:
+    """Incremental refresh of the skipping manifest and bloom index
+    after a swap: the new files are footer/bloom-read, the retired ones
+    drop out — never a rebuild, and a no-op when nothing changed."""
+    if manifest_cols:
+        update_manifest(spark, path, list(manifest_cols))
+    if bloom_cols:
+        from iot_sensor_data_pipeline_spark.sources.bloom_index import (
+            update_bloom_index,
+        )
+
+        update_bloom_index(spark, path, list(bloom_cols))
 
 
 def optimize_table(
@@ -1196,14 +1305,15 @@ def optimize_table(
     journal, and refresh the skipping manifest / bloom index so file
     skipping works on the new layout immediately.
 
-    The rewrite is ONE distributed job for every bin in every
-    partition: the candidates are read under one pinned schema (the
-    first candidate's footer, checked by
-    :func:`_guard_lossy_rewrite_schema`) with ``basePath`` so partition
-    values ride along as STRING columns, rows are tagged with their bin
-    via a broadcast join on ``input_file_name()``, hash-repartitioned
-    by bin (each output task receives whole bins), and written
-    ``partitionBy`` back into a staging dir. Two bins hashing into one
+    The rewrite is the mutations' copy-on-write rewrite, ONE
+    distributed job for every bin in every partition: the candidates
+    are read under their mergeSchema union (:func:`_read_schema_for` —
+    no candidate's column can be dropped, and partition values ride
+    along as verbatim STRING columns), rows are tagged with their bin
+    via a broadcast join on ``input_file_name()``, and
+    :func:`_write_routed` hash-repartitions them by bin (each output
+    task receives whole bins) and writes them ``partitionBy`` back into
+    a staging dir. Two bins hashing into one
     task merge into a single larger file — a size wobble, never a
     correctness or placement issue. ``cluster_by`` (flat tables only —
     a partitioned table raises before any write) instead
@@ -1270,35 +1380,21 @@ def optimize_table(
     import json
     import uuid
 
-    from pyspark.sql.types import StringType, StructField, StructType
-
     recovered = recover_optimize(spark, path)
-    fs, root, _ = _fs_for(spark, path)
     exclude_fn = (
         _live_epoch_exclude_fn(spark, path, live_checkpoints, epoch_caps)
         if live_checkpoints or epoch_caps is not None
         else None
     )
-
-    def _refresh_indexes() -> None:
-        if manifest_cols:
-            update_manifest(spark, path, list(manifest_cols))
-        if bloom_cols:
-            from iot_sensor_data_pipeline_spark.sources.bloom_index import (
-                update_bloom_index,
-            )
-
-            update_bloom_index(spark, path, list(bloom_cols))
-
     plan = plan_compaction(
         spark, path, target_bytes, min_bin_files, exclude, exclude_fn
     )
     bin_of = {r.file: r.bin for r in plan if r.action == "compact"}
-    base = fs.makeQualified(root).toString().rstrip("/")
-    retire_rels = [f[len(base):].strip("/") for f in bin_of]
-    # the planner's layout guard gives every file the first one's keys
+    base = _table_base(spark, path)
+    retire_rels = [_rel_to(f, base) for f in bin_of]
+    # the planner's layout check gives every file the first one's keys
     part_cols = (
-        _partition_keys(plan[0].file[len(base):].strip("/").rpartition("/")[0])
+        _partition_keys(_rel_to(plan[0].file, base).rpartition("/")[0])
         if plan else []
     )
     if cluster_by and part_cols:
@@ -1309,36 +1405,15 @@ def optimize_table(
             "every partition dir; compact it without cluster_by"
         )
     if not bin_of:
-        _refresh_indexes()  # heals the crash-after-retire gap (above)
+        # heals the crash-after-retire gap (above)
+        _refresh_indexes(spark, path, manifest_cols, bloom_cols)
         return {"status": "noop", "n_compacted": 0, "n_bins": 0,
                 "n_partitions": 0, "recovered": recovered}
     candidates = list(bin_of)
-    data_schema = spark.read.parquet(candidates[0]).schema
-    if "__src_file" in data_schema.fieldNames():
-        raise ValueError(
-            "optimize_table: the table has a column named '__src_file' "
-            "(the rewrite's routing column) — rename it first"
-        )
-    # the planner's layout guard covers partition KEYS; this covers
-    # DATA columns: a schema-evolved candidate's added column must not
-    # be silently dropped by the first-candidate-pinned read schema
-    _guard_lossy_rewrite_schema(
-        spark, data_schema.fieldNames(), candidates, "optimize_table"
+    _data_schema, read_schema = _read_schema_for(
+        spark, path, candidates, part_cols
     )
-    # partition values must round-trip VERBATIM: with type inference, a
-    # zero-padded dir like hour=00 reads back as long 0 and the
-    # write-back targets hour=0 — a partition the journal's rename
-    # destinations don't contain (and external readers keyed on the
-    # literal dir would lose the rows). An EXPLICIT user schema typing
-    # every partition column as STRING makes Spark parse the dir values
-    # as the literal strings they spell — scoped to THIS read, unlike
-    # toggling the session-wide inference conf (which would silently
-    # retype partition columns for every concurrent reader).
-    read_schema = StructType(
-        list(data_schema.fields)
-        + [StructField(c, StringType()) for c in part_cols]
-    )
-    df = spark.read.option("basePath", path).schema(read_schema).parquet(*candidates)
+    df = _read_files(spark, path, candidates, read_schema)
     token = uuid.uuid4().hex[:8]
     staging = f"{path}/.compact_{token}"
     if cluster_by:
@@ -1351,11 +1426,6 @@ def optimize_table(
             .parquet(staging)
         )
     else:
-        # canonicalize the local-FS scheme: listStatus renders
-        # 'file:/x', input_file_name() 'file:///x' — same file. The
-        # routing column is reserved-named, NOT 'file': a user column
-        # called 'file' must survive the rewrite untouched
-        canon = lambda c: F.regexp_replace(c, r"^file:/+", "file:///")  # noqa: E731
         # the plan rides into the JVM as one JSON literal: a
         # createDataFrame over the Python list would be an RDD that
         # needs a Python worker to broadcast
@@ -1363,41 +1433,34 @@ def optimize_table(
             F.lit(json.dumps([{"file": f, "__bin": b} for f, b in bin_of.items()])),
             "array<struct<file:string,__bin:bigint>>",
         )))
-        # an unrouted row fails the write itself (raise_error under
-        # when, the apply_cdc discipline — no validation pass), before
-        # the swap, so no journal is written; recover_optimize reclaims
-        # the partial staging
+        # the routing column carries the file through the join, then
+        # its bin id into the write. An unrouted row fails the write
+        # itself (raise_error under when, the apply_cdc discipline — no
+        # validation pass), before the swap, so no journal is written;
+        # recover_optimize reclaims the partial staging
         routed = (
-            df.withColumn("__src_file", canon(F.input_file_name()))
+            df.withColumn(_SRC, _canon_expr(F.input_file_name()))
             .join(
                 F.broadcast(
-                    bin_map.select(
-                        canon(F.col("file")).alias("__src_file"), "__bin"
-                    )
+                    bin_map.select(_canon_expr(F.col("file")).alias(_SRC), "__bin")
                 ),
-                "__src_file",
+                _SRC,
                 "left",
             )
-            .withColumn("__bin", F.when(F.col("__bin").isNotNull(), F.col("__bin"))
+            .withColumn(_SRC, F.when(F.col("__bin").isNotNull(), F.col("__bin"))
                         .otherwise(F.raise_error(F.concat(
                             F.lit("optimize_table: input_file_name "),
-                            F.col("__src_file"),
+                            F.col(_SRC),
                             F.lit(" did not match the plan's file list (URI "
                                   "scheme mismatch?) — refusing to write a "
                                   "partial compaction"),
                         ))))
-            .drop("__src_file")
-        )
-        (
-            routed.repartition(len(set(bin_of.values())), "__bin")
             .drop("__bin")
-            .write.mode("append")
-            .partitionBy(*part_cols)
-            .parquet(staging)
         )
+        _write_routed(routed, len(set(bin_of.values())), staging, part_cols)
     n_adds = _journaled_swap(spark, path, staging, retire_rels, token)
     # (5) indexes: incremental refresh absorbs adds + retires
-    _refresh_indexes()
+    _refresh_indexes(spark, path, manifest_cols, bloom_cols)
     return {
         "status": "optimized",
         "n_compacted": len(retire_rels),
@@ -1553,10 +1616,10 @@ def table_health(
     walked = _walk_data_files(spark, path)
     files = [f for f, _sz in walked]
     sizes = dict(walked)  # from the SAME listing — no per-file RPCs
-    base = fs.makeQualified(root).toString().rstrip("/")
+    base = _table_base(spark, path)
     part_dirs = {
-        f[len(base):].strip("/").rsplit("/", 1)[0]
-        for f in files if "/" in f[len(base):].strip("/")
+        rel.rpartition("/")[0] for rel in (_rel_to(f, base) for f in files)
+        if "/" in rel
     }
     out: dict = {
         "n_files": len(files),

@@ -99,14 +99,14 @@ from pyspark.sql.types import StructType
 from iot_sensor_data_pipeline_spark.sources.manifest import (
     _commit_version_in,
     _fs_for,
+    _layout,
+    _read_files,
     _read_json_file,
+    _read_schema_for,
     _versions_in,
 )
 from iot_sensor_data_pipeline_spark.sources.mutations import (
     _OP,
-    _layout,
-    _read_files,
-    _read_schema_for,
     change_feed_versions,
     read_change_feed,
 )

@@ -1,8 +1,12 @@
 """Row-level mutations on parquet lakehouse tables: DELETE, UPDATE,
 MERGE (upsert), and metadata-only partition drops — copy-on-write, the
-way Delta/Iceberg/Hudi CoW tables do it, built on this layer's own
-journaled-swap discipline (``manifest._journaled_swap`` +
-``manifest.recover_optimize``).
+way Delta/Iceberg/Hudi CoW tables do it. The rewrite is the one
+OPTIMIZE uses, from ``sources.manifest``: the layout check
+(``_layout``), the union-schema read (``_read_schema_for`` /
+``_read_files``), the routed write into staging (``_write_routed``),
+the journaled swap (``_journaled_swap`` + ``recover_optimize``) and the
+index refresh (``_refresh_indexes``). This module adds what differs
+per mutation: the probe, the row images and the change feed.
 
 Why this exists: a 100 TB training-data corpus is not append-only in
 practice — GDPR/right-to-be-forgotten deletes, label corrections,
@@ -38,9 +42,9 @@ module gives the parquet tables the lakehouse answer:
 
 Partition columns inside mutation predicates read as the LITERAL
 STRINGS their directory names spell (``dt=2024-01-02`` is the string
-``'2024-01-02'``, ``hour=00`` is ``'00'``) — the same verbatim
-round-trip rule the partitioned OPTIMIZE uses, applied to both the
-probe and the rewrite so the two can never disagree. Whole-partition
+``'2024-01-02'``, ``hour=00`` is ``'00'``) — the shared read's
+verbatim round-trip rule, applied to both the probe and the rewrite so
+the two can never disagree. Whole-partition
 retention deletes should use :func:`drop_partitions` instead: matching
 directories delete as metadata, no data file is read at all.
 
@@ -61,16 +65,26 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from iot_sensor_data_pipeline_spark.sources import bloom_index
 from iot_sensor_data_pipeline_spark.sources.manifest import (
+    _SRC,
     CHANGES_DIR,
+    _canon,
+    _canon_expr,
     _commit_json_file,
     _fs_for,
     _journaled_swap,
+    _layout,
     _live_epoch_exclude_fn,
+    _read_files,
     _read_json_file,
+    _read_schema_for,
+    _refresh_indexes,
     _retired_epoch_watermarks,
+    _versions_in,
     _walk_data_files,
     _write_epoch_watermarks,
+    _write_routed,
     prune_files,
     recover_optimize,
 )
@@ -89,10 +103,6 @@ __all__ = [
     "table_checksum",
     "verify_replica",
 ]
-
-#: reserved routing column for the copy-on-write rewrites (same role
-#: and guard as the OPTIMIZE family's routing column)
-_SRC = "__src_file"
 
 #: change-feed op column: 'delete' | 'update_pre' | 'update_post' | 'insert'
 _OP = "__op"
@@ -118,28 +128,6 @@ def _guard_cdf_schema(read_schema: StructType) -> None:
         )
 
 
-def _canon_expr(c: Column) -> Column:
-    # listStatus renders the local scheme 'file:/x', input_file_name
-    # 'file:///x' — same file (see optimize_table)
-    return F.regexp_replace(c, r"^file:/+", "file:///")
-
-
-def _canon(name: str) -> str:
-    import re
-
-    return re.sub(r"^file:/+", "file:///", name)
-
-
-def _bare(name: str) -> str:
-    """Scheme-free form of a LOCAL path for cross-module file-identity
-    comparison — the bloom index canonicalizes 'file:/x' to '/x' while
-    the walk renders 'file:/x' and input_file_name 'file:///x'; all
-    three are the same file. Non-local schemes pass through verbatim."""
-    import re
-
-    return re.sub(r"^file:/+", "/", name)
-
-
 def _cond_parts(condition) -> tuple[Column, Column]:
     """(match, keep-safe) forms of the mutation predicate.
 
@@ -156,95 +144,6 @@ def _cond_parts(condition) -> tuple[Column, Column]:
         F.expr(condition) if isinstance(condition, str) else condition
     ).cast("boolean")
     return raw, F.coalesce(raw, F.lit(False))
-
-
-def _layout(
-    spark: SparkSession, path: str
-) -> tuple[list[str], list[str], dict[str, str]]:
-    """(partition columns, file URIs, {canon file URI: partition-relative
-    path}) for the table — flat tables return ``part_cols == []``. The
-    same uniform-depth guard as the partitioned OPTIMIZE applies: a
-    mixed layout would migrate rows across partition levels on
-    write-back, so it raises before anything is read."""
-    fs, root, _ = _fs_for(spark, path)
-    base = fs.makeQualified(root).toString().rstrip("/")
-    files = [f for f, _sz in _walk_data_files(spark, path)]
-    if not files:
-        raise ValueError(f"no parquet data files under {path}")
-    rel_of: dict[str, str] = {}
-    for f in files:
-        q = f if "://" in f or f.startswith("file:/") else f"{base}/{f}"
-        rel_of[_canon(q)] = q[len(base):].strip("/") if q.startswith(base) else (
-            _canon(q)[len(_canon(base)):].strip("/")
-        )
-    rels = list(rel_of.values())
-    part_cols = [
-        s.split("=")[0] for s in rels[0].split("/")[:-1] if "=" in s
-    ]
-    offenders = sorted(
-        r for r in rels
-        if [s.split("=")[0] for s in r.split("/")[:-1] if "=" in s] != part_cols
-    )
-    if offenders:
-        raise ValueError(
-            f"mixed partition layouts under {path} — expected every file "
-            f"under {'/'.join(part_cols) or '<flat>'} directories, but "
-            f"these differ: {offenders[:10]}"
-            f"{' ...' if len(offenders) > 10 else ''}. A rewrite would "
-            "migrate rows across partition levels; fix the layout first."
-        )
-    return part_cols, sorted(rel_of), rel_of
-
-
-def _read_schema_for(
-    spark: SparkSession, path: str, candidates: Sequence[str],
-    part_cols: Sequence[str],
-) -> tuple[StructType, StructType]:
-    """(data schema = the mergeSchema UNION over the candidate files,
-    read schema = that plus partition columns typed STRING — the
-    verbatim partition-value round-trip rule of the partitioned
-    OPTIMIZE, applied to mutations).
-
-    The union schema is what makes mutations safe on a schema-evolved
-    table WITHOUT the OPTIMIZE family's fail-before-write guard: a
-    candidate missing a newer column reads it as NULL (exactly what a
-    union-schema reader of the original sees) and no candidate's
-    column can be silently dropped, because every column is in the
-    union by construction. Rewritten files upgrade to the union schema
-    — the standard lakehouse CoW behavior — and incompatible TYPE
-    evolution fails loudly inside mergeSchema before anything is
-    written. The footer pass is distributed and covers candidates
-    only, so index-pruned mutations never pay a whole-table pass."""
-    data_schema = (
-        spark.read.option("mergeSchema", "true").parquet(*candidates).schema
-    )
-    if _SRC in data_schema.fieldNames():
-        raise ValueError(
-            f"the table has a column named '{_SRC}' (the rewrite's "
-            "routing column) — rename it first"
-        )
-    overlap = [c for c in part_cols if c in data_schema.fieldNames()]
-    if overlap:
-        raise ValueError(
-            f"partition columns {overlap} also exist INSIDE the data "
-            "files — an ambiguous layout this writer refuses to rewrite"
-        )
-    read_schema = StructType(
-        list(data_schema.fields)
-        + [StructField(c, StringType()) for c in part_cols]
-    )
-    return data_schema, read_schema
-
-
-def _read_files(
-    spark: SparkSession, path: str, files: Sequence[str],
-    read_schema: StructType,
-) -> DataFrame:
-    return (
-        spark.read.option("basePath", path)
-        .schema(read_schema)
-        .parquet(*files)
-    )
 
 
 def _probe_matches(
@@ -305,38 +204,8 @@ def _narrow_candidates(
     if not prune_predicates:
         return list(files)
     kept, _total = prune_files(spark, path, prune_predicates)
-    kept_bare = {_bare(k) for k in kept}
-    return [f for f in files if _bare(f) in kept_bare]
-
-
-def _refresh_indexes(
-    spark: SparkSession, path: str,
-    manifest_cols: Sequence[str] | None, bloom_cols: Sequence[str] | None,
-) -> None:
-    if manifest_cols:
-        from iot_sensor_data_pipeline_spark.sources.manifest import (
-            update_manifest,
-        )
-
-        update_manifest(spark, path, list(manifest_cols))
-    if bloom_cols:
-        from iot_sensor_data_pipeline_spark.sources.bloom_index import (
-            update_bloom_index,
-        )
-
-        update_bloom_index(spark, path, list(bloom_cols))
-
-
-def _write_routed(
-    df: DataFrame, n_files: int, staging: str, part_cols: Sequence[str]
-) -> None:
-    """Write the rewrite relation to staging, one task per source file
-    (the ``__src_file`` routing column keeps output file count — and
-    size — proportional to the input files being replaced)."""
-    w = df.repartition(n_files, F.col(_SRC)).drop(_SRC).write.mode("append")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.parquet(staging)
+    kept_bare = {bloom_index._canon(k) for k in kept}
+    return [f for f in files if bloom_index._canon(f) in kept_bare]
 
 
 def _prune_empty_staged(spark: SparkSession, staging: str) -> None:
@@ -599,15 +468,14 @@ def merge_into(
     mid-life, and "delete + rewrite the table" is a non-answer at 100
     TB. The new columns take the SOURCE's types; matched-file rewrites
     and inserts carry them, while every untouched file simply lacks
-    them on disk — this module's union-schema readers
-    (:func:`_read_schema_for` mergeSchema) then read the column as NULL
-    there, which is exactly the relational meaning of an additive ALTER
-    TABLE. Nothing in the untouched bulk is read or rewritten. The
-    OPTIMIZE family's lossy-rewrite guard
-    (``manifest._guard_lossy_rewrite_schema``) still refuses a
-    default-footer compaction of the now-mixed-schema table, so the
-    column cannot be silently dropped later. New columns must not
-    collide with the engine's reserved names or the partition columns.
+    them on disk — the copy-on-write rewrite's union-schema read
+    (``manifest._read_schema_for``, mergeSchema) then reads the column
+    as NULL there, which is exactly the relational meaning of an
+    additive ALTER TABLE. Nothing in the untouched bulk is read or
+    rewritten, and a later OPTIMIZE compacts the mixed-schema table
+    through the same union read, so the column cannot be dropped. New
+    columns must not collide with the engine's reserved names or the
+    partition columns.
 
     On a partitioned table
     the partition columns must appear in the source for inserts (their
@@ -721,20 +589,17 @@ def merge_into(
         # ---- candidate narrowing: bloom index on the keys, if present
         candidates = list(files_canon)
         try:
-            from iot_sensor_data_pipeline_spark.sources.bloom_index import (
-                bloom_index_dir,
-                prune_files_bloom,
-            )
-
             fs, _root, jvm = _fs_for(spark, path)
-            idx = jvm.org.apache.hadoop.fs.Path(bloom_index_dir(path, on))
+            idx = jvm.org.apache.hadoop.fs.Path(
+                bloom_index.bloom_index_dir(path, on)
+            )
             if fs.exists(idx):
-                kept, _tot = prune_files_bloom(
+                kept, _tot = bloom_index.prune_files_bloom(
                     spark, path, on, src.select(*on)
                 )
-                kept_bare = {_bare(k) for k in kept}
+                kept_bare = {bloom_index._canon(k) for k in kept}
                 candidates = [
-                    f for f in candidates if _bare(f) in kept_bare
+                    f for f in candidates if bloom_index._canon(f) in kept_bare
                 ]
         except ValueError:
             pass  # unreadable/empty index: conservative full candidacy
@@ -1085,16 +950,7 @@ def change_feed_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed change-feed versions under ``<path>/_changes/v<N>``,
     ascending; empty when no mutation has ever run with
     ``change_feed=True``. One shallow listing, metadata-grain."""
-    fs, _root, jvm = _fs_for(spark, path)
-    croot = jvm.org.apache.hadoop.fs.Path(f"{path}/{CHANGES_DIR}")
-    if not fs.exists(croot):
-        return []
-    out = []
-    for st in fs.listStatus(croot):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
+    return _versions_in(spark, f"{path}/{CHANGES_DIR}")
 
 
 def read_change_feed(
@@ -1326,8 +1182,6 @@ def _consumer_cursor(spark: SparkSession, consumer_path: str) -> int:
     )
     if fs.exists(sync_p):
         return int(_read_json_file(fs, jvm, sync_p).get("version", 0))
-    from iot_sensor_data_pipeline_spark.sources.manifest import _versions_in
-
     if _versions_in(spark, consumer_path):
         from iot_sensor_data_pipeline_spark.sources.matview import _mv_meta
 

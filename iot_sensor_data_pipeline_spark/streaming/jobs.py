@@ -16,7 +16,9 @@ no maxOffsetsPerTrigger -> unbounded    | rate limit parameter
 Each job takes a source DataFrame (kafka/file/rate/memory — anything
 ``readStream`` produces) so the logic is testable without Kafka, and
 lists of batch sinks (callables DataFrame -> None) fanned out from one
-``foreachBatch`` over one persisted micro-batch.
+``foreachBatch`` over one persisted micro-batch. Every job starts its
+writer through ``_start``; the fan-out and the two monitors persist
+each batch before probing it, so its lineage runs once.
 
 The jobs:
 
@@ -52,6 +54,7 @@ from iot_sensor_data_pipeline_spark.sources.json_ingest import (
     parse_json_column,
     split_quarantine,
 )
+from iot_sensor_data_pipeline_spark.sources.manifest import _versions_in
 
 #: a sink takes the batch DataFrame, optionally also the epoch id —
 #: epoch-aware sinks (sources.jdbc idempotent append) need it for
@@ -155,7 +158,11 @@ def _start(
     query_name: str | None = None,
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     auditor=None,
+    available_now: bool = False,
 ) -> StreamingQuery:
+    """The one streaming-writer builder: ``foreach_batch`` (default: a
+    :func:`_fanout` of ``sinks``) under ``checkpoint``. ``available_now``
+    drains what is available, then stops; it wins over ``trigger``."""
     writer = (
         df.writeStream.foreachBatch(
             foreach_batch or _fanout([(None, sinks)], auditor=auditor)
@@ -163,7 +170,9 @@ def _start(
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
     )
-    if trigger:
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger:
         writer = writer.trigger(processingTime=trigger)
     if query_name:
         writer = writer.queryName(query_name)
@@ -252,25 +261,9 @@ def start_aggregator(
     return _start(agg, sinks, checkpoint, **kw)
 
 
-def _list_snapshot_versions(spark, snapshot_dir: str) -> list[int]:
-    """Epoch-stamped version subdirectories (``v<epoch>``) under a
-    CDC snapshot root, ascending."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(snapshot_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
 def read_cdc_snapshot(spark, snapshot_dir: str) -> DataFrame:
     """Latest CDC-maintained snapshot (highest ``v<epoch>`` version)."""
-    versions = _list_snapshot_versions(spark, snapshot_dir)
+    versions = _versions_in(spark, snapshot_dir)
     if not versions:
         raise ValueError(f"no snapshot versions under {snapshot_dir}")
     return spark.read.parquet(f"{snapshot_dir}/v{versions[-1]}")
@@ -335,7 +328,7 @@ def start_cdc_apply(
             auditor.check(batch_df)
         spark = batch_df.sparkSession
         base_cols = [c for c in batch_df.columns if c not in (op_col, seq_col)]
-        older = [v for v in _list_snapshot_versions(spark, snapshot_dir) if v < epoch_id]
+        older = [v for v in _versions_in(spark, snapshot_dir) if v < epoch_id]
         if older:
             current = spark.read.parquet(f"{snapshot_dir}/v{older[-1]}")
         else:  # legitimate first batch: no snapshot yet
@@ -345,7 +338,7 @@ def start_cdc_apply(
         )
         new.write.mode("overwrite").parquet(f"{snapshot_dir}/v{epoch_id}")
         # prune: keep the newest keep_versions (the write above included)
-        versions = _list_snapshot_versions(spark, snapshot_dir)
+        versions = _versions_in(spark, snapshot_dir)
         jvm = spark._jvm
         fs = jvm.org.apache.hadoop.fs.Path(snapshot_dir).getFileSystem(
             spark._jsc.hadoopConfiguration()
@@ -353,18 +346,10 @@ def start_cdc_apply(
         for v in versions[:-keep_versions]:
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/v{v}"), True)
 
-    writer = (
-        changes.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        changes, (), checkpoint, trigger=trigger, query_name=query_name,
+        foreach_batch=write, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -727,18 +712,10 @@ def start_cdc_apply_bucketed(
                 if st.isDirectory() and name not in referenced:
                     fs.delete(st.getPath(), True)
 
-    writer = (
-        changes.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        changes, (), checkpoint, trigger=trigger, query_name=query_name,
+        foreach_batch=write, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
 
 
 def read_cdc_snapshot_bucketed_for_keys(
@@ -1076,37 +1053,35 @@ def start_drift_monitor(
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        if batch_df.isEmpty():
-            return
-        rep = drift_against_reference(batch_df, ref_dir).withColumn(
-            "epoch", F.lit(epoch_id).cast("long")
-        )
-        if on_drift is not None:
-            rep = rep.persist()  # scored once: the write + the alert probe
+        # persisted before the emptiness probe: the probe and the
+        # scoring scan share one evaluation of the batch's lineage
+        batch_df.persist()
         try:
-            scores_sink(rep.coalesce(1), epoch_id)
+            if batch_df.isEmpty():
+                return
+            rep = drift_against_reference(batch_df, ref_dir).withColumn(
+                "epoch", F.lit(epoch_id).cast("long")
+            )
             if on_drift is not None:
-                flagged = rep.where(
-                    F.col("psi").isNotNull() & (F.col("psi") >= psi_threshold)
-                ).collect()
-                if flagged:
-                    on_drift(epoch_id, flagged)
+                rep = rep.persist()  # scored once: the write + the alert probe
+            try:
+                scores_sink(rep.coalesce(1), epoch_id)
+                if on_drift is not None:
+                    flagged = rep.where(
+                        F.col("psi").isNotNull() & (F.col("psi") >= psi_threshold)
+                    ).collect()
+                    if flagged:
+                        on_drift(epoch_id, flagged)
+            finally:
+                if on_drift is not None:
+                    rep.unpersist()
         finally:
-            if on_drift is not None:
-                rep.unpersist()
+            batch_df.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        stream_df, (), checkpoint, trigger=trigger, query_name=query_name,
+        foreach_batch=write, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()
 
 
 def start_constraint_monitor(
@@ -1170,10 +1145,12 @@ def start_constraint_monitor(
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.persist()  # report + quarantine, one compute
+        # persisted before the emptiness probe: the probe, the report
+        # and the quarantine share one evaluation of the batch's lineage
+        batch_df.persist()
         try:
+            if batch_df.isEmpty():
+                return
             rep = check_suite(batch_df, checks).withColumn(
                 "epoch", F.lit(epoch_id).cast("long")
             )
@@ -1206,15 +1183,7 @@ def start_constraint_monitor(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        stream_df, (), checkpoint, trigger=trigger, query_name=query_name,
+        foreach_batch=write, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if query_name:
-        writer = writer.queryName(query_name)
-    return writer.start()

@@ -1636,16 +1636,31 @@ def test_walk_data_files_concurrent_matches_ground_truth(spark, tmp_path):
     assert len(got) >= 32  # at least one file in each of the 8x4 dirs
 
 
-def test_optimize_partitioned_schema_evolution_raises_before_write(
+def _partition_listing(path):
+    """Every file under the table's dt= dirs, hidden ones included."""
+    return sorted(
+        os.path.join(d, f)
+        for d in os.listdir(path) if d.startswith("dt=")
+        for f in os.listdir(os.path.join(path, d))
+    )
+
+
+def _partition_data_files(path):
+    return [f for f in _partition_listing(path)
+            if f.endswith(".parquet") and "/." not in f]
+
+
+def test_optimize_partitioned_schema_evolution_keeps_new_columns(
     spark, tmp_path
 ):
-    """ADVICE r11: a schema-evolved candidate (added data column) must
-    fail the compaction BEFORE any write — the first-candidate-pinned read
-    schema would silently drop the new column's values."""
+    """A schema-evolved candidate (an added data column) compacts under
+    the candidates' union schema: every value of the new column and the
+    whole row multiset survive OPTIMIZE, and the files whose partition
+    predates the column read it as NULL, as before."""
     from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
 
     path = str(tmp_path / "evo")
-    # dt=a files sort FIRST -> they pin the read schema (no 'extra')
+    # dt=a files sort FIRST: a first-footer read schema would lack 'extra'
     spark.range(100).select(
         F.col("id").alias("k"), F.lit("a").alias("dt")
     ).repartition(2).write.mode("append").partitionBy("dt").parquet(path)
@@ -1655,45 +1670,69 @@ def test_optimize_partitioned_schema_evolution_raises_before_write(
         F.lit("b").alias("dt"),
     ).repartition(2).write.mode("append").partitionBy("dt").parquet(path)
 
-    def listing():
-        return sorted(
-            os.path.join(d, f)
-            for d in os.listdir(path) if d.startswith("dt=")
-            for f in os.listdir(os.path.join(path, d))
-        )
+    def rows():
+        got = spark.read.option("mergeSchema", "true").parquet(path)
+        return sorted(tuple(r) for r in got.select("k", "extra", "dt").collect())
 
-    before = listing()
-    with pytest.raises(ValueError, match="extra"):
-        optimize_table(spark, path, target_bytes=1 << 30)
-    assert listing() == before  # fail-before-write: table untouched
-    # and the evolved rows are still fully readable
+    before = rows()
+    res = optimize_table(spark, path, target_bytes=1 << 30)
+    assert res["status"] == "optimized" and res["n_partitions"] == 2
+    assert len(_partition_data_files(path)) == 2  # one file per partition
+    assert rows() == before
     got = spark.read.option("mergeSchema", "true").parquet(path)
-    assert got.where(F.col("extra").isNotNull()).count() == 100
+    assert sorted(r.extra for r in got.where(F.col("extra").isNotNull())
+                  .collect()) == [k * 10 for k in range(100, 200)]
+    assert got.where("dt = 'a' AND extra IS NULL").count() == 100
 
 
-def test_guard_lossy_rewrite_schema_directions(spark, tmp_path):
-    """The guard raises only in the LOSSY direction: candidates with a
-    column the pinned schema lacks raise; candidates MISSING a pinned
-    column pass (their rows read as NULL — union semantics)."""
-    from iot_sensor_data_pipeline_spark.sources.manifest import (
-        _guard_lossy_rewrite_schema,
-    )
+def test_optimize_partitioned_schema_evolution_raises_before_write(
+    spark, tmp_path
+):
+    """Type-incompatible evolution ('extra' a long in one file, a string
+    in another) fails inside the union-schema read, before any write:
+    the listing is unchanged, no journal is left and both files still
+    read on their own."""
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
 
-    wide = str(tmp_path / "wide.parquet")
-    narrow = str(tmp_path / "narrow.parquet")
-    spark.range(5).selectExpr("id AS k", "id * 2 AS extra")\
-        .coalesce(1).write.parquet(wide)
-    spark.range(5).selectExpr("id AS k").coalesce(1).write.parquet(narrow)
-    wide_file = [
-        os.path.join(wide, f) for f in os.listdir(wide) if f.endswith(".parquet")
-    ]
-    narrow_file = [
-        os.path.join(narrow, f) for f in os.listdir(narrow) if f.endswith(".parquet")
-    ]
-    with pytest.raises(ValueError, match="extra"):
-        _guard_lossy_rewrite_schema(spark, ["k"], wide_file, "t")
-    _guard_lossy_rewrite_schema(spark, ["k", "extra"], narrow_file, "t")
-    _guard_lossy_rewrite_schema(spark, ["k", "extra"], wide_file, "t")
+    path = str(tmp_path / "evo_type")
+    spark.range(50).select(
+        F.col("id").alias("k"), F.col("id").alias("extra"), F.lit("a").alias("dt")
+    ).coalesce(1).write.mode("append").partitionBy("dt").parquet(path)
+    spark.range(50, 100).select(
+        F.col("id").alias("k"),
+        F.col("id").cast("string").alias("extra"),
+        F.lit("a").alias("dt"),
+    ).coalesce(1).write.mode("append").partitionBy("dt").parquet(path)
+
+    before = _partition_listing(path)
+    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+        optimize_table(spark, path, target_bytes=1 << 30)
+    assert _partition_listing(path) == before  # fail-before-write
+    assert not os.path.exists(os.path.join(path, "_optimize_journal.json"))
+    assert sum(
+        spark.read.parquet(os.path.join(path, f)).count()
+        for f in _partition_data_files(path)
+    ) == 100
+
+
+def test_optimize_job_count(spark, fragmented, tmp_path):
+    """Compacting a flat table launches exactly 4 Spark jobs: the
+    candidates' union-schema footer pass, and the routed rewrite with
+    its broadcast bin map. Counted by the status tracker per job
+    group, as in :func:`test_compaction_planning_launches_no_job`."""
+    import shutil
+
+    from iot_sensor_data_pipeline_spark.sources.manifest import optimize_table
+    from tests.test_file_sources import _jobs_of
+
+    path = str(tmp_path / "tbl")
+    shutil.copytree(fragmented, path)
+    files = _sizes(spark, path)
+    assert len(files) >= 8
+    target = sum(s for _, s in files[:-1])
+    res, jobs = _jobs_of(spark, "optimize", lambda: optimize_table(spark, path, target))
+    assert res["status"] == "optimized" and res["n_compacted"] >= 8
+    assert len(jobs) == 4
 
 
 def test_commit_prune_spares_young_staging(spark, tmp_path):

@@ -534,13 +534,12 @@ def test_merge_schema_evolution_widens_additively(spark, tmp_path):
 
 
 def test_merge_schema_evolution_guards(spark, tmp_path):
-    """Reserved-name collisions raise; the evolved file set still trips
-    the OPTIMIZE family's lossy-rewrite guard when a compaction pins
-    the pre-evolution schema (the new column cannot be silently dropped
-    by a footer-pinned rewrite)."""
+    """Reserved-name collisions raise; after an additive merge, OPTIMIZE
+    compacts the now mixed-schema table under the union schema and
+    keeps every value of the new column (and every row)."""
     from iot_sensor_data_pipeline_spark.sources.manifest import (
-        _guard_lossy_rewrite_schema,
         _walk_data_files,
+        optimize_table,
     )
 
     path = str(tmp_path / "t")
@@ -553,10 +552,22 @@ def test_merge_schema_evolution_guards(spark, tmp_path):
     src = spark.createDataFrame([(1, 1, "x"), (500, 1, "y")],
                                 "id long, n long, tag string")
     merge_into(spark, path, src, on=["id"], allow_new_columns=True)
-    files = [f for f, _sz in _walk_data_files(spark, path)]
-    with pytest.raises(ValueError, match="schema-evolved"):
-        _guard_lossy_rewrite_schema(spark, ["id", "n"], files,
-                                    "optimize_table")
+
+    def rows():
+        return sorted(
+            tuple(r) for r in spark.read.option("mergeSchema", "true")
+            .parquet(path).select("id", "n", "tag").collect()
+        )
+
+    before = rows()
+    assert len(before) == 101
+    res = optimize_table(spark, path, target_bytes=1 << 30)
+    assert res["status"] == "optimized"
+    assert len(_walk_data_files(spark, path)) == 1
+    assert rows() == before
+    tags = {r.id: r.tag for r in spark.read.parquet(path)
+            .where("tag IS NOT NULL").collect()}
+    assert tags == {1: "x", 500: "y"}
 
 
 # ---------------------------------------------------------------------------

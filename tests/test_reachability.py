@@ -104,7 +104,6 @@ KEEP: dict[str, str] = {
     "functions/text.py:winnow_fingerprints": (
         "winnowing fingerprints with the shared-substring guarantee its tests pin"
     ),
-    "operators/bucketing.py:*": "bucketed write and zero-shuffle bucketed join",
     "operators/curation.py:filter_by_domain_stats": "domain filter over domain_stats",
     "operators/curation.py:pack_sequences": "sequence packing into fixed-capacity bins",
     "operators/dedup.py:estimated_jaccard_pairs": "MinHash Jaccard estimate per pair",

@@ -259,8 +259,8 @@ def test_cdc_apply_stream_maintains_versioned_snapshot(spark, tmp_path):
     pruned to keep_versions."""
     import json as _json
 
+    from iot_sensor_data_pipeline_spark.sources.manifest import _versions_in
     from iot_sensor_data_pipeline_spark.streaming.jobs import (
-        _list_snapshot_versions,
         read_cdc_snapshot,
         start_cdc_apply,
     )
@@ -303,7 +303,7 @@ def test_cdc_apply_stream_maintains_versioned_snapshot(spark, tmp_path):
     assert s2 == {1: "a2", 3: "c"}
 
     # pruning: at most keep_versions version dirs remain
-    assert len(_list_snapshot_versions(spark, snap)) <= 2
+    assert len(_versions_in(spark, snap)) <= 2
 
 
 def test_cdc_apply_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
@@ -943,3 +943,42 @@ def test_streaming_constraint_monitor(spark, tmp_path):
     replay = parquet_batch_sink(reports, checkpoint=ckpt)
     replay(spark.read.parquet(reports).where(F.col("epoch") == 1).coalesce(1), 1)
     assert spark.read.parquet(reports).count() == 6
+
+
+def test_constraint_monitor_evaluates_each_row_once_per_batch(spark, stream_dirs):
+    """The constraint monitor persists the batch before its emptiness
+    probe: every input row runs through the batch's lineage exactly
+    once per micro-batch while the batch feeds the report, the
+    quarantine probe and the quarantine sink. Counted as in
+    :func:`test_fanout_evaluates_each_row_once_per_batch`; each run
+    drains its new file with ``available_now``."""
+    from pyspark.sql import functions as F
+
+    from iot_sensor_data_pipeline_spark.operators.constraints import not_null
+    from iot_sensor_data_pipeline_spark.streaming.jobs import (
+        start_constraint_monitor,
+    )
+
+    src, chk, tmp = stream_dirs
+    reports = str(tmp / "reports")
+    quarantine = str(tmp / "quarantine")
+    evals = tmp / "evals"
+    evals.write_text("")
+    evals_path = str(evals)
+
+    @F.udf("long")
+    def counted(v):
+        with open(evals_path, "a") as fh:
+            fh.write("x")
+        return len(v)
+
+    for i in range(2):
+        write_batch(src, f"b{i}.txt", [f"row-{i}-{j}" for j in range(20)])
+        stream = spark.readStream.text(str(src)).where(counted("value") > 0)
+        q = start_constraint_monitor(
+            stream, [not_null("value")], reports, chk,
+            quarantine_dir=quarantine, available_now=True,
+        )
+        q.awaitTermination(120)
+        assert spark.read.parquet(reports).count() == i + 1
+        assert len(evals.read_text()) == 20 * (i + 1)
